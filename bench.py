@@ -23,7 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from dask_datapipeline_spark.plans.catalog import CATALOG
 from dask_datapipeline_spark.session import get_spark
 
-# Headline set: flagship both variants + the shuffliest/widest operators.
+# Headline set: the flagship plan (once per oracle row) + the
+# shuffliest/widest operators.
 BENCH_QUERIES = [
     "flagship_household_features",
     "flagship_onepass",

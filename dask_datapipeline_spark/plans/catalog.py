@@ -134,7 +134,7 @@ _W_LO = f"TIMESTAMP '{hf.CAMPAIGN_START}'"
 _W_HI = f"TIMESTAMP '{hf.CAMPAIGN_END}'"
 
 
-@register(
+register(
     "flagship_household_features",
     _FLAGSHIP_CTES
     + f"""
@@ -155,13 +155,13 @@ JOIN f2 ON d.hhid = f2.hhid
 JOIN f3 ON d.hhid = f3.hhid
 JOIN f4 ON d.hhid = f4.hhid
 """,
-    "Reference main() re-targeted at testdata roles (parity dataflow: 3 aggs + 4-way inner fold)",
-)
-def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hf.flagship_testdata(spark, sf_dir, onepass=False)
+    "Reference main() re-targeted at testdata roles; oracle replays the reference "
+    "dataflow (3 aggs + 4-way inner fold)",
+)(hf.flagship_testdata)
 
-
-@register(
+# The same plan again, checked by an independent oracle shape: one
+# conditional aggregation with a row-presence window filter.
+register(
     "flagship_onepass",
     _FLAGSHIP_CTES
     + f"""
@@ -173,17 +173,16 @@ def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
       AS total_amount_during_campaign,
     COUNT(transaction_amount) AS total_transactions
   FROM inner_j GROUP BY hhid
+  HAVING COUNT(CASE WHEN date < {_W_LO} THEN 1 END) > 0
+     AND COUNT(CASE WHEN date BETWEEN {_W_LO} AND {_W_HI} THEN 1 END) > 0
 )
 SELECT d.hhid, d.nation_name, d.region_name,
        f.total_amount_before_campaign, f.total_amount_during_campaign, f.total_transactions
 FROM demo d JOIN feats f ON d.hhid = f.hhid
-WHERE f.total_amount_before_campaign IS NOT NULL
-  AND f.total_amount_during_campaign IS NOT NULL
 """,
-    "Scale variant: single groupBy with conditional aggs (1 shuffle vs 3+3) — agrees with parity after window filter",
-)
-def q_flagship_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hf.flagship_testdata(spark, sf_dir, onepass=True)
+    "The flagship plan against a one-pass oracle: conditional aggs, households kept "
+    "only with rows in both windows",
+)(hf.flagship_testdata)
 
 
 # --------------------------------------------------------------------

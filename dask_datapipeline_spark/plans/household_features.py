@@ -2,29 +2,22 @@
 
     read 3 tables → inner-join transactions to a household↔individual
     mapping → per-household features (sum before campaign, sum during
-    campaign, non-null tx count) → 4-way inner join with demographics
-    → output.
+    campaign, non-null tx count) → inner join with demographics →
+    output.
 
-Two implementations, deliberately (SURVEY.md §7.4 item 3):
+One plan (SURVEY.md §7.4 item 3): the reference aggregates the joined
+fact three times and folds the results back with inner joins
+(main.py:314-320). Here the three features are conditional aggregates
+of ONE ``groupBy(hhid)`` pass — one shuffle over the fact table, no
+cached intermediate — so the plan is the same at 100 MB and at 100 TB.
 
-- ``household_features`` — **parity**: three separate aggregations
-  folded back with inner joins, exactly the reference's dataflow. An
-  inner fold drops any household missing a before-campaign OR a
-  during-campaign transaction — that row-drop semantics is part of the
-  reference contract (README:29).
-- ``household_features_onepass`` — **scale**: one
-  ``groupBy(hhid).agg(sum(when(...)), ...)`` pass = ONE shuffle over
-  the fact table instead of three aggregation shuffles + three join
-  shuffles. Conditional sums produce NULL (not a dropped row) for an
-  empty window, so an explicit post-filter restores the inner-join
-  drop semantics; with the filter the two variants agree row-for-row
-  (tested in tests/test_household_features.py).
-
-At 100 TB the one-pass variant is the only sane plan: the parity
-variant re-aggregates the same joined fact three times (mitigated here
-by a .cache(), which at cluster scale means materializing a 100 TB
-intermediate — the cache is a small-scale convenience, the one-pass
-rewrite is the real fix).
+The reference's inner fold drops any household missing a
+before-campaign OR a during-campaign transaction (README:29). A
+conditional sum yields NULL, not a dropped row, for an empty window,
+so each window also counts its rows and households with a zero count
+are filtered out. Row presence, not a non-NULL sum, is the test: a
+household whose only before-campaign row has a NULL amount is kept
+with a NULL before-sum, exactly as the fold keeps it.
 
 Role mapping onto the driver testdata (FIXTURES.md §C): events plays
 transactions (user_id/ts/value), customer plays hh_ind
@@ -38,8 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_datapipeline_spark.operators.aggregates import AggSpec, group_agg
-from dask_datapipeline_spark.operators.filters import filter_before, filter_between
-from dask_datapipeline_spark.operators.joins import equi_join, fold_join
+from dask_datapipeline_spark.operators.filters import _ts_lit
+from dask_datapipeline_spark.operators.joins import equi_join
 from dask_datapipeline_spark.sources.readers import load_testdata
 
 BEFORE_COL = "total_amount_before_campaign"
@@ -57,70 +50,43 @@ def household_features(
     amount_col: str,
     campaign_start,
     campaign_end,
-    cache: bool = True,
 ) -> DataFrame:
-    """Parity variant: reference dataflow shape (main.py:284-330).
+    """Household features in one aggregation pass over the joined fact.
 
-    The joined fact fans out to three aggregations (main.py:314-320) —
-    the one place explicit caching pays (SURVEY.md §4 'common-subplan
-    reuse'): Spark is lazy, so without it each branch recomputes the
-    join.
+    Windows follow the reference: before is ``ts < start`` (strict,
+    main.py:197), during is ``start <= ts <= end`` (main.py:217-220).
     """
     # Broadcast choice left to AQE: either side of the mapping join may
     # be the small one depending on deployment (spec says transactions
     # ≤100 MB but mapping >10 GB — AQE sizes them at runtime).
     inner = equi_join(transactions, hh_ind, on=individual_key, how="inner")
-    if cache:
-        inner = inner.cache()
-
-    f2 = group_agg(
-        filter_before(inner, ts_col, campaign_start),
+    ts, amt = F.col(ts_col), F.col(amount_col)
+    before = ts < _ts_lit(campaign_start)
+    during = ts.between(_ts_lit(campaign_start), _ts_lit(campaign_end))
+    windowed = inner.select(
         household_key,
-        AggSpec(amount_col, "sum_exact", BEFORE_COL, round_scale=2),
+        amt,
+        F.when(before, amt).alias("_before_amt"),
+        F.when(during, amt).alias("_during_amt"),
+        F.when(before, 1).alias("_in_before"),
+        F.when(during, 1).alias("_in_during"),
     )
-    f3 = group_agg(
-        filter_between(inner, ts_col, campaign_start, campaign_end),
+    feats = group_agg(
+        windowed,
         household_key,
-        AggSpec(amount_col, "sum_exact", DURING_COL, round_scale=2),
+        [
+            AggSpec("_before_amt", "sum_exact", BEFORE_COL, round_scale=2),
+            AggSpec("_during_amt", "sum_exact", DURING_COL, round_scale=2),
+            # Reference feature4 hard-codes the household key regardless
+            # of its groupby_column arg (main.py:235-240) — here the key
+            # is honest.
+            AggSpec(amount_col, "count", COUNT_COL),
+            AggSpec("_in_before", "count", "_n_before"),
+            AggSpec("_in_during", "count", "_n_during"),
+        ],
     )
-    # Reference feature4 hard-codes the household key regardless of its
-    # groupby_column arg (main.py:235-240) — here the key is honest.
-    f4 = group_agg(inner, household_key, AggSpec(amount_col, "count", COUNT_COL))
-
-    return fold_join([demographics, f2, f3, f4], on=household_key, how="inner")
-
-
-def household_features_onepass(
-    transactions: DataFrame,
-    hh_ind: DataFrame,
-    demographics: DataFrame,
-    individual_key: str,
-    household_key: str,
-    ts_col: str,
-    amount_col: str,
-    campaign_start,
-    campaign_end,
-    require_all_windows: bool = True,
-) -> DataFrame:
-    """Scale variant: single shuffle over the fact table.
-
-    ``require_all_windows=True`` post-filters households to those with
-    activity in BOTH windows, restoring the parity variant's inner-join
-    drop semantics exactly.
-    """
-    from dask_datapipeline_spark.operators.filters import _ts_lit
-
-    lo, hi = _ts_lit(campaign_start), _ts_lit(campaign_end)
-    inner = equi_join(transactions, hh_ind, on=individual_key, how="inner")
-    ts, amt = F.col(ts_col), F.col(amount_col).cast("decimal(18,2)")
-
-    feats = inner.groupBy(household_key).agg(
-        F.bround(F.sum(F.when(ts < lo, amt)).cast("double"), 2).alias(BEFORE_COL),
-        F.bround(F.sum(F.when(ts.between(lo, hi), amt)).cast("double"), 2).alias(DURING_COL),
-        F.count(amount_col).alias(COUNT_COL),
-    )
-    if require_all_windows:
-        feats = feats.filter(F.col(BEFORE_COL).isNotNull() & F.col(DURING_COL).isNotNull())
+    feats = feats.filter((F.col("_n_before") > 0) & (F.col("_n_during") > 0))
+    feats = feats.drop("_n_before", "_n_during")
     return equi_join(demographics, feats, on=household_key, how="inner")
 
 
@@ -157,11 +123,10 @@ def _testdata_roles(spark, sf_dir: str):
     return events, mapping, demographics
 
 
-def flagship_testdata(spark, sf_dir: str, onepass: bool = False) -> DataFrame:
+def flagship_testdata(spark, sf_dir: str) -> DataFrame:
     """The flagship query instantiated on the driver testdata."""
     tx, mapping, demo = _testdata_roles(spark, sf_dir)
-    fn = household_features_onepass if onepass else household_features
-    return fn(
+    return household_features(
         tx, mapping, demo,
         individual_key="individual_id",
         household_key="hhid",

@@ -13,8 +13,9 @@ Differences from the reference, all deliberate:
 - Output is sorted by hhid: pandas groupby sorted keys implicitly
   (main.py:167); Spark guarantees no order, so the contract is made
   explicit (SURVEY.md §7.4 item 7).
-- ``--onepass`` switches to the single-shuffle conditional-agg plan —
-  identical output (proven in tests), the right plan at scale.
+- The three features come from one conditional aggregation over the
+  joined table (``household_features``) instead of three aggregates
+  and a 4-way join — one shuffle over the fact table, same rows.
 
 Constants mirror reference main.py:17-51.
 """
@@ -26,10 +27,7 @@ import argparse
 from pyspark.sql import DataFrame, SparkSession
 
 from dask_datapipeline_spark.functions.timestamps import cast_timestamp
-from dask_datapipeline_spark.plans.household_features import (
-    household_features,
-    household_features_onepass,
-)
+from dask_datapipeline_spark.plans.household_features import household_features
 from dask_datapipeline_spark.schemas import (
     DEMOGRAPHICS_SCHEMA,
     HH_IND_SCHEMA,
@@ -63,7 +61,6 @@ def run_pipeline(
     transactions_csv: str,
     hh_ind_csv: str,
     demographics_csv: str,
-    onepass: bool = False,
 ) -> DataFrame:
     """The reference dataflow (SURVEY.md §3.1) as one lazy DAG."""
     tx = scan_csv(spark, transactions_csv, TRANSACTIONS_SCHEMA, columns=TRANS_COLS)
@@ -72,8 +69,7 @@ def run_pipeline(
     hh = scan_csv(spark, hh_ind_csv, HH_IND_SCHEMA, columns=HH_COLS)
     dem = scan_csv(spark, demographics_csv, DEMOGRAPHICS_SCHEMA, columns=DEM_COLS)
 
-    fn = household_features_onepass if onepass else household_features
-    out = fn(
+    out = household_features(
         tx, hh, dem,
         individual_key="individual_id",
         household_key="hhid",
@@ -91,15 +87,12 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--hh-ind", required=True)
     p.add_argument("--demographics", required=True)
     p.add_argument("--output", required=True, help=".csv output path (single file)")
-    p.add_argument("--onepass", action="store_true", help="single-shuffle plan (scale)")
     p.add_argument("--no-single-file", action="store_true",
                    help="write a part-file directory instead of one CSV (100 TB path)")
     args = p.parse_args(argv)
 
     spark = get_spark("household-features")
-    out = run_pipeline(
-        spark, args.transactions, args.hh_ind, args.demographics, onepass=args.onepass
-    )
+    out = run_pipeline(spark, args.transactions, args.hh_ind, args.demographics)
     write_csv(out, args.output, single_file=not args.no_single_file)
     spark.stop()
 

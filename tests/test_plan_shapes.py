@@ -11,6 +11,8 @@ results identical, cost model catastrophically different.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from dask_datapipeline_spark.plans.catalog import CATALOG, EXTRA_CATALOG
@@ -159,6 +161,16 @@ def test_dimension_joins_broadcast_not_shuffle(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     plan = _plan(spark, sf_dir, "flagship_onepass")
     assert "BroadcastHashJoin" in plan
+
+
+def test_flagship_is_one_uncached_aggregation(spark, sf_dir):
+    """The household features come from ONE aggregation over the
+    joined fact: no cached intermediate, no per-feature aggregate
+    folded back with joins (the reference's three-pass shape)."""
+    plan = _plan(spark, sf_dir, "flagship_household_features")
+    assert "InMemoryTableScan" not in plan, plan
+    finals = re.findall(r"HashAggregate\(keys=\[hhid#\d+L?\], functions=\[(?!partial_)", plan)
+    assert len(finals) == 1, plan
 
 
 def test_aggregations_have_mapside_partial(spark, sf_dir):

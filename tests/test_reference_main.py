@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from dask_datapipeline_spark.plans import reference_main
 from dask_datapipeline_spark.plans.reference_main import run_pipeline
 
 
@@ -36,10 +37,18 @@ def csv_inputs(tmp_path):
     return str(tx), str(hh), str(dem)
 
 
-@pytest.mark.parametrize("onepass", [False, True])
-def test_pipeline_end_to_end(spark, csv_inputs, onepass):
+@pytest.mark.parametrize("adaptive", [False, True])
+def test_pipeline_end_to_end(spark, csv_inputs, adaptive):
+    """Same rows with adaptive query execution off (the static plan as
+    written) and on (runtime re-planned joins and coalesced shuffles)."""
     tx, hh, dem = csv_inputs
-    out = run_pipeline(spark, tx, hh, dem, onepass=onepass).collect()
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(adaptive).lower())
+    try:
+        out = run_pipeline(spark, tx, hh, dem).collect()
+    finally:
+        spark.conf.set(key, before)
     # only hhid 1 survives: hh 2 has no transactions, hh 3 no demographics
     assert len(out) == 1
     r = out[0]
@@ -51,3 +60,21 @@ def test_pipeline_end_to_end(spark, csv_inputs, onepass):
     # noValue sentinel passes through untouched (SURVEY.md §7.4 item 6)
     assert r.home_value_ind == "noValue"
     assert r.state == "CO"
+
+
+def test_cli_writes_one_csv(spark, csv_inputs, tmp_path, monkeypatch):
+    """``main()`` parses the reference's arguments and writes one CSV
+    file. The test session stands in for the CLI's own, which ``main``
+    would otherwise stop."""
+    monkeypatch.setattr(reference_main, "get_spark", lambda _name: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    tx, hh, dem = csv_inputs
+    output = tmp_path / "household_features.csv"
+    reference_main.main([
+        "--transactions", tx, "--hh-ind", hh, "--demographics", dem, "--output", str(output),
+    ])
+    lines = output.read_text().splitlines()
+    assert lines == [
+        ",".join(reference_main.OUTPUT_COLS),
+        "1,2,2+,51 to 100,30-39,noValue,CO,15.65,6.55,6",
+    ]
