@@ -229,11 +229,9 @@ class Loader:
 
         if not isinstance(output_df, DataFrame):
             raise TypeError("write_csv expects a Spark DataFrame")
-        # cheap path check before any job; single isEmpty scan here,
-        # inner writer's duplicate check disabled
+        # the reference raises ValueError for a bad suffix; the empty
+        # guard is the sink's EmptyInputError, a ValueError
         if not str(output_filepath).endswith(".csv"):
             raise ValueError(f"{output_filepath!r}: output must be .csv")
-        if output_df.isEmpty():
-            raise ValueError("refusing to write an empty dataframe")
-        _write(output_df, output_filepath, single_file=True, check_nonempty=False)
+        _write(output_df, output_filepath, single_file=True)
         return True

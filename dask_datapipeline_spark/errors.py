@@ -5,7 +5,9 @@ type / file-format checks (reference ``main.py:87-91, 131-132, 154-161,
 194-195, 214-218, 235-236, 273-279``). We keep the same error contract
 but implement it as *driver-side schema checks* that never launch a
 Spark job — at 100 TB an ``isEmpty()`` per operator would be a full
-scan per guard.
+scan per guard. The empty-output guard rides along the job that
+already runs: sinks count rows with an ``Observation`` attached to
+the written DataFrame and read it back with ``observed_metric``.
 
 One reference bug is deliberately fixed: the key-presence check at
 ``main.py:131`` unions both inputs' columns, so a key missing from one
@@ -15,7 +17,7 @@ independently (SURVEY.md §7.4 item 9).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 
 class EmptyInputError(ValueError):
@@ -35,12 +37,21 @@ def require_dataframe(obj: object, name: str = "input") -> None:
         raise TypeError(f"{name} must be a pyspark.sql.DataFrame, got {type(obj).__name__}")
 
 
-def require_nonempty(df: DataFrame, name: str = "input") -> None:
-    """ValueError on empty input (reference main.py:87-88).
+def observed_metric(obs: Observation, name: str):
+    """Value of metric ``name`` from ``obs`` after its action ran, or
+    None when the metric was never collected.
 
-    This is the one guard that costs a job (``isEmpty`` runs a
-    limit-1 scan). Call sites are opt-in: sinks only, never per
-    intermediate operator.
+    AQE's runtime empty-relation propagation can prune the observed
+    subtree INCLUDING its ``CollectMetrics`` node; ``Observation.get``
+    then raises a JVM ``AssertionError`` instead of returning a row. A
+    pruned metrics node means the subtree was provably empty at run
+    time, so callers treat None as the aggregate over zero rows.
     """
-    if df.isEmpty():
-        raise EmptyInputError(f"{name} dataframe is empty")
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return obs.get[name]
+    except Py4JJavaError as ex:
+        if "AssertionError" not in str(ex):
+            raise
+        return None

@@ -20,6 +20,10 @@ through either:
   branch is exercised by the local test suite against
   ``LocalFileSystem`` — the same class hierarchy HDFS clients use.
 
+The CSV source and sink use the same surface: ``first_line`` reads a
+header for ``sources.readers.scan_csv`` without a Spark job, and
+``rmtree`` removes an empty part-file directory ``write_csv`` wrote.
+
 Loud-guard contract (kept from the old ``local_maintenance_path``):
 a scheme Hadoop cannot resolve (missing connector jars, bad URI)
 raises ``ValueError`` at ``IndexFS.for_path`` time — maintenance
@@ -46,6 +50,7 @@ Atomicity contract (what the marker protocols assume):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -134,6 +139,16 @@ class IndexFS:
     def read_text(self, path: str) -> str:
         raise NotImplementedError
 
+    def read_first_line(self, path: str) -> str:
+        """First line of the FILE ``path`` without its line break ("" for
+        an empty file); reads one line, not the whole file."""
+        raise NotImplementedError
+
+    def glob(self, pattern: str) -> list[str]:
+        """Sorted paths matching the Hadoop-style glob ``pattern`` (a
+        plain path matches itself); [] when nothing matches."""
+        raise NotImplementedError
+
     def write_text_atomic(self, path: str, data: str) -> None:
         """Temp file in the same directory + rename-over-destination
         (see module docstring for per-backend atomicity)."""
@@ -162,6 +177,23 @@ class IndexFS:
 
     def write_json_atomic(self, path: str, obj: dict) -> None:
         self.write_text_atomic(path, json.dumps(obj))
+
+    def first_line(self, path: str) -> str | None:
+        """First line of the first non-empty file a Spark file source
+        reads for ``path``: the file itself, or, for a directory or a
+        glob, the first file in name order, descending into
+        directories and skipping the hidden names (``_`` or ``.``
+        prefix: ``_SUCCESS``, ``.crc`` checksums) Spark skips. None
+        when there is no such file."""
+        todo = self.glob(path)
+        while todo:
+            p = todo.pop(0)
+            if not self.isfile(p):
+                visible = [n for n in self.listdir(p) if not n.startswith(("_", "."))]
+                todo[:0] = [IndexFS.join(p, n) for n in visible]
+            elif line := self.read_first_line(p):
+                return line
+        return None
 
     def sweep_tmp(self, dirpath: str) -> list[str]:
         """Remove stale ``*.tmp-xxxxxxxx`` FILES in ``dirpath`` —
@@ -209,6 +241,13 @@ class _LocalFS(IndexFS):
     def read_text(self, path: str) -> str:
         with open(path, encoding="utf-8") as f:
             return f.read()
+
+    def read_first_line(self, path: str) -> str:
+        with open(path, encoding="utf-8") as f:
+            return f.readline().rstrip("\r\n")
+
+    def glob(self, pattern: str) -> list[str]:
+        return sorted(glob.glob(pattern))
 
     def write_text_atomic(self, path: str, data: str) -> None:
         tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
@@ -318,6 +357,19 @@ class _HadoopFS(IndexFS):
             stream, baos, self._conf, True
         )
         return bytes(baos.toByteArray()).decode("utf-8")
+
+    def read_first_line(self, path: str) -> str:
+        io = self._jvm.java.io
+        stream = self._fs.open(self._jpath(path))
+        reader = io.BufferedReader(io.InputStreamReader(stream, "UTF-8"))
+        try:
+            return reader.readLine() or ""
+        finally:
+            reader.close()
+
+    def glob(self, pattern: str) -> list[str]:
+        found = self._fs.globStatus(self._jpath(pattern))
+        return sorted(st.getPath().toString() for st in found or [])
 
     def _write_bytes(self, path: str, data: bytes) -> None:
         out = self._fs.create(self._jpath(path), True)

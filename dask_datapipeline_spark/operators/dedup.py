@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dask_datapipeline_spark.errors import require_columns
+from dask_datapipeline_spark.errors import observed_metric, require_columns
 from dask_datapipeline_spark.parallel import fan_out
 
 # ----- shared primitives --------------------------------------------
@@ -916,24 +916,9 @@ def dup_clusters(
             )
 
         def _get(obs: Observation) -> int:
-            # An EMPTY pair graph is legitimate (a corpus with no
-            # near-dups): AQE's runtime empty-relation propagation
-            # then prunes the join subtree INCLUDING its CollectMetrics
-            # node, and Observation.get raises a JVM AssertionError
-            # instead of returning a row. A pruned metrics node means
-            # the observed subtree was provably empty at runtime, so
-            # the exact-decimal label sum over it is 0 — the same
-            # value the NULL-sum convention below yields. The eager
-            # localCheckpoint has already succeeded by the time this
-            # runs, so the action itself cannot be the failure.
-            from py4j.protocol import Py4JJavaError
-
-            try:
-                s = obs.get["__s"]
-            except Py4JJavaError as ex:
-                if "AssertionError" not in str(ex):
-                    raise
-                return 0
+            # an EMPTY pair graph (no near-dups) may prune the metrics
+            # node; its label sum is 0, as is a NULL sum
+            s = observed_metric(obs, "__s")
             return int(s if s is not None else 0)
 
         labels = None

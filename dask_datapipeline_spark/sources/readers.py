@@ -9,7 +9,14 @@ to CSV/Parquet/JSON with:
   the way into the scan (``ReadSchema`` in the physical plan shows only
   the selected columns for Parquet);
 - the reference's path-validation contract (``FileNotFoundError`` for a
-  non-matching extension, main.py:74-77) kept at the wrapper level.
+  non-matching extension, main.py:74-77) kept at the wrapper level;
+- CSV read in ``FAILFAST`` mode: a value that does not parse as its
+  schema type fails the job, naming the file, instead of loading as a
+  silent NULL (pandas' dtype check raised there too). Columns the
+  schema keeps as strings, such as the reference's ``date``, are never
+  malformed and are coerced later where the reference coerces them;
+- CSV headers checked with a driver-side filesystem read of one line
+  (``IndexFS.first_line``), not a Spark job.
 
 Scale notes: Parquet scans get row-group predicate pushdown and column
 pruning for free once the plan is declarative — this module never
@@ -24,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dask_datapipeline_spark.indexfs import IndexFS
 from dask_datapipeline_spark.schemas import TESTDATA_SCHEMAS
 
 
@@ -52,12 +60,16 @@ def scan_csv(
     only skips the first line), so a file whose column order differs
     from the schema would silently load swapped values into same-typed
     columns. With ``header=True`` the actual header is checked against
-    the schema's field names up front (one tiny driver-side read).
+    the schema's field names up front: the first line of the first file
+    ``path`` resolves to (a file, a directory of part files or a glob),
+    read from the filesystem without a Spark job.
     """
     _check_path(path, ".csv")
     if header:
-        first = spark.read.text(path).first()
-        actual = [c.strip() for c in first[0].split(",")] if first else []
+        first = IndexFS.for_path(path, "scan_csv").first_line(path)
+        if first is None:
+            raise FileNotFoundError(f"no CSV data file at {path!r}")
+        actual = [c.strip() for c in first.split(",")]
         expected = [f.name for f in schema.fields]
         if actual != expected:
             raise ValueError(
@@ -65,7 +77,8 @@ def scan_csv(
                 f"{expected} — Spark binds CSV schemas positionally, so a "
                 "mismatched order silently corrupts columns"
             )
-    df = spark.read.schema(schema).option("header", str(header).lower()).csv(path)
+    opts = {"header": str(header).lower(), "mode": "FAILFAST"}
+    df = spark.read.schema(schema).options(**opts).csv(path)
     return df.select(*columns) if columns else df
 
 

@@ -7,6 +7,14 @@ single-file contract is kept behind ``single_file=True`` which
 coalesces to one task — fine at reference scale, explicitly NOT the
 default because a 100 TB result must stream out of many tasks in
 parallel (SURVEY.md §7.4 item 8).
+
+The write is the only Spark action a CSV sink runs. The empty-output
+guard counts rows with an ``Observation`` on the written DataFrame, in
+the same pass that produces the output, rather than planning the whole
+upstream DAG a second time for an ``isEmpty`` probe; an empty result is
+removed after the fact and raises ``EmptyInputError``. The single file
+is staged in ``<path>.spark-tmp`` and moved into place with one
+``os.replace``, so a crash leaves either the old output or the new one.
 """
 
 from __future__ import annotations
@@ -15,9 +23,11 @@ import glob
 import os
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
-from dask_datapipeline_spark.errors import require_nonempty
+from dask_datapipeline_spark.errors import EmptyInputError, observed_metric
+from dask_datapipeline_spark.indexfs import IndexFS
 
 
 def write_csv(
@@ -25,37 +35,50 @@ def write_csv(
     path: str,
     single_file: bool = False,
     mode: str = "overwrite",
-    check_nonempty: bool = True,
 ) -> bool:
     """CSV sink. ``single_file=True`` reproduces the reference's
     one-file contract (main.py:277) via coalesce(1) + rename.
+
+    Raises ``EmptyInputError`` when ``df`` has no rows, leaving no new
+    output behind: the staged part file is discarded (a previous
+    single-file output at ``path`` stays as it was), and a part-file
+    directory is removed unless ``mode`` is ``append``, where it also
+    holds rows this call did not write. A part-file write in ``ignore``
+    mode over an existing ``path`` does nothing and returns True, as
+    Spark's own ``ignore`` does.
 
     Returns True on success, matching the reference's API (main.py:281).
     """
     if not path.endswith(".csv"):
         raise FileNotFoundError(f"expected a .csv path, got {path!r}")
-    if check_nonempty:
-        require_nonempty(df, "output")
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     if single_file:
         out_dir = path + ".spark-tmp"
-        df.coalesce(1).write.mode(mode).option("header", "true").csv(out_dir)
-        parts = glob.glob(os.path.join(out_dir, "part-*.csv"))
-        if not parts:
+        try:
+            df.coalesce(1).write.mode(mode).option("header", "true").csv(out_dir)
+            if not observed_metric(obs, "rows"):
+                raise EmptyInputError("output dataframe is empty")
+            parts = glob.glob(os.path.join(out_dir, "part-*.csv"))
+            if not parts:
+                raise ValueError(f"no CSV part written to {out_dir!r}")
+            # a directory left by a non-single-file run cannot be
+            # replaced by a file; os.replace swaps a file atomically
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            os.replace(parts[0], path)
+        finally:
             shutil.rmtree(out_dir, ignore_errors=True)
-            raise ValueError(
-                f"no CSV part written to {out_dir!r} (zero-partition input?)"
-            )
-        # clear any prior file OR directory at the destination —
-        # shutil.move into an existing directory would silently nest
-        # the part file inside it instead of replacing it
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        elif os.path.exists(path):
-            os.remove(path)
-        shutil.move(parts[0], path)
-        shutil.rmtree(out_dir)
     else:
+        fs = IndexFS.for_path(path, "write_csv")
+        # Spark skips the whole write, so the count would read 0
+        if mode.lower() == "ignore" and (fs.isdir(path) or fs.isfile(path)):
+            return True
         df.write.mode(mode).option("header", "true").csv(path)
+        if not observed_metric(obs, "rows"):
+            if mode.lower() != "append":
+                fs.rmtree(path)
+            raise EmptyInputError("output dataframe is empty")
     return True
 
 
@@ -254,7 +277,8 @@ def write_zordered(
     dimensions occupy comparable bit widths — a 4-bit user id crossed
     with a 16-bit timestamp would otherwise sort almost purely by
     time and every file would span every user (measured exactly that
-    on the test corpus). The per-dimension (min, max) is one scalar
+    on the test corpus). The per-dimension (min, max) and the row
+    count behind the empty-input ``EmptyInputError`` are one scalar
     aggregate — bounded driver traffic at any corpus size, the same
     contract as a codebook collect.
 
@@ -272,16 +296,15 @@ def write_zordered(
     stats. A dimension that is entirely NULL has no range to scale
     and raises ValueError.
     """
-    from pyspark.sql import functions as F
-
     from dask_datapipeline_spark.functions.numeric import zorder_key
 
-    require_nonempty(df, "write_zordered input")
     if n_files < 1:
         raise ValueError(f"n_files={n_files} must be >= 1")
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(dim_a), F.max(dim_a), F.min(dim_b), F.max(dim_b)
+    n, lo_a, hi_a, lo_b, hi_b = df.agg(
+        F.count(F.lit(1)), F.min(dim_a), F.max(dim_a), F.min(dim_b), F.max(dim_b)
     ).collect()[0]
+    if n == 0:
+        raise EmptyInputError("write_zordered input dataframe is empty")
     for name, lo in ((dim_a, lo_a), (dim_b, lo_b)):
         if lo is None:
             raise ValueError(
@@ -423,8 +446,6 @@ def merge_versioned(
     (the upgrade over ``compact_small_files``-style dir swapping).
     ``tag`` passes through to ``write_versioned`` for idempotent
     at-least-once replay."""
-    from pyspark.sql import functions as F
-
     from dask_datapipeline_spark.operators.merge import merge_upsert
 
     cur = _vt_read_manifest(path)

@@ -5,10 +5,17 @@ and after; a household without transactions; noValue sentinels."""
 
 from __future__ import annotations
 
-import pytest
+import os
 
+import pytest
+from py4j.protocol import Py4JJavaError
+
+from dask_datapipeline_spark.errors import EmptyInputError
 from dask_datapipeline_spark.plans import reference_main
 from dask_datapipeline_spark.plans.reference_main import run_pipeline
+from dask_datapipeline_spark.schemas import TRANSACTIONS_SCHEMA
+from dask_datapipeline_spark.sources.readers import scan_csv
+from dask_datapipeline_spark.sources.writers import write_csv
 
 
 @pytest.fixture()
@@ -78,3 +85,60 @@ def test_cli_writes_one_csv(spark, csv_inputs, tmp_path, monkeypatch):
         ",".join(reference_main.OUTPUT_COLS),
         "1,2,2+,51 to 100,30-39,noValue,CO,15.65,6.55,6",
     ]
+
+
+def _last_sql_execution_id(spark) -> int:
+    """Id of the newest SQL execution the status store has recorded.
+    Ids are sequential, so a difference counts the executions started
+    in between; the store's row count stops growing once a long test
+    session reaches ``spark.sql.ui.retainedExecutions``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def test_pipeline_and_sink_run_one_sql_execution(spark, csv_inputs, tmp_path):
+    """The sink's write is the only Spark action: header checks read
+    the filesystem and the empty guard counts rows inside the write."""
+    tx, hh, dem = csv_inputs
+    before = _last_sql_execution_id(spark)
+    scan_csv(spark, tx, TRANSACTIONS_SCHEMA)
+    assert _last_sql_execution_id(spark) == before
+    write_csv(run_pipeline(spark, tx, hh, dem), str(tmp_path / "o.csv"), single_file=True)
+    assert _last_sql_execution_id(spark) == before + 1
+
+
+def test_non_numeric_amount_fails_naming_the_file(spark, csv_inputs, tmp_path):
+    """FAILFAST: a bad amount stops the job instead of becoming a NULL
+    that silently changes the household's sums."""
+    tx, hh, dem = csv_inputs
+    with open(tx, "a") as f:
+        f.write("i1,2021-09-02 10:00:00,ten\n")
+    with pytest.raises(Py4JJavaError) as err:
+        write_csv(run_pipeline(spark, tx, hh, dem), str(tmp_path / "o.csv"), single_file=True)
+    assert tx in str(err.value)
+    assert "MALFORMED_RECORD_IN_PARSING" in str(err.value)
+    assert not os.path.exists(tmp_path / "o.csv.spark-tmp")
+
+
+def test_malformed_date_row_is_kept(spark, csv_inputs):
+    """``date`` is coerced to NULL as the reference coerces it: the row
+    counts in ``total_transactions`` and in neither window."""
+    tx, hh, dem = csv_inputs
+    with open(tx, "a") as f:
+        f.write("i1,not a date,4.00\n")
+    (r,) = run_pipeline(spark, tx, hh, dem).collect()
+    assert (r.total_amount_before_campaign, r.total_amount_during_campaign) == (15.65, 6.55)
+    assert r.total_transactions == 7
+
+
+def test_header_only_transactions_leave_no_output(spark, csv_inputs, tmp_path):
+    tx, hh, dem = csv_inputs
+    with open(tx, "w") as f:
+        f.write("individual_id,date,transaction_amount\n")
+    out = str(tmp_path / "o.csv")
+    with pytest.raises(EmptyInputError):
+        write_csv(run_pipeline(spark, tx, hh, dem), out, single_file=True)
+    assert not os.path.exists(out)
+    assert not os.path.exists(out + ".spark-tmp")

@@ -127,6 +127,62 @@ def test_scan_csv_rejects_reordered_header(spark, tmp_path):
         scan_csv(spark, str(p), schema)
 
 
+@pytest.mark.parametrize("form", ["directory", "glob", "uri"])
+def test_scan_csv_checks_header_of_directory_input(spark, tmp_path, form):
+    """A directory of part files, a glob and a ``file:`` URI (the Hadoop
+    filesystem path) are header-checked like one file: the first
+    visible part file's first line, skipping ``_SUCCESS`` and ``.crc``
+    files."""
+
+    def layout(name, header):
+        d = tmp_path / name
+        d.mkdir()
+        (d / "_SUCCESS").write_text("")
+        (d / ".part-00000.csv.crc").write_text("crc")
+        (d / "part-00000.csv").write_text(f"{header}\nJack,CO\n")
+        (d / "part-00001.csv").write_text(f"{header}\nAdam,WY\n")
+        return {"directory": str(d), "glob": f"{d}/part-*.csv", "uri": f"file://{d}"}[form]
+
+    assert scan_csv(spark, layout("ok.csv", "Name,City"), NAME_CITY).count() == 2
+    with pytest.raises(ValueError, match="positionally"):
+        scan_csv(spark, layout("swapped.csv", "City,Name"), NAME_CITY)
+
+
+def test_write_csv_failed_replace_keeps_previous_output(spark, tmp_path, monkeypatch):
+    """A failure between the part write and the replace leaves the
+    previous output byte-for-byte and no staging directory."""
+    out = tmp_path / "o.csv"
+    write_csv(spark.createDataFrame([("old",)], "a string"), str(out), single_file=True)
+    before = out.read_bytes()
+
+    def crash(src, dst):
+        raise OSError("crash before the replace")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="crash before the replace"):
+        write_csv(spark.createDataFrame([("new",)], "a string"), str(out), single_file=True)
+    assert out.read_bytes() == before
+    assert not os.path.exists(f"{out}.spark-tmp")
+
+
+def test_write_csv_empty_part_directory(spark, tmp_path):
+    """An empty result written as a part-file directory is removed,
+    except in append mode, where the directory holds earlier rows.
+    ``ignore`` over an existing directory writes nothing and is no
+    error, although the row count of a skipped write reads 0."""
+    empty = spark.createDataFrame([], "a string")
+    out = str(tmp_path / "d.csv")
+    with pytest.raises(EmptyInputError):
+        write_csv(empty, out)
+    assert not os.path.exists(out)
+    write_csv(spark.createDataFrame([("x",)], "a string"), out)
+    with pytest.raises(EmptyInputError):
+        write_csv(empty, out, mode="append")
+    assert write_csv(spark.createDataFrame([("y",)], "a string"), out, mode="ignore")
+    back = scan_csv(spark, out, T.StructType([T.StructField("a", T.StringType())]))
+    assert [r.a for r in back.collect()] == ["x"]
+
+
 def test_write_csv_single_file_replaces_existing_dir(spark, tmp_path):
     from dask_datapipeline_spark.sources.writers import write_csv
 
