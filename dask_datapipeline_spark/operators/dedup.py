@@ -235,7 +235,9 @@ def hashed_shingles(
     cache entry instead of re-exploding and re-hashing the corpus.
     Identical plans share ONE entry, so repeated calls don't stack
     copies. See the module docstring's cache contract — a service
-    processing many corpora clears or materializes instead."""
+    processing many corpora clears or materializes instead, and a
+    streaming caller, whose every micro-batch is a new plan, unpersists
+    the result once it is written (``append_to_minhash_index``)."""
     require_columns(df, [id_col, text_col])
     from pyspark.storagelevel import StorageLevel
 
@@ -418,21 +420,21 @@ def jaccard_pairs(
     Sets are of 60-bit shingle hashes (see ``hashed_shingles``) —
     collision probability is negligible and the oracle hashes
     identically, so the Jaccard values match bit-for-bit. Intersection
-    via self equi-join on the hash (shuffle on an 8-byte long). Union
-    by |A|+|B|−∩ from per-doc distinct counts. Output:
-    (id_a, id_b, jaccard ≥ threshold).
+    per candidate pair by ``array_intersect`` of the two documents'
+    sorted hash arrays, union by |A|+|B|−∩ from the array sizes (see
+    ``_verify_pairs``). Output: (id_a, id_b, jaccard ≥ threshold).
 
     ``max_df`` bounds the hot-shingle skew: shingles present in more
-    than ``max_df`` documents are dropped BEFORE the intersection
-    self-join (see ``cap_document_frequency``), capping the join
+    than ``max_df`` documents are dropped BEFORE any join on the hash
+    (see ``cap_document_frequency``), capping the prefix join's
     fan-out at max_df² rows per key. Jaccard is then over the capped
     shingle universe — pass the same cap to the oracle.
 
-    The distinct shingle-hash table is referenced four times in this
-    plan (intersection a/b sides, |A| sizes, |B| sizes); Spark's lazy
-    DAG would recompute the explode+md5 each time, so it is persisted
-    (memory, spilling to disk) — at any scale one materialization beats
-    four recomputes of the corpus's n-grams.
+    The distinct shingle-hash table is persisted (memory, spilling to
+    disk) so that every near-dup query over the same corpus in the
+    session (``near_dup_pairs_minhash`` builds the identical plan)
+    shares one materialization instead of re-exploding and re-hashing
+    the corpus's n-grams.
 
     The no-candidates path uses PPJoin-style PREFIX FILTERING
     (Chaudhuri/Ganti/Kaushik 2006, Xiao et al. 2008) — exact, not a
@@ -515,8 +517,8 @@ def _jaccard_allpairs_prefix(
     rows at t=0.5 than the full intersection self-join), and
     verification computes the EXACT intersection per candidate pair
     with ``array_intersect`` on the full sorted hash arrays — a
-    per-pair map-side operation bounded by document length, replacing
-    the all-shared-shingle join+groupBy entirely.
+    per-pair map-side operation bounded by document length (the
+    ``_verify_pairs`` the candidates path uses too).
 
     Same output, bit-for-bit, as the naive plan (the oracle SQL is
     unchanged); the speedup is pure candidate pruning. The per-doc
@@ -527,9 +529,7 @@ def _jaccard_allpairs_prefix(
     from pyspark.storagelevel import StorageLevel
 
     arrs = (
-        sh.groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("__h")).alias("__arr"))
-        .withColumn("__n", F.size("__arr"))
+        _hash_arrays(sh, id_col)
         .withColumn(
             "__p",
             (F.col("__n") - _exact_ceil_mul(F.col("__n"), threshold) + 1).cast("int"),
@@ -594,6 +594,22 @@ def _jaccard_allpairs_prefix(
         )
         .select("id_a", "id_b")
     )
+    return _verify_pairs(cand, arrs, id_col, threshold)
+
+
+def _hash_arrays(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, __arr, __n): each doc's distinct hashes as a sorted array, its size."""
+    return (
+        sh.groupBy(id_col)
+        .agg(F.sort_array(F.collect_list("__h")).alias("__arr"))
+        .withColumn("__n", F.size("__arr"))
+    )
+
+
+def _verify_pairs(cand: DataFrame, arrs: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """The one exact verify of candidate pairs ``(id_a, id_b)``: one row
+    per pair, the size of its two hash arrays' ``array_intersect``, kept
+    when they share a shingle and pass the exact rational test."""
     na = arrs.select(
         F.col(id_col).alias("id_a"), F.col("__arr").alias("__aa"), F.col("__n").alias("__na")
     )
@@ -604,7 +620,10 @@ def _jaccard_allpairs_prefix(
         cand.join(na, "id_a")
         .join(nb, "id_b")
         .withColumn("__inter", F.size(F.array_intersect("__aa", "__ab")))
-        .filter(_exact_jaccard_ge(F.col("__inter"), F.col("__na"), F.col("__nb"), threshold))
+        .filter(
+            (F.col("__inter") > 0)
+            & _exact_jaccard_ge(F.col("__inter"), F.col("__na"), F.col("__nb"), threshold)
+        )
         .select(
             "id_a",
             "id_b",
@@ -617,54 +636,23 @@ def _jaccard_allpairs_prefix(
 
 def _jaccard_from_distinct(
     sh: DataFrame,
-    candidates: DataFrame | None,
+    candidates: DataFrame,
     id_col: str,
     threshold: float,
 ) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    if candidates is not None:
-        # Verify candidates only: restrict the shingle table to docs
-        # that appear in some candidate pair BEFORE the intersection
-        # self-join — the join output shrinks from all-pairs-sharing-a-
-        # shingle to pairs among candidate docs. Per-doc set sizes are
-        # unaffected by the doc-level filter.
-        ids = (
-            candidates.select(F.col("id_a").alias(id_col))
-            .unionByName(candidates.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        # No broadcast hint: AQE broadcasts the id set when it is small
-        # (the common case) but can fall back to a shuffled semi-join
-        # when a pathological corpus yields huge candidate sets.
-        sh = sh.join(ids, on=id_col, how="left_semi").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), on="__h")
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__inter"))
+    """Exact Jaccard >= ``threshold`` of the ``candidates`` pairs over
+    the DISTINCT ``(id, __h)`` table ``sh``, arraying only the hashes
+    of candidate docs (a doc-level filter: set sizes are unchanged)."""
+    ids = (
+        candidates.select(F.col("id_a").alias(id_col))
+        .unionByName(candidates.select(F.col("id_b").alias(id_col)))
+        .distinct()
     )
-    if candidates is not None:
-        inter = inter.join(candidates, on=["id_a", "id_b"], how="left_semi")
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
-    return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .filter(_exact_jaccard_ge(F.col("__inter"), F.col("__na"), F.col("__nb"), threshold))
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter"))).alias(
-                "jaccard"
-            ),
-        )
-    )
+    # No broadcast hint: AQE broadcasts the id set when it is small
+    # (the common case) but can fall back to a shuffled semi-join
+    # when a pathological corpus yields huge candidate sets.
+    arrs = _hash_arrays(sh.join(ids, on=id_col, how="left_semi"), id_col)
+    return _verify_pairs(candidates, arrs, id_col, threshold)
 
 
 def near_dup_pairs_minhash(
@@ -707,7 +695,7 @@ def near_dup_pairs_minhash(
         StorageLevel.MEMORY_AND_DISK
     )
     # the candidate pair set is read twice by the verify (doc-id
-    # restriction + pair semi-join); un-persisted, the banding
+    # restriction + pair join); un-persisted, the banding
     # self-join would run twice per evaluation
     cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands).persist(
         StorageLevel.MEMORY_AND_DISK

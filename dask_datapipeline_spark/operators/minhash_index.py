@@ -6,7 +6,8 @@ to parquet ONCE at index-build time; every incoming batch then
 flags its near-dups by reading the INDEX — the corpus text is never
 re-shingled, re-hashed, or re-signed per batch. At 100 TB this is
 the difference between a daily O(corpus) recompute and O(batch)
-work plus index scans.
+work plus index scans. A streaming ingest signs each batch ONCE, into
+its increment, and flags it from there with a plan that caches nothing.
 
 Index layout under ``<path>/``:
 
@@ -168,14 +169,9 @@ def read_minhash_index(
     cur = _read_manifest(path)
     sh = spark.read.parquet(IndexFS.join(path, cur["shingles"]))
     sig = spark.read.parquet(IndexFS.join(path, cur["signatures"]))
-    inc_root = IndexFS.join(path, "inc")
     for tag in cur["inc"]:
-        sh = sh.unionByName(
-            spark.read.parquet(IndexFS.join(inc_root, tag, "shingles"))
-        )
-        sig = sig.unionByName(
-            spark.read.parquet(IndexFS.join(inc_root, tag, "signatures"))
-        )
+        inc_sh, inc_sig = _read_increment(spark, path, tag)
+        sh, sig = sh.unionByName(inc_sh), sig.unionByName(inc_sig)
     return (
         sh,
         sig,
@@ -184,31 +180,55 @@ def read_minhash_index(
     )
 
 
+def _read_increment(
+    spark: SparkSession, index_path: str, tag: str
+) -> tuple[DataFrame, DataFrame]:
+    """(shingles, signatures) of increment ``inc/<tag>`` as parquet scans."""
+    inc = IndexFS.join(index_path, "inc", tag)
+    return (
+        spark.read.parquet(IndexFS.join(inc, "shingles")),
+        spark.read.parquet(IndexFS.join(inc, "signatures")),
+    )
+
+
+def _batch_shingles(
+    batch: DataFrame, index_path: str, meta: dict, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(hashed, capped): the batch's ``hashed_shingles`` (cached; the
+    caller releases it), hashed as the index was built, and its
+    distinct rows minus the frozen hot-hash set."""
+    hashed = hashed_shingles(
+        batch, meta["id_col"], text_col, meta["shingle_n"],
+        meta.get("shingle_mode", "word"),  # pre-r13 indexes: word
+    )
+    hot = batch.sparkSession.read.parquet(IndexFS.join(index_path, "hot_hashes"))
+    return hashed, hashed.distinct().join(hot, on="__h", how="left_anti")
+
+
 def append_to_minhash_index(
     batch: DataFrame, index_path: str, batch_tag: str, text_col: str = "text"
 ) -> None:
     """Append one ingested batch's capped shingle hashes + MinHash
     signatures to the index as increment ``inc/<batch_tag>/`` — the
-    growth step of the daily-ingest loop: after a batch is FLAGGED
-    against the current index, its own features join the index so
-    later batches dedup against it, with the corpus still never
-    re-shingled.
+    growth step of the daily-ingest loop: later batches dedup against
+    it, with the corpus still never re-shingled. The batch is shingled,
+    capped and signed ONCE, here; ``stream_incremental_dedup`` flags it
+    from the committed increment.
 
     ATOMIC and IDEMPOTENT per tag: both parquet dirs are written into
-    a dot-prefixed temp dir, renamed whole onto ``inc/<tag>``, and
-    only then committed by adding the tag to the ``_CURRENT``
-    manifest (one atomic rename) — so an at-least-once caller — a
-    Structured Streaming ``foreachBatch`` keyed by batch_id — can
-    replay a failed batch without duplicating index rows, and a crash
-    at ANY point (between the two parquet writes, before the dir
-    rename, before the manifest commit) leaves only unreferenced
-    garbage that the replay overwrites; readers never see a partial
-    increment (ADVICE r6). The document-frequency cap stays FROZEN:
-    batch shingles are capped against the build-time hot-hash set only
-    (module docstring semantics)."""
+    a temp dir ``inc/.tmp-<tag>-<8hex>``, renamed whole onto
+    ``inc/<tag>``, and only then committed by adding the tag to the
+    ``_CURRENT`` manifest (one atomic rename) — so an at-least-once
+    caller — a Structured Streaming ``foreachBatch`` keyed by batch_id
+    — can replay a failed batch without duplicating index rows, and a
+    crash at ANY point leaves only unreferenced garbage (ADVICE r6):
+    the replay replaces an uncommitted ``inc/<tag>``, and the next
+    compaction sweeps a stranded temp dir. The document-frequency cap
+    stays FROZEN: batch shingles are capped against the build-time
+    hot-hash set only (module docstring semantics). Nothing stays
+    cached: each micro-batch is a new plan, so a kept cache entry
+    would grow the session's cache without bound."""
     import uuid
-
-    from pyspark.storagelevel import StorageLevel
 
     spark = batch.sparkSession
     fs = IndexFS.for_path(index_path, "append_to_minhash_index")
@@ -222,27 +242,17 @@ def append_to_minhash_index(
         # the staged content deterministic — pure no-op, so a
         # manifest-referenced dir is never touched
         return
-    hot = spark.read.parquet(IndexFS.join(index_path, "hot_hashes"))
-    b_sh = (
-        hashed_shingles(
-            batch,
-            meta["id_col"],
-            text_col,
-            meta["shingle_n"],
-            meta.get("shingle_mode", "word"),  # pre-r13 indexes: word
-        )
-        .distinct()
-        .join(hot, on="__h", how="left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    hashed, b_sh = _batch_shingles(batch, index_path, meta, text_col)
     fs.makedirs(inc_root)
     tmp = IndexFS.join(inc_root, f".tmp-{batch_tag}-{uuid.uuid4().hex[:8]}")
-    b_sh.write.mode("overwrite").parquet(IndexFS.join(tmp, "shingles"))
+    try:
+        b_sh.write.mode("overwrite").parquet(IndexFS.join(tmp, "shingles"))
+    finally:
+        hashed.unpersist()
     sh_back = spark.read.parquet(IndexFS.join(tmp, "shingles"))
     _signatures_from_hashed(sh_back, meta["id_col"], meta["num_hashes"]).write.mode(
         "overwrite"
     ).parquet(IndexFS.join(tmp, "signatures"))
-    b_sh.unpersist()
     if fs.isdir(final):  # staged by a crashed run but never committed
         fs.rmtree(final)
     fs.move(tmp, final)
@@ -319,15 +329,20 @@ def compact_minhash_index(
         if keep_from is None or _tag_order(t) < _tag_order(keep_from)
     ]
     kept = [t for t in cur["inc"] if t not in set(fold)]
-    # clear stage dirs a crashed previous compaction may have left —
+    # clear stage dirs a crashed compaction or append may have left —
     # BEFORE the no-fold early return, or garbage stranded by a crash
-    # persists until a fold-eligible compaction happens to run
+    # persists until a fold-eligible compaction happens to run (no
+    # append is in flight: single-writer contract)
     for d in fs.listdir(index_path):
         if (
             (d.startswith("shingles-v") or d.startswith("signatures-v"))
             and d not in (cur["shingles"], cur["signatures"])
         ):
             fs.rmtree(IndexFS.join(index_path, d))
+    inc_root = IndexFS.join(index_path, "inc")
+    for d in fs.listdir(inc_root):
+        if d.startswith(".tmp-"):
+            fs.rmtree(IndexFS.join(inc_root, d))
     if not fold:
         # nothing eligible (e.g. compact_every=1 at batch 0 with only
         # the in-flight tag committed): folding would rewrite the
@@ -339,14 +354,9 @@ def compact_minhash_index(
 
     sh = spark.read.parquet(IndexFS.join(index_path, cur["shingles"]))
     sig = spark.read.parquet(IndexFS.join(index_path, cur["signatures"]))
-    inc_root = IndexFS.join(index_path, "inc")
     for tag in fold:
-        sh = sh.unionByName(
-            spark.read.parquet(IndexFS.join(inc_root, tag, "shingles"))
-        )
-        sig = sig.unionByName(
-            spark.read.parquet(IndexFS.join(inc_root, tag, "signatures"))
-        )
+        inc_sh, inc_sig = _read_increment(spark, index_path, tag)
+        sh, sig = sh.unionByName(inc_sh), sig.unionByName(inc_sig)
     sh.write.parquet(IndexFS.join(index_path, new_sh))
     sig.write.parquet(IndexFS.join(index_path, new_sig))
 
@@ -383,49 +393,44 @@ def incremental_near_dup_flags(
     a corpus doc with a higher id), NULL for novel docs.
 
     Plan shape: batch shingle+hash (map-side over the batch scan
-    only), frozen-cap anti-join against the KiB hot-hash table, batch
-    signatures (one groupBy), then ONE band equi-join of batch
-    signatures against index ∪ batch signatures, and the candidates-
-    only Jaccard verify over index ∪ batch shingles — every wide
-    exchange keys on 8-byte hashes or band keys; corpus cost is
-    index SCANS (at 100 TB: partition-pruned parquet), not
-    recompute."""
-    from pyspark.storagelevel import StorageLevel
-
+    only; the one cached level), frozen-cap anti-join against the KiB
+    hot-hash table, batch signatures (one groupBy), then ``_flags``:
+    ONE band equi-join of batch signatures against index ∪ batch
+    signatures and the candidates-only Jaccard verify over index ∪
+    batch shingles — every wide exchange keys on 8-byte hashes, band
+    keys or doc ids; corpus cost is index SCANS (at 100 TB:
+    partition-pruned parquet), not recompute."""
     spark = batch.sparkSession
-    idx_sh, idx_sig, hot, meta = read_minhash_index(spark, index_path)
+    idx_sh, idx_sig, _, meta = read_minhash_index(spark, index_path)
+    _, b_sh = _batch_shingles(batch, index_path, meta, text_col)
+    b_sig = _signatures_from_hashed(b_sh, meta["id_col"], meta["num_hashes"])
+    return _flags(batch, idx_sh, idx_sig, b_sh, b_sig, meta, threshold)
+
+
+def _flags(
+    batch: DataFrame, idx_sh: DataFrame, idx_sig: DataFrame, b_sh: DataFrame,
+    b_sig: DataFrame, meta: dict, threshold: float,
+) -> DataFrame:
+    """The flags plan given the batch's capped shingles and signatures —
+    computed by ``incremental_near_dup_flags``, or scanned from the
+    committed increment by ``stream_incremental_dedup``. Caches nothing."""
     id_col = meta["id_col"]
     num_hashes, bands = meta["num_hashes"], meta["bands"]
 
     # REPLAY SAFETY: drop the batch's own ids from the index side
-    # before unioning. If this exact batch was already (partially)
-    # appended to the index — an at-least-once foreachBatch replaying
-    # after a mid-append failure — the union would otherwise hold each
-    # (id, shingle) row twice and double every intersection count in
-    # the Jaccard verify. Side effect by design: a re-ingested id is
-    # treated as an UPDATE of that document, never as its own dup
-    # partner. One anti-join keyed on the bounded batch id set
-    # (broadcast at any corpus size).
-    b_ids_bc = batch.select(id_col).distinct()
-    idx_sh = idx_sh.join(F.broadcast(b_ids_bc), on=id_col, how="left_anti")
-    idx_sig = idx_sig.join(F.broadcast(b_ids_bc), on=id_col, how="left_anti")
-
-    b_sh = (
-        hashed_shingles(
-            batch, id_col, text_col, meta["shingle_n"],
-            meta.get("shingle_mode", "word"),
-        )
-        .distinct()
-        .join(hot, on="__h", how="left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    b_sig = _signatures_from_hashed(b_sh, id_col, num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    all_sig = idx_sig.unionByName(b_sig)
+    # before unioning. The batch may already be in the index (the
+    # stream appends before it flags; a replay may follow a partial
+    # append), and the union would then hold each (id, shingle) row
+    # twice — so flags before and after the batch's own append are
+    # identical. Side effect by design: a re-ingested id is treated as
+    # an UPDATE of that document, never as its own dup partner. One
+    # anti-join keyed on the bounded batch id set (broadcast).
+    b_ids = batch.select(id_col).distinct()
+    idx_sh = idx_sh.join(F.broadcast(b_ids), on=id_col, how="left_anti")
+    idx_sig = idx_sig.join(F.broadcast(b_ids), on=id_col, how="left_anti")
 
     side_b = band_keys(b_sig, id_col, num_hashes, bands)
-    side_all = band_keys(all_sig, id_col, num_hashes, bands)
+    side_all = band_keys(idx_sig.unionByName(b_sig), id_col, num_hashes, bands)
     cand = (
         side_b.select(F.col(id_col).alias("__ba"), "__t", "__band")
         .join(
@@ -438,32 +443,25 @@ def incremental_near_dup_flags(
             F.greatest("__ba", "__bb").alias("id_b"),
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    combined_sh = idx_sh.unionByName(b_sh)
-    pairs = _jaccard_from_distinct(combined_sh, cand, id_col, threshold)
+    pairs = _jaccard_from_distinct(idx_sh.unionByName(b_sh), cand, id_col, threshold)
 
-    b_ids = batch.select(id_col).distinct()
-    as_b = pairs.join(
-        b_ids.select(F.col(id_col).alias("id_b")), on="id_b", how="left_semi"
-    ).select(F.col("id_b").alias(id_col), F.col("id_a").alias("partner"))
-    as_a_corpus = (
-        pairs.join(
-            b_ids.select(F.col(id_col).alias("id_a")), on="id_a", how="left_semi"
-        )
-        .join(b_ids.select(F.col(id_col).alias("id_b")), on="id_b", how="left_anti")
-        .select(F.col("id_a").alias(id_col), F.col("id_b").alias("partner"))
-    )
+    # one pass over the verified pairs, each in both orientations: a
+    # partner counts when it has the smaller id or is not in the batch
+    # (rows of index docs fall away in the final join)
+    b_partner = b_ids.select(F.col(id_col).alias("partner"), F.lit(True).alias("__pb"))
     resolved = (
-        as_b.unionByName(as_a_corpus)
+        pairs.select(F.inline(F.array(
+            F.struct(F.col("id_a").alias(id_col), F.col("id_b").alias("partner")),
+            F.struct(F.col("id_b").alias(id_col), F.col("id_a").alias("partner")),
+        )))
+        .join(b_partner, on="partner", how="left")
+        .filter((F.col("partner") < F.col(id_col)) | F.col("__pb").isNull())
         .groupBy(id_col)
         .agg(F.min("partner").alias("dup_of"))
     )
-    return (
-        batch.select(id_col)
-        .distinct()
-        .join(resolved, on=id_col, how="left")
-        .select(id_col, "dup_of", F.col("dup_of").isNull().alias("is_new"))
+    return b_ids.join(resolved, on=id_col, how="left").select(
+        id_col, "dup_of", F.col("dup_of").isNull().alias("is_new")
     )
 
 

@@ -4599,9 +4599,10 @@ def q_incremental_dedup(spark, sf_dir):
     "Streaming incremental near-dup (streaming/windows.py::"
     "stream_incremental_dedup): the incoming corpus half arrives as THREE "
     "id-range-ordered micro-batches through a real Structured Streaming "
-    "foreachBatch sink — each batch is flagged against the persisted MinHash "
-    "index, written idempotently, then APPENDED to the index so later batches "
-    "dedup against it. Because batches are id-ordered, the union of per-batch "
+    "foreachBatch sink — each batch is APPENDED to the persisted MinHash index "
+    "(idempotently, so later batches dedup against it), then flagged against "
+    "the index from its committed increment and written idempotently. Because "
+    "batches are id-ordered, the union of per-batch "
     "flags equals the monolithic incremental run EXACTLY (a dup partner is a "
     "corpus doc or a smaller-id ingested doc, reachable either via an index "
     "increment or the in-batch union) — so this row shares incremental_dedup's "

@@ -769,21 +769,22 @@ def stream_incremental_dedup(
 ) -> None:
     """Streaming incremental near-dup: drain a document file stream
     (one staged parquet file per micro-batch) through ``foreachBatch``,
-    flagging each micro-batch against the PERSISTED MinHash corpus
-    index (``operators/minhash_index.py``) and then appending the
-    batch's own signatures as an index increment — so later
+    appending each micro-batch's own signatures to the PERSISTED
+    MinHash corpus index (``operators/minhash_index.py``) as an
+    increment and flagging it against that index — so later
     micro-batches dedup against everything ingested before them, and
     the corpus text is never re-shingled.
 
-    Per micro-batch: ``incremental_near_dup_flags`` (index scans +
-    batch-only feature extraction) → flags written to
-    ``out_dir/batch-<id>`` (mode=overwrite ⇒ idempotent under
-    at-least-once replay) → ``append_to_minhash_index`` tagged by
-    batch_id (also idempotent; flags are computed with the batch's own
-    ids anti-joined out of the index side, so a replay after a
-    mid-append failure scores identically). A STABLE
-    ``checkpoint_dir`` stores source offsets: a restarted run resumes
-    with already-processed files skipped — together with the
+    Per micro-batch: ``append_to_minhash_index`` tagged by batch_id
+    shingles and signs the batch ONCE into increment ``inc/<tag>``
+    (idempotent) → the flags plan reads them back from the increment,
+    caching nothing → flags written to ``out_dir/batch-<id>``
+    (mode=overwrite ⇒ idempotent under at-least-once replay). Flags
+    computed after the commit equal flags computed before it, because
+    the batch's own ids are anti-joined out of the index side; so a
+    crash between commit and flags write replays to identical flags.
+    A STABLE ``checkpoint_dir`` stores source offsets: a restarted run
+    resumes with already-processed files skipped — together with the
     idempotent writes this gives an exactly-once end state, the same
     contract as ``stream_merge_to_parquet``.
 
@@ -806,10 +807,12 @@ def stream_incremental_dedup(
     rather than cadence (a cadence knob over-compacts small batches
     and under-compacts big ones)."""
     from dask_datapipeline_spark.operators.minhash_index import (
+        _flags,
+        _read_increment,
         append_to_minhash_index,
         compact_minhash_index,
-        incremental_near_dup_flags,
         maybe_compact_minhash_index,
+        read_minhash_index,
     )
 
     if lease is not None:  # single-writer contract, enforced (r13)
@@ -818,14 +821,14 @@ def stream_incremental_dedup(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if lease is not None:
             lease.check_and_renew()
-        flags = incremental_near_dup_flags(
-            batch_df, index_path, threshold=threshold
-        )
+        tag = f"b{batch_id:05d}"
+        append_to_minhash_index(batch_df, index_path, tag)
+        idx_sh, idx_sig, _, meta = read_minhash_index(spark, index_path)
+        b_sh, b_sig = _read_increment(spark, index_path, tag)
+        flags = _flags(batch_df, idx_sh, idx_sig, b_sh, b_sig, meta, threshold)
         flags.write.mode("overwrite").parquet(
             IndexFS.join(out_dir, f"batch-{batch_id:05d}")
         )
-        tag = f"b{batch_id:05d}"
-        append_to_minhash_index(batch_df, index_path, tag)
         # compaction runs INSIDE foreachBatch, i.e. under the same
         # single-writer serialization as the appends (the contract
         # compact_minhash_index requires); flags are byte-identical

@@ -121,6 +121,58 @@ def test_frozen_cap_drops_hot_hashes_for_batch_too(spark, tmp_path):
     assert rows[0].is_new is True
 
 
+def test_candidate_pair_sharing_no_shingle_is_not_emitted(spark):
+    """The verify emits only pairs that share a shingle, even at
+    threshold 0.0, where the rational test alone would pass J = 0."""
+    from dask_datapipeline_spark.operators.dedup import jaccard_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "v w x y z"), (3, "a b c x y")],
+        "doc_id long, text string",
+    )
+    cands = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "id_a long, id_b long")
+    got = {
+        (r.id_a, r.id_b)
+        for r in jaccard_pairs(docs, cands, threshold=0.0).collect()
+    }
+    assert got == {(1, 3)}
+
+
+def test_batch_doc_shorter_than_shingle_n_is_new(spark, index_dir):
+    """A batch doc with fewer than shingle_n words has no shingles and
+    no signature: it is flagged (NULL, is_new=True), even when its
+    words prefix a corpus doc."""
+    batch = spark.createDataFrame(
+        [(11, "the quick"), (13, ""), BATCH[0]], "doc_id long, text string"
+    )
+    got = {
+        r.doc_id: (r.dup_of, r.is_new)
+        for r in incremental_near_dup_flags(batch, index_dir).collect()
+    }
+    assert got == {11: (None, True), 13: (None, True), 1: (0, False)}
+
+
+def test_all_hot_capped_doc_is_new_and_others_still_flag(spark, tmp_path):
+    """A batch doc whose shingles are ALL hot-capped has no capped
+    shingle: it is new, and so is its exact copy in the same batch,
+    while a copy of a corpus doc that shares the hot shingles is still
+    flagged against it."""
+    hot_text = "x y z " * 5
+    corpus_rows = [(i * 2, hot_text + f"unique{i} filler{i} tail{i}") for i in range(4)]
+    corpus = spark.createDataFrame(corpus_rows, "doc_id long, text string")
+    path = str(tmp_path / "idx")
+    build_minhash_index(corpus, path, max_df=2)
+    batch = spark.createDataFrame(
+        [(101, hot_text.strip()), (103, hot_text.strip()), (105, corpus_rows[0][1])],
+        "doc_id long, text string",
+    )
+    got = {
+        r.doc_id: (r.dup_of, r.is_new)
+        for r in incremental_near_dup_flags(batch, path).collect()
+    }
+    assert got == {101: (None, True), 103: (None, True), 105: (0, False)}
+
+
 # ----- atomic append + base+delta compaction --------------------------
 
 
@@ -201,6 +253,43 @@ def test_compaction_restart_sweeps_crashed_stage(spark, grown_index):
     assert new_cur["shingles"] == "shingles-v1"
     assert _flags_rows(spark, grown_index, probe) == before
     assert not os.path.exists(os.path.join(grown_index, "shingles-v1", "junk"))
+
+
+def test_compaction_sweeps_append_stage_stranded_by_a_crash(
+    spark, grown_index, monkeypatch
+):
+    """An append that dies before renaming its staged increment leaves
+    inc/.tmp-<tag>-<8hex>; the replay stages under a fresh name, so
+    only compaction's pre-fold sweep removes it — also when nothing is
+    eligible to fold."""
+    from dask_datapipeline_spark.indexfs import IndexFS
+    from dask_datapipeline_spark.operators.minhash_index import (
+        append_to_minhash_index,
+        compact_minhash_index,
+    )
+
+    batch = spark.createDataFrame([BATCH[2]], "doc_id long, text string")
+    fs_cls = type(IndexFS.for_path(grown_index))
+
+    def crash(self, src, dst):
+        raise OSError("killed before the rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(fs_cls, "move", crash)
+        with pytest.raises(OSError, match="killed"):
+            append_to_minhash_index(batch, grown_index, "b00002")
+    inc = os.path.join(grown_index, "inc")
+    stranded = [d for d in os.listdir(inc) if d.startswith(".tmp-")]
+    assert len(stranded) == 1 and stranded[0].startswith(".tmp-b00002-")
+    assert "b00002" not in _manifest(grown_index)["inc"]
+    append_to_minhash_index(batch, grown_index, "b00002")  # the replay
+    assert stranded[0] in os.listdir(inc)  # the replay leaves it
+    probe = [(9, "entirely new content that matches nothing else at all")]
+    before = _flags_rows(spark, grown_index, probe)
+    cur = compact_minhash_index(spark, grown_index, keep_from="b00000")
+    assert cur["inc"] == ["b00000", "b00001", "b00002"]  # nothing folded
+    assert not [d for d in os.listdir(inc) if d.startswith(".tmp-")]
+    assert _flags_rows(spark, grown_index, probe) == before
 
 
 def test_no_fold_compaction_still_sweeps_stranded_stage(spark, grown_index):

@@ -173,6 +173,44 @@ def test_flagship_is_one_uncached_aggregation(spark, sf_dir):
     assert len(finals) == 1, plan
 
 
+def _nested_cached_relations(plan: str) -> list[str]:
+    """InMemoryRelation lines with another InMemoryRelation in their
+    subtree: a cache built on top of a cache, whose plan string and
+    planning time grow with every level."""
+    lines = plan.splitlines()
+    nested = []
+    for i, ln in enumerate(lines):
+        if "InMemoryRelation" not in ln:
+            continue
+        for below in lines[i + 1 :]:
+            if _indent(below) <= _indent(ln):
+                break
+            if "InMemoryRelation" in below:
+                nested.append(ln.strip()[:120])
+                break
+    return nested
+
+
+def test_incremental_flags_have_no_nested_cache(spark, sf_dir):
+    """The one-shot incremental flags keep one cached level, the batch's
+    hashed shingles: no signature, candidate or verify cache stacked on
+    it."""
+    plan = (
+        EXTRA_CATALOG["incremental_dedup"].fn(spark, sf_dir)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "InMemoryRelation" in plan
+    assert not _nested_cached_relations(plan), _nested_cached_relations(plan)
+
+
+def test_minhash_verify_intersects_arrays(spark, sf_dir):
+    """Candidate pairs are verified by array_intersect of per-doc hash
+    arrays, not by a self-join of the shingle table on the hash."""
+    plan = _plan(spark, sf_dir, "minhash_near_dup")
+    assert "array_intersect" in plan
+    assert not re.findall(r"Join \[__h#\d+L?\]", plan), plan
+
+
 def test_aggregations_have_mapside_partial(spark, sf_dir):
     """groupBy sums must plan two-phase hash aggregation (partial_sum
     map-side) so the shuffle moves one row per (partition, key), not

@@ -429,6 +429,115 @@ def test_stream_incremental_quantile_restart_resumes_and_merges_exactly(
     assert sample_set() == batch_set(300)
 
 
+def _stage_batches(spark, work, batches):
+    """Stage each row list as one parquet file under ``work/staged``,
+    drained in list order; returns the staged dir."""
+    import os
+
+    from dask_datapipeline_spark.plans.catalog_llm import _stage_micro_batches
+
+    staged = os.path.join(work, "staged")
+    os.makedirs(staged)
+    _stage_micro_batches(
+        [spark.createDataFrame(rows, "doc_id long, text string") for rows in batches],
+        staged,
+    )
+    return staged
+
+
+DEDUP_CORPUS = [
+    (0, "alpha beta gamma delta epsilon zeta"),
+    (2, "one two three four five six"),
+]
+DEDUP_BATCHES = [
+    [(1, "alpha beta gamma delta epsilon zeta"),
+     (3, "red orange yellow green blue indigo")],
+    # doc 5 duplicates doc 3 — reachable only via the increment (or
+    # the compacted base) from batch 0
+    [(5, "red orange yellow green blue indigo")],
+    [(7, "completely novel text nothing shared here at all")],
+]
+
+
+def _dedup_index(spark, work):
+    import os
+
+    from dask_datapipeline_spark.operators.minhash_index import build_minhash_index
+
+    os.makedirs(work, exist_ok=True)
+    index_path = os.path.join(work, "index")
+    build_minhash_index(
+        spark.createDataFrame(DEDUP_CORPUS, "doc_id long, text string"), index_path
+    )
+    return index_path
+
+
+def _stream_flags(spark, staged, index_path, work, **kw):
+    """Drain ``staged`` through stream_incremental_dedup; {id: (dup_of, is_new)}."""
+    import os
+
+    SW.stream_incremental_dedup(
+        spark, staged, index_path, os.path.join(work, "flags"),
+        checkpoint_dir=os.path.join(work, "ckpt"), **kw,
+    )
+    return {
+        r.doc_id: (r.dup_of, r.is_new)
+        for r in spark.read.parquet(os.path.join(work, "flags", "batch-*")).collect()
+    }
+
+
+def test_stream_incremental_dedup_leaves_no_persisted_rdds(spark, tmp_path):
+    """A micro-batch caches nothing that outlives it: after a 3-batch
+    stream the session holds exactly the persisted RDDs it held
+    before, so a long-running ingest does not grow the cache."""
+    work = str(tmp_path)
+    index_path = _dedup_index(spark, work)
+    staged = _stage_batches(spark, work, DEDUP_BATCHES)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    flags = _stream_flags(spark, staged, index_path, work)
+    assert flags[5] == (3, False)  # the stream did flag through the index
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_stream_replays_batch_committed_before_its_flags(spark, tmp_path):
+    """Crash window of the append-then-flag order: batch 0 is committed
+    to the index, then the process dies before its flags are written.
+    The replayed batch's append is a no-op, and its flags equal a clean
+    run's and the one-shot flags; the tag is listed once."""
+    import json
+    import os
+
+    from dask_datapipeline_spark.operators.minhash_index import (
+        append_to_minhash_index,
+        incremental_near_dup_flags,
+    )
+
+    rows = DEDUP_BATCHES[0] + DEDUP_BATCHES[1]
+    batch = spark.createDataFrame(rows, "doc_id long, text string")
+
+    clean = str(tmp_path / "clean")
+    clean_index = _dedup_index(spark, clean)
+    clean_flags = _stream_flags(
+        spark, _stage_batches(spark, clean, [rows]), clean_index, clean
+    )
+
+    crashed = str(tmp_path / "crashed")
+    index_path = _dedup_index(spark, crashed)
+    one_shot = {
+        r.doc_id: (r.dup_of, r.is_new)
+        for r in incremental_near_dup_flags(batch, index_path).collect()
+    }
+    append_to_minhash_index(batch, index_path, "b00000")
+    replayed = _stream_flags(
+        spark, _stage_batches(spark, crashed, [rows]), index_path, crashed
+    )
+
+    assert replayed == clean_flags == one_shot
+    assert replayed[5] == (3, False) and replayed[1] == (0, False)
+    with open(os.path.join(index_path, "_CURRENT")) as f:
+        assert json.load(f)["inc"] == ["b00000"]
+
+
 def test_stream_incremental_dedup_with_compaction_is_flag_identical(
     spark, tmp_path
 ):
@@ -438,56 +547,14 @@ def test_stream_incremental_dedup_with_compaction_is_flag_identical(
     increment list stays bounded."""
     import json
     import os
-    import shutil
-    import time
-
-    from dask_datapipeline_spark.operators.minhash_index import build_minhash_index
-    from dask_datapipeline_spark.streaming.windows import stream_incremental_dedup
-
-    corpus_rows = [
-        (0, "alpha beta gamma delta epsilon zeta"),
-        (2, "one two three four five six"),
-    ]
-    batches = [
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (3, "red orange yellow green blue indigo")],
-        # doc 5 duplicates doc 3 — only reachable via the (compacted)
-        # increment from batch 0
-        [(5, "red orange yellow green blue indigo")],
-        [(7, "completely novel text nothing shared here at all")],
-    ]
 
     def run(root, compact_every):
         work = str(tmp_path / root)
-        os.makedirs(work)
-        corpus = spark.createDataFrame(corpus_rows, "doc_id long, text string")
-        index_path = os.path.join(work, "index")
-        build_minhash_index(corpus, index_path, num_hashes=16, bands=4, shingle_n=3)
-        staged = os.path.join(work, "staged")
-        os.makedirs(staged)
-        for i, rows in enumerate(batches):
-            df = spark.createDataFrame(rows, "doc_id long, text string")
-            tmp = os.path.join(work, f"tmp-{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = next(
-                os.path.join(tmp, f)
-                for f in os.listdir(tmp)
-                if f.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"chunk-{i}.parquet")
-            shutil.move(src, dst)
-            os.utime(dst, (time.time() + i, time.time() + i))
-            shutil.rmtree(tmp)
-        out = os.path.join(work, "flags")
-        stream_incremental_dedup(
-            spark, staged, index_path, out,
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            compact_every=compact_every,
+        index_path = _dedup_index(spark, work)
+        staged = _stage_batches(spark, work, DEDUP_BATCHES)
+        flags = _stream_flags(
+            spark, staged, index_path, work, compact_every=compact_every
         )
-        flags = {
-            r.doc_id: (r.dup_of, r.is_new)
-            for r in spark.read.parquet(os.path.join(out, "batch-*")).collect()
-        }
         with open(os.path.join(index_path, "_CURRENT")) as f:
             return flags, json.load(f)
 
@@ -498,8 +565,8 @@ def test_stream_incremental_dedup_with_compaction_is_flag_identical(
     # every COMMITTED batch folded; the final batch's tag stays live —
     # the replay watermark (keep_from) never folds the in-flight batch,
     # whose append idempotency a post-crash replay depends on
-    assert comp_cur["inc"] == [f"b{len(batches) - 1:05d}"]
-    assert len(plain_cur["inc"]) == len(batches)
+    assert comp_cur["inc"] == [f"b{len(DEDUP_BATCHES) - 1:05d}"]
+    assert len(plain_cur["inc"]) == len(DEDUP_BATCHES)
 
 
 def test_stream_table_stats_equals_batch_and_guards_replay(spark, tmp_path):
