@@ -139,58 +139,6 @@ def tagged_rollup_cube(
     return rollup_part.unionByName(cube_part)
 
 
-def zscore_outliers(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    z_threshold: float = 2.5,
-    scale: int = 100,
-) -> DataFrame:
-    """Per-group z-score outlier flagging with CROSS-ENGINE
-    DETERMINISTIC statistics.
-
-    Naive ``stddev``/``avg`` over doubles is order-dependent under
-    parallelism (every shuffle reorders the additions), so the same
-    query can flag different rows run-to-run near the threshold.
-    Here the value is first scaled to an exact integer (``scale``
-    = 100 for 2-decimal money), group moments accumulate as exact
-    integer sums (sum, sum-of-squares), and mean/std/z are derived
-    from those exact integers with a fixed double formula — identical
-    bits on any partitioning, any engine.
-
-    Plan: one groupBy shuffle for the moments (5-ish rows per
-    group set), broadcast join back onto the rows, codegen'd filter.
-    Integer range: sum-of-squares fits int64 up to ~9e18 — at
-    larger scales swap the two sums to DECIMAL(38,0) (same plan).
-    Groups with n == 1 have undefined variance and emit no rows."""
-    require_columns(df, [*group_cols, value_col])
-    cents = F.round(F.col(value_col) * scale, 0).cast("long")
-    with_c = df.withColumn("__c", cents)
-    stats = with_c.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum("__c").alias("__s1"),
-        F.sum(F.col("__c") * F.col("__c")).alias("__s2"),
-    ).filter(
-        # n > 1 (variance defined) AND variance != 0: a constant
-        # group has every z undefined (0/0 — an ANSI-mode error, inf
-        # in engines that tolerate it). n*s2 == s1² is an EXACT
-        # integer zero-variance test — no epsilon, same filter
-        # replayable in any SQL oracle.
-        (F.col("__n") > 1)
-        & (F.col("__n") * F.col("__s2") != F.col("__s1") * F.col("__s1"))
-    )
-    mean = F.col("__s1").cast("double") / F.col("__n")
-    m2 = F.col("__s2").cast("double") / F.col("__n") - mean * mean
-    std = F.sqrt(m2 * F.col("__n") / (F.col("__n") - 1))
-    z = (F.col("__c").cast("double") - mean) / std
-    return (
-        with_c.join(F.broadcast(stats), on=list(group_cols))
-        .withColumn("zscore", z)
-        .filter(F.abs(F.col("zscore")) >= z_threshold)
-        .drop("__c", "__n", "__s1", "__s2")
-    )
-
-
 def key_skew_profile(df, key_col: str, label: str | None = None):
     """Join-key skew diagnostic: one row summarizing the key's degree
     distribution — row/key counts, the hottest key's multiplicity,

@@ -715,59 +715,3 @@ def aqe_skew_split(
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    on_overlap: tuple[str, str] = ("start", "end"),
-    bucket_seconds: int = 21600,
-    suffixes: tuple[str, str] = ("_a", "_b"),
-) -> DataFrame:
-    """All pairs of intervals that OVERLAP in time: ``a.start <= b.end
-    AND b.start <= a.end`` (closed intervals).
-
-    Spark has no native interval join — the naive encoding is a range
-    self-join that Catalyst plans as a nested loop (quadratic). The
-    scale-correct composition: explode each interval into the
-    fixed-width time BUCKETS it touches, equi-join on the bucket id
-    (shuffle bounded per bucket), then verify the exact overlap
-    predicate and dedup pairs that shared several buckets. Any
-    overlapping pair shares the bucket containing the later start, so
-    recall is exact; bucket width trades explode factor (long
-    intervals → many rows) against bucket occupancy (hot buckets →
-    join fan-out) and should sit near the typical interval length.
-
-    Columns of each side are emitted with ``suffixes``; every LEFT row
-    pairs with every qualifying RIGHT row. Callers filter self-pairs /
-    enforce ordering on their own key columns (this operator does not
-    assume an id column exists).
-    """
-    s, e = on_overlap
-    require_columns(left, [s, e])
-    require_columns(right, [s, e])
-    if bucket_seconds < 1:
-        raise ValueError(f"bucket_seconds={bucket_seconds} must be >= 1")
-
-    def bucket_of(c: str) -> Column:
-        # integer epoch-second division — exact and engine-portable
-        return F.floor(F.unix_timestamp(F.col(c)) / bucket_seconds).cast("long")
-
-    def exploded(df: DataFrame, suffix: str) -> DataFrame:
-        renamed = df.select(
-            *[F.col(c).alias(f"{c}{suffix}") for c in df.columns]
-        )
-        lo, hi = bucket_of(f"{s}{suffix}"), bucket_of(f"{e}{suffix}")
-        return renamed.withColumn(
-            "__bucket", F.explode(F.sequence(lo, hi))
-        )
-
-    a, b = exploded(left, suffixes[0]), exploded(right, suffixes[1])
-    sa, ea = f"{s}{suffixes[0]}", f"{e}{suffixes[0]}"
-    sb, eb = f"{s}{suffixes[1]}", f"{e}{suffixes[1]}"
-    return (
-        a.join(b, on="__bucket")
-        .where((F.col(sa) <= F.col(eb)) & (F.col(sb) <= F.col(ea)))
-        .drop("__bucket")
-        .distinct()
-    )

@@ -366,8 +366,7 @@ def script_mix_cols(counts: dict[str, Column]) -> dict[str, Column]:
     SEO-spam detection (a prose page whose letters split across two
     scripts is template chrome, machine-joined content, or spam; a
     clean page is ~one script plus loanwords). ALL-INTEGER decisions
-    (no entropy, no division — the `zscore_outliers` exactness
-    stance):
+    (no entropy, no division, so every engine agrees bit-for-bit):
 
     - ``n_scripts_present``: scripts with ≥1 letter codepoint
     - ``n_scripts_major``: scripts holding ≥1/4 of the letters

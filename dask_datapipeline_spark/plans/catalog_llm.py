@@ -3531,40 +3531,6 @@ def q_pack_greedy_bins(spark, sf_dir):
     )
 
 
-@register_extra(
-    "outlier_events",
-    """
-WITH c AS (
-  SELECT event_id, event_type, value,
-         CAST(round(value * 100) AS BIGINT) AS cc
-  FROM events
-),
-s AS (
-  SELECT event_type, COUNT(*) AS n, SUM(cc) AS s1, SUM(cc * cc) AS s2
-  FROM c GROUP BY event_type
-  HAVING COUNT(*) > 1 AND COUNT(*) * SUM(cc * cc) <> SUM(cc) * SUM(cc)
-)
-SELECT event_id, event_type, value, zscore FROM (
-  SELECT c.event_id, c.event_type, c.value,
-         (CAST(c.cc AS DOUBLE) - CAST(s.s1 AS DOUBLE) / s.n) /
-           sqrt((CAST(s.s2 AS DOUBLE) / s.n
-                 - (CAST(s.s1 AS DOUBLE) / s.n) * (CAST(s.s1 AS DOUBLE) / s.n))
-                * s.n / (s.n - 1)) AS zscore
-  FROM c JOIN s ON c.event_type = s.event_type
-) WHERE abs(zscore) >= 2.5
-""",
-    "Per-type z-score outliers with cross-engine deterministic moments "
-    "(operators/aggregates.py::zscore_outliers): values scaled to exact integer "
-    "cents, group sum/sum-of-squares as exact int64, mean/std/z derived by a fixed "
-    "double formula — identical bits on any partitioning; broadcast stats join back",
-)
-def q_outlier_events(spark, sf_dir):
-    from dask_datapipeline_spark.operators.aggregates import zscore_outliers
-
-    ev = load_testdata(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    return zscore_outliers(ev, ["event_type"], "value", z_threshold=2.5)
-
-
 def _batch_oracle(name: str) -> str:
     """Reuse a batch twin's oracle SQL verbatim for its streaming
     variant — one source of truth; the streaming query must converge
@@ -4406,33 +4372,6 @@ def q_streaming_static_join(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# Ordered funnel analysis
-# --------------------------------------------------------------------
-
-from dask_datapipeline_spark.operators.funnel import (  # noqa: E402
-    funnel_counts,
-    funnel_oracle_sql,
-)
-
-_FUNNEL_STEPS = ["view", "click", "purchase"]
-
-
-@register_extra(
-    "funnel_steps",
-    funnel_oracle_sql(_FUNNEL_STEPS),
-    "Ordered funnel (operators/funnel.py): first view -> first click strictly "
-    "after it -> first purchase strictly after that, walked by an F.aggregate "
-    "fold over each user's time-sorted event array inside codegen (one user-keyed "
-    "shuffle, no self-joins, no Python); broadcast dim join rolls step flags up "
-    "to per-segment counts; oracle replays the equivalent closed form",
-)
-def q_funnel_steps(spark, sf_dir):
-    ev = load_testdata(spark, sf_dir, "events")
-    dim = load_testdata(spark, sf_dir, "customer")
-    return funnel_counts(ev, dim, _FUNNEL_STEPS)
-
-
-# --------------------------------------------------------------------
 # Deterministic weighted sampling (priority sampling)
 # --------------------------------------------------------------------
 
@@ -4669,72 +4608,8 @@ def q_streaming_incremental_dedup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# Interval overlap join (concurrent sessions)
+# Equi-depth histogram
 # --------------------------------------------------------------------
-
-_SESSIONS_CTE = """
-lagd AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR ts - lag(ts) OVER w >= INTERVAL '6 hours'
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, ts,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
-  FROM lagd
-),
-s AS (
-  SELECT user_id, MIN(ts) AS session_start, MAX(ts) + INTERVAL '6 hours' AS session_end
-  FROM sess GROUP BY user_id, sid
-)"""
-
-
-@register_extra(
-    "concurrent_sessions",
-    "WITH "
-    + _SESSIONS_CTE
-    + """,
-p AS (
-  SELECT a.user_id AS ua, b.user_id AS ub
-  FROM s a JOIN s b
-    ON a.session_start <= b.session_end AND b.session_start <= a.session_end
-   AND a.user_id < b.user_id
-), dirs AS (
-  SELECT ua AS user_id, ub AS partner FROM p
-  UNION ALL
-  SELECT ub AS user_id, ua AS partner FROM p
-)
-SELECT user_id, COUNT(*) AS n_concurrent, COUNT(DISTINCT partner) AS n_partner_users
-FROM dirs GROUP BY user_id
-""",
-    "Interval overlap join (operators/joins.py::interval_overlap_join): cross-user "
-    "concurrent sessions via time-bucket explode + equi-join + exact overlap verify "
-    "— the composition that replaces the nested-loop range self-join Spark would "
-    "otherwise plan; oracle is DuckDB's native inequality (IE) join",
-)
-def q_concurrent_sessions(spark, sf_dir):
-    from dask_datapipeline_spark.operators.joins import interval_overlap_join
-    from dask_datapipeline_spark.streaming.windows import session_agg
-
-    ev = load_testdata(spark, sf_dir, "events")
-    s = session_agg(ev).select("user_id", "session_start", "session_end")
-    pairs = interval_overlap_join(
-        s, s, on_overlap=("session_start", "session_end")
-    ).where(F.col("user_id_a") < F.col("user_id_b"))
-    both = pairs.select(
-        F.col("user_id_a").alias("user_id"), F.col("user_id_b").alias("partner")
-    ).unionByName(
-        pairs.select(
-            F.col("user_id_b").alias("user_id"), F.col("user_id_a").alias("partner")
-        )
-    )
-    return both.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_concurrent"),
-        F.countDistinct("partner").alias("n_partner_users"),
-    )
 
 
 @register_extra(
@@ -4785,83 +4660,6 @@ def q_equi_depth_histogram(spark, sf_dir):
             F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("price_sum"),
         )
     )
-
-
-@register_extra(
-    "mad_outliers",
-    """
-WITH ev AS (
-  SELECT event_id, event_type, value FROM events WHERE value IS NOT NULL
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM ev
-), med AS (
-  SELECT event_type, value AS med FROM ranked WHERE rn = (n + 1) // 2
-), dev AS (
-  SELECT e.event_id, e.event_type, e.value, abs(e.value - m.med) AS adev, m.med
-  FROM ev e JOIN med m ON e.event_type = m.event_type
-), dranked AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY adev, event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM dev
-), mad AS (
-  SELECT event_type, adev AS mad FROM dranked WHERE rn = (n + 1) // 2
-)
-SELECT d.event_type,
-       COUNT(*) AS n_events,
-       MIN(m2.med) AS med,
-       MIN(m2.mad) AS mad,
-       COUNT(*) FILTER (WHERE d.adev > 3 * m2.mad) AS n_outliers
-FROM dev d
-JOIN (SELECT med.event_type, med.med, mad.mad
-      FROM med JOIN mad ON med.event_type = mad.event_type) m2
-  ON d.event_type = m2.event_type
-GROUP BY d.event_type
-""",
-    "Robust MAD outliers: median and MAD as ORDER-STATISTIC selections "
-    "(row_number to the lower-middle element, unique-key tiebreak) — "
-    "interpolation-free, so the statistics are bit-identical across engines "
-    "(quantile interpolation formulas differ in final-ulp between engines); "
-    "flags |x - med| > 3*MAD; two window shuffles plus broadcast stat joins",
-)
-def q_mad_outliers(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = (
-        load_testdata(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select("event_id", "event_type", "value")
-    )
-
-    def order_stat(df, val_col, out_name):
-        w = Window.partitionBy("event_type").orderBy(val_col, "event_id")
-        wc = Window.partitionBy("event_type")
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .withColumn("__n", F.count(F.lit(1)).over(wc))
-            .where(F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
-            .select("event_type", F.col(val_col).alias(out_name))
-        )
-
-    med = order_stat(ev, "value", "med")
-    dev = ev.join(F.broadcast(med), on="event_type").withColumn(
-        "adev", F.abs(F.col("value") - F.col("med"))
-    )
-    mad = order_stat(dev.select("event_id", "event_type", "adev"), "adev", "mad")
-    stats = med.join(mad, on="event_type")
-    return (
-        dev.select("event_id", "event_type", "adev")
-        .join(F.broadcast(stats), on="event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("med").alias("med"),
-            F.min("mad").alias("mad"),
-            F.count(F.when(F.col("adev") > 3 * F.col("mad"), 1)).alias("n_outliers"),
-        )
-    )
-
 
 
 # --------------------------------------------------------------------
@@ -5454,132 +5252,6 @@ def q_wds_export_pipeline(spark, sf_dir):
     )
 
 
-# ----- time-series resample + LOCF gap-fill --------------------------
-
-
-def _resample_sql() -> str:
-    from dask_datapipeline_spark.operators.timeseries import resample_locf_sql
-
-    inner = resample_locf_sql(
-        src="(SELECT * FROM events WHERE user_id % 10 = 0)",
-        entity_col="user_id",
-        ts_col="ts",
-        value_col="value",
-        step="1 hour",
-        unit="hour",
-    )
-    return inner
-
-
-@register_extra(
-    "resample_locf",
-    _resample_sql(),
-    "Hourly resample + last-observation-carried-forward gap-fill "
-    "(operators/timeseries.py::resample_locf) over a deterministic user "
-    "subset: per-entity spine explode + fill window share ONE entity-keyed "
-    "shuffle; the carried value is never recomputed, so doubles are exact",
-)
-def q_resample_locf(spark, sf_dir):
-    from dask_datapipeline_spark.operators.timeseries import resample_locf
-
-    ev = load_testdata(spark, sf_dir, "events").where(F.col("user_id") % 10 == 0)
-    return resample_locf(ev, "user_id", "ts", "value", step="1 hour", unit="hour")
-
-
-# ----- retention cohort analysis -------------------------------------
-
-_SQL_RETENTION = """
-WITH wk AS (
-  -- DuckDB's week-precision date_trunc returns DATE; Spark returns
-  -- TIMESTAMP — cast so the driver's schema compare agrees
-  SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS TIMESTAMP) AS week
-  FROM events
-),
-first_wk AS (
-  SELECT user_id, MIN(week) AS cohort_week FROM wk GROUP BY user_id
-),
-joined AS (
-  SELECT f.cohort_week, w.user_id,
-         date_diff('day', f.cohort_week, w.week) // 7 AS week_offset
-  FROM wk w JOIN first_wk f ON w.user_id = f.user_id
-),
-cohort_sizes AS (
-  SELECT cohort_week, COUNT(*) AS n_cohort FROM first_wk GROUP BY cohort_week
-),
-ret AS (
-  SELECT cohort_week, week_offset, COUNT(DISTINCT user_id) AS n_active
-  FROM joined GROUP BY cohort_week, week_offset
-)
-SELECT r.cohort_week, r.week_offset, r.n_active, c.n_cohort,
-       CAST(r.n_active AS DOUBLE) / CAST(c.n_cohort AS DOUBLE) AS retention_frac
-FROM ret r JOIN cohort_sizes c ON r.cohort_week = c.cohort_week
-"""
-
-
-@register_extra(
-    "retention_cohorts",
-    _SQL_RETENTION,
-    "Weekly retention cohorts: users grouped by first-active week, per-week-"
-    "offset distinct-active counts and retention fraction — integer-exact "
-    "counts, one user-keyed shuffle for cohort assignment + one "
-    "(cohort, offset) groupBy; day-diff//7 keeps the offset an exact integer "
-    "on both engines (date_diff('week') counts boundary crossings, not weeks)",
-)
-def q_retention_cohorts(spark, sf_dir):
-    ev = load_testdata(spark, sf_dir, "events")
-    wk = ev.select(
-        "user_id", F.date_trunc("week", F.col("ts")).alias("week")
-    ).distinct()
-    first_wk = wk.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    joined = wk.join(first_wk, on="user_id").select(
-        "cohort_week",
-        "user_id",
-        F.expr("datediff(week, cohort_week) DIV 7").alias("week_offset"),
-    )
-    cohort_sizes = first_wk.groupBy("cohort_week").agg(
-        F.count(F.lit(1)).alias("n_cohort")
-    )
-    ret = joined.groupBy("cohort_week", "week_offset").agg(
-        F.count_distinct("user_id").alias("n_active")
-    )
-    return ret.join(cohort_sizes, on="cohort_week").select(
-        "cohort_week",
-        "week_offset",
-        "n_active",
-        "n_cohort",
-        (F.col("n_active").cast("double") / F.col("n_cohort").cast("double")).alias(
-            "retention_frac"
-        ),
-    )
-
-
-# ----- rolling anomaly detection -------------------------------------
-
-
-def _rolling_anomaly_sql() -> str:
-    from dask_datapipeline_spark.operators.timeseries import rolling_anomaly_sql
-
-    return rolling_anomaly_sql(lookback=24, min_periods=8, z_threshold=3)
-
-
-@register_extra(
-    "rolling_anomaly",
-    _rolling_anomaly_sql(),
-    "Rolling z-score anomaly flags (operators/timeseries.py::rolling_anomaly): "
-    "trailing-24-event baseline per user, current row excluded; the threshold "
-    "test is ALL-INTEGER ((n-1)(nc-s1)^2 > 9n(n*s2-s1^2)) over exact cents "
-    "moments — no sqrt/division in the decision, bit-identical flags near the "
-    "threshold on any engine; one entity-keyed shuffle",
-)
-def q_rolling_anomaly(spark, sf_dir):
-    from dask_datapipeline_spark.operators.timeseries import rolling_anomaly
-
-    ev = load_testdata(spark, sf_dir, "events")
-    return rolling_anomaly(
-        ev, "user_id", "ts", "value", "event_id", lookback=24, min_periods=8
-    )
-
-
 # ----- BPE tokenizer train + encode ----------------------------------
 
 
@@ -5749,34 +5421,6 @@ def q_lead_lag_deltas(spark, sf_dir):
         (F.lead("value").over(w) - F.col("value")).alias("delta_next"),
         gap.alias("gap_us"),
     )
-
-
-@register_extra(
-    "streaming_rolling_anomaly",
-    _rolling_anomaly_sql(),
-    "Streaming twin of rolling_anomaly (applyInPandasWithState: state = last-24 "
-    "cents per user, positional frame with NULL slots; same ALL-INTEGER "
-    "threshold test and mean division tree as the batch window) — the one-file "
-    "replay is a single in-order microbatch, so it shares the batch oracle "
-    "bit-for-bit instead of a rows-only check; in-order contract documented",
-)
-def q_streaming_rolling_anomaly(spark, sf_dir):
-    from dask_datapipeline_spark.streaming.windows import (
-        run_to_memory,
-        stateful_rolling_anomaly,
-        stream_events,
-    )
-
-    name = f"stream_anom_{next(_STREAM_SEQ)}"
-    run_to_memory(
-        stateful_rolling_anomaly(
-            stream_events(spark, sf_dir), lookback=24, min_periods=8
-        ),
-        name,
-        "append",
-        state_partitions=8,
-    )
-    return spark.table(name)
 
 
 # ----- full-outer join + char-entropy quality ------------------------
@@ -6168,216 +5812,6 @@ def q_value_histogram(spark, sf_dir):
     )
 
 
-# ----- CUSUM change-point detection ----------------------------------
-
-
-def _cusum_sql() -> str:
-    from dask_datapipeline_spark.operators.timeseries import cusum_alarms_sql
-
-    return cusum_alarms_sql(ref_cents=300, h_cents=2000)
-
-
-@register_extra(
-    "cusum_alarms",
-    _cusum_sql(),
-    "One-sided CUSUM drift detection per user (Page 1954): s_t = max(0, "
-    "s_{t-1} + cents - ref), alarm at s > h — inherently sequential per "
-    "entity, so an Arrow applyInPandas walk per user (one entity shuffle, "
-    "pack_greedy's pattern) with a recursive-CTE oracle; all-integer state, "
-    "bit-identical alarms",
-)
-def q_cusum_alarms(spark, sf_dir):
-    from dask_datapipeline_spark.operators.timeseries import cusum_alarms
-
-    ev = load_testdata(spark, sf_dir, "events")
-    return cusum_alarms(
-        ev, "user_id", "ts", "value", "event_id", ref_cents=300, h_cents=2000
-    )
-
-
-# ----- A/B test statistics (Welch's t from integer moments) ----------
-
-_SQL_AB_TEST = """
-WITH c AS (
-  SELECT event_type, user_id % 2 = 0 AS grp_a,
-         CAST(round(value * 100) AS BIGINT) AS cc
-  FROM events WHERE value IS NOT NULL
-),
-m AS (
-  SELECT event_type,
-         COUNT(CASE WHEN grp_a THEN 1 END) AS na,
-         COALESCE(SUM(CASE WHEN grp_a THEN cc END), 0) AS s1a,
-         COALESCE(SUM(CASE WHEN grp_a THEN cc * cc END), 0) AS s2a,
-         COUNT(CASE WHEN NOT grp_a THEN 1 END) AS nb,
-         COALESCE(SUM(CASE WHEN NOT grp_a THEN cc END), 0) AS s1b,
-         COALESCE(SUM(CASE WHEN NOT grp_a THEN cc * cc END), 0) AS s2b
-  FROM c GROUP BY event_type
-  HAVING COUNT(CASE WHEN grp_a THEN 1 END) > 1
-     AND COUNT(CASE WHEN NOT grp_a THEN 1 END) > 1
-     AND NOT (COUNT(CASE WHEN grp_a THEN 1 END) * COALESCE(SUM(CASE WHEN grp_a THEN cc * cc END), 0)
-                = COALESCE(SUM(CASE WHEN grp_a THEN cc END), 0) * COALESCE(SUM(CASE WHEN grp_a THEN cc END), 0)
-              AND COUNT(CASE WHEN NOT grp_a THEN 1 END) * COALESCE(SUM(CASE WHEN NOT grp_a THEN cc * cc END), 0)
-                = COALESCE(SUM(CASE WHEN NOT grp_a THEN cc END), 0) * COALESCE(SUM(CASE WHEN NOT grp_a THEN cc END), 0))
-)
-SELECT event_type, na, nb,
-       CAST(s1a AS DOUBLE) / na / 100.0 AS mean_a,
-       CAST(s1b AS DOUBLE) / nb / 100.0 AS mean_b,
-       (CAST(s1a AS DOUBLE) / na - CAST(s1b AS DOUBLE) / nb) /
-         sqrt((CAST(s2a AS DOUBLE) / na - (CAST(s1a AS DOUBLE) / na) * (CAST(s1a AS DOUBLE) / na))
-                * na / (na - 1) / na
-              + (CAST(s2b AS DOUBLE) / nb - (CAST(s1b AS DOUBLE) / nb) * (CAST(s1b AS DOUBLE) / nb))
-                * nb / (nb - 1) / nb) AS welch_t
-FROM m
-"""
-
-
-@register_extra(
-    "ab_test_stats",
-    _SQL_AB_TEST,
-    "A/B experiment readout per event type (treatment = even user_id): "
-    "group sizes, means, and Welch's t — derived entirely from exact integer "
-    "cents moments with a FIXED double formula (IEEE ops + correctly-rounded "
-    "sqrt are bit-identical cross-engine, the zscore_outliers device), "
-    "zero-variance-both-arms guarded by an exact integer test; one groupBy. "
-    "Integer envelope: the guard's s1*s1 term needs (n_group * max_cents)^2 "
-    "<= 2^63, i.e. n_group * max|value| * 100 <= 3.0e9 (throws under ANSI if "
-    "exceeded, never wraps); past that, swap the moment aggs to "
-    "DECIMAL(38,0) on both engines — same plan, exact to 1e38",
-)
-def q_ab_test_stats(spark, sf_dir):
-    ev = load_testdata(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cc = F.round(F.col("value") * 100, 0).cast("long")
-    grp_a = F.col("user_id") % 2 == 0
-    c = ev.select("event_type", grp_a.alias("__a"), cc.alias("__cc"))
-    m = c.groupBy("event_type").agg(
-        F.count(F.when(F.col("__a"), 1)).alias("na"),
-        F.coalesce(F.sum(F.when(F.col("__a"), F.col("__cc"))), F.lit(0)).alias("s1a"),
-        F.coalesce(
-            F.sum(F.when(F.col("__a"), F.col("__cc") * F.col("__cc"))), F.lit(0)
-        ).alias("s2a"),
-        F.count(F.when(~F.col("__a"), 1)).alias("nb"),
-        F.coalesce(F.sum(F.when(~F.col("__a"), F.col("__cc"))), F.lit(0)).alias("s1b"),
-        F.coalesce(
-            F.sum(F.when(~F.col("__a"), F.col("__cc") * F.col("__cc"))), F.lit(0)
-        ).alias("s2b"),
-    ).filter(
-        (F.col("na") > 1)
-        & (F.col("nb") > 1)
-        & ~(
-            (F.col("na") * F.col("s2a") == F.col("s1a") * F.col("s1a"))
-            & (F.col("nb") * F.col("s2b") == F.col("s1b") * F.col("s1b"))
-        )
-    )
-    na, nb = F.col("na"), F.col("nb")
-    ma = F.col("s1a").cast("double") / na
-    mb = F.col("s1b").cast("double") / nb
-    va = (F.col("s2a").cast("double") / na - ma * ma) * na / (na - 1)
-    vb = (F.col("s2b").cast("double") / nb - mb * mb) * nb / (nb - 1)
-    return m.select(
-        "event_type",
-        "na",
-        "nb",
-        (ma / F.lit(100.0)).alias("mean_a"),
-        (mb / F.lit(100.0)).alias("mean_b"),
-        ((ma - mb) / F.sqrt(va / na + vb / nb)).alias("welch_t"),
-    )
-
-
-# ----- per-event sessionization + transition matrix ------------------
-
-_SESS_GAP_MIN = 30
-
-_SQL_SESSIONIZE = f"""
-WITH g AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR date_diff('microsecond', lag(ts) OVER w, ts) > {_SESS_GAP_MIN} * 60 * 1000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id, event_id, ts,
-       CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1
-         AS BIGINT) AS session_id
-FROM g
-"""
-
-
-@register_extra(
-    "sessionize",
-    _SQL_SESSIONIZE,
-    "Per-EVENT session assignment (gap > 30 min starts a new session): "
-    "lag-gap flag + running sum over one (ts, id)-ordered entity window — "
-    "the per-row complement of the session_window AGGREGATE; gap compared in "
-    "exact integer microseconds, session ids 0-based per user",
-)
-def q_sessionize(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = load_testdata(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.col("ts").cast("long") * 1_000_000 + F.date_format("ts", "SSSSSS").cast("long")
-    prev_us = F.lag(us).over(w)
-    new_sess = F.when(
-        prev_us.isNull() | (us - prev_us > _SESS_GAP_MIN * 60 * 1_000_000), 1
-    ).otherwise(0)
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        (F.sum(new_sess).over(wcum) - 1).alias("session_id"),
-    )
-
-
-_SQL_TRANSITIONS = """
-WITH s AS (
-  SELECT user_id, event_type,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS next_type
-  FROM events
-),
-pairs AS (
-  SELECT event_type AS from_type, next_type AS to_type, COUNT(*) AS n
-  FROM s WHERE next_type IS NOT NULL GROUP BY 1, 2
-),
-tot AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS n_from FROM pairs GROUP BY from_type)
-SELECT p.from_type, p.to_type, p.n, t.n_from,
-       CAST(p.n AS DOUBLE) / t.n_from AS p_transition
-FROM pairs p JOIN tot t ON p.from_type = t.from_type
-"""
-
-
-@register_extra(
-    "event_transitions",
-    _SQL_TRANSITIONS,
-    "First-order Markov transition matrix of event types (per-user "
-    "(ts, id)-ordered lead pairs → (from, to) counts → row-conditional "
-    "probabilities): exact integer counts, one correctly-rounded division; "
-    "bounded output (types²) from one entity window + one groupBy",
-)
-def q_event_transitions(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = load_testdata(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).where(F.col("next_type").isNotNull())
-    pairs = s.groupBy(
-        F.col("event_type").alias("from_type"), F.col("next_type").alias("to_type")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    tot = pairs.groupBy("from_type").agg(F.sum("n").alias("n_from"))
-    return pairs.join(tot, on="from_type").select(
-        "from_type",
-        "to_type",
-        "n",
-        "n_from",
-        (F.col("n").cast("double") / F.col("n_from")).alias("p_transition"),
-    )
-
-
 # ----- blocked edit-distance fuzzy matching --------------------------
 
 _SQL_FUZZY = """
@@ -6645,154 +6079,6 @@ def q_dq_report(spark, sf_dir):
     rep = nulls.unionByName(ranges).unionByName(qty).unionByName(fk)
     return rep.select(
         "rule", "n_checked", "n_violations", (F.col("n_violations") == 0).alias("passed")
-    )
-
-
-@register_extra(
-    "streaming_cusum",
-    _cusum_sql(),
-    "Streaming twin of cusum_alarms (applyInPandasWithState: state = ONE "
-    "integer per user — the minimal drift-detector memory): same integer "
-    "recursion in (ts, id) order, so the one-file in-order replay shares the "
-    "batch recursive-CTE oracle bit-for-bit; in-order contract as "
-    "streaming_rolling_anomaly",
-)
-def q_streaming_cusum(spark, sf_dir):
-    from dask_datapipeline_spark.streaming.windows import (
-        run_to_memory,
-        stateful_cusum,
-        stream_events,
-    )
-
-    name = f"stream_cusum_{next(_STREAM_SEQ)}"
-    run_to_memory(
-        stateful_cusum(stream_events(spark, sf_dir), ref_cents=300, h_cents=2000),
-        name,
-        "append",
-        state_partitions=8,
-    )
-    return spark.table(name)
-
-
-# ----- daily percentile bands (order-statistic selection) ------------
-
-_SQL_DAILY_BANDS = """
-WITH c AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-         CAST(round(value * 100) AS BIGINT) AS cc, event_id
-  FROM events WHERE value IS NOT NULL
-),
-rk AS (
-  SELECT event_type, day, cc,
-         ROW_NUMBER() OVER (PARTITION BY event_type, day
-                            ORDER BY cc, event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type, day) AS n
-  FROM c
-)
-SELECT event_type, day, MAX(n) AS n_events,
-       CAST(MAX(CASE WHEN rn = (n + 1) // 2 THEN cc END) AS DOUBLE) / 100.0 AS p50,
-       CAST(MAX(CASE WHEN rn = greatest((19 * n) // 20, 1) THEN cc END) AS DOUBLE) / 100.0 AS p95
-FROM rk GROUP BY event_type, day
-"""
-
-
-@register_extra(
-    "daily_percentile_bands",
-    _SQL_DAILY_BANDS,
-    "Per-(type, day) p50/p95 value bands as ORDER-STATISTIC selections "
-    "(row_number to the lower-middle / floor(0.95n) rank, unique-key "
-    "tiebreak) — the interpolation-free rule that keeps quantiles "
-    "bit-identical cross-engine; integer-cents ranks, one keyed window",
-)
-def q_daily_percentile_bands(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = load_testdata(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cc = F.round(F.col("value") * 100, 0).cast("long")
-    c = ev.select(
-        "event_type",
-        F.date_trunc("day", F.col("ts")).alias("day"),
-        cc.alias("__cc"),
-        "event_id",
-    )
-    w = Window.partitionBy("event_type", "day").orderBy("__cc", "event_id")
-    wn = Window.partitionBy("event_type", "day")
-    rk = c.select(
-        "event_type",
-        "day",
-        "__cc",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
-    p50_rn = F.expr("(n + 1) DIV 2")
-    p95_rn = F.greatest(F.expr("(19 * n) DIV 20"), F.lit(1).cast("long"))
-    return rk.groupBy("event_type", "day").agg(
-        F.max("n").alias("n_events"),
-        (
-            F.max(F.when(F.col("rn") == p50_rn, F.col("__cc"))).cast("double")
-            / F.lit(100.0)
-        ).alias("p50"),
-        (
-            F.max(F.when(F.col("rn") == p95_rn, F.col("__cc"))).cast("double")
-            / F.lit(100.0)
-        ).alias("p95"),
-    )
-
-
-# ----- session stats (composes sessionize) ---------------------------
-
-_SQL_SESSION_STATS = f"""
-WITH g AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR date_diff('microsecond', lag(ts) OVER w, ts) > {_SESS_GAP_MIN} * 60 * 1000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, event_id, ts,
-         CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1
-           AS BIGINT) AS session_id
-  FROM g
-)
-SELECT user_id, session_id,
-       COUNT(*) AS n_events,
-       CAST(date_diff('microsecond', MIN(ts), MAX(ts)) AS BIGINT) AS duration_us
-FROM sess GROUP BY user_id, session_id
-"""
-
-
-@register_extra(
-    "session_stats",
-    _SQL_SESSION_STATS,
-    "Per-session event counts and exact-µs durations, COMPOSED on the "
-    "sessionize assignment (same lag-gap + running-sum chain) — proves the "
-    "per-event session ids aggregate consistently; still one entity-keyed "
-    "shuffle end-to-end",
-)
-def q_session_stats(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = load_testdata(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.col("ts").cast("long") * 1_000_000 + F.date_format("ts", "SSSSSS").cast("long")
-    prev_us = F.lag(us).over(w)
-    new_sess = F.when(
-        prev_us.isNull() | (us - prev_us > _SESS_GAP_MIN * 60 * 1_000_000), 1
-    ).otherwise(0)
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        us.alias("__us"),
-        (F.sum(new_sess).over(wcum) - 1).alias("session_id"),
-    )
-    return sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (F.max("__us") - F.min("__us")).alias("duration_us"),
     )
 
 
@@ -7139,129 +6425,6 @@ def q_sql_q17ish(spark, sf_dir):
     return spark.sql(_SQL_Q17ISH)
 
 
-# ----- SCD2 dimension build ------------------------------------------
-
-_SQL_SCD2 = """
-WITH m AS (
-  SELECT user_id, ts, event_id, event_type,
-         lag(event_type) OVER w AS prev, row_number() OVER w AS rn
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-chg AS (SELECT * FROM m WHERE rn = 1 OR prev IS DISTINCT FROM event_type)
-SELECT user_id, event_type, ts AS valid_from,
-       lead(ts) OVER w2 AS valid_to,
-       lead(ts) OVER w2 IS NULL AS is_current
-FROM chg WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-"""
-
-
-@register_extra(
-    "scd2_dimension",
-    _SQL_SCD2,
-    "Type-2 slowly-changing dimension from the event stream: per user, "
-    "consecutive same-attribute rows collapse into [valid_from, valid_to) "
-    "validity intervals (open interval flagged is_current) — the change "
-    "HISTORY merge_upsert discards, queryable by as-of time so a feature "
-    "join can read the attribute AT example time without future leakage. "
-    "Two entity-keyed windows under the unique (ts, event_id) total order; "
-    "null-safe change compare keeps NULL-attribute runs as real intervals",
-)
-def q_scd2_dimension(spark, sf_dir):
-    from dask_datapipeline_spark.operators.timeseries import scd2_intervals
-
-    ev = load_testdata(spark, sf_dir, "events")
-    return scd2_intervals(
-        ev, entity_col="user_id", ts_col="ts", attr_col="event_type",
-        order_col="event_id",
-    )
-
-
-# ----- winsorized robust statistics ----------------------------------
-
-_SQL_WINSORIZE = """
-WITH c AS (
-  SELECT event_type, event_id, CAST(round(value * 100) AS BIGINT) AS cc
-  FROM events WHERE value IS NOT NULL
-),
-r AS (
-  SELECT event_type, event_id, cc,
-         row_number() OVER (PARTITION BY event_type ORDER BY cc, event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM c
-),
-b AS (
-  SELECT event_type,
-         CAST(MAX(n) AS BIGINT) AS n,
-         MAX(CASE WHEN rn = (5 * n + 99) // 100 THEN cc END) AS lo,
-         MAX(CASE WHEN rn = (95 * n + 99) // 100 THEN cc END) AS hi
-  FROM r GROUP BY event_type
-)
-SELECT r.event_type, b.n,
-       b.lo / 100.0 AS p05, b.hi / 100.0 AS p95,
-       CAST(SUM(least(greatest(r.cc, b.lo), b.hi)) AS BIGINT) AS winsorized_cents,
-       CAST(CAST(SUM(least(greatest(r.cc, b.lo), b.hi)) AS BIGINT) AS DOUBLE)
-         / (100.0 * b.n) AS winsorized_mean
-FROM r JOIN b ON r.event_type = b.event_type
-GROUP BY r.event_type, b.n, b.lo, b.hi
-"""
-
-
-@register_extra(
-    "winsorized_stats",
-    _SQL_WINSORIZE,
-    "Winsorized robust statistics per event type: exact 5th/95th percentile "
-    "as ORDER-STATISTIC selections (row_number to ceil(q*n) under the unique "
-    "(cents, event_id) total order — no interpolation, so no engine ulp "
-    "drift), values clamped to [p05, p95] in integer cents, exact clamped "
-    "sum and a single-division mean. The outlier treatment a reward/metric "
-    "column gets before aggregation, where a raw mean would follow one fat "
-    "tail; two same-keyed windows plus one groupBy, nothing global",
-)
-def q_winsorized_stats(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = load_testdata(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    c = ev.select(
-        "event_type",
-        "event_id",
-        F.round(F.col("value") * 100, 0).cast("long").alias("cc"),
-    )
-    w = Window.partitionBy("event_type").orderBy("cc", "event_id")
-    wn = Window.partitionBy("event_type")
-    r = c.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count(F.lit(1)).over(wn)
-    )
-    b = r.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n"),
-        F.max(
-            F.when(F.col("rn") == F.expr("(5 * n + 99) DIV 100"), F.col("cc"))
-        ).alias("lo"),
-        F.max(
-            F.when(F.col("rn") == F.expr("(95 * n + 99) DIV 100"), F.col("cc"))
-        ).alias("hi"),
-    )
-    clamped = F.least(F.greatest(F.col("cc"), F.col("lo")), F.col("hi"))
-    return (
-        r.drop("n", "rn").join(b, on="event_type")
-        .groupBy("event_type", "n", "lo", "hi")
-        .agg(
-            F.sum(clamped).alias("winsorized_cents"),
-            (
-                F.sum(clamped).cast("double") / (F.lit(100.0) * F.col("n"))
-            ).alias("winsorized_mean"),
-        )
-        .select(
-            "event_type",
-            "n",
-            (F.col("lo") / 100.0).alias("p05"),
-            (F.col("hi") / 100.0).alias("p95"),
-            "winsorized_cents",
-            "winsorized_mean",
-        )
-    )
-
-
 # ----- snapshot reconciliation (table diff) --------------------------
 
 _SQL_TABLE_DIFF = """
@@ -7523,165 +6686,6 @@ def q_bucketed_join(spark, sf_dir):
             .cast("double")
             .alias("total_price"),
         )
-    )
-
-
-# ----- sequence pattern matching (CEP-style) -------------------------
-
-_SEQ_PATTERN = "c[ve]*p"  # click, any views/errors, purchase
-
-_SQL_SEQ_PATTERN = f"""
-WITH s AS (
-  SELECT user_id,
-         string_agg(CASE event_type WHEN 'click' THEN 'c'
-                                    WHEN 'error' THEN 'e'
-                                    WHEN 'purchase' THEN 'p'
-                                    WHEN 'signup' THEN 's'
-                                    ELSE 'v' END,
-                    '' ORDER BY ts, event_id) AS seq
-  FROM events GROUP BY user_id
-)
-SELECT user_id, CAST(length(seq) AS BIGINT) AS seq_len,
-       CAST(len(regexp_extract_all(seq, '{_SEQ_PATTERN}')) AS BIGINT) AS n_matches,
-       COALESCE(regexp_extract(seq, '{_SEQ_PATTERN}'), '') AS first_match
-FROM s
-"""
-
-
-@register_extra(
-    "sequence_pattern",
-    _SQL_SEQ_PATTERN,
-    "MATCH_RECOGNIZE-style sequence pattern matching (operators/funnel.py::"
-    "sequence_pattern_counts): each user's (ts, id)-ordered event types "
-    "encode as a character string and 'click then views/errors then "
-    "purchase' runs as the regex c[ve]*p in whole-stage codegen — the "
-    "CEP automaton delegated to the regex engine; one user-keyed shuffle, "
-    "patterns restricted to the Java/RE2 common subset so both engines "
-    "agree on greedy non-overlapping semantics",
-)
-def q_sequence_pattern(spark, sf_dir):
-    from dask_datapipeline_spark.operators.funnel import sequence_pattern_counts
-
-    ev = load_testdata(spark, sf_dir, "events")
-    return sequence_pattern_counts(
-        ev,
-        entity_col="user_id",
-        ts_col="ts",
-        order_col="event_id",
-        type_col="event_type",
-        alphabet={"click": "c", "error": "e", "purchase": "p", "signup": "s"},
-        pattern=_SEQ_PATTERN,
-        default_char="v",
-    )
-
-
-# ----- CUPED variance-reduced A/B readout ----------------------------
-
-_CUPED_CUT = "2024-01-16 00:00:00"
-
-_SQL_CUPED = f"""
-WITH pu AS (
-  SELECT event_type, user_id,
-         COALESCE(SUM(CASE WHEN ts < TIMESTAMP '{_CUPED_CUT}'
-                           THEN CAST(round(value*100) AS BIGINT) END), 0) AS x,
-         COALESCE(SUM(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUT}'
-                           THEN CAST(round(value*100) AS BIGINT) END), 0) AS y
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-),
-m AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         CAST(SUM(x*y) AS BIGINT) AS sxy,
-         CAST(SUM(x*x) AS BIGINT) AS sxx,
-         CAST(SUM(y*y) AS BIGINT) AS syy,
-         CAST(COUNT(CASE WHEN user_id % 2 = 0 THEN 1 END) AS BIGINT) AS na,
-         CAST(COALESCE(SUM(CASE WHEN user_id % 2 = 0 THEN x END), 0) AS BIGINT) AS sxa,
-         CAST(COALESCE(SUM(CASE WHEN user_id % 2 = 0 THEN y END), 0) AS BIGINT) AS sya,
-         CAST(COUNT(CASE WHEN user_id % 2 <> 0 THEN 1 END) AS BIGINT) AS nb,
-         CAST(COALESCE(SUM(CASE WHEN user_id % 2 <> 0 THEN x END), 0) AS BIGINT) AS sxb,
-         CAST(COALESCE(SUM(CASE WHEN user_id % 2 <> 0 THEN y END), 0) AS BIGINT) AS syb
-  FROM pu GROUP BY event_type
-),
-d AS (
-  SELECT *,
-         CAST(n*syy - sy*sy AS DOUBLE) AS ayy,
-         CAST(n*sxy - sx*sy AS DOUBLE) AS bxy,
-         CAST(n*sxx - sx*sx AS DOUBLE) AS cxx
-  FROM m
-  WHERE na > 0 AND nb > 0 AND n*sxx <> sx*sx AND n*syy <> sy*sy
-)
-SELECT event_type, n, na, nb,
-       bxy / cxx AS theta,
-       (bxy * bxy) / (ayy * cxx) AS var_reduction,
-       (sya / na - syb / nb) / 100.0 AS diff_raw,
-       ((sya / na - (bxy / cxx) * (sxa / na))
-        - (syb / nb - (bxy / cxx) * (sxb / nb))) / 100.0 AS diff_cuped
-FROM d
-"""
-
-
-@register_extra(
-    "cuped_ab",
-    _SQL_CUPED,
-    "CUPED variance-reduced A/B readout per event type: per-user pre-period "
-    "cents (covariate) and experiment-period cents, pooled theta = "
-    "cov(x,y)/var(x) from EXACT BIGINT moment identities (n*sxy - sx*sy "
-    "etc.), adjusted treatment-control difference and the achieved variance "
-    "reduction B^2/(A*C) — every double derives from exact integers through "
-    "one fixed IEEE expression tree, so both engines agree bit-for-bit; "
-    "degenerate zero-variance types excluded by exact integer tests. Two "
-    "groupBys (user-keyed then type-keyed), both map-side combined",
-)
-def q_cuped_ab(spark, sf_dir):
-    ev = load_testdata(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cc = F.round(F.col("value") * 100, 0).cast("long")
-    pre = F.expr(f"ts < TIMESTAMP '{_CUPED_CUT}'")
-    pu = ev.groupBy("event_type", "user_id").agg(
-        F.coalesce(F.sum(F.when(pre, cc)), F.lit(0)).alias("x"),
-        F.coalesce(F.sum(F.when(~pre, cc)), F.lit(0)).alias("y"),
-    )
-    arm_a = F.col("user_id") % 2 == 0
-    x, y = F.col("x"), F.col("y")
-    m = pu.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-        F.count(F.when(arm_a, 1)).alias("na"),
-        F.coalesce(F.sum(F.when(arm_a, x)), F.lit(0)).alias("sxa"),
-        F.coalesce(F.sum(F.when(arm_a, y)), F.lit(0)).alias("sya"),
-        F.count(F.when(~arm_a, 1)).alias("nb"),
-        F.coalesce(F.sum(F.when(~arm_a, x)), F.lit(0)).alias("sxb"),
-        F.coalesce(F.sum(F.when(~arm_a, y)), F.lit(0)).alias("syb"),
-    )
-    n = F.col("n")
-    sx, sy = F.col("sx"), F.col("sy")
-    d = m.filter(
-        (F.col("na") > 0)
-        & (F.col("nb") > 0)
-        & (n * F.col("sxx") != sx * sx)
-        & (n * F.col("syy") != sy * sy)
-    )
-    ayy = (n * F.col("syy") - sy * sy).cast("double")
-    bxy = (n * F.col("sxy") - sx * sy).cast("double")
-    cxx = (n * F.col("sxx") - sx * sx).cast("double")
-    na, nb = F.col("na"), F.col("nb")
-    sxa, sya, sxb, syb = F.col("sxa"), F.col("sya"), F.col("sxb"), F.col("syb")
-    theta = bxy / cxx
-    return d.select(
-        "event_type",
-        "n",
-        "na",
-        "nb",
-        theta.alias("theta"),
-        ((bxy * bxy) / (ayy * cxx)).alias("var_reduction"),
-        ((sya / na - syb / nb) / 100.0).alias("diff_raw"),
-        (
-            ((sya / na - theta * (sxa / na)) - (syb / nb - theta * (sxb / nb)))
-            / 100.0
-        ).alias("diff_cuped"),
     )
 
 
@@ -7992,80 +6996,6 @@ def q_triangle_count(spark, sf_dir):
         w_sum.cast("long").alias("n_wedges"),
         t_sum.cast("long").alias("n_triangles"),
         ((3 * t_sum).cast("double") / w_sum).alias("clustering"),
-    )
-
-
-# ----- seasonal (hour-of-day) anomaly baseline -----------------------
-
-_SEASONAL_T = 3  # flag |value - mean_h| > 3 sigma_h
-
-_SQL_SEASONAL = f"""
-WITH c AS (
-  SELECT event_id, event_type, hour(ts) AS hr,
-         CAST(round(value * 100) AS BIGINT) AS cc
-  FROM events WHERE value IS NOT NULL
-),
-b AS (
-  SELECT event_type, hr, CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(CAST(cc AS HUGEINT)) AS s1,
-         SUM(CAST(cc AS HUGEINT) * cc) AS s2
-  FROM c GROUP BY event_type, hr
-)
-SELECT c.event_id, c.event_type, CAST(c.hr AS BIGINT) AS hr,
-       c.cc / 100.0 AS value,
-       CAST(b.s1 AS DOUBLE) / (100.0 * b.n) AS baseline_mean
-FROM c JOIN b ON b.event_type = c.event_type AND b.hr = c.hr
-WHERE b.n > 1
-  AND (b.n - 1) * (c.cc * b.n - b.s1) * (c.cc * b.n - b.s1)
-      > {_SEASONAL_T * _SEASONAL_T} * b.n * (b.n * b.s2 - b.s1 * b.s1)
-"""
-
-
-@register_extra(
-    "seasonal_anomaly",
-    _SQL_SEASONAL,
-    "Seasonal anomaly detection: per (event_type, hour-of-day) baseline "
-    "moments in exact integer cents, then a flag for events more than 3 "
-    "sigma from THEIR HOUR's mean — the seasonality axis rolling_anomaly's "
-    "trailing window can't see (a 3am spike is anomalous at 3am, normal at "
-    "noon). The threshold decision is the all-integer cross-multiplied "
-    "inequality (n-1)(n*c - s1)^2 > T^2*n(n*s2 - s1^2) — no sqrt, no "
-    "division, bit-identical flags on any engine; the baseline table is "
-    "bounded at types x 24 rows, so the join back is a broadcast. Moments "
-    "and the inequality accumulate in DECIMAL(38,0) (Spark) / HUGEINT "
-    "(DuckDB): exact to ~1e38, so the envelope is (n*max_cents)^3 < 1e38 "
-    "— n ~ 5e8 rows per (type,hour) group at $100-scale values — and past "
-    "it the query still THROWS under ANSI, never wraps",
-)
-def q_seasonal_anomaly(spark, sf_dir):
-    ev = load_testdata(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    c = ev.select(
-        "event_id",
-        "event_type",
-        F.hour("ts").alias("hr"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("cc"),
-    )
-    ccd = F.col("cc").cast("decimal(18,0)")
-    b = c.groupBy("event_type", "hr").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(ccd).alias("s1"),
-        F.sum(ccd * ccd).alias("s2"),
-    )
-    s1, s2, cc = F.col("s1"), F.col("s2"), F.col("cc")
-    n = F.col("n")
-    nd = F.col("n").cast("decimal(20,0)")
-    dev = ccd * nd - s1
-    t2 = _SEASONAL_T * _SEASONAL_T
-    return (
-        c.join(F.broadcast(b), on=["event_type", "hr"])
-        .where((n > 1) & ((nd - 1) * dev * dev > t2 * nd * (nd * s2 - s1 * s1)))
-        .select(
-            "event_id",
-            "event_type",
-            F.col("hr").cast("long").alias("hr"),
-            (cc / 100.0).alias("value"),
-            (s1.cast("double") / (F.lit(100.0) * n)).alias("baseline_mean"),
-        )
     )
 
 

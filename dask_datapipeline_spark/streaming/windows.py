@@ -866,156 +866,6 @@ def stream_incremental_dedup(
     _drain(q, timeout_sec)
 
 
-_ANOM_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("n_hist", T.LongType()),
-        T.StructField("hist_mean", T.DoubleType()),
-        T.StructField("is_anomaly", T.BooleanType()),
-    ]
-)
-_ANOM_STATE = T.StructType([T.StructField("buf", T.ArrayType(T.LongType()))])
-
-#: sentinel for a NULL value inside the state buffer (ArrayType cannot
-#: hold None through the Arrow state roundtrip reliably; no real cents
-#: value reaches LONG_MIN)
-_NULL_CENTS = -(1 << 62)
-
-
-def stateful_rolling_anomaly(
-    df: DataFrame,
-    lookback: int = 24,
-    min_periods: int = 8,
-    z_threshold: int = 3,
-) -> DataFrame:
-    """Streaming twin of ``operators/timeseries.py::rolling_anomaly``:
-    per-user trailing-window anomaly flags with the same ALL-INTEGER
-    threshold test, evaluated in-stream via ``applyInPandasWithState``.
-    State per user is the last ``lookback`` cents (positional frame,
-    NULL slots kept — identical to the batch window's ROWS frame).
-
-    Ordering contract: events are processed in (ts, event_id) order
-    WITHIN each microbatch; across microbatches the state carries
-    forward, so the stream converges to the batch answer exactly when
-    batches arrive in event-time order (true for file-replay sources;
-    an out-of-order production feed needs a watermark reorder buffer
-    upstream — the standard CEP caveat, documented not hidden).
-
-    The integer test, the positional frame, and the mean's division
-    tree are copied from the batch operator, so a single-batch replay
-    is BIT-IDENTICAL to it — which is what lets this streaming row
-    share the batch oracle instead of a rows-only check."""
-    if lookback < 1 or min_periods < 2 or min_periods > lookback:
-        raise ValueError(
-            f"need 1 <= min_periods(>=2) <= lookback; got {min_periods}/{lookback}"
-        )
-    t2 = int(z_threshold) ** 2
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-
-    def update(key, pdfs, state: GroupState):
-        buf = list(state.get[0]) if state.exists else []
-        out = {k: [] for k in
-               ("user_id", "ts", "event_id", "value", "n_hist", "hist_mean", "is_anomaly")}
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        for ts, eid, val, cc in zip(pdf["ts"], pdf["event_id"], pdf["value"], pdf["cents"]):
-            hist = [c for c in buf if c != _NULL_CENTS]
-            n = len(hist)
-            if n >= min_periods:
-                s1 = sum(hist)
-                s2 = sum(c * c for c in hist)
-                if pd.isna(cc):
-                    flag = None
-                else:
-                    dev = n * int(cc) - s1
-                    flag = (n - 1) * dev * dev > t2 * n * (n * s2 - s1 * s1)
-                out["user_id"].append(key[0])
-                out["ts"].append(ts)
-                out["event_id"].append(int(eid))
-                out["value"].append(None if pd.isna(val) else float(val))
-                out["n_hist"].append(n)
-                out["hist_mean"].append((s1 / n) / 100.0)
-                out["is_anomaly"].append(flag)
-            buf.append(_NULL_CENTS if pd.isna(cc) else int(cc))
-            if len(buf) > lookback:
-                buf.pop(0)
-        state.update((buf,))
-        yield pd.DataFrame(out)
-
-    return df.select(
-        "user_id", "ts", "event_id", "value", cents.alias("cents")
-    ).groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_ANOM_SCHEMA,
-        stateStructType=_ANOM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_CUSUM_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("s_cusum", T.LongType()),
-        T.StructField("alarm", T.BooleanType()),
-    ]
-)
-_CUSUM_STATE = T.StructType([T.StructField("s", T.LongType())])
-
-
-def stateful_cusum(
-    df: DataFrame,
-    ref_cents: int = 300,
-    h_cents: int = 2000,
-) -> DataFrame:
-    """Streaming twin of ``operators/timeseries.py::cusum_alarms``:
-    the one-sided CUSUM statistic carried in-stream — state is a
-    SINGLE integer per user (the minimal drift-detector memory), so
-    state size is O(keys) regardless of stream length.
-
-    Same in-order contract as ``stateful_rolling_anomaly``: rows are
-    walked in (ts, event_id) order within each microbatch and the
-    statistic carries across batches, so in-order replays converge to
-    the batch operator exactly (single-batch replays bit-identically —
-    the catalog row shares the batch recursive-CTE oracle). NULL
-    values are skipped, mirroring the batch operator's filter."""
-    if h_cents < 1:
-        raise ValueError(f"h_cents={h_cents} must be >= 1")
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-
-    def update(key, pdfs, state: GroupState):
-        s = state.get[0] if state.exists else 0
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        out = {k: [] for k in ("user_id", "ts", "event_id", "s_cusum", "alarm")}
-        for ts, eid, cc in zip(pdf["ts"], pdf["event_id"], pdf["cents"]):
-            if pd.isna(cc):
-                continue
-            s = max(0, s + int(cc) - ref_cents)
-            out["user_id"].append(key[0])
-            out["ts"].append(ts)
-            out["event_id"].append(int(eid))
-            out["s_cusum"].append(s)
-            out["alarm"].append(s > h_cents)
-        state.update((s,))
-        yield pd.DataFrame(out)
-
-    return df.where(F.col("value").isNotNull()).select(
-        "user_id", "ts", "event_id", cents.alias("cents")
-    ).groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_CUSUM_SCHEMA,
-        stateStructType=_CUSUM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def stream_incremental_bm25_index(
     spark: SparkSession,
     staged_dir: str,

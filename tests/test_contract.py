@@ -5,10 +5,13 @@ the last two silently fell off the gate)."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 import __spark_entry__ as entrymod
 from dask_datapipeline_spark.plans.catalog import (
@@ -45,12 +48,10 @@ def test_extra_catalog_is_disjoint_and_described():
 
 def test_every_extra_is_documented_in_readme():
     """The README coverage matrix is the judge-facing inventory — a
-    catalog entry that isn't named there is invisible coverage. Keep
-    the two in lockstep."""
-    readme_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "README.md"
-    )
-    with open(readme_path) as f:
+    catalog entry that isn't named there is invisible coverage, and an
+    ``extra:<name>`` row for a deleted entry is coverage that is gone.
+    Keep the two in lockstep, both ways."""
+    with open(os.path.join(_ROOT, "README.md")) as f:
         readme = f.read()
     missing = [
         name
@@ -58,3 +59,25 @@ def test_every_extra_is_documented_in_readme():
         if f"`{name}`" not in readme and f"extra:{name}`" not in readme
     ]
     assert not missing, f"extras absent from README.md: {missing}"
+    stale = sorted(
+        set(re.findall(r"extra:([A-Za-z0-9_]+)", readme)) - set(EXTRA_CATALOG)
+    )
+    assert not stale, f"README.md names unregistered extras: {stale}"
+
+
+def test_dump_plans_showcase_is_registered():
+    """``tools/dump_plans.py`` looks its SHOWCASE names up only after a
+    Spark session has started and earlier plans were dumped, so a stale
+    name must fail here instead, without Spark."""
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans", os.path.join(_ROOT, "tools", "dump_plans.py")
+    )
+    dump_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dump_plans)
+    stale = [
+        name
+        for name, _ in dump_plans.SHOWCASE
+        if name.removeprefix("extra:")
+        not in (EXTRA_CATALOG if name.startswith("extra:") else CATALOG)
+    ]
+    assert not stale, f"tools/dump_plans.py SHOWCASE names unregistered queries: {stale}"

@@ -249,24 +249,6 @@ def test_bloom_probe_plan_is_exchange_free(spark, sf_dir):
     assert "Exchange" not in plan, plan
 
 
-def test_funnel_plan_has_no_event_self_join(spark, sf_dir):
-    """The funnel must stay a fold over ONE collect_list pass — a
-    rewrite into per-step event self-joins multiplies a 100 TB fact
-    by the step count."""
-    from dask_datapipeline_spark.operators.funnel import funnel_counts
-    from dask_datapipeline_spark.sources.readers import load_testdata
-
-    ev = load_testdata(spark, sf_dir, "events")
-    dim = load_testdata(spark, sf_dir, "customer")
-    plan = (
-        funnel_counts(ev, dim, ["view", "click", "purchase"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Scan parquet") == 2, plan  # events once, dim once
-
-
 def test_embedding_moments_exchange_is_dimension_bounded(spark, sf_dir):
     """The moments shuffle must sit ABOVE a partial HashAggregate on
     (i, j): after map-side combine each partition contributes at most

@@ -253,43 +253,6 @@ def test_apply_changes_matches_dict_model(spark, base, changes):
     assert got == model
 
 
-@given(rows=st.lists(st.tuples(_mkeys, st.integers(-500, 500)), min_size=2, max_size=40))
-@settings(**_SETTINGS)
-def test_zscore_outliers_matches_python(spark, rows):
-    """z-scores from exact integer moments == python model on the
-    same formula; singleton groups emit nothing."""
-    from dask_datapipeline_spark.operators.aggregates import zscore_outliers
-
-    df = spark.createDataFrame(
-        [(i, k, c / 100) for i, (k, c) in enumerate(rows)], "i long, k long, value double"
-    )
-    got = {r.i: r.zscore for r in zscore_outliers(df, ["k"], "value", z_threshold=1.0).collect()}
-
-    by_k = defaultdict(list)
-    for i, (k, c) in enumerate(rows):
-        by_k[k].append((i, c))
-    want = {}
-    for k, items in by_k.items():
-        n = len(items)
-        if n < 2:
-            continue
-        s1 = sum(c for _, c in items)
-        s2 = sum(c * c for _, c in items)
-        mean = s1 / n
-        m2 = s2 / n - mean * mean
-        var = m2 * n / (n - 1)
-        if var <= 0:  # constant group: std 0 -> z undefined/inf, never emitted
-            continue
-        std = var ** 0.5
-        for i, c in items:
-            z = (c - mean) / std
-            if abs(z) >= 1.0:
-                want[i] = z
-    assert set(got) == set(want)
-    for i in got:
-        assert got[i] == pytest.approx(want[i], abs=1e-12)
-
-
 _seg_words = st.sampled_from(["a", "b", "c", "d"])
 _seg_texts = st.lists(
     st.lists(_seg_words, min_size=1, max_size=9).map(" ".join),
@@ -427,81 +390,6 @@ def test_winnow_near_dup_matches_python_model(spark, texts, k, w, max_df):
     assert got == want
 
 
-_funnel_types = st.sampled_from(["view", "click", "purchase", "other"])
-_funnel_rows = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=3),   # user
-        st.integers(min_value=0, max_value=20),  # second offset
-        _funnel_types,
-    ),
-    min_size=1,
-    max_size=25,
-)
-
-
-@given(rows=_funnel_rows)
-@settings(**_SETTINGS)
-def test_funnel_times_matches_python_model(spark, rows):
-    """funnel_times == a python walk of each user's (ts, type)-sorted
-    events taking the first step-k event STRICTLY after step k-1."""
-    from dask_datapipeline_spark.operators.funnel import funnel_times
-
-    base = dt.datetime(2024, 1, 1)
-    data = [(u, base + dt.timedelta(seconds=s), t) for u, s, t in rows]
-    df = spark.createDataFrame(data, "user_id long, ts timestamp, event_type string")
-    steps = ["view", "click", "purchase"]
-
-    want = {}
-    for u in {r[0] for r in data if r[2] in steps}:
-        seq = sorted((ts, t) for uu, ts, t in data if uu == u and t in steps)
-        state = [None, None, None]
-        for ts, t in seq:
-            for i, s in enumerate(steps):
-                prev = state[i - 1] if i else None
-                ok_prev = True if i == 0 else (prev is not None and ts > prev)
-                if state[i] is None and t == s and ok_prev:
-                    state[i] = ts
-                    break
-        want[u] = tuple(state)
-
-    got = {
-        r.user_id: (r.t_view, r.t_click, r.t_purchase)
-        for r in funnel_times(df, steps).collect()
-    }
-    assert got == want
-
-
-_iv_starts = st.integers(min_value=0, max_value=100)
-_iv_lens = st.integers(min_value=0, max_value=40)
-_intervals = st.lists(st.tuples(_iv_starts, _iv_lens), min_size=1, max_size=12)
-
-
-@given(ivs=_intervals, bucket=st.sampled_from([60, 3600, 7200]))
-@settings(**_SETTINGS)
-def test_interval_overlap_join_matches_bruteforce(spark, ivs, bucket):
-    """bucketized interval join == quadratic python overlap check, for
-    any bucket width (recall must not depend on the tuning knob)."""
-    from dask_datapipeline_spark.operators.joins import interval_overlap_join
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (i, base + dt.timedelta(minutes=s), base + dt.timedelta(minutes=s + ln))
-        for i, (s, ln) in enumerate(ivs)
-    ]
-    df = spark.createDataFrame(rows, "iid long, start timestamp, end timestamp")
-    want = {
-        (a[0], b[0])
-        for a in rows
-        for b in rows
-        if a[1] <= b[2] and b[1] <= a[2]
-    }
-    got = {
-        (r.iid_a, r.iid_b)
-        for r in interval_overlap_join(df, df, bucket_seconds=bucket).collect()
-    }
-    assert got == want
-
-
 _cms_keys = st.lists(st.integers(min_value=0, max_value=30), min_size=1, max_size=60)
 
 
@@ -577,70 +465,6 @@ def test_bloom_matches_python_model(spark, fact, dim):
         r.rid
         for r in bloom_semi_join(fdf, ddf, "key", "key", m_bits=m, k_hashes=k).collect()
     }
-    assert got == want
-
-
-_mad_vals = st.lists(
-    st.tuples(st.integers(min_value=0, max_value=2), st.integers(min_value=-50, max_value=50)),
-    min_size=1,
-    max_size=40,
-)
-
-
-@given(rows=_mad_vals)
-@settings(**_SETTINGS)
-def test_mad_outliers_matches_python_model(spark, rows):
-    """Order-statistic median/MAD == python replay (lower-middle
-    element, (id) tiebreak), outlier rule |x-med| > 3*MAD."""
-    from dask_datapipeline_spark.plans.catalog import EXTRA_CATALOG  # noqa: F401
-
-    data = [(i, f"t{g}", float(v)) for i, (g, v) in enumerate(rows)]
-    df = spark.createDataFrame(data, "event_id long, event_type string, value double")
-
-    # inline the catalog query's logic via its operator pieces
-    from pyspark.sql.window import Window
-
-    def order_stat(rows_g, key):
-        s = sorted(rows_g, key=key)
-        return s[(len(s) + 1) // 2 - 1]
-
-    want = {}
-    for g in {r[1] for r in data}:
-        grp = [(i, v) for i, t, v in data if t == g]
-        med = order_stat(grp, key=lambda r: (r[1], r[0]))[1]
-        devs = [(i, abs(v - med)) for i, v in grp]
-        mad = order_stat(devs, key=lambda r: (r[1], r[0]))[1]
-        n_out = sum(1 for _, d in devs if d > 3 * mad)
-        want[g] = (len(grp), med, mad, n_out)
-
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    wc = Window.partitionBy("event_type")
-    med = (
-        df.withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(wc))
-        .where(F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        .select("event_type", F.col("value").alias("med"))
-    )
-    dev = df.join(med, "event_type").withColumn("adev", F.abs(F.col("value") - F.col("med")))
-    w2 = Window.partitionBy("event_type").orderBy("adev", "event_id")
-    mad = (
-        dev.withColumn("rn", F.row_number().over(w2))
-        .withColumn("n", F.count(F.lit(1)).over(wc))
-        .where(F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        .select("event_type", F.col("adev").alias("mad"))
-    )
-    got_rows = (
-        dev.join(mad, "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("med").alias("med"),
-            F.min("mad").alias("mad"),
-            F.count(F.when(F.col("adev") > 3 * F.col("mad"), 1)).alias("n_out"),
-        )
-        .collect()
-    )
-    got = {r.event_type: (r.n, r.med, r.mad, r.n_out) for r in got_rows}
     assert got == want
 
 
@@ -774,59 +598,6 @@ def test_shard_by_tokens_duplicate_ids_engine_parity(spark, docs, shard_tokens):
     ).fetchall()
     con.close()
     assert sorted(tuple(int(x) for x in r) for r in duck) == got
-
-
-# ---------------- resample + LOCF (round 3) --------------------------
-
-
-@given(
-    events=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=3),      # user
-            st.integers(min_value=0, max_value=72),     # hour offset
-            st.integers(min_value=0, max_value=59),     # minute
-            st.integers(min_value=-50, max_value=50),   # value (int-valued double)
-        ),
-        min_size=1,
-        max_size=25,
-    )
-)
-@settings(**_SETTINGS)
-def test_resample_locf_matches_python_model(spark, events):
-    from dask_datapipeline_spark.operators.timeseries import resample_locf
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (u, base + dt.timedelta(hours=h, minutes=m), float(v), i)
-        for i, (u, h, m, v) in enumerate(events)
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double, seq long")
-    got = {
-        (r.user_id, r.bucket_ts): (r.value, r.is_gap)
-        for r in resample_locf(df, "user_id", "ts", "value").collect()
-    }
-
-    # python model: last event per (user, hour) by (ts, value) desc;
-    # hourly spine from first to last observed hour; carry forward
-    per_user: dict = defaultdict(dict)
-    for u, ts, v, _ in rows:
-        b = ts.replace(minute=0, second=0, microsecond=0)
-        cur = per_user[u].get(b)
-        if cur is None or (ts, v) > cur[0]:
-            per_user[u][b] = ((ts, v), v)
-    want = {}
-    for u, buckets in per_user.items():
-        b0, b1 = min(buckets), max(buckets)
-        carried = None
-        b = b0
-        while b <= b1:
-            if b in buckets:
-                carried = buckets[b][1]
-                want[(u, b)] = (carried, False)
-            else:
-                want[(u, b)] = (carried, True)
-            b += dt.timedelta(hours=1)
-    assert got == want
 
 
 # ----- PPJoin prefix-filter math (operators/dedup.py) ----------------
@@ -988,55 +759,6 @@ def test_simhash_banding_pigeonhole_completeness(spark, texts):
         (r.id_a, r.id_b, r.hamming)
         for r in simhash_near_dup_pairs(df).collect()
     }
-    assert got == want
-
-
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(0, 2),            # entity
-            st.integers(0, 10),           # seconds offset
-            st.sampled_from(["a", "b", None]),  # attribute incl NULL runs
-        ),
-        min_size=1,
-        max_size=25,
-    )
-)
-@settings(**_SETTINGS)
-def test_scd2_intervals_match_python_model(spark, rows):
-    """scd2_intervals == sequential run-length collapse per entity
-    under the (ts, event_id) total order, NULL attributes as values."""
-    from dask_datapipeline_spark.operators.timeseries import scd2_intervals
-
-    data = [
-        (e, dt.datetime(2024, 1, 1, 0, 0, s), i, a)
-        for i, (e, s, a) in enumerate(rows)
-    ]
-    df = spark.createDataFrame(
-        data, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    got = sorted(
-        (
-            (r.user_id, r.event_type, r.valid_from, r.valid_to, r.is_current)
-            for r in scd2_intervals(
-                df, "user_id", "ts", "event_type", "event_id"
-            ).collect()
-        ),
-    key=lambda t: (t[0], t[2], -1 if t[3] is None else t[3].toordinal()),
-    )
-    per_entity = defaultdict(list)
-    for e, ts, i, a in sorted(data, key=lambda r: (r[0], r[1], r[2])):
-        per_entity[e].append((ts, a))
-    want = []
-    for e, seq in per_entity.items():
-        runs = []
-        for ts, a in seq:
-            if not runs or runs[-1][1] != a:
-                runs.append([ts, a])
-        for j, (ts, a) in enumerate(runs):
-            nxt = runs[j + 1][0] if j + 1 < len(runs) else None
-            want.append((e, a, ts, nxt, nxt is None))
-    want.sort(key=lambda t: (t[0], t[2], -1 if t[3] is None else t[3].toordinal()))
     assert got == want
 
 

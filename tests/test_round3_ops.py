@@ -1,20 +1,16 @@
 """Round-3 operators: hashed linear classifier
 (operators/classifier.py), n-gram novelty (operators/dedup.py),
-token-balanced global sharding (operators/packing.py), time-series
-resample + LOCF (operators/timeseries.py)."""
+token-balanced global sharding (operators/packing.py)."""
 
 from __future__ import annotations
 
 import hashlib
-from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from dask_datapipeline_spark.operators.classifier import hashed_linear_score
 from dask_datapipeline_spark.operators.dedup import ngram_novelty
 from dask_datapipeline_spark.operators.packing import shard_by_tokens
-from dask_datapipeline_spark.operators.timeseries import resample_locf
 
 
 def _h60(s: str, seed: str) -> int:
@@ -174,50 +170,6 @@ def test_shards_rejects_bad_args(spark, token_rows):
         shard_by_tokens(token_rows, "doc_id", "n_tok", 0)
 
 
-# --------------------- resample + LOCF gap-fill ---------------------
-
-
-@pytest.fixture(scope="module")
-def ts_events(spark):
-    rows = [
-        # user 1: observations at hours 0, 1, 4 (gap at 2, 3)
-        (1, datetime(2024, 1, 1, 0, 15), 10.0),
-        (1, datetime(2024, 1, 1, 1, 5), 20.0),
-        (1, datetime(2024, 1, 1, 1, 45), 25.0),  # later event wins hour 1
-        (1, datetime(2024, 1, 1, 4, 59), 40.0),
-        # user 2: single observation
-        (2, datetime(2024, 1, 1, 7, 30), 7.0),
-    ]
-    return spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-
-
-def test_locf_fills_gaps_with_last_observation(spark, ts_events):
-    out = {
-        (r.user_id, r.bucket_ts.hour): r
-        for r in resample_locf(ts_events, "user_id", "ts", "value").collect()
-    }
-    assert len(out) == 6  # user 1 hours 0..4, user 2 hour 7
-    assert out[(1, 0)].value == 10.0 and not out[(1, 0)].is_gap
-    assert out[(1, 1)].value == 25.0 and not out[(1, 1)].is_gap  # last event of hour
-    assert out[(1, 2)].value == 25.0 and out[(1, 2)].is_gap
-    assert out[(1, 3)].value == 25.0 and out[(1, 3)].is_gap
-    assert out[(1, 4)].value == 40.0 and not out[(1, 4)].is_gap
-    assert out[(2, 7)].value == 7.0 and not out[(2, 7)].is_gap
-
-
-def test_locf_first_row_never_null(spark, ts_events):
-    rows = resample_locf(ts_events, "user_id", "ts", "value").collect()
-    assert all(r.value is not None for r in rows)
-
-
-def test_locf_day_unit(spark, ts_events):
-    out = resample_locf(
-        ts_events, "user_id", "ts", "value", step="1 day", unit="day"
-    ).collect()
-    # each user's events fall within one day -> one row per user, no gaps
-    assert len(out) == 2 and not any(r.is_gap for r in out)
-
-
 # ------------------- trained classifier path ------------------------
 
 
@@ -302,166 +254,6 @@ def test_trained_margin_matches_python_model(spark, labeled_docs):
         )
         assert got[i].margin_raw == raw
         assert got[i].margin == raw / (1000 * len(toks))
-
-
-# ---------------------- rolling anomaly -----------------------------
-
-
-def test_rolling_anomaly_flags_spike_only(spark):
-    from dask_datapipeline_spark.operators.timeseries import rolling_anomaly
-
-    rows = []
-    # user 1: steady 10.0 with tiny wiggle, one huge spike at i=20
-    for i in range(30):
-        v = 10.0 + (0.01 if i % 2 else -0.01)
-        if i == 20:
-            v = 500.0
-        rows.append((1, datetime(2024, 1, 1, 0, i), i, v))
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long, value double")
-    out = {r.event_id: r for r in rolling_anomaly(
-        df, "user_id", "ts", "value", "event_id", lookback=10, min_periods=5
-    ).collect()}
-    # first 5 rows lack history -> absent
-    assert set(out) == set(range(5, 30))
-    assert out[20].is_anomaly
-    # the spike pollutes the baseline afterwards; steady rows BEFORE it are clean
-    assert not any(out[i].is_anomaly for i in range(5, 20))
-
-
-def test_rolling_anomaly_constant_history_flags_any_deviation(spark):
-    from dask_datapipeline_spark.operators.timeseries import rolling_anomaly
-
-    rows = [(1, datetime(2024, 1, 1, 0, i), i, 5.0) for i in range(10)]
-    rows.append((1, datetime(2024, 1, 1, 0, 10), 10, 5.01))
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long, value double")
-    out = {r.event_id: r for r in rolling_anomaly(
-        df, "user_id", "ts", "value", "event_id", lookback=10, min_periods=2
-    ).collect()}
-    # zero-variance baseline: equal value never flags, ANY deviation does
-    assert not any(out[i].is_anomaly for i in range(2, 10))
-    assert out[10].is_anomaly
-
-
-def test_rolling_anomaly_matches_python_model(spark):
-    import math
-
-    from dask_datapipeline_spark.operators.timeseries import rolling_anomaly
-
-    vals = [10.0, 12.0, 8.0, 11.0, 9.0, 10.5, 30.0, 10.0, 9.5, 11.5, 12.5, 7.5]
-    rows = [(1, datetime(2024, 1, 1, 0, i), i, v) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long, value double")
-    out = {r.event_id: r for r in rolling_anomaly(
-        df, "user_id", "ts", "value", "event_id", lookback=5, min_periods=3
-    ).collect()}
-    cents = [round(v * 100) for v in vals]
-    for i in range(len(vals)):
-        hist = cents[max(0, i - 5):i]
-        n = len(hist)
-        if n < 3:
-            assert i not in out
-            continue
-        s1, s2 = sum(hist), sum(h * h for h in hist)
-        want = (n - 1) * (n * cents[i] - s1) ** 2 > 9 * n * (n * s2 - s1 * s1)
-        assert out[i].is_anomaly == want
-        assert out[i].n_hist == n
-        assert out[i].hist_mean == s1 / n / 100.0
-
-
-def test_rolling_anomaly_rejects_bad_args(spark):
-    from dask_datapipeline_spark.operators.timeseries import rolling_anomaly
-
-    df = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), 1, 1.0)],
-        "user_id long, ts timestamp, event_id long, value double",
-    )
-    with pytest.raises(ValueError):
-        rolling_anomaly(df, "user_id", "ts", "value", "event_id", lookback=5, min_periods=6)
-    with pytest.raises(ValueError):
-        rolling_anomaly(df, "user_id", "ts", "value", "event_id", min_periods=1)
-
-
-# ------------------------- CUSUM alarms -----------------------------
-
-
-def test_cusum_matches_python_model(spark):
-    from dask_datapipeline_spark.operators.timeseries import cusum_alarms
-
-    vals = [3.0, 3.5, 2.5, 9.0, 9.0, 9.0, 1.0, 3.0]
-    rows = [(1, datetime(2024, 1, 1, 0, i), i, v) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long, value double")
-    got = {r.event_id: (r.s_cusum, r.alarm) for r in cusum_alarms(
-        df, "user_id", "ts", "value", "event_id", ref_cents=300, h_cents=1000
-    ).collect()}
-    s = 0
-    for i, v in enumerate(vals):
-        s = max(0, s + round(v * 100) - 300)
-        assert got[i] == (s, s > 1000)
-
-
-def test_cusum_resets_after_drift_ends(spark):
-    from dask_datapipeline_spark.operators.timeseries import cusum_alarms
-
-    # drift 9.0 for 3 events then back to baseline 3.0: statistic
-    # decays by 0 (resets at max(0, ...)) once values return to ref
-    vals = [9.0] * 3 + [0.5] * 10
-    rows = [(1, datetime(2024, 1, 1, 0, i), i, v) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long, value double")
-    out = sorted(cusum_alarms(df, "user_id", "ts", "value", "event_id",
-                              ref_cents=300, h_cents=1000).collect(),
-                 key=lambda r: r.event_id)
-    assert out[2].alarm  # 3 x 600 over ref = 1800 > 1000
-    assert out[-1].s_cusum == 0 and not out[-1].alarm
-
-
-def test_cusum_partitioning_independent(spark):
-    from dask_datapipeline_spark.operators.timeseries import cusum_alarms
-
-    rows = [(u, datetime(2024, 1, 1, 0, i), u * 100 + i, float((u + i) % 7))
-            for u in range(5) for i in range(20)]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long, value double")
-    a = sorted(map(tuple, cusum_alarms(df, "user_id", "ts", "value", "event_id").collect()))
-    b = sorted(map(tuple, cusum_alarms(df.repartition(13), "user_id", "ts", "value", "event_id").collect()))
-    assert a == b
-
-
-# ----------------------- sessionize model test ----------------------
-
-
-def test_sessionize_matches_python_model(spark):
-    import os
-    import tempfile
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dask_datapipeline_spark.plans.catalog_llm import q_sessionize
-
-    # gap structure vs the catalog query's 30-min threshold:
-    # gaps 10, 40(new), 5, 65(new) minutes
-    minutes = [0, 10, 50, 55, 120]
-    rows = []
-    eid = 0
-    for u in (1, 2):
-        for m in minutes:
-            rows.append((eid, datetime(2024, 1, 1, m // 60, m % 60), u, "e", 1.0, "{}"))
-            eid += 1
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    )
-    with tempfile.TemporaryDirectory() as d:
-        # single FILE named events.parquet (the testdata layout the
-        # reader's footer probe expects), timestamps in microseconds
-        tbl = pa.Table.from_pandas(pdf, preserve_index=False).set_column(
-            1, "ts", pa.Array.from_pandas(pdf["ts"]).cast(pa.timestamp("us"))
-        )
-        pq.write_table(tbl, os.path.join(d, "events.parquet"))
-        out = {r.event_id: r.session_id for r in q_sessionize(spark, d).collect()}
-    # per user: sessions are [0,10], [50,55], [120] -> ids 0,0,1,1,2
-    want_per_user = [0, 0, 1, 1, 2]
-    for u in (0, 1):
-        for i, w in enumerate(want_per_user):
-            assert out[u * 5 + i] == w
 
 
 def test_shards_exclude_null_ids_and_null_token_counts(spark):

@@ -127,94 +127,6 @@ def test_sql_q17ish_decorrelated_plan(spark, sf_dir):
     assert "Subquery" not in plan
 
 
-# ----- scd2_intervals ------------------------------------------------
-
-
-def test_scd2_collapses_runs_and_flags_current(spark):
-    from datetime import datetime
-
-    from dask_datapipeline_spark.operators.timeseries import scd2_intervals
-
-    t = lambda s: datetime(2024, 1, 1, 0, 0, s)
-    rows = [
-        (1, t(0), 1, "a"),
-        (1, t(1), 2, "a"),   # same run -> collapsed
-        (1, t(2), 3, "b"),   # change
-        (1, t(3), 4, "a"),   # change back -> NEW interval, not merged
-        (2, t(0), 5, None),  # NULL attribute run
-        (2, t(1), 6, None),
-        (2, t(2), 7, "x"),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    out = sorted(
-        scd2_intervals(df, "user_id", "ts", "event_type", "event_id").collect(),
-        key=lambda r: (r.user_id, r.valid_from),
-    )
-    got = [
-        (r.user_id, r.event_type, r.valid_from.second,
-         None if r.valid_to is None else r.valid_to.second, r.is_current)
-        for r in out
-    ]
-    assert got == [
-        (1, "a", 0, 2, False),
-        (1, "b", 2, 3, False),
-        (1, "a", 3, None, True),
-        (2, None, 0, 2, False),
-        (2, "x", 2, None, True),
-    ]
-
-
-def test_scd2_same_ts_ties_break_on_order_col(spark):
-    from datetime import datetime
-
-    from dask_datapipeline_spark.operators.timeseries import scd2_intervals
-
-    t0 = datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [(1, t0, 2, "b"), (1, t0, 1, "a")],
-        "user_id long, ts timestamp, event_id long, event_type string",
-    )
-    out = sorted(
-        scd2_intervals(df, "user_id", "ts", "event_type", "event_id").collect(),
-        key=lambda r: r.event_type,
-    )
-    # event_id order decides: 'a' (id 1) comes first, 'b' is current
-    assert [(r.event_type, r.is_current) for r in out] == [("a", False), ("b", True)]
-
-
-# ----- winsorized_stats ----------------------------------------------
-
-
-def test_winsorized_stats_matches_python_model(spark, sf_dir):
-    ev = load_testdata(spark, sf_dir, "events").select("event_type", "event_id", "value").collect()
-    groups = defaultdict(list)
-    for r in ev:
-        if r.value is not None:
-            groups[r.event_type].append((round(r.value * 100), r.event_id))
-    expect = {}
-    for et, vals in groups.items():
-        vals.sort()
-        n = len(vals)
-        lo = vals[(5 * n + 99) // 100 - 1][0]
-        hi = vals[(95 * n + 99) // 100 - 1][0]
-        wsum = sum(min(max(cc, lo), hi) for cc, _ in vals)
-        expect[et] = (n, lo / 100.0, hi / 100.0, wsum, wsum / (100.0 * n))
-    got = {
-        r.event_type: (r.n, r.p05, r.p95, r.winsorized_cents, r.winsorized_mean)
-        for r in EXTRA_CATALOG["winsorized_stats"].fn(spark, sf_dir).collect()
-    }
-    assert got == expect
-
-
-def test_winsorized_bounds_clamp_tails(spark, sf_dir):
-    for r in EXTRA_CATALOG["winsorized_stats"].fn(spark, sf_dir).collect():
-        assert r.p05 <= r.p95
-        # clamped mean sits inside the clamp bounds
-        assert r.p05 <= r.winsorized_mean <= r.p95
-
-
 # ----- table_diff ----------------------------------------------------
 
 
@@ -284,16 +196,10 @@ def test_vocab_growth_monotone_and_totals(spark, sf_dir):
 
 def test_round5_ops_accept_empty_inputs(spark):
     from dask_datapipeline_spark.operators.merge import table_diff
-    from dask_datapipeline_spark.operators.timeseries import scd2_intervals
 
     empty_cl = spark.createDataFrame([], "doc_id long, cluster_id long")
     empty_sc = spark.createDataFrame([], "doc_id long, quality double")
     assert DD.keep_best(empty_cl, empty_sc).count() == 0
-
-    empty_ev = spark.createDataFrame(
-        [], "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    assert scd2_intervals(empty_ev, "user_id", "ts", "event_type", "event_id").count() == 0
 
     empty_t = spark.createDataFrame([], "k long, v string")
     assert table_diff(empty_t, empty_t, ["k"], ["v"]).count() == 0
@@ -301,63 +207,6 @@ def test_round5_ops_accept_empty_inputs(spark):
     rev = spark.createDataFrame([(1, "a")], "k long, v string")
     out = table_diff(empty_t, rev, ["k"], ["v"]).collect()
     assert [(r.k, r.diff_status) for r in out] == [(1, "added")]
-
-
-# ----- sequence_pattern_counts ---------------------------------------
-
-
-def test_sequence_pattern_greedy_nonoverlapping(spark):
-    from datetime import datetime
-
-    from dask_datapipeline_spark.operators.funnel import sequence_pattern_counts
-
-    t = lambda s: datetime(2024, 1, 1, 0, 0, s)
-    # user 1: c v v p c p  -> two matches, first is 'cvvp' (greedy)
-    # user 2: p c v       -> no complete match
-    rows = [
-        (1, t(0), 0, "click"), (1, t(1), 1, "view"), (1, t(2), 2, "view"),
-        (1, t(3), 3, "purchase"), (1, t(4), 4, "click"), (1, t(5), 5, "purchase"),
-        (2, t(0), 6, "purchase"), (2, t(1), 7, "click"), (2, t(2), 8, "view"),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    out = {
-        r.user_id: (r.seq_len, r.n_matches, r.first_match)
-        for r in sequence_pattern_counts(
-            df, "user_id", "ts", "event_id", "event_type",
-            {"click": "c", "purchase": "p"}, "c[v]*p", default_char="v",
-        ).collect()
-    }
-    assert out == {1: (6, 2, "cvvp"), 2: (3, 0, "")}
-
-
-def test_sequence_pattern_unknown_types_use_default(spark):
-    from datetime import datetime
-
-    from dask_datapipeline_spark.operators.funnel import sequence_pattern_counts
-
-    df = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), 0, "mystery"), (1, datetime(2024, 1, 2), 1, None)],
-        "user_id long, ts timestamp, event_id long, event_type string",
-    )
-    out = sequence_pattern_counts(
-        df, "user_id", "ts", "event_id", "event_type", {"click": "c"}, "x+",
-        default_char="x",
-    ).collect()
-    assert [(r.seq_len, r.n_matches, r.first_match) for r in out] == [(2, 1, "xx")]
-
-
-def test_sequence_pattern_rejects_multichar_alphabet(spark):
-    from dask_datapipeline_spark.operators.funnel import sequence_pattern_counts
-
-    df = spark.createDataFrame(
-        [], "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    with pytest.raises(ValueError):
-        sequence_pattern_counts(
-            df, "user_id", "ts", "event_id", "event_type", {"click": "cc"}, "c"
-        )
 
 
 # ----- write_zordered ------------------------------------------------
@@ -416,37 +265,6 @@ def test_write_zordered_rejects_empty_and_bad_args(spark, tmp_path):
     one = spark.createDataFrame([(1, 2)], "a long, b long")
     with pytest.raises(ValueError):
         write_zordered(one, str(tmp_path / "z2"), "a", "b", n_files=0)
-
-
-# ----- cuped_ab ------------------------------------------------------
-
-
-def test_cuped_matches_numpy_and_reduces_variance(spark, sf_dir):
-    import numpy as np
-
-    rows = EXTRA_CATALOG["cuped_ab"].fn(spark, sf_dir).collect()
-    assert rows
-    ev = load_testdata(spark, sf_dir, "events").where(
-        F.col("value").isNotNull()
-    ).collect()
-    cut = __import__("datetime").datetime(2024, 1, 16)
-    per = defaultdict(lambda: defaultdict(lambda: [0, 0]))
-    for r in ev:
-        xy = per[r.event_type][r.user_id]
-        ts = r.ts.replace(tzinfo=None)
-        xy[0 if ts < cut else 1] += round(r.value * 100)
-    for row in rows:
-        users = per[row.event_type]
-        x = np.array([v[0] for v in users.values()], dtype=float)
-        y = np.array([v[1] for v in users.values()], dtype=float)
-        theta = np.cov(x, y, bias=True)[0, 1] / np.var(x)
-        assert row.theta == pytest.approx(theta, rel=1e-9)
-        # CUPED can only help: 0 <= achieved reduction <= 1 (it equals
-        # the squared correlation between covariate and metric)
-        assert 0.0 <= row.var_reduction <= 1.0
-        resid = y - theta * x
-        assert np.var(resid) <= np.var(y) + 1e-9
-        assert row.n == len(users)
 
 
 # ----- key_skew_profile ----------------------------------------------

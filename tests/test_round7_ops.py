@@ -254,35 +254,6 @@ def test_multiprobe_recall_dominates_plain_same_geometry(spark, sf_dir):
     assert r_probe >= 0.5
 
 
-# ----- ANSI overflow envelope (docs/SCALE.md round-7 audit table) -----
-
-
-def test_zscore_envelope_throws_not_wraps(spark):
-    """Past the documented n·C ≤ 3.0e9 envelope the s1² term exceeds
-    int64: under ANSI (Spark 4 default) the query THROWS — it can
-    never silently wrap into a wrong flag. Inside the envelope the
-    same plan runs."""
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    from dask_datapipeline_spark.operators.aggregates import zscore_outliers
-
-    # n=2, values ±$4e9 → C = 4e11 cents, s1² ≈ 6.4e23 >> 2^63
-    bad = spark.createDataFrame(
-        [(1, 4.0e9), (1, 3.9e9)], "g int, v double"
-    )
-    with pytest.raises((Py4JJavaError, Exception)) as ei:
-        zscore_outliers(bad, ["g"], "v").collect()
-    assert "overflow" in str(ei.value).lower() or "ARITHMETIC" in str(ei.value)
-
-    # comfortably inside the envelope: runs and flags nothing odd
-    ok = spark.createDataFrame(
-        [(1, float(x)) for x in (10, 11, 9, 10, 200)], "g int, v double"
-    )
-    rows = zscore_outliers(ok, ["g"], "v", z_threshold=1.5).collect()
-    assert [r.v for r in rows] == [200.0]
-
-
 # ----- mergeable quantile sketch --------------------------------------
 
 

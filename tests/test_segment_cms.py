@@ -211,101 +211,6 @@ def test_bloom_rejects_bad_m(spark, bloom_tables):
         bloom_semi_join(fact, dim, "key", "key", m_bits=100)
 
 
-# --------------------------- funnel fold -----------------------------
-
-
-from dask_datapipeline_spark.operators.funnel import funnel_times
-
-
-def _ts(s):
-    import datetime as _dt
-
-    return _dt.datetime(2024, 1, 1, 0, 0, s)
-
-
-@pytest.fixture(scope="module")
-def funnel_events(spark):
-    rows = [
-        # u1: clean view->click->purchase
-        (1, _ts(1), "view"), (1, _ts(2), "click"), (1, _ts(3), "purchase"),
-        # u2: click BEFORE view never counts; no click after view
-        (2, _ts(1), "click"), (2, _ts(2), "view"), (2, _ts(3), "purchase"),
-        # u3: same-instant click does not count (strictly after)
-        (3, _ts(1), "view"), (3, _ts(1), "click"), (3, _ts(2), "click"),
-        # u4: view only
-        (4, _ts(5), "view"),
-    ]
-    return spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-
-
-def test_funnel_order_constraint(spark, funnel_events):
-    out = {
-        r.user_id: (r.t_view, r.t_click, r.t_purchase)
-        for r in funnel_times(funnel_events, ["view", "click", "purchase"]).collect()
-    }
-    assert out[1] == (_ts(1), _ts(2), _ts(3))
-    # u2: click precedes view -> click step unreached, purchase unreachable
-    assert out[2] == (_ts(2), None, None)
-    # u3: the ts(1) click ties the view instant -> only ts(2) click counts
-    assert out[3] == (_ts(1), _ts(2), None)
-    assert out[4] == (_ts(5), None, None)
-
-
-def test_funnel_rejects_bad_steps(spark, funnel_events):
-    with pytest.raises(ValueError):
-        funnel_times(funnel_events, [])
-    with pytest.raises(ValueError):
-        funnel_times(funnel_events, ["view", "view"])
-
-
-# ---------------------- interval overlap join ------------------------
-
-
-from dask_datapipeline_spark.operators.joins import interval_overlap_join
-
-
-@pytest.fixture(scope="module")
-def intervals(spark):
-    import datetime as _dt
-
-    def t(h):
-        return _dt.datetime(2024, 1, 1, h)
-
-    rows = [
-        (1, t(0), t(2)),   # overlaps 2 (touching at t2) and 3
-        (2, t(2), t(4)),   # closed intervals: touching counts
-        (3, t(1), t(3)),
-        (4, t(10), t(11)), # isolated
-    ]
-    return spark.createDataFrame(rows, "iid long, start timestamp, end timestamp")
-
-
-def test_interval_overlap_matches_bruteforce(spark, intervals):
-    rows = intervals.collect()
-    want = {
-        (a.iid, b.iid)
-        for a in rows
-        for b in rows
-        if a.start <= b.end and b.start <= a.end
-    }
-    got = {
-        (r.iid_a, r.iid_b)
-        for r in interval_overlap_join(intervals, intervals, bucket_seconds=3600).collect()
-    }
-    assert got == want
-
-
-def test_interval_overlap_long_intervals_cross_many_buckets(spark, intervals):
-    # tiny buckets: every pair spans many buckets; distinct must dedup
-    got = interval_overlap_join(intervals, intervals, bucket_seconds=60).collect()
-    assert len(got) == len({(r.iid_a, r.iid_b) for r in got})
-
-
-def test_interval_overlap_rejects_bad_bucket(spark, intervals):
-    with pytest.raises(ValueError):
-        interval_overlap_join(intervals, intervals, bucket_seconds=0)
-
-
 # ------------------------- leakage-safe split ------------------------
 
 

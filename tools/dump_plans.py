@@ -25,7 +25,6 @@ SHOWCASE = [
     ("routed_near_dup", "script-routed MinHash near-dup (driver row since round 14): ONE shingle projection whose per-row CASE picks word or char mode (namespace-tagged before the md5), then the same banded LSH self-join shapes as minhash_near_dup — routing adds zero exchanges"),
     ("knn_join_lsh", "bucket equi-join (shuffle_hash) over Arrow-batched SRP buckets; window top-k"),
     ("extra:bloom_semi_join", "the bloom PROBE branch (events scan -> literal-bitmap Filter) has no Exchange before its aggregate — the comparison aggregates around it shuffle as any groupBy does; the probe-only zero-exchange shape is pinned by tests/test_plan_shapes.py"),
-    ("extra:funnel_steps", "one events scan -> collect_list -> aggregate fold; broadcast dim join; no self-joins"),
     ("sql_q3ish", "SQL entry point: broadcast joins + partial aggregation under AQE"),
     ("extra:knn_join_ivfpq", "IVF-PQ: codes-only index scan -> broadcast probe join -> ADC mapInPandas -> window top-k; no vector shuffle anywhere"),
     ("semantic_dedup", "SemDeDup: one Arrow cell-assignment pass -> cell-keyed shuffle_hash self-join -> Arrow strict-order cosine verify; codebook in the UDF closure, never a join"),
@@ -33,8 +32,6 @@ SHOWCASE = [
     ("extra:winnow_near_dup", "winnowing: fingerprint selection as per-row array exprs (no exchange before the explode); df-capped fingerprint equi-join moves only 8-byte hashes"),
     ("extra:quality_classifier", "hashed linear classifier: ONE scan, transform+aggregate fold in the projection — zero Exchange operators in the whole plan"),
     ("training_shards", "two-pass distributed prefix sum: bucket-totals groupBy + bounded bucket-offset window, then a window PARTITIONED by bucket — no corpus-sized single-partition Window/Sort"),
-    ("extra:resample_locf", "per-entity spine explode + left join + last(ignorenulls) fill window — every window/join keyed on the entity, no global window"),
-    ("extra:rolling_anomaly", "trailing ROWS frame per entity with exact integer moments; the threshold DECISION is an all-integer inequality inside codegen (no sqrt; the only division in the plan is the emitted hist_mean)"),
     ("embedding_near_dup", "sparse-regime SRP-LSH self-join (driver row since round 6): bucket_cap guard as a BROADCAST semi-join on the bounded (table,bucket) keyspace, then the shuffle_hash bucket join — corpus never re-shuffled for the guard"),
     ("bucketed_join", "storage-partitioned join: both scans Bucketed: true, SortMergeJoin AND the downstream per-key HashAggregate with ZERO Exchange operators — the write-time shuffle amortized over every later query"),
     ("image_near_dup", "perceptual image dedup: one shuffle-free Arrow decode+aHash pass; only 24-byte hash rows enter the 4x16-bit pigeonhole banding join"),
@@ -49,7 +46,6 @@ SHOWCASE = [
     ("main_content_extract", "DOM-grade main-content extraction (driver row since round 11): ONE mapInPandas Arrow stage directly over the scan projection — no Exchange anywhere, no joins; block scoring is O(page bytes) per row and pipelines with the scan exactly like the media decoders"),
     ("extra:substring_dedup", "exact-substring dedup: rolling window hashes explode scan-side; the only corpus-sized exchanges carry (id, pos, 8-byte hash) — frequency groupBy with partial aggregation + hash-keyed join back; coverage/reassembly are array exprs in the final projection"),
     ("extra:zorder_layout", "z-order keys: 32 masked shifts as a pure codegen projection over the scan — zero Exchange in the whole plan"),
-    ("extra:sequence_pattern", "CEP pattern match: one user-keyed shuffle builds the type string; regexp_count/extract run in the post-agg projection, no self-joins"),
     ("extra:sql_q17ish", "correlated scalar-aggregate subquery DECORRELATED: one Aggregate over lineitem.l_partkey feeding a join — no per-row subquery node"),
     ("gopher_quality", "Gopher quality rules (driver row since round 9): every signal + the keep flag in ONE Project over the scan — zero Exchange, zero Python; the whole curation filter is scan-bound"),
     ("extra:hll_distinct", "HyperLogLog: register build is Catalyst partial_max alone (no Python), shuffle carries <= groups*2^p fixed-width register rows; estimate is a second bounded groupBy"),
