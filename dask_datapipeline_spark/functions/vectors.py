@@ -57,171 +57,3 @@ def l2_distance(a: Column | str, b: Column | str) -> Column:
     diffs = F.zip_with(as_double_array(a), as_double_array(b), lambda x, y: (x - y) * (x - y))
     return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
 
-
-# ----- int8 scalar quantization --------------------------------------
-
-#: symmetric int8 range: codes in [-127, 127] (−128 unused so the
-#: range is symmetric and |code| <= 127 always reconstructs in-range)
-INT8_LEVELS = 127
-
-
-def int8_quantize_cols(vec: Column | str) -> dict[str, Column]:
-    """Symmetric per-vector int8 scalar quantization of an
-    ``array<float>`` embedding — the 4×-storage-reduction layout every
-    large vector store runs before ANN indexing (codes ride in 1 byte/
-    dim; the float column is dropped or cold-tiered).
-
-        scale = max|x| / 127,  code_i = round(x_i / scale)
-
-    Returns ``scale`` (double), ``codes`` (array<tinyint>),
-    ``n_saturated`` (dims at |code| = 127 — the clip-risk signal) and
-    ``err_max`` (max |x_i − code_i·scale|, the reconstruction bound —
-    ≤ scale/2 by construction, emitted unrounded: pure IEEE arithmetic
-    from identical inputs is bit-identical cross-engine).
-
-    ALL-ZERO vectors quantize to scale=0 with all-zero codes via an
-    explicit guard: unguarded, 0/0 is NaN and an ANSI tinyint cast of
-    NaN throws at runtime (the same NaN-guard discipline as
-    ``cosine``). Determinism: float→double promotion is exact, the
-    per-element divide/round/multiply trees match the SQL builder
-    exactly, and round-half-to-away on an already-integral double is
-    engine-identical; the only array reductions are MIN/MAX-free
-    folds... none — ``array_max`` over doubles, order-independent.
-
-    Scale shape: pure per-row array expressions — zero shuffle, zero
-    Python, fused into the scan like the rest of this module.
-    """
-    x = as_double_array(vec)
-    amax = F.array_max(F.transform(x, lambda v: F.abs(v)))
-    scale = amax / F.lit(float(INT8_LEVELS))
-    codes = F.when(
-        amax > 0,
-        F.transform(x, lambda v: F.round(v / scale).cast("tinyint")),
-    ).otherwise(F.transform(x, lambda v: F.lit(0).cast("tinyint")))
-    recon_err = F.when(
-        amax > 0,
-        F.array_max(
-            F.zip_with(
-                x,
-                codes,
-                lambda v, c: F.abs(v - c.cast("double") * scale),
-            )
-        ),
-    ).otherwise(F.lit(0.0))
-    n_sat = F.size(
-        F.filter(codes, lambda c: F.abs(c.cast("int")) == F.lit(INT8_LEVELS))
-    )
-    return {
-        "scale": scale,
-        "codes": codes,
-        "n_saturated": n_sat.cast("long"),
-        "err_max": recon_err,
-    }
-
-
-def int8_sql_projections(expr: str) -> dict[str, str]:
-    """DuckDB replay of ``int8_quantize_cols`` over ``expr`` (a
-    ``DOUBLE[]`` expression — cast float embeddings first, mirroring
-    ``as_double_array``). Same trees, same guards; ``codes`` renders
-    via the same CASE."""
-    amax = f"list_max(list_transform({expr}, v -> abs(v)))"
-    scale = f"({amax} / {float(INT8_LEVELS)!r})"
-    codes = (
-        f"CASE WHEN {amax} > 0 THEN "
-        f"list_transform({expr}, v -> CAST(round(v / {scale}) AS TINYINT)) "
-        f"ELSE list_transform({expr}, v -> CAST(0 AS TINYINT)) END"
-    )
-    err = (
-        f"CASE WHEN {amax} > 0 THEN "
-        f"list_max(list_transform(list_zip({expr}, {codes}), "
-        f"p -> abs(p[1] - CAST(p[2] AS DOUBLE) * {scale}))) "
-        f"ELSE 0.0 END"
-    )
-    n_sat = (
-        f"CAST(len(list_filter({codes}, c -> abs(CAST(c AS INTEGER)) = "
-        f"{INT8_LEVELS})) AS BIGINT)"
-    )
-    return {"scale": scale, "codes": codes, "n_saturated": n_sat, "err_max": err}
-
-
-def int8_code_norm_sq(codes: Column) -> Column:
-    """Σ code² as an exact BIGINT (≤ dims·127² — 64-dim worst case
-    ~1.03M, nowhere near overflow)."""
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: acc + c.cast("long") * c.cast("long"),
-    )
-
-
-def int8_cosine_topk(
-    df, vec_col: str, id_col: str, query_codes: list[int], k: int = 10
-):
-    """Exact top-k by COSINE OVER THE INT8 CODES: quantize each row
-    (``int8_quantize_cols``), score against pre-quantized query codes.
-
-    The per-vector scales CANCEL in cosine, so the score is built from
-    integers alone — ``dot_int / sqrt(na·nq)`` with exact BIGINT dot
-    and norms — and the only floating ops are one exact int→double
-    conversion pair, one multiply, one correctly-rounded sqrt and one
-    division: bit-identical cross-engine with NO rounding discipline
-    needed (the transcendental-free analog of the float cosine path).
-
-    This is the quantized-SCAN baseline: the codes column is 1 byte/
-    dim (4× less I/O than float32), scoring is pure codegen, and the
-    plan is scan → TakeOrderedAndProject — compose with the LSH/IVF
-    candidate generators exactly like the float scorer for the
-    sub-linear path. Zero-norm rows score NULL (sorts last DESC, the
-    ``cosine`` guard discipline)."""
-    sig = int8_quantize_cols(F.col(vec_col))
-    staged = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), sig["codes"].alias("__codes")
-    )
-    return int8_cosine_topk_from_codes(staged, "__codes", id_col, query_codes, k)
-
-
-def int8_cosine_topk_from_codes(
-    codes_df, codes_col: str, id_col: str, query_codes: list[int], k: int = 10
-):
-    """The same int8-cosine top-k over a MATERIALIZED codes table
-    (id + array<tinyint>) — the production read path: quantize once
-    with ``int8_quantize_cols``, persist only the 1-byte/dim codes
-    (scales are not needed for cosine — they cancel), and every query
-    scans a table 4× narrower than the float32 column. Identical
-    scores to the on-the-fly variant by construction (pytest-pinned)."""
-    codes = F.col(codes_col)
-    nq = sum(c * c for c in query_codes)
-    qlit = F.array(*[F.lit(int(c)) for c in query_codes])
-    dot = F.aggregate(
-        F.zip_with(codes, qlit, lambda a, b: a.cast("long") * b.cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    na = int8_code_norm_sq(codes)
-    den_sq = na * F.lit(int(nq)).cast("long")
-    cos_q = F.when(
-        den_sq > 0, dot.cast("double") / F.sqrt(den_sq.cast("double"))
-    )
-    return (
-        codes_df.select(F.col(id_col), cos_q.alias("cos_q"))
-        .orderBy(F.desc_nulls_last("cos_q"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def int8_quantize_py(vec: list[float]) -> list[int]:
-    """Driver-side twin of the engines' quantization (used to prepare
-    a query literal): same max|x|/127 double scale, same round-half-
-    AWAY (Python's round() is half-to-even and would disagree on exact
-    halves)."""
-    import math
-
-    amax = max((abs(float(v)) for v in vec), default=0.0)
-    if amax == 0:
-        return [0] * len(vec)
-    scale = amax / float(INT8_LEVELS)
-
-    def away(x: float) -> int:
-        return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
-
-    return [away(float(v) / scale) for v in vec]

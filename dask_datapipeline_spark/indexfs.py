@@ -1,6 +1,6 @@
 """Filesystem shim for incremental-index MAINTENANCE (delta listing,
-adoption, compaction, crash recovery) across the three materialized
-indexes (BM25 postings, MinHash increments, IVF vectors).
+adoption, compaction, crash recovery) across the two materialized
+indexes (BM25 postings, MinHash increments).
 
 Why this exists (round-12; VERDICT r11 item 1): the maintenance half
 of the base+delta triad used os/shutil directly, so while the
@@ -14,9 +14,8 @@ through either:
   path tests and single-node runs use; byte-for-byte the behavior the
   maintenance code always had; or
 - ``_HadoopFS`` — the JVM ``org.apache.hadoop.fs.FileSystem`` API via
-  py4j (the ``ivf_index._write_meta`` precedent, generalized), for
-  ANY URI with a scheme (``file:``, ``hdfs:``, ``s3a:``, ...). A
-  ``file:`` URI deliberately takes THIS path, so the whole Hadoop
+  py4j, for ANY URI with a scheme (``file:``, ``hdfs:``, ``s3a:``,
+  ...). A ``file:`` URI deliberately takes THIS path, so the whole Hadoop
   branch is exercised by the local test suite against
   ``LocalFileSystem`` — the same class hierarchy HDFS clients use.
 

@@ -2,7 +2,7 @@
 (round 13; VERDICT r12 item 3).
 
 Every maintenance entry point in the base+delta family (BM25 / MinHash
-/ IVF appends and compactions, the generic stage-delta log, the
+appends and compactions, the generic stage-delta log, the
 snapshot-swap sketch sinks) documents a SINGLE-WRITER contract: the
 two-phase commit protocols protect against CRASHES, not concurrency.
 Before this module nothing enforced the contract — two streaming jobs

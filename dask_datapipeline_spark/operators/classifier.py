@@ -167,8 +167,7 @@ def train_hashed_linear(
     ``weights=`` path: an AVERAGED PERCEPTRON over mean-pooled hashed
     bag-of-words features, quantized to ints in [-scale, scale].
 
-    Determinism contract (mirrors the ANN codebook trainer,
-    similarity.py::_kmeans_lloyd): the training sample is the
+    Determinism contract: the training sample is the
     ``max_sample`` docs whose md5-of-id sorts lowest — a
     TakeOrderedAndProject, identical on any cluster shape or
     partitioning — walked in that fixed order with zero-initialized

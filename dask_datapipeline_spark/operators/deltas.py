@@ -6,7 +6,7 @@ sink following the overwrite-by-batch-id discipline) accumulates one
 ``delta=<batch_id>`` parquet directory per micro-batch under a single
 root. On a long-running stream that is unbounded file count — the
 same per-scan open/footer cost and driver listing memory the index
-compactions (BM25/MinHash/IVF) exist to bound. This module is the
+compactions (BM25/MinHash) exist to bound. This module is the
 SIMPLE-LAYOUT member of that family: one delta root, uniform-schema
 parquet, no partition subdirectories — the bm25 two-phase protocol
 with the postings/stats pairing stripped away.

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (SURVEY.md §2.2).
 
-Three tiers, same semantics:
+Two tiers, same semantics:
 
 - ``cosine_topk`` — brute-force exact top-k for ONE query vector: the
   query is a broadcast literal, each partition computes similarities
@@ -15,14 +15,10 @@ Three tiers, same semantics:
   bucket keys — shuffle-partitioned by bucket, which is how this
   survives a 1000-executor scale-up. Recall is tuned by ``num_tables``
   independent hash tables (union of candidates, dedup).
-- ``ivf_topk`` — inverted-file index: a small coarse-quantizer
-  codebook partitions the corpus into cells (one shuffle keyed on
-  cell id); each query probes its ``n_probe`` nearest cells and
-  re-ranks exactly within them. The codebook is tiny and broadcast;
-  the corpus shuffle is the build step you'd persist at scale.
 
-Hyperplanes are generated from a seeded NumPy RNG on the driver and
-shipped as literals — deterministic across runs and engines.
+Hyperplanes are ±1 vectors derived from md5 on the driver
+(``rademacher_planes``) and shipped in the UDF closure — deterministic
+across runs and engines, and replayed literally by the SQL oracles.
 
 Reference repo has no similarity surface; cf. PAPERS.md (REPOSE,
 Odyssey) for the distributed design space.
@@ -41,10 +37,6 @@ from pyspark.sql import types as T
 from dask_datapipeline_spark.errors import require_columns
 from dask_datapipeline_spark.functions.vectors import cosine
 from dask_datapipeline_spark.parallel import fan_out
-
-
-#: Default deterministic seed for codebook training (k-means paths).
-TRAIN_SEED = 1117
 
 
 def _vec_lit(vec) -> Column:
@@ -103,8 +95,8 @@ def cosine_topk(
 def rademacher_planes(num_tables: int, bits: int, dim: int) -> np.ndarray:
     """±1 hyperplanes (sign-random-projection LSH, a standard SRP
     variant) derived bit-by-bit from md5 — deterministic and exactly
-    reproducible as literal arrays in the SQL oracle, unlike seeded
-    Gaussian planes."""
+    reproducible as literal arrays in the SQL oracle. The only plane
+    generator: every LSH path below hashes with these."""
     import hashlib
 
     out = np.empty((num_tables, bits, dim))
@@ -192,26 +184,12 @@ def _lsh_candidate_pairs(
     dim: int,
     bits_per_table: int,
     num_tables: int,
-    seed: int,
-    plane_kind: str = "gaussian",
     lt_only: bool = False,
     bucket_cap: int | None = None,
-    multiprobe_bits: int = 0,
 ) -> DataFrame:
     """Scored candidate pairs (query_id, neighbor_id, cosine_sim) from a
-    bucket equi-join on (table, bucket).
-
-    ``multiprobe_bits``: 1-bit multi-probe LSH (Lv et al. 2007's core
-    idea in its simplest exact-replayable form) — the QUERY side also
-    probes, per table, each bucket reachable by flipping one of the
-    first ``multiprobe_bits`` hyperplane bits (``bucket XOR (1<<b)``).
-    A near neighbor separated from the query by exactly one hyperplane
-    lands in precisely such an adjacent bucket, so probing buys back
-    the recall that would otherwise need more tables: probes cost
-    query-side rows (tiny — queries ≪ corpus), extra tables cost a
-    whole corpus-side index replica. The corpus side is NEVER
-    expanded, and the probe set is a deterministic function of the
-    bucket id, so the SQL oracle replays it with ``xor()``.
+    bucket equi-join on (table, bucket), hashed with the md5
+    ``rademacher_planes``.
 
     ``bucket_cap``: skew guard — (table, bucket) cells holding more
     than ``bucket_cap`` corpus rows are EXCLUDED from the join. A hot
@@ -230,10 +208,6 @@ def _lsh_candidate_pairs(
     mirrored orderings are more than half the collisions, and
     filtering them after the cosine UDF would pay for them all.
 
-    ``plane_kind='gaussian'`` draws seeded Gaussian hyperplanes (the
-    textbook SRP choice); ``'rademacher'`` uses md5-derived ±1 planes —
-    statistically similar, and exactly reproducible in the SQL oracle.
-
     Shuffle budget (pair-first, round 15 — guide §8): ONE join keyed
     on (table, bucket) over (id, t, bucket) proxy rows — the
     posexplode replaces ``num_tables`` separate join+union branches
@@ -243,21 +217,10 @@ def _lsh_candidate_pairs(
     (before: ``2 × num_tables`` vector replicas per corpus row crossed
     the bucket exchange), and the cosine UDF scores each unique pair
     once instead of once per collision."""
-    if plane_kind == "gaussian":
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((num_tables, bits_per_table, dim))
-    elif plane_kind == "rademacher":
-        planes = rademacher_planes(num_tables, bits_per_table, dim)
-    else:
-        raise ValueError(f"plane_kind={plane_kind!r} not in ('gaussian','rademacher')")
-    bud = _bucket_udf(planes)
+    bud = _bucket_udf(rademacher_planes(num_tables, bits_per_table, dim))
 
-    if multiprobe_bits < 0 or multiprobe_bits > bits_per_table:
-        raise ValueError(
-            f"multiprobe_bits={multiprobe_bits} must be in [0, {bits_per_table}]"
-        )
     # PAIR-FIRST (round 15, guide §8): every decision up to scoring —
-    # banding, multiprobe, the cap, the lt filter, pair dedup —
+    # banding, the cap, the lt filter, pair dedup —
     # depends only on (id, table, bucket), ~20 bytes/row; the
     # embedding payload is needed ONLY by the final cosine. So the
     # bucket self-join moves id proxies, and vectors attach ONCE per
@@ -298,20 +261,6 @@ def _lsh_candidate_pairs(
             F.col(id_col).alias("neighbor_id"),
             F.posexplode(bud(F.col(vec_col))).alias("__t", "__bucket"),
         )
-    if multiprobe_bits:
-        # expand AFTER the corpus side is derived (self-join path
-        # shares q_ids' projection) and BEFORE the cap semi-join, so a
-        # probe aimed at a capped-out cell is trimmed like any other
-        probes = F.array(
-            F.col("__bucket"),
-            *[
-                F.col("__bucket").bitwiseXOR(F.lit(1 << b))
-                for b in range(multiprobe_bits)
-            ],
-        )
-        q_ids = q_ids.select(
-            "query_id", "__t", F.explode(probes).alias("__bucket")
-        )
     if bucket_cap is not None:
         # allowed-buckets list is bounded by the bucket-id space
         # (num_tables × 2^bits rows), so it broadcasts; the groupBy
@@ -336,7 +285,7 @@ def _lsh_candidate_pairs(
     joined = q_ids.join(c_ids.hint("shuffle_hash"), on=["__t", "__bucket"])
     if lt_only:
         joined = joined.filter(F.col("query_id") < F.col("neighbor_id"))
-    # duplicate collisions (same pair in several tables/probes) carry
+    # duplicate collisions (same pair in several tables) carry
     # no information — dedup the id pairs BEFORE the vectors attach,
     # so neither the attach joins nor the cosine UDF pay for them.
     # The EXPLICIT pair-keyed repartition ahead of the dedup does two
@@ -392,9 +341,6 @@ def knn_join_lsh(
     dim: int = 64,
     bits_per_table: int = 8,
     num_tables: int = 4,
-    seed: int = 42,
-    plane_kind: str = "gaussian",
-    multiprobe_bits: int = 0,
 ) -> DataFrame:
     """Approximate k-NN join: for each query row, top-k corpus rows.
 
@@ -402,13 +348,9 @@ def knn_join_lsh(
     union over ``num_tables`` hash tables of same-bucket pairs; exact
     cosine ranks them. Bucket equi-joins shuffle on (table, bucket) —
     bounded fan-out, no cross join — which is how this survives a
-    1000-executor scale-up. Recall tuned by ``num_tables`` and, much
-    more cheaply, by ``multiprobe_bits`` (1-bit multi-probe: extra
-    QUERY-side probes of adjacent buckets instead of extra corpus-side
-    index replicas — see ``_lsh_candidate_pairs``)."""
+    1000-executor scale-up. Recall tuned by ``num_tables``."""
     cand = _lsh_candidate_pairs(
-        queries, corpus, id_col, vec_col, dim, bits_per_table, num_tables, seed,
-        plane_kind, multiprobe_bits=multiprobe_bits,
+        queries, corpus, id_col, vec_col, dim, bits_per_table, num_tables
     )
     from pyspark.sql.window import Window
 
@@ -441,33 +383,13 @@ _cosine_batch_seq_nd = _cosine_batch_seq.asNondeterministic()
 
 
 def _coarse_codebook(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_cells: int,
-    trained: bool,
-    train_sample: int,
-    train_iter: int,
-    train_seed: int,
+    corpus: DataFrame, id_col: str, vec_col: str, n_cells: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(cell ids, centroid matrix) for the IVF-family coarse quantizer.
-
-    Default: the ``n_cells`` LOWEST-id corpus vectors (not
+    """(cell ids, centroid matrix) for ``semantic_dedup``'s coarse
+    quantizer: the ``n_cells`` LOWEST-id corpus vectors (not
     ``id < n_cells``, which silently assumes dense 0-based ids and
     collects nothing for corpora whose ids start elsewhere) — a
-    deterministic codebook the DuckDB oracle replays exactly.
-    ``trained=True``: seeded spherical k-means on a bounded
-    deterministic sample (better-balanced cells; see
-    tests/test_recall.py)."""
-    if trained:
-        c_mat = _kmeans_lloyd(
-            _train_sample(corpus, id_col, vec_col, train_sample, train_seed),
-            n_cells,
-            train_iter,
-            train_seed,
-            spherical=True,
-        )
-        return np.arange(n_cells, dtype=np.int64), c_mat
+    deterministic codebook the DuckDB oracle replays exactly."""
     cent = (
         corpus.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(n_cells).collect()
     )
@@ -500,10 +422,6 @@ def semantic_dedup(
     n_cells: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trained: bool = False,
-    train_sample: int = 4096,
-    train_iter: int = 10,
-    train_seed: int = TRAIN_SEED,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: cluster, then prune
     inside clusters only (cf. Abbas et al. 2023, "SemDeDup").
@@ -518,10 +436,8 @@ def semantic_dedup(
     Why this scales where all-pairs cannot: clustering bounds the
     pairwise verify to Σ|cell|² instead of N². At 100 TB ``n_cells``
     grows with the corpus (SemDeDup uses ~100k clusters for LAION-
-    scale data) so cells stay bounded; ``trained=True`` fits a real
-    spherical-k-means codebook whose balanced cells keep the bound
-    tight (balance measured in tests/test_recall.py). The default
-    lowest-id codebook keeps the DuckDB oracle exactly replayable.
+    scale data) so cells stay bounded. The lowest-id codebook keeps
+    the DuckDB oracle exactly replayable.
 
     Physical shape: the codebook rides in the UDF closure (KiB, never
     a join); assignment is one vectorized Arrow pass over the scan;
@@ -534,9 +450,7 @@ def semantic_dedup(
     compared — the documented SemDeDup recall trade.
     """
     require_columns(df, [id_col, vec_col])
-    c_ids, c_mat = _coarse_codebook(
-        df, id_col, vec_col, n_cells, trained, train_sample, train_iter, train_seed
-    )
+    c_ids, c_mat = _coarse_codebook(df, id_col, vec_col, n_cells)
     cell_of = _cell_of_udf(c_ids, c_mat)
     from pyspark.storagelevel import StorageLevel
 
@@ -577,90 +491,6 @@ def semantic_dedup(
     )
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    trained: bool = False,
-    train_sample: int = 4096,
-    train_iter: int = 10,
-    train_seed: int = TRAIN_SEED,
-) -> DataFrame:
-    """IVF (inverted-file) approximate k-NN join by cosine.
-
-    Coarse quantizer: by default the first ``n_cells`` corpus vectors
-    by id — a deterministic codebook so the DuckDB oracle can replay
-    the exact assignment. ``trained=True`` swaps in seeded spherical
-    k-means centroids fit on a bounded deterministic sample
-    (``_train_sample`` / ``_kmeans_lloyd``) — better-balanced cells
-    and higher recall per probe (measured in tests/test_recall.py and
-    docs/SCALE.md §Similarity); the cell-assign → probe → in-cell
-    exact re-rank dataflow is identical either way.
-
-    Physical shape, and why it scales: the codebook is a few KiB in
-    the UDF closures (never a join); corpus cell assignment is one
-    vectorized pandas-UDF pass over the scan; the only wide shuffle is
-    the candidate equi-join keyed on cell id — each query probes
-    ``n_probe`` cells, so the work per query is bounded by cell size,
-    not corpus size. At 100 TB the assigned corpus would be written
-    out partitioned by cell (the 'index build'); the probe join then
-    prunes to the probed cells' partitions.
-
-    Ties everywhere break toward the lower id, matching the oracle's
-    ``ORDER BY sim DESC, id ASC`` row_number. Output:
-    (query_id, neighbor_id, cosine_sim, rn).
-    """
-    require_columns(corpus, [id_col, vec_col])
-    require_columns(queries, [id_col, vec_col])
-    c_ids, c_mat = _coarse_codebook(
-        corpus, id_col, vec_col, n_cells, trained, train_sample, train_iter, train_seed
-    )
-    c_norms = np.sqrt(_seq_sq_norm(c_mat))
-
-    def _sims_to_centroids(vecs: pd.Series) -> np.ndarray:
-        v = _stack(vecs)
-        return _seq_dot(v, c_mat) / (np.sqrt(_seq_sq_norm(v))[:, None] * c_norms[None, :])
-
-    @F.pandas_udf(T.LongType())
-    def cell_of(vecs: pd.Series) -> pd.Series:
-        # argmax returns the FIRST maximum; c_ids is ascending, so
-        # ties resolve to the lowest centroid id.
-        return pd.Series(c_ids[np.argmax(_sims_to_centroids(vecs), axis=1)])
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def probes_of(vecs: pd.Series) -> pd.Series:
-        # stable argsort on -sim + ascending c_ids → ties by id asc.
-        idx = np.argsort(-_sims_to_centroids(vecs), axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(c_ids[idx]))
-
-    assigned = fan_out(corpus.select(id_col, vec_col)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        cell_of(F.col(vec_col)).alias("__cell"),
-    )
-    probed = fan_out(queries.select(id_col, vec_col)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.explode(probes_of(F.col(vec_col))).alias("__cell"),
-    )
-    # shuffle_hash for the same reason as the LSH bucket join: the
-    # corpus side is never broadcastable at scale, and broadcasting an
-    # ArrowEvalPython stage is slow even when it fits.
-    scored = probed.join(assigned.hint("shuffle_hash"), on="__cell").select(
-        "query_id",
-        "neighbor_id",
-        _cosine_batch_seq(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-
-
 def lsh_bucket_occupancy(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -668,8 +498,6 @@ def lsh_bucket_occupancy(
     dim: int = 64,
     bits_per_table: int = 8,
     num_tables: int = 4,
-    seed: int = 42,
-    plane_kind: str = "gaussian",
 ) -> DataFrame:
     """Per-(table, bucket) occupancy of the SRP-LSH hash tables —
     the tuning metric behind ``embedding_near_dup_pairs``.
@@ -683,15 +511,8 @@ def lsh_bucket_occupancy(
     where LSH buys nothing (docs/SCALE.md has the measured curve).
     Bounded output (≤ num_tables × 2^bits rows); one bounded-key
     groupBy over the corpus."""
-    if plane_kind == "gaussian":
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((num_tables, bits_per_table, dim))
-    elif plane_kind == "rademacher":
-        planes = rademacher_planes(num_tables, bits_per_table, dim)
-    else:
-        raise ValueError(f"plane_kind={plane_kind!r} not in ('gaussian','rademacher')")
     require_columns(df, [id_col, vec_col])
-    bud = _bucket_udf(planes)
+    bud = _bucket_udf(rademacher_planes(num_tables, bits_per_table, dim))
     cells = fan_out(df.select(id_col, vec_col)).select(
         F.posexplode(bud(F.col(vec_col))).alias("t", "bucket")
     )
@@ -717,8 +538,6 @@ def embedding_near_dup_pairs(
     dim: int = 64,
     bits_per_table: int | None = None,
     num_tables: int = 4,
-    seed: int = 42,
-    plane_kind: str = "gaussian",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold (id_a < id_b).
@@ -727,8 +546,7 @@ def embedding_near_dup_pairs(
     probability at high thresholds), exact cosine verification. No
     window/rank pass — the threshold filter alone bounds the output.
     Explicit keyword parameters (no **kwargs): a silently-dropped
-    ``plane_kind`` or misspelled option would change results without
-    an error.
+    or misspelled option would change results without an error.
 
     ``bits_per_table=None`` (the default) SIZES THE GEOMETRY TO THE
     CORPUS: one ``df.count()`` sizing pass, then
@@ -749,8 +567,8 @@ def embedding_near_dup_pairs(
         if bucket_cap is None:
             bucket_cap = 8 * SRP_TARGET_OCCUPANCY
     cand = _lsh_candidate_pairs(
-        df, df, id_col, vec_col, dim, bits_per_table, num_tables, seed,
-        plane_kind, lt_only=True, bucket_cap=bucket_cap,
+        df, df, id_col, vec_col, dim, bits_per_table, num_tables,
+        lt_only=True, bucket_cap=bucket_cap,
     )
     return cand.filter(F.col("cosine_sim") >= threshold).select(
         F.col("query_id").alias("id_a"),
@@ -816,529 +634,6 @@ def cosine_all_pairs_exact(
             )
 
     return fan_out(df.select(id_col, vec_col)).mapInPandas(gen, out_schema)
-
-
-# ----- trained codebooks (k-means) -----------------------------------
-
-
-def _train_sample(
-    corpus: DataFrame, id_col: str, vec_col: str, max_sample: int, seed: int
-) -> np.ndarray:
-    """Deterministic bounded training sample: the ``max_sample`` rows
-    with the smallest md5-derived hash of their id — an unbiased
-    pseudo-random draw that is reproducible across runs, cluster
-    shapes, and partitionings. Physically a TakeOrderedAndProject
-    (per-partition heap of max_sample rows + driver merge), so the
-    driver materializes AT MOST ``max_sample × dim`` doubles no
-    matter the corpus size — the bounded-collect contract every
-    index-build step in this module follows."""
-    from dask_datapipeline_spark.operators.dedup import seeded_hash64
-
-    rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(
-            seeded_hash64(F.col(id_col).cast("string"), seed).asc(),
-            F.col(id_col).asc(),
-        )
-        .limit(max_sample)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("codebook training: corpus is empty")
-    return np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-
-
-def _kmeans_lloyd(
-    x: np.ndarray,
-    k: int,
-    n_iter: int = 10,
-    seed: int = TRAIN_SEED,
-    spherical: bool = False,
-) -> np.ndarray:
-    """Seeded Lloyd's with k-means++ init (Arthur & Vassilvitskii
-    2007) over an in-memory sample. ``spherical=True`` renormalizes
-    centroids each round — the right variant when ASSIGNMENT is by
-    cosine (IVF cells); plain L2 otherwise (PQ sub-codebooks).
-
-    BLAS matmuls are fine HERE (unlike the strict-order operator
-    math): training only produces the codebook VALUES; the operators
-    then use those values with the bit-replayable expression trees,
-    so no SQL oracle ever re-derives this arithmetic. Empty clusters
-    are re-seeded deterministically with the point farthest from its
-    centroid."""
-    n = len(x)
-    if n < k:
-        raise ValueError(f"k-means: sample of {n} rows < k={k} centroids")
-    rng = np.random.default_rng(seed)
-    cents = np.empty((k, x.shape[1]))
-    cents[0] = x[int(rng.integers(n))]
-    d2 = ((x - cents[0]) ** 2).sum(axis=1)
-    for i in range(1, k):
-        tot = d2.sum()
-        probs = d2 / tot if tot > 0 else np.full(n, 1.0 / n)
-        cents[i] = x[int(rng.choice(n, p=probs))]
-        d2 = np.minimum(d2, ((x - cents[i]) ** 2).sum(axis=1))
-    for _ in range(n_iter):
-        dots = x @ cents.T
-        if spherical:
-            denom = (
-                np.linalg.norm(x, axis=1, keepdims=True)
-                * np.linalg.norm(cents, axis=1)[None, :]
-            )
-            denom[denom == 0] = 1.0
-            assign = np.argmax(dots / denom, axis=1)
-        else:
-            d = (x**2).sum(1)[:, None] - 2 * dots + (cents**2).sum(1)[None, :]
-            assign = np.argmin(d, axis=1)
-        for c in range(k):
-            m = assign == c
-            if m.any():
-                cents[c] = x[m].mean(axis=0)
-            else:
-                far = int(np.argmax(((x - cents[assign]) ** 2).sum(axis=1)))
-                cents[c] = x[far]
-                assign[far] = c
-        if spherical:
-            nz = np.linalg.norm(cents, axis=1)
-            nz[nz == 0] = 1.0
-            cents = cents / nz[:, None]
-    return cents
-
-
-def _train_pq_book(
-    x: np.ndarray, n_codes: int, n_subspaces: int, n_iter: int, seed: int
-) -> np.ndarray:
-    """Per-subspace L2 k-means (the PQ training of Jégou et al. 2011):
-    subspace j's codewords are trained ONLY on the j-th sub-vectors.
-    Returned as an (n_codes, dim) matrix so the encode/ADC slicing is
-    identical to the lowest-id codebook path."""
-    dim = x.shape[1]
-    sub_d = dim // n_subspaces
-    book = np.empty((n_codes, dim))
-    for j in range(n_subspaces):
-        book[:, j * sub_d : (j + 1) * sub_d] = _kmeans_lloyd(
-            x[:, j * sub_d : (j + 1) * sub_d], n_codes, n_iter, seed + j
-        )
-    return book
-
-
-# ----- product quantization (PQ) + ADC scan --------------------------
-
-
-def _pq_codebook(corpus: DataFrame, id_col: str, vec_col: str, n_codes: int) -> np.ndarray:
-    """Deterministic PQ codebook: the sub-vectors of the ``n_codes``
-    lowest-id corpus vectors (same bounded-collect contract as the IVF
-    codebook — production trains k-means per subspace; the encode →
-    ADC dataflow is identical and is what this operator exercises).
-    Shape (n_codes, dim)."""
-    cent = (
-        corpus.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(n_codes).collect()
-    )
-    if not cent:
-        raise ValueError("pq: corpus is empty — cannot build a codebook")
-    return np.stack([np.asarray(r[1], dtype=np.float64) for r in cent])
-
-
-def _sub_sqdist(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Squared L2 via the dot identity ``(aa - (2*ab)) + bb`` with
-    every dot accumulated in strict element order — the EXACT
-    expression tree the SQL oracle evaluates (list_dot_product folds),
-    so distances are bit-identical across engines.
-
-    a: (n, d'), b: (m, d') → (n, m)."""
-    aa = _seq_sq_norm(a)
-    bb = _seq_sq_norm(b)
-    ab = _seq_dot(a, b)
-    return (aa[:, None] - (2.0 * ab)) + bb[None, :]
-
-
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    trained: bool = False,
-    train_sample: int = 4096,
-    train_iter: int = 10,
-    train_seed: int = TRAIN_SEED,
-) -> DataFrame:
-    """Product-quantization k-NN (Jégou et al. 2011) with an ADC scan
-    — the billion-scale ANN workhorse: the corpus is stored as
-    ``n_subspaces`` 1-byte codes per vector (64 dims → 8 bytes, an
-    8×-32× memory/IO reduction), and each query scans CODES, not
-    vectors, summing precomputed sub-distances.
-
-    Physical shape, and why it scales:
-
-    - encode: one Arrow-batched pass over the corpus scan → codes
-      (argmin sub-distance per subspace; ties → lowest code id);
-      at 100 TB the codes are written once as the 'index' and
-      re-scanned forever — 8 bytes/vector instead of 256;
-    - query: the per-query distance TABLES
-      (n_queries × n_subspaces × n_codes doubles — KiB each) are built
-      EXECUTOR-side (mapInPandas over the queries scan with the
-      codebook in the closure — the queries DataFrame is never
-      collected to the driver, so a corpus-sized query side cannot
-      OOM it) and reach the codes scan through a broadcast hash join
-      on a constant key — the DataFrame spelling of "every scan task
-      sees every query table", which is what an ADC scan is;
-    - ADC: a JVM-side ``F.aggregate`` fold over the subspaces inside
-      whole-stage codegen — table lookups are ``element_at`` on the
-      broadcast row, zero Python in the scan;
-    - rank: one window top-k per query over (adc_dist asc, id asc).
-
-    The broadcast is n_queries × n_subspaces × n_codes doubles.
-    PQ/ADC semantically evaluates every (query, code-row) pair, so
-    the QUERY side must be a bounded batch (the FAISS serving
-    contract); the corpus side streams at any scale. For
-    corpus × corpus k-NN use ``ivfpq_topk`` (cell routing bounds the
-    pairing) or ``knn_join_lsh``.
-
-    Determinism: codebook = lowest-id sub-vectors; squared L2 via the
-    ``(aa - (2*ab)) + bb`` identity with strict-order dots; the ADC
-    sum is a LEFT-ASSOCIATIVE fold over subspaces in order (the
-    initial ``0.0 +`` is exact — IEEE ``0.0 + x == x``) —
-    bit-identical to the oracle's explicit ``m0 + m1 + ... + m7``.
-    Output: (query_id, neighbor_id, adc_dist, rn)."""
-    require_columns(corpus, [id_col, vec_col])
-    require_columns(queries, [id_col, vec_col])
-    if dim % n_subspaces != 0:
-        raise ValueError(f"dim={dim} not divisible by n_subspaces={n_subspaces}")
-    sub_d = dim // n_subspaces
-    if trained:
-        # per-subspace k-means codewords (Jégou et al. 2011) — lower
-        # quantization error → higher recall per byte than the
-        # lowest-id default (measured in tests/test_recall.py)
-        book = _train_pq_book(
-            _train_sample(corpus, id_col, vec_col, train_sample, train_seed),
-            n_codes,
-            n_subspaces,
-            train_iter,
-            train_seed,
-        )
-    else:
-        book = _pq_codebook(corpus, id_col, vec_col, n_codes)  # (n_codes, dim)
-
-    corpus_codes = _pq_encode(corpus, book, id_col, vec_col, n_subspaces, sub_d)
-    qtab = _pq_query_tables(queries, book, id_col, vec_col, n_subspaces, sub_d)
-
-    # broadcast hash join on a DATA-DERIVED constant key (id * 0, not
-    # a literal: Catalyst folds literal keys and degrades the join to
-    # BroadcastNestedLoopJoin): the query-table side is KiB-scale by
-    # contract, the codes side streams map-side — at 100 TB each scan
-    # task reads its codes partition once against the in-memory
-    # tables. Every (query, code-row) pair is evaluated by design —
-    # that is what an ADC full scan is; the pairing is bounded by the
-    # query-batch contract, not by the join operator.
-    joined = corpus_codes.withColumn(
-        "__one", F.col(id_col) * F.lit(0)
-    ).join(
-        F.broadcast(qtab.withColumn("__one", F.col("query_id") * F.lit(0))),
-        on="__one",
-    )
-    scored = joined.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        _adc_fold(n_subspaces, n_codes).alias("adc_dist"),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-
-
-def _pq_encode(
-    corpus: DataFrame,
-    book: np.ndarray,
-    id_col: str,
-    vec_col: str,
-    n_subspaces: int,
-    sub_d: int,
-) -> DataFrame:
-    """One Arrow-batched pass over the corpus scan → (id, codes):
-    argmin sub-distance per subspace. argmin returns the FIRST
-    minimum and codebook ids ascend, so ties resolve to the lowest
-    code id, matching the oracle's ORDER BY d, cid."""
-
-    def _codes_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            mat = _stack(pdf[vec_col])
-            codes = np.empty((len(mat), n_subspaces), dtype=np.int32)
-            for j in range(n_subspaces):
-                sub = mat[:, j * sub_d : (j + 1) * sub_d]
-                cents = book[:, j * sub_d : (j + 1) * sub_d]
-                codes[:, j] = np.argmin(_sub_sqdist(sub, cents), axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
-
-    codes_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-    return fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        _codes_batch, codes_schema
-    )
-
-
-def _pq_query_tables(
-    queries: DataFrame,
-    book: np.ndarray,
-    id_col: str,
-    vec_col: str,
-    n_subspaces: int,
-    sub_d: int,
-) -> DataFrame:
-    """Executor-side per-query ADC distance tables:
-    (query_id, __tab: array<double> of n_subspaces × n_codes,
-    flattened row-major). Same ``_sub_sqdist`` arithmetic as the
-    driver-side build it replaces — ``_sub_sqdist`` is row-wise, so
-    batch boundaries cannot change a single bit."""
-    n_codes = book.shape[0]
-
-    def _tables_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            q_mat = _stack(pdf[vec_col])
-            t = np.empty((len(q_mat), n_subspaces, n_codes))
-            for j in range(n_subspaces):
-                t[:, j, :] = _sub_sqdist(
-                    q_mat[:, j * sub_d : (j + 1) * sub_d],
-                    book[:, j * sub_d : (j + 1) * sub_d],
-                )
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "__tab": list(t.reshape(len(q_mat), n_subspaces * n_codes)),
-                }
-            )
-
-    tab_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("__tab", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    return fan_out(queries.select(id_col, vec_col)).mapInPandas(
-        _tables_batch, tab_schema
-    )
-
-
-def _adc_fold(n_subspaces: int, n_codes: int) -> Column:
-    """JVM-side ADC sum: left fold over subspaces j = 0..n-1 of
-    ``__tab[j*n_codes + codes[j]]`` — a left-associative double
-    chain in subspace order, bit-identical to the oracle's explicit
-    ``m0 + m1 + ...`` (and to the numpy loop it replaces). Runs in
-    whole-stage codegen: the ADC scan has zero Python."""
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(n_subspaces - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(
-            F.col("__tab"),
-            (j * n_codes + F.element_at(F.col("codes"), (j + 1).cast("int")) + 1).cast(
-                "int"
-            ),
-        ),
-    )
-
-
-def ivfpq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    residual: bool = False,
-    trained: bool = False,
-    train_sample: int = 4096,
-    train_iter: int = 10,
-    train_seed: int = TRAIN_SEED,
-) -> DataFrame:
-    """IVF-PQ: coarse cells prune the scan, PQ codes shrink what's
-    scanned — the composition behind billion-scale ANN serving
-    (FAISS IVFPQ).
-
-    ``residual=True`` is the full FAISS design: PQ encodes
-    x − centroid(cell), which concentrates the quantized distribution
-    around 0 (better recall per byte); the residual codebook is the
-    residuals of the NEXT ``n_codes`` lowest-id corpus vectors after
-    the cell codebook (the cell vectors' own residuals are zero —
-    degenerate). ``residual=False`` quantizes raw vectors and can
-    share one codebook for cells and codes. Either way, elementwise
-    subtraction is a single IEEE op per component — the oracle
-    replays residuals with ``list_zip``/``list_transform`` exactly.
-
-    Index build (one corpus pass): cell id by max-cosine to the IVF
-    codebook + ``n_subspaces`` PQ codes — written out partitioned by
-    cell at scale, so a query's probe prunes to n_probe partitions of
-    8-byte codes. Query: probe the ``n_probe`` nearest cells, ADC-scan
-    ONLY those cells' codes (bucket equi-join on cell id — bounded,
-    no cartesian shape), rank by (adc_dist asc, id asc). In residual
-    mode the query's distance tables are per (query, probed cell) —
-    still KiB-scale broadcast.
-
-    Determinism: codebooks are lowest-id collects; cell argmax and
-    code argmin tie toward the lower id; distances use the
-    strict-order dot identity and the left-associative ADC chain —
-    the oracle composes the proven IVF and PQ SQL replays."""
-    require_columns(corpus, [id_col, vec_col])
-    require_columns(queries, [id_col, vec_col])
-    if dim % n_subspaces != 0:
-        raise ValueError(f"dim={dim} not divisible by n_subspaces={n_subspaces}")
-    sub_d = dim // n_subspaces
-    if trained:
-        x = _train_sample(corpus, id_col, vec_col, train_sample, train_seed)
-        cells_mat = _kmeans_lloyd(
-            x, n_cells, train_iter, train_seed, spherical=True
-        )
-    else:
-        n_book = n_cells + n_codes if residual else max(n_cells, n_codes)
-        book = _pq_codebook(corpus, id_col, vec_col, n_book)
-        cells_mat = book[:n_cells]
-    cell_norms = np.sqrt(_seq_sq_norm(cells_mat))
-
-    def _cell_sims(mat: np.ndarray) -> np.ndarray:
-        return _seq_dot(mat, cells_mat) / (
-            np.sqrt(_seq_sq_norm(mat))[:, None] * cell_norms[None, :]
-        )
-
-    if trained:
-        if residual:
-            # PQ trains on the sample's residuals w.r.t. its own cell
-            # — the quantized distribution the codes will actually see
-            # (full FAISS IVFPQ training)
-            pq_book = _train_pq_book(
-                x - cells_mat[np.argmax(_cell_sims(x), axis=1)],
-                n_codes,
-                n_subspaces,
-                train_iter,
-                train_seed,
-            )
-        else:
-            pq_book = _train_pq_book(
-                x, n_codes, n_subspaces, train_iter, train_seed
-            )
-    elif residual:
-        raw = book[n_cells:]
-        raw_cells = np.argmax(_cell_sims(raw), axis=1)
-        pq_book = raw - cells_mat[raw_cells]
-    else:
-        pq_book = book[:n_codes]
-
-    def _index_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            mat = _stack(pdf[vec_col])
-            cell = np.argmax(_cell_sims(mat), axis=1).astype(np.int64)
-            enc = mat - cells_mat[cell] if residual else mat
-            codes = np.empty((len(mat), n_subspaces), dtype=np.int32)
-            for j in range(n_subspaces):
-                d = _sub_sqdist(
-                    enc[:, j * sub_d : (j + 1) * sub_d],
-                    pq_book[:, j * sub_d : (j + 1) * sub_d],
-                )
-                codes[:, j] = np.argmin(d, axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "__cell": cell, "codes": list(codes)}
-            )
-
-    index_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("__cell", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-    index = fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        _index_batch, index_schema
-    )
-
-    def _table_of(vecs: np.ndarray) -> np.ndarray:
-        t = np.empty((len(vecs), n_subspaces, n_codes))
-        for j in range(n_subspaces):
-            t[:, j, :] = _sub_sqdist(
-                vecs[:, j * sub_d : (j + 1) * sub_d],
-                pq_book[:, j * sub_d : (j + 1) * sub_d],
-            )
-        return t
-
-    # Executor-side query routing + tables: one mapInPandas pass over
-    # the queries scan emits an (query_id, __cell, __tab) row per
-    # probed cell — n_probe rows per query, each carrying that
-    # (query, cell)'s KiB ADC table (in residual mode the table is of
-    # the query's residual w.r.t. THAT cell; in raw mode the same
-    # table repeats per probe). The queries DataFrame is never
-    # collected: a corpus-sized query side streams through executors,
-    # and only the (bounded-batch) table rows enter the broadcast.
-    # Every numpy step is row-wise, so values are bit-identical to
-    # the driver-side build this replaces.
-    def _qtab_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            q_mat = _stack(pdf[vec_col])
-            q_ids_b = pdf[id_col].to_numpy(dtype=np.int64)
-            # stable argsort on -sim, ascending cell id ties (lowest first)
-            probes = np.argsort(-_cell_sims(q_mat), axis=1, kind="stable")[:, :n_probe]
-            out_q: list = []
-            out_c: list = []
-            out_t: list = []
-            for i in range(len(q_ids_b)):
-                if residual:
-                    res = q_mat[i : i + 1, :] - cells_mat[probes[i]]
-                    t = _table_of(res)
-                    for pi, c in enumerate(probes[i]):
-                        out_q.append(q_ids_b[i])
-                        out_c.append(int(c))
-                        out_t.append(t[pi].reshape(-1))
-                else:
-                    t = _table_of(q_mat[i : i + 1])[0].reshape(-1)
-                    for c in probes[i]:
-                        out_q.append(q_ids_b[i])
-                        out_c.append(int(c))
-                        out_t.append(t)
-            yield pd.DataFrame(
-                {"query_id": out_q, "__cell": out_c, "__tab": out_t}
-            )
-
-    qtab_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("__cell", T.LongType()),
-            T.StructField("__tab", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    qtab = fan_out(queries.select(id_col, vec_col)).mapInPandas(
-        _qtab_batch, qtab_schema
-    )
-
-    # bucket equi-join on the cell id: each query reads ONLY its
-    # probed cells' codes; the ADC sum is the same JVM-side codegen
-    # fold as pq_topk (zero Python in the scan)
-    routed = index.join(F.broadcast(qtab), on="__cell")
-    scored = routed.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        _adc_fold(n_subspaces, n_codes).alias("adc_dist"),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 def embedding_moments(
@@ -1531,8 +826,6 @@ def hard_negative_mining(
     dim: int = 64,
     bits_per_table: int = 8,
     num_tables: int = 4,
-    seed: int = 42,
-    plane_kind: str = "gaussian",
 ) -> DataFrame:
     """Top-k most-cosine-similar corpus rows with a DIFFERENT label
     per query — the hard-negative mining pass of contrastive / metric
@@ -1556,8 +849,7 @@ def hard_negative_mining(
     require_columns(queries, [id_col, vec_col, label_col])
     require_columns(corpus, [id_col, vec_col, label_col])
     cand = _lsh_candidate_pairs(
-        queries, corpus, id_col, vec_col, dim, bits_per_table, num_tables, seed,
-        plane_kind,
+        queries, corpus, id_col, vec_col, dim, bits_per_table, num_tables
     )
     ql = queries.select(
         F.col(id_col).alias("query_id"), F.col(label_col).alias("__ql")

@@ -1289,8 +1289,8 @@ DRIVER_ORDER: list[str] = [
     "script_route",
     "embedding_near_dup",
     "knn_join_lsh",
-    # round-11 rotation (README policy rule 2): knn_join_ivf out to
-    # EXTRA_CATALOG — the ANN family held two index-variant slots
+    # round-11 rotation (README policy rule 2): the IVF k-NN row out
+    # (since deleted) — the ANN family held two index-variant slots
     # (LSH + IVF) for one query semantics; knn_join_lsh keeps it
     # driver-checked. Slot freed for main_content_extract below.
     # round-11 promotion: DOM-grade main-content extraction — with

@@ -15,7 +15,6 @@ from dask_datapipeline_spark.operators import dedup as DD
 from dask_datapipeline_spark.operators.similarity import (
     cosine_all_pairs_exact,
     cosine_topk,
-    ivf_topk,
     knn_join_lsh,
 )
 from dask_datapipeline_spark.plans.catalog import register, register_extra
@@ -373,9 +372,9 @@ ORDER BY cosine_sim DESC, e.vec_id LIMIT 10
 """,
     "Exact cosine top-10 for one query vector: broadcast literal + "
     "TakeOrderedAndProject, zero shuffle. Rotated to EXTRA_CATALOG round 7 "
-    "(README policy rule 3): the similarity family keeps three driver rows in "
-    "its production configurations (knn_join_lsh, knn_join_ivf, "
-    "embedding_near_dup); the brute-force scan is the exact baseline/recall "
+    "(README policy rule 3): the similarity family keeps its driver rows in "
+    "their production configurations (knn_join_lsh, embedding_near_dup, "
+    "semantic_dedup); the brute-force scan is the exact baseline/recall "
     "oracle, not the 100 TB path",
 )
 def q_knn_brute_topk(spark, sf_dir):
@@ -395,9 +394,6 @@ def _bucket_expr(planes, vec: str, t: int) -> str:
         f" THEN {1 << b} ELSE 0 END)"
         for b in range(bits)
     )
-
-
-_ND_TABLES, _ND_BITS, _ND_THRESHOLD = 8, 4, 0.4  # dense recall DEMO (extras)
 
 
 def _lsh_bucket_cte(num_tables: int, bits: int, dim: int) -> str:
@@ -516,7 +512,7 @@ SELECT id_a, id_b, cosine_sim FROM pairs WHERE cosine_sim >= {threshold!r}
 
 # Sparse-regime config: 8-bit tables (256 buckets each) collide random
 # 64-dim pairs with p ≈ 0.5^8 per table, so the candidate volume stays
-# ~N²/256·tables instead of the dense demo's ~40% of all pairs; 16
+# ~N²/256·tables instead of ~40% of all pairs under 4-bit tables; 16
 # tables buy recall back. The production near-dup threshold is 0.9+ —
 # this synthetic corpus' max pairwise cosine is ≈0.51 at sf0.01, so the
 # row uses 0.45 (14 pairs at sf0.01) to stay non-vacuous while
@@ -536,8 +532,8 @@ _ND_SPARSE_TABLES, _ND_SPARSE_BITS, _ND_SPARSE_T, _ND_SPARSE_CAP = 16, 8, 0.45, 
     "collected or broadcast. Driver row runs the PRODUCTION sparse-regime geometry "
     "(16 tables x 8-bit + bucket_cap=64 skew guard — the configuration a 100 TB "
     "corpus runs; candidate volume ~7% of all-pairs, bounded by per-cell C(n,2) "
-    "with every cell capped, docs/SCALE.md). The distant-threshold 0.4/4-bit dense "
-    "recall demo is extra:embedding_near_dup_dense. Exact all-pairs baseline: "
+    "with every cell capped, docs/SCALE.md). The auto-sized default call is "
+    "extra:embedding_near_dup_auto. Exact all-pairs baseline: "
     "embedding_near_dup_exact recall oracle in EXTRA_CATALOG",
 )
 def q_embedding_near_dup(spark, sf_dir):
@@ -549,16 +545,17 @@ def q_embedding_near_dup(spark, sf_dir):
         threshold=_ND_SPARSE_T,
         bits_per_table=_ND_SPARSE_BITS,
         num_tables=_ND_SPARSE_TABLES,
-        plane_kind="rademacher",
         bucket_cap=_ND_SPARSE_CAP,
     )
 
 
 @register_extra(
     "embedding_near_dup_auto",
-    _lsh_auto_near_dup_oracle_sql(_ND_SPARSE_TABLES, 64, _ND_SPARSE_T),
-    "AUTO-SIZED production default of embedding_near_dup_pairs "
-    "(bits_per_table=None): one count() sizing pass, "
+    # embedding_near_dup_pairs' default geometry: 4 tables, 64 dims
+    _lsh_auto_near_dup_oracle_sql(4, 64, _ND_SPARSE_T),
+    "The production default call embedding_near_dup_pairs(emb, threshold=t), "
+    "no geometry arguments — the call corpus_dedup makes: 4 tables, "
+    "bits_per_table=None, so one count() sizing pass, "
     "bits = ceil(log2(n/occupancy)) integer-exact, bucket_cap = 8x occupancy. "
     "The oracle computes the SAME bits from COUNT(*) via length(bin(...)) and "
     "gates plane-literal terms on b < bits, so it tracks any corpus the gate "
@@ -570,34 +567,7 @@ def q_embedding_near_dup_auto(spark, sf_dir):
     from dask_datapipeline_spark.operators.similarity import embedding_near_dup_pairs
 
     emb = load_testdata(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(
-        emb,
-        threshold=_ND_SPARSE_T,
-        bits_per_table=None,  # the auto-sized default under test
-        num_tables=_ND_SPARSE_TABLES,
-        plane_kind="rademacher",
-    )
-
-
-@register_extra(
-    "embedding_near_dup_dense",
-    _lsh_near_dup_oracle_sql(_ND_TABLES, _ND_BITS, 64, _ND_THRESHOLD),
-    "Dense-regime recall DEMO (8x4-bit, threshold 0.4): ~40% of all pairs are "
-    "candidates at this distant threshold — kept as the documented contrast case "
-    "for the driver row's sparse 16x8-bit production geometry (docs/SCALE.md); "
-    "was the driver row through round 5, demoted per the round-5 verdict",
-)
-def q_embedding_near_dup_dense(spark, sf_dir):
-    from dask_datapipeline_spark.operators.similarity import embedding_near_dup_pairs
-
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(
-        emb,
-        threshold=_ND_THRESHOLD,
-        bits_per_table=_ND_BITS,
-        num_tables=_ND_TABLES,
-        plane_kind="rademacher",
-    )
+    return embedding_near_dup_pairs(emb, threshold=_ND_SPARSE_T)
 
 
 @register_extra(
@@ -615,7 +585,6 @@ def q_lsh_bucket_occupancy(spark, sf_dir):
         emb,
         bits_per_table=_ND_SPARSE_BITS,
         num_tables=_ND_SPARSE_TABLES,
-        plane_kind="rademacher",
     )
 
 
@@ -690,7 +659,6 @@ def q_embedding_dup_clusters(spark, sf_dir):
         threshold=_ND_SPARSE_T,
         bits_per_table=_ND_SPARSE_BITS,
         num_tables=_ND_SPARSE_TABLES,
-        plane_kind="rademacher",
         bucket_cap=_ND_SPARSE_CAP,
     )
     return dup_clusters(pairs, emb, id_col="vec_id")
@@ -2019,73 +1987,7 @@ def q_knn_join_lsh(spark, sf_dir):
     emb = load_testdata(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return knn_join_lsh(
-        queries, emb, k=5, bits_per_table=6, num_tables=6, plane_kind="rademacher"
-    )
-
-
-def _lsh_multiprobe_oracle_sql(
-    num_tables: int, bits: int, dim: int, k: int, probe_bits: int
-) -> str:
-    """knn_join_lsh oracle with 1-bit multi-probe on the query side:
-    qb0 is the plain per-table bucketing; qb unions it with one
-    ``xor(bucket, 1<<b)`` probe per flipped bit. The corpus side is
-    untouched — the probe set is query-side only, exactly as in
-    ``similarity._lsh_candidate_pairs``."""
-    from dask_datapipeline_spark.operators.similarity import rademacher_planes
-
-    planes = rademacher_planes(num_tables, bits, dim)
-    qb0 = "\nUNION ALL\n".join(
-        f"SELECT vec_id AS query_id, embedding AS qv, {t} AS t,"
-        f" {_bucket_expr(planes, 'embedding', t)} AS bucket FROM q0"
-        for t in range(num_tables)
-    )
-    probes = "\nUNION ALL\n".join(
-        ["SELECT query_id, qv, t, bucket FROM qb0"]
-        + [
-            f"SELECT query_id, qv, t, xor(bucket, {1 << b}) AS bucket FROM qb0"
-            for b in range(probe_bits)
-        ]
-    )
-    cb = "\nUNION ALL\n".join(
-        f"SELECT vec_id AS neighbor_id, embedding AS cv, {t} AS t,"
-        f" {_bucket_expr(planes, 'embedding', t)} AS bucket FROM embeddings"
-        for t in range(num_tables)
-    )
-    cos = _COS_SQL.format(a="qb.qv", b="cb.cv")
-    return f"""
-WITH q0 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-qb0 AS ({qb0}),
-qb AS ({probes}),
-cb AS ({cb}),
-scored AS (
-  SELECT DISTINCT qb.query_id, cb.neighbor_id, {cos} AS cosine_sim
-  FROM qb JOIN cb ON qb.t = cb.t AND qb.bucket = cb.bucket
-)
-SELECT query_id, neighbor_id, cosine_sim, rn FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id) AS rn
-  FROM scored) WHERE rn <= {k}
-"""
-
-
-@register_extra(
-    "knn_join_lsh_multiprobe",
-    _lsh_multiprobe_oracle_sql(num_tables=3, bits=6, dim=64, k=5, probe_bits=6),
-    "1-bit multi-probe LSH k-NN join (similarity.py::knn_join_lsh with "
-    "multiprobe_bits): each query additionally probes, per table, every bucket "
-    "one hyperplane-flip away (bucket XOR 1<<b) — recall bought with QUERY-side "
-    "rows instead of corpus-side index replicas (here HALF the driver row's "
-    "tables: 3x6-bit + 6 probes vs 6x6-bit plain; recall-at-5 >= the plain "
-    "3-table run is pytest-asserted against the exact brute-force baseline). "
-    "The probe set is a deterministic xor of the bucket id, so the oracle "
-    "replays it exactly; the corpus side never expands",
-)
-def q_knn_join_lsh_multiprobe(spark, sf_dir):
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return knn_join_lsh(
-        queries, emb, k=5, bits_per_table=6, num_tables=3,
-        plane_kind="rademacher", multiprobe_bits=6,
+        queries, emb, k=5, bits_per_table=6, num_tables=6
     )
 
 
@@ -2145,197 +2047,8 @@ def q_hard_negative_mining(spark, sf_dir):
     emb = load_testdata(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _HNM_QUERIES)
     return hard_negative_mining(
-        queries, emb, k=5, bits_per_table=6, num_tables=6, plane_kind="rademacher"
+        queries, emb, k=5, bits_per_table=6, num_tables=6
     )
-
-
-_IVF_ORACLE_SQL = f"""
-WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_COS_SQL.format(a='e.embedding', b='c.cv')} DESC, c.cid
-         ) AS rn
-  FROM embeddings e CROSS JOIN c
-),
-cells AS (SELECT vec_id, embedding, cid FROM assign WHERE rn = 1),
-probe AS (
-  SELECT qid, qv, cid FROM (
-    SELECT q.qid, q.qv, c.cid,
-           row_number() OVER (
-             PARTITION BY q.qid
-             ORDER BY {_COS_SQL.format(a='q.qv', b='c.cv')} DESC, c.cid
-           ) AS rn
-    FROM q CROSS JOIN c) WHERE rn <= 4
-),
-scored AS (
-  SELECT p.qid AS query_id, ce.vec_id AS neighbor_id,
-         {_COS_SQL.format(a='p.qv', b='ce.embedding')} AS cosine_sim
-  FROM probe p JOIN cells ce ON ce.cid = p.cid
-)
-SELECT query_id, neighbor_id, cosine_sim, rn FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id) AS rn
-  FROM scored) WHERE rn <= 5
-"""
-
-
-@register_extra(
-    "knn_join_ivf",
-    _IVF_ORACLE_SQL,
-    "IVF k-NN: deterministic codebook → cell assignment → probe 4 nearest cells → "
-    "exact in-cell re-rank; oracle replays the identical assignment in SQL. "
-    "Rotated to EXTRA_CATALOG round 11 (README policy rule 2): the ANN family "
-    "held two index-variant driver slots (LSH + IVF); knn_join_lsh keeps the "
-    "family driver-checked, IVF stays swept by the local gate. Slot freed for "
-    "main_content_extract",
-)
-def q_knn_join_ivf(spark, sf_dir):
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk(queries, emb, k=5, n_cells=16, n_probe=4)
-
-
-@register_extra(
-    "ivf_index_incremental",
-    _IVF_ORACLE_SQL,
-    "Incremental on-disk IVF index (operators/ivf_index.py::"
-    "append_to_ivf_index + maybe_compact_ivf_index): base built from the "
-    "low-id half, the rest appended as two frozen-codebook deltas (the "
-    "FAISS add contract — assignment of existing vectors never moves), "
-    "committed deltas folded by the watermarked two-phase compaction, "
-    "then probed. SHARES knn_join_ivf's oracle verbatim: an exact match "
-    "proves append+compaction are a pure physical re-layout of the "
-    "one-shot index — the vector leg of the incremental-index family "
-    "beside BM25 postings deltas and MinHash increments",
-)
-def q_ivf_index_incremental(spark, sf_dir):
-    from dask_datapipeline_spark.operators.ivf_index import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_topk_from_index,
-        maybe_compact_ivf_index,
-    )
-    from dask_datapipeline_spark.plans.catalog import gate_tmpdir
-
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    idx = gate_tmpdir(spark, sf_dir, "ivf_inc", "index")
-    # base holds the lowest ids, so the untrained codebook (n_cells
-    # lowest-id vectors) is identical to a one-shot build's — which is
-    # what lets this row share the one-shot oracle verbatim
-    build_ivf_index(emb.where(F.col("vec_id") < 200), idx, n_cells=16)
-    append_to_ivf_index(emb.where((F.col("vec_id") >= 200) & (F.col("vec_id") < 350)), idx, 0)
-    append_to_ivf_index(emb.where(F.col("vec_id") >= 350), idx, 1)
-    # in-sink shape: batch 1 is in flight, so only delta 0 folds
-    maybe_compact_ivf_index(spark, idx, max_deltas=0 + 1, exclude_from=1)
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk_from_index(spark, idx, queries, k=5, n_probe=4)
-
-
-# cosine of the SHIFTED-then-float-cast delta vectors: the shift runs
-# in double, append_to_ivf_index casts back to the index's float
-# elements, and the report reads the stored floats — the oracle replays
-# the same double→float→double round-trip so residuals are bit-exact
-_DRIFT_V_BASE = "CAST(embedding AS DOUBLE[])"
-_DRIFT_V_SHIFT = (
-    "CAST(CAST(list_transform(CAST(embedding AS DOUBLE[]), e -> e + 0.5) "
-    "AS FLOAT[]) AS DOUBLE[])"
-)
-
-_IVF_DRIFT_ORACLE_SQL = f"""
-WITH c AS (
-  SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-  FROM embeddings WHERE vec_id < 8
-),
-src AS (
-  SELECT vec_id, CAST(-1 AS BIGINT) AS delta, {_DRIFT_V_BASE} AS v
-  FROM embeddings WHERE vec_id < 300
-  UNION ALL
-  SELECT vec_id, CAST(0 AS BIGINT) AS delta, {_DRIFT_V_SHIFT} AS v
-  FROM embeddings WHERE vec_id >= 300
-),
-assign AS (
-  SELECT s.delta, s.vec_id, c.cid,
-         round(1 - {_COS_SQL.format(a='s.v', b='c.cv')}, 9) AS r,
-         row_number() OVER (
-           PARTITION BY s.delta, s.vec_id
-           ORDER BY {_COS_SQL.format(a='s.v', b='c.cv')} DESC, c.cid
-         ) AS rn
-  FROM src s CROSS JOIN c
-),
-cells AS (SELECT delta, vec_id, cid, r FROM assign WHERE rn = 1),
-dist AS (
-  SELECT delta, COUNT(*) AS n_vectors,
-         CAST(SUM(CAST(r AS DECIMAL(19,9))) AS DOUBLE) / COUNT(*)
-           AS mean_residual,
-         MAX(r) AS max_residual
-  FROM cells GROUP BY delta
-),
-occ AS (SELECT delta, cid, COUNT(*) AS n FROM cells GROUP BY 1, 2),
-tot AS (SELECT delta, CAST(SUM(n) AS BIGINT) AS nd FROM occ GROUP BY 1),
-bocc AS (SELECT cid, n AS nb FROM occ WHERE delta = -1),
-btot AS (SELECT CAST(SUM(nb) AS BIGINT) AS nbt FROM bocc),
-grid AS (
-  SELECT d.delta, b.cid, b.nb
-  FROM (SELECT DISTINCT delta FROM occ) d CROSS JOIN bocc b
-),
-onion AS (
-  SELECT COALESCE(o.delta, g.delta) AS delta,
-         COALESCE(o.cid, g.cid) AS cid,
-         COALESCE(o.n, 0) AS n, COALESCE(g.nb, 0) AS nbc
-  FROM occ o FULL OUTER JOIN grid g
-    ON o.delta = g.delta AND o.cid = g.cid
-),
-l1 AS (
-  SELECT u.delta,
-         CAST(SUM(CAST(round(abs(
-           CAST(u.n AS DOUBLE) / t.nd
-           - CAST(u.nbc AS DOUBLE) / (SELECT nbt FROM btot)
-         ), 9) AS DECIMAL(19,9))) AS DOUBLE) AS occ_l1
-  FROM onion u JOIN tot t ON u.delta = t.delta
-  GROUP BY 1
-)
-SELECT d.delta, d.n_vectors, d.mean_residual, d.max_residual, l.occ_l1
-FROM dist d JOIN l1 l ON d.delta = l.delta
-"""
-
-
-@register_extra(
-    "ivf_drift_report",
-    _IVF_DRIFT_ORACLE_SQL,
-    "IVF codebook-drift diagnostics (operators/ivf_index.py::"
-    "ivf_drift_report): the frozen-codebook append contract (FAISS add) "
-    "silently degrades cell balance and recall when the ingested "
-    "distribution drifts — this report MEASURES it per delta: assignment "
-    "distortion (1 - cosine to the stored cell's centroid; strict-order "
-    "dots, round-9dp -> exact DECIMAL sum) plus cell-occupancy L1 "
-    "divergence vs the base delta (exact-integer counts, one division "
-    "each). Fixture plants the drift: base = low-id vectors as built, "
-    "delta 0 = the rest shifted +0.5 per element (double math, float-"
-    "cast on append — the oracle replays the same round-trip). One Arrow "
-    "cosine pass over the index scan + bounded (deltas x cells) "
-    "aggregates; the escape hatch it feeds is compact_ivf_index("
-    "retrain=True), pytest-pinned to recover recall",
-)
-def q_ivf_drift_report(spark, sf_dir):
-    from dask_datapipeline_spark.operators.ivf_index import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_drift_report,
-    )
-    from dask_datapipeline_spark.plans.catalog import gate_tmpdir
-
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    idx = gate_tmpdir(spark, sf_dir, "ivf_drift", "index")
-    build_ivf_index(emb.where(F.col("vec_id") < 300), idx, n_cells=8)
-    shifted = emb.where(F.col("vec_id") >= 300).select(
-        "vec_id",
-        F.transform("embedding", lambda e: e + F.lit(0.5)).alias("embedding"),
-    )
-    append_to_ivf_index(shifted, idx, 0)
-    return ivf_drift_report(spark, idx)
 
 
 # ----- text analysis -------------------------------------------------
@@ -4760,161 +4473,6 @@ def q_streaming_stream_join(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# Product quantization (PQ) k-NN with ADC scan
-# --------------------------------------------------------------------
-
-#: squared-L2 via the dot identity, parenthesized EXACTLY as the
-#: Python side evaluates it ((aa - (2*ab)) + bb, strict-order dots)
-_SQD_SQL = (
-    "((list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[]))"
-    " - (2 * list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))))"
-    " + list_dot_product(CAST({b} AS DOUBLE[]), CAST({b} AS DOUBLE[])))"
-)
-
-#: elementwise residual a - b, both sides promoted to DOUBLE first
-#: (numeric struct indices: list_zip yields unnamed structs)
-_RES_SQL = (
-    "list_transform(list_zip(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])),"
-    " x -> x[1] - x[2])"
-)
-
-_PQ_SUB = "{v}[g.j*8+1 : g.j*8+8]"
-_PQ_ADC_CHAIN = " + ".join(f"MAX(CASE WHEN j = {j} THEN d END)" for j in range(8))
-
-
-@register_extra(
-    "knn_join_pq",
-    f"""
-WITH cb AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
-codes AS (
-  SELECT e.vec_id, g.j, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id, g.j
-           ORDER BY {_SQD_SQL.format(a=_PQ_SUB.format(v='e.embedding'), b=_PQ_SUB.format(v='c.cv'))} ASC, c.cid
-         ) AS rn
-  FROM embeddings e CROSS JOIN cb c, unnest(generate_series(0, 7)) g(j)
-),
-code AS (SELECT vec_id, j, cid AS cod FROM codes WHERE rn = 1),
-tdist AS (
-  SELECT q.qid, g.j, c.cid,
-         {_SQD_SQL.format(a=_PQ_SUB.format(v='q.qv'), b=_PQ_SUB.format(v='c.cv'))} AS d
-  FROM qs q CROSS JOIN cb c, unnest(generate_series(0, 7)) g(j)
-),
-scored AS (
-  SELECT t.qid AS query_id, k.vec_id AS neighbor_id, k.j, t.d
-  FROM code k JOIN tdist t ON t.j = k.j AND t.cid = k.cod
-),
-adc AS (
-  SELECT query_id, neighbor_id, {_PQ_ADC_CHAIN} AS adc_dist
-  FROM scored GROUP BY query_id, neighbor_id
-)
-SELECT query_id, neighbor_id, adc_dist, rn FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id) AS rn
-  FROM adc) WHERE rn <= 5
-""",
-    "Product-quantization k-NN (operators/similarity.py::pq_topk, Jegou et al. "
-    "2011): corpus encoded as 8 one-byte codes (8x-32x index shrink), ADC scan "
-    "sums precomputed sub-distances from a broadcast table — codes scan, no "
-    "vector shuffle; squared-L2 via the strict-order dot identity and a "
-    "left-associative ADC chain make distances bit-identical to the SQL replay",
-)
-def q_knn_join_pq(spark, sf_dir):
-    from dask_datapipeline_spark.operators.similarity import pq_topk
-
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return pq_topk(queries, emb, k=5, n_subspaces=8, n_codes=16)
-@register_extra(
-    "knn_join_ivfpq",
-    f"""
-WITH cb AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-rb AS (SELECT vec_id AS rid0, embedding AS rv0 FROM embeddings WHERE vec_id >= 16 AND vec_id < 32),
-qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
-rb_assign AS (
-  SELECT b.rid0, b.rv0, c.cid,
-         row_number() OVER (
-           PARTITION BY b.rid0
-           ORDER BY {_COS_SQL.format(a='b.rv0', b='c.cv')} DESC, c.cid
-         ) AS rn
-  FROM rb b CROSS JOIN cb c
-),
-rcb AS (
-  SELECT a.rid0 AS rid, {_RES_SQL.format(a='a.rv0', b='c.cv')} AS rv
-  FROM rb_assign a JOIN cb c ON c.cid = a.cid
-  WHERE a.rn = 1
-),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_COS_SQL.format(a='e.embedding', b='c.cv')} DESC, c.cid
-         ) AS rn
-  FROM embeddings e CROSS JOIN cb c
-),
-cell AS (
-  SELECT a.vec_id, a.cid AS cell, {_RES_SQL.format(a='a.embedding', b='c.cv')} AS re
-  FROM assign a JOIN cb c ON c.cid = a.cid
-  WHERE a.rn = 1
-),
-codes AS (
-  SELECT ce.vec_id, g.j, r.rid,
-         row_number() OVER (
-           PARTITION BY ce.vec_id, g.j
-           ORDER BY {_SQD_SQL.format(a=_PQ_SUB.format(v='ce.re'), b=_PQ_SUB.format(v='r.rv'))} ASC, r.rid
-         ) AS rn
-  FROM cell ce CROSS JOIN rcb r, unnest(generate_series(0, 7)) g(j)
-),
-code AS (SELECT vec_id, j, rid AS cod FROM codes WHERE rn = 1),
-probe AS (
-  SELECT qid, qv, cell FROM (
-    SELECT q.qid, q.qv, c.cid AS cell,
-           row_number() OVER (
-             PARTITION BY q.qid
-             ORDER BY {_COS_SQL.format(a='q.qv', b='c.cv')} DESC, c.cid
-           ) AS rn
-    FROM qs q CROSS JOIN cb c) WHERE rn <= 4
-),
-tdist AS (
-  SELECT p.qid, p.cell, g.j, r.rid,
-         {_SQD_SQL.format(a=_PQ_SUB.format(v=_RES_SQL.format(a='p.qv', b='pc.cv')), b=_PQ_SUB.format(v='r.rv'))} AS d
-  FROM probe p JOIN cb pc ON pc.cid = p.cell
-  CROSS JOIN rcb r, unnest(generate_series(0, 7)) g(j)
-),
-scored AS (
-  SELECT p.qid AS query_id, a.vec_id AS neighbor_id, k.j, t.d
-  FROM probe p
-  JOIN cell a ON a.cell = p.cell
-  JOIN code k ON k.vec_id = a.vec_id
-  JOIN tdist t ON t.qid = p.qid AND t.cell = p.cell AND t.j = k.j AND t.rid = k.cod
-),
-adc AS (
-  SELECT query_id, neighbor_id, {_PQ_ADC_CHAIN} AS adc_dist
-  FROM scored GROUP BY query_id, neighbor_id
-)
-SELECT query_id, neighbor_id, adc_dist, rn FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id) AS rn
-  FROM adc) WHERE rn <= 5
-""",
-    "IVF-PQ k-NN with RESIDUAL encoding (operators/similarity.py::ivfpq_topk, "
-    "the full FAISS design): PQ quantizes x - centroid(cell), concentrating the "
-    "coded distribution around 0; coarse cells prune the scan (probe 4 of 16), "
-    "ADC over probed cells' 8-byte codes with per-(query,cell) residual tables; "
-    "elementwise residuals replay exactly via list_zip/list_transform",
-)
-def q_knn_join_ivfpq(spark, sf_dir):
-    from dask_datapipeline_spark.operators.similarity import ivfpq_topk
-
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivfpq_topk(
-        queries, emb, k=5, n_cells=16, n_probe=4, n_subspaces=8, residual=True
-    )
-
-
-# --------------------------------------------------------------------
 # Collocation mining (PMI co-occurrence)
 # --------------------------------------------------------------------
 
@@ -6245,7 +5803,7 @@ def q_mix_rebalance(spark, sf_dir):
     tot = t.agg(F.sum("n_tokens").alias("__total"))
     # data-derived constant equi-key: a bare cross/literal-key join
     # degrades to BroadcastNestedLoopJoin (the plan guard forbids it);
-    # id*0 keeps a BroadcastHashJoin (the pq_topk device)
+    # id*0 keeps a BroadcastHashJoin
     joined = t.withColumn("__one", F.col("n_tokens") * F.lit(0)).join(
         F.broadcast(tot.withColumn("__one", F.col("__total") * F.lit(0))),
         on="__one",
@@ -8563,108 +8121,6 @@ def q_quality_funnel(spark, sf_dir):
         F.sum("n_lines_kept").alias("lines_kept"),
         F.sum("clean_chars").alias("clean_chars"),
     )
-
-
-# ----- int8 embedding quantization -----------------------------------
-
-from dask_datapipeline_spark.functions.vectors import (  # noqa: E402
-    int8_quantize_cols,
-    int8_sql_projections,
-)
-
-
-def _embedding_int8_sql() -> str:
-    sig = int8_sql_projections("CAST(embedding AS DOUBLE[])")
-    codes_str = (
-        f"array_to_string(list_transform({sig['codes']}, "
-        f"c -> CAST(c AS VARCHAR)), ',')"
-    )
-    return f"""
-SELECT vec_id,
-       {sig["scale"]} AS scale,
-       {sig["n_saturated"]} AS n_saturated,
-       {sig["err_max"]} AS err_max,
-       {codes_str} AS codes_str
-FROM embeddings
-WHERE embedding IS NOT NULL
-"""
-
-
-@register_extra(
-    "embedding_int8",
-    _embedding_int8_sql(),
-    "Symmetric per-vector int8 scalar quantization (functions/vectors.py): "
-    "scale = max|x|/127, 1-byte codes, saturation count and max "
-    "reconstruction error (<= scale/2) — the 4x storage layout vector stores "
-    "run before ANN indexing; pure per-row array exprs, zero shuffle, zero "
-    "Python; all-zero vectors guarded (NaN would throw under ANSI tinyint "
-    "cast). Codes rendered as a joined string so ordering drift is "
-    "impossible to miss",
-)
-def q_embedding_int8(spark, sf_dir):
-    emb = load_testdata(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    sig = int8_quantize_cols(F.col("embedding"))
-    return emb.select(
-        "vec_id",
-        sig["scale"].alias("scale"),
-        sig["n_saturated"].alias("n_saturated"),
-        sig["err_max"].alias("err_max"),
-        F.array_join(
-            F.transform(sig["codes"], lambda c: c.cast("string")), ","
-        ).alias("codes_str"),
-    )
-
-
-from dask_datapipeline_spark.functions.vectors import (  # noqa: E402
-    int8_cosine_topk,
-    int8_quantize_py,
-)
-
-
-def _knn_int8_sql() -> str:
-    sig = int8_sql_projections("CAST(embedding AS DOUBLE[])")
-    codes = sig["codes"]
-    dot = (
-        "list_sum(list_transform(list_zip(c.cc, q.qc), "
-        "p -> CAST(p[1] AS BIGINT) * CAST(p[2] AS BIGINT)))"
-    )
-    norm_sq = "list_sum(list_transform({c}, x -> CAST(x AS BIGINT) * CAST(x AS BIGINT)))"
-    return f"""
-WITH q AS (
-  SELECT {codes} AS qc, {norm_sq.format(c=codes)} AS nq
-  FROM embeddings WHERE vec_id = 0
-),
-c AS (
-  SELECT vec_id, {codes} AS cc, {norm_sq.format(c=codes)} AS na
-  FROM embeddings WHERE embedding IS NOT NULL
-)
-SELECT vec_id,
-       CASE WHEN c.na * q.nq > 0
-            THEN CAST({dot} AS DOUBLE) / sqrt(CAST(c.na * q.nq AS DOUBLE))
-       END AS cos_q
-FROM c, q
-ORDER BY cos_q DESC NULLS LAST, vec_id LIMIT 10
-"""
-
-
-@register_extra(
-    "knn_int8_topk",
-    _knn_int8_sql(),
-    "Exact cosine top-10 over the INT8 CODES (functions/vectors.py::"
-    "int8_cosine_topk): per-vector scales cancel in cosine, so the score is "
-    "exact-BIGINT dot/norms + one correctly-rounded sqrt + one division — "
-    "transcendental-free, bit-identical cross-engine with NO rounding "
-    "discipline. The quantized-scan ANN baseline (1 byte/dim I/O); composes "
-    "with the LSH/IVF candidate generators like the float scorer. Query = "
-    "vec_id 0 quantized driver-side by the pinned python twin",
-)
-def q_knn_int8_topk(spark, sf_dir):
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    qc = int8_quantize_py([float(v) for v in qvec])
-    return int8_cosine_topk(emb, "embedding", "vec_id", qc, k=10)
 
 
 def _hll_rollup_sql() -> str:

@@ -1315,62 +1315,3 @@ def stream_incremental_table_stats(
         .start()
     )
     _drain(q, timeout_sec)
-
-
-def stream_incremental_ivf_index(
-    spark: SparkSession,
-    staged_dir: str,
-    index_path: str,
-    schema: str,
-    checkpoint_dir: str | None = None,
-    timeout_sec: int = 240,
-    compact_max_deltas: int | None = None,
-    lease=None,
-) -> None:
-    """Maintain an on-disk IVF vector index (``operators/ivf_index``)
-    incrementally over an (id, embedding) file stream — the vector leg
-    of the incremental-index family beside the BM25 and MinHash sinks.
-    The index (codebook + _META) must already exist (built by
-    ``build_ivf_index`` from a seed corpus): appending NEVER retrains
-    the coarse quantizer (the FAISS ``add`` contract), so every
-    micro-batch is one frozen-codebook assignment pass written as a
-    replay-idempotent ``vectors/delta=<batch_id>`` partition
-    (mode=overwrite by checkpointed batch id), probes read the union
-    transparently via partition discovery, and after draining the
-    stream ``ivf_topk_from_index`` is BIT-IDENTICAL to a one-shot
-    build over the same corpus (pytest-pinned). ``compact_max_deltas``
-    turns on the in-sink maintenance policy with the replay watermark
-    (``exclude_from=batch_id`` — never fold the in-flight batch, whose
-    overwrite idempotency a post-crash replay depends on); half-done
-    compactions recover at sink start."""
-    from dask_datapipeline_spark.operators.ivf_index import (
-        append_to_ivf_index,
-        maybe_compact_ivf_index,
-        recover_ivf_compaction,
-    )
-
-    base = index_path.rstrip("/")
-    if lease is not None:  # single-writer contract, enforced (r13)
-        lease.acquire()
-    recover_ivf_compaction(base)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if lease is not None:
-            lease.check_and_renew()
-        append_to_ivf_index(batch_df, base, batch_id)
-        if compact_max_deltas is not None:
-            maybe_compact_ivf_index(
-                spark, base, compact_max_deltas, exclude_from=batch_id,
-                lease=lease,
-            )
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
-        .writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir or base + ".ckpt")
-        .start()
-    )
-    _drain(q, timeout_sec)

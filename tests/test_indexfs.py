@@ -1,8 +1,8 @@
 """indexfs.IndexFS: the Hadoop-FS maintenance shim (round 12).
 
 The point under test: the ENTIRE incremental-index maintenance triad
-(delta adoption, crash recovery, threshold compaction — BM25, MinHash,
-IVF) round-trips through an explicit ``file://`` URI, which routes
+(delta adoption, crash recovery, threshold compaction — BM25 and
+MinHash) round-trips through an explicit ``file://`` URI, which routes
 every filesystem primitive through the JVM Hadoop ``FileSystem`` API —
 the exact code path an ``hdfs://``/``s3a://`` index takes. Before the
 port this path was LOUDLY REJECTED (``local_maintenance_path``); these
@@ -160,57 +160,3 @@ def test_minhash_index_roundtrip_via_file_uri(spark, tmp_path):
 
     with open(str(tmp_path / "mh_uri" / "_CURRENT")) as f:
         assert json.load(f) == cur
-
-
-# ----- IVF: append + adoption + compaction through the Hadoop path -----
-
-
-def test_ivf_maintenance_roundtrip_via_file_uri(spark, sf_dir, tmp_path):
-    from dask_datapipeline_spark.operators.ivf_index import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_topk_from_index,
-        maybe_compact_ivf_index,
-    )
-    from dask_datapipeline_spark.sources.readers import load_testdata
-
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    full = str(tmp_path / "full")
-    build_ivf_index(emb, full, n_cells=8)
-    uri = _uri(tmp_path / "inc")
-    build_ivf_index(emb.where(F.col("vec_id") < 200), uri, n_cells=8)
-    # append through the Hadoop path: flat-layout adoption + delta write
-    append_to_ivf_index(
-        emb.where((F.col("vec_id") >= 200) & (F.col("vec_id") < 350)), uri, 0
-    )
-    append_to_ivf_index(emb.where(F.col("vec_id") >= 350), uri, 1)
-    root = str(tmp_path / "inc" / "vectors")
-    assert sorted(d for d in os.listdir(root) if d.startswith("delta=")) == [
-        "delta=-1", "delta=0", "delta=1",
-    ]
-    queries = emb.where(F.col("vec_id") % 7 == 0)
-    want = sorted(
-        map(
-            tuple,
-            ivf_topk_from_index(spark, full, queries, k=5, n_probe=3).collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            ivf_topk_from_index(spark, uri, queries, k=5, n_probe=3).collect(),
-        )
-    )
-    assert got == want and len(got) > 0
-    # two-phase compaction through the Hadoop path, probes bit-identical
-    assert maybe_compact_ivf_index(spark, uri, max_deltas=1) is True
-    assert sorted(d for d in os.listdir(root) if d.startswith("delta=")) == [
-        "delta=-2",
-    ]
-    after = sorted(
-        map(
-            tuple,
-            ivf_topk_from_index(spark, uri, queries, k=5, n_probe=3).collect(),
-        )
-    )
-    assert after == want

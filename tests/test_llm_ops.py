@@ -14,7 +14,6 @@ from dask_datapipeline_spark.operators import dedup as DD
 from dask_datapipeline_spark.operators.similarity import (
     cosine_all_pairs_exact,
     cosine_topk,
-    ivf_topk,
     knn_join_lsh,
 )
 from dask_datapipeline_spark.sources.readers import load_testdata
@@ -271,32 +270,7 @@ def test_knn_lsh_recall(spark, emb):
         )[:5]
         hits += len(set(exact) & approx_sets.get(qid, set()))
         total += 5
-    assert hits / total >= 0.7  # seeded → deterministic; observed 0.88
-
-
-def test_ivf_topk_recall_and_shape(spark, emb):
-    """IVF with a quarter of the cells probed should still recover
-    most exact neighbors, self always included (a vector's own cell is
-    always probed first since cos(v, cell(v)) is maximal for v)."""
-    queries = emb.filter(F.col("vec_id") < 5)
-    out = ivf_topk(queries, emb, k=5, n_cells=16, n_probe=4).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append(r)
-    rows = emb.collect()
-    vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in rows}
-    hits = total = 0
-    for qid in range(5):
-        got = by_q[qid]
-        assert [r.rn for r in sorted(got, key=lambda r: r.rn)] == list(range(1, len(got) + 1))
-        assert qid in {r.neighbor_id for r in got}  # self-neighbor found
-        q = vecs[qid]
-        exact = sorted(
-            vecs, key=lambda i: (-(vecs[i] @ q) / (np.linalg.norm(vecs[i]) * np.linalg.norm(q)), i)
-        )[:5]
-        hits += len(set(exact) & {r.neighbor_id for r in got})
-        total += 5
-    assert hits / total >= 0.5  # deterministic codebook; observed higher
+    assert hits / total >= 0.7  # md5 planes → deterministic; observed 0.96
 
 
 def test_embedding_near_dup_symmetric_pairs(spark, emb):
@@ -347,19 +321,19 @@ def test_semantic_dedup_flags_match_model(spark, emb):
     _check_semdedup_flags(rows, vecs, t)
 
 
-def test_semantic_dedup_trained_codebook(spark, emb):
-    """trained=True swaps the codebook but keeps the semantics: every
-    vector appears once and flags are consistent with the trained
-    assignment."""
+def test_semantic_dedup_codebook_non_dense_ids(spark, emb):
+    """Corpus ids offset by 1000: the codebook is the lowest n_cells
+    ids, not `id < n_cells` (which would collect nothing)."""
     from dask_datapipeline_spark.operators.similarity import semantic_dedup
 
-    t = 0.4
-    rows = semantic_dedup(emb, threshold=t, n_cells=8, trained=True).collect()
-    data = emb.collect()
-    vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in data}
-    assert len(rows) == len(vecs)
-    assert {r.cell for r in rows} <= set(range(8))  # trained cells are 0..n-1
-    _check_semdedup_flags(rows, vecs, t)
+    shifted = emb.withColumn("vec_id", F.col("vec_id") + 1000)
+    lowest = sorted(r.vec_id for r in shifted.select("vec_id").collect())[:8]
+    rows = semantic_dedup(shifted, threshold=0.4, n_cells=8).collect()
+    assert len(rows) == shifted.count()
+    assert {r.cell for r in rows} <= set(lowest)
+
+    with pytest.raises(ValueError, match="empty"):
+        semantic_dedup(shifted.limit(0), n_cells=8)
 
 
 # ----- text analysis -------------------------------------------------
@@ -469,31 +443,13 @@ def test_lsh_bands_divisibility_guard(spark):
         DD.lsh_candidate_pairs(sigs, num_hashes=16, bands=5)
 
 
-def test_embedding_near_dup_plane_kind_respected(spark, emb):
+def test_embedding_near_dup_rejects_unknown_keyword(spark, emb):
     from dask_datapipeline_spark.operators.similarity import embedding_near_dup_pairs
 
-    gauss = embedding_near_dup_pairs(emb, threshold=0.4).collect()
-    rade = embedding_near_dup_pairs(emb, threshold=0.4, plane_kind="rademacher").collect()
-    # both find pairs; all satisfy the contract
-    for out in (gauss, rade):
-        assert all(r.id_a < r.id_b and r.cosine_sim >= 0.4 for r in out)
+    out = embedding_near_dup_pairs(emb, threshold=0.4).collect()
+    assert all(r.id_a < r.id_b and r.cosine_sim >= 0.4 for r in out)
     with pytest.raises(TypeError):
         embedding_near_dup_pairs(emb, num_table=8)  # typo must not be swallowed
-
-
-def test_ivf_codebook_non_dense_ids(spark, emb):
-    """Corpus ids offset by 1000: codebook = lowest n_cells ids, not
-    `id < n_cells` (which would collect nothing)."""
-    from dask_datapipeline_spark.operators.similarity import ivf_topk
-
-    shifted = emb.withColumn("vec_id", F.col("vec_id") + 1000)
-    out = ivf_topk(shifted.filter(F.col("vec_id") < 1005), shifted, k=3).collect()
-    assert {r.query_id for r in out} == {1000, 1001, 1002, 1003, 1004}
-    assert all(r.query_id in {r2.neighbor_id for r2 in out if r2.query_id == r.query_id}
-               for r in out)  # self found
-
-    with pytest.raises(ValueError, match="empty"):
-        ivf_topk(shifted, shifted.limit(0), k=3)
 
 
 def test_fingerprint_strips_non_space_whitespace(spark):
@@ -526,8 +482,7 @@ def test_embedding_near_dup_lsh_precision_and_recall(spark, emb):
     lsh = {
         (r.id_a, r.id_b)
         for r in embedding_near_dup_pairs(
-            emb, threshold=0.4, bits_per_table=4, num_tables=8,
-            plane_kind="rademacher",
+            emb, threshold=0.4, bits_per_table=4, num_tables=8
         ).collect()
     }
     assert lsh <= exact          # no false positives, ever

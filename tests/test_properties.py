@@ -763,46 +763,6 @@ def test_simhash_banding_pigeonhole_completeness(spark, texts):
 
 
 @given(
-    cents=st.lists(st.integers(-500, 500), min_size=1, max_size=40),
-)
-@settings(**_SETTINGS)
-def test_winsorized_order_statistics_match_python(spark, cents):
-    """The catalog's winsorization arithmetic (ceil-index order
-    statistics + clamp + exact cents sum) against a sequential model,
-    including negative values and heavy ties."""
-    from pyspark.sql.window import Window
-
-    data = [("t", i, c) for i, c in enumerate(cents)]
-    df = spark.createDataFrame(data, "event_type string, event_id long, cc long")
-    w = Window.partitionBy("event_type").orderBy("cc", "event_id")
-    wn = Window.partitionBy("event_type")
-    r = df.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count(F.lit(1)).over(wn)
-    )
-    b = r.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n"),
-        F.max(F.when(F.col("rn") == F.expr("(5 * n + 99) DIV 100"), F.col("cc"))).alias("lo"),
-        F.max(F.when(F.col("rn") == F.expr("(95 * n + 99) DIV 100"), F.col("cc"))).alias("hi"),
-    )
-    clamped = F.least(F.greatest(F.col("cc"), F.col("lo")), F.col("hi"))
-    out = (
-        r.drop("n", "rn")
-        .join(b, on="event_type")
-        .groupBy("event_type", "n", "lo", "hi")
-        .agg(F.sum(clamped).alias("wsum"))
-        .collect()
-    )
-    assert len(out) == 1
-    row = out[0]
-    s = sorted(cents)
-    n = len(s)
-    lo = s[(5 * n + 99) // 100 - 1]
-    hi = s[(95 * n + 99) // 100 - 1]
-    assert (row.n, row.lo, row.hi) == (n, lo, hi)
-    assert row.wsum == sum(min(max(c, lo), hi) for c in s)
-
-
-@given(
     pairs=st.lists(
         st.tuples(st.integers(0, 2**16 - 1), st.integers(0, 2**16 - 1)),
         min_size=1,

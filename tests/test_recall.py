@@ -1,7 +1,7 @@
 """Measured recall gate for the ANN family.
 
-Every approximate path (SRP-LSH, IVF, PQ/ADC, IVFPQ) is scored
-against EXACT brute-force top-k / all-pairs computed in-process from
+Every approximate path (SRP-LSH near-dup and k-NN, SemDeDup) is
+scored against EXACT brute-force top-k / all-pairs computed in-process from
 the same embeddings — so a tuning change that silently craters recall
 fails here, with a number. The full curve lives in docs/SCALE.md
 §Similarity (regenerate with tools/measure_recall.py).
@@ -10,14 +10,12 @@ Floors sit ~0.1 below the values measured at sf0.01 (500 vectors,
 64 queries, fixed seeds — the runs are deterministic; the slack is
 for driver-regenerated testdata, not for run-to-run noise):
 
-- near-dup LSH pairs, threshold 0.4: nt=8/bits=4 → 0.746 (catalog
-  setting), nt=16 → 0.983, monotone in num_tables
-- knn_join_lsh recall@5: nt=8/bits=4 → 0.781; catalog (6,6,
-  rademacher) → 0.434 — LSH is a near-dup detector first, a k-NN
-  ranker only with enough tables
-- IVF recall@10: n_probe 2/4/8 → 0.483/0.630/0.800 (monotone)
-- PQ recall@10: 0.283 lowest-id → 0.348 TRAINED (k-means wins)
-- IVFPQ raw recall@10: 0.295 lowest-id → 0.347 TRAINED
+- near-dup LSH pairs, threshold 0.4, bits=4: nt=4/8/16 →
+  0.678/0.814/0.915, monotone in num_tables
+- knn_join_lsh recall@5: nt=8/bits=4 → 0.738; catalog (6,6) → 0.434
+  — LSH is a near-dup detector first, a k-NN ranker only with enough
+  tables
+- SemDeDup dup recall, 16 lowest-id cells: 0.208
 """
 
 from __future__ import annotations
@@ -87,8 +85,8 @@ def test_lsh_near_dup_recall_curve(corpus):
         return len(lsh & exact) / len(exact)
 
     r4, r8, r16 = rec(4), rec(8), rec(16)
-    assert r8 >= 0.6  # catalog setting (measured 0.746)
-    assert r16 >= 0.85  # measured 0.983
+    assert r8 >= 0.6  # measured 0.814
+    assert r16 >= 0.85  # measured 0.915
     assert r4 <= r8 <= r16
 
 
@@ -103,100 +101,12 @@ def test_knn_lsh_recall(corpus):
         5,
     )
     catalog = _knn_recall(
-        S.knn_join_lsh(
-            _queries(emb), emb, k=5, num_tables=6, bits_per_table=6,
-            plane_kind="rademacher",
-        ),
+        S.knn_join_lsh(_queries(emb), emb, k=5, num_tables=6, bits_per_table=6),
         truth,
         5,
     )
-    assert strong >= 0.65  # measured 0.781
+    assert strong >= 0.65  # measured 0.738
     assert catalog >= 0.3  # measured 0.434
-
-
-def test_ivf_recall_monotone_in_probes(corpus):
-    """IVF recall@10 grows with n_probe and clears floors; the
-    trained (spherical k-means) path stays within noise of the
-    lowest-id codebook on this isotropic synthetic corpus (its win
-    is cell BALANCE, asserted separately)."""
-    emb, ids, mat = corpus
-    truth = _truth(ids, mat, 10, "cos")
-
-    def rec(npr, trained=False):
-        return _knn_recall(
-            S.ivf_topk(_queries(emb), emb, k=10, n_cells=16, n_probe=npr,
-                       trained=trained),
-            truth,
-            10,
-        )
-
-    r2, r4, r8 = rec(2), rec(4), rec(8)
-    assert r2 <= r4 <= r8
-    assert r4 >= 0.45  # measured 0.630
-    assert r8 >= 0.65  # measured 0.800
-    assert abs(rec(4, trained=True) - r4) <= 0.15
-
-
-def test_pq_trained_codebook_beats_lowest_id(corpus):
-    """The per-subspace k-means codebook must beat the lowest-id
-    default on ADC recall@10 — the measurable payoff of training
-    (measured 0.348 vs 0.283)."""
-    emb, ids, mat = corpus
-    truth = _truth(ids, mat, 10, "l2")
-    base = _knn_recall(S.pq_topk(_queries(emb), emb, k=10), truth, 10)
-    trained = _knn_recall(
-        S.pq_topk(_queries(emb), emb, k=10, trained=True), truth, 10
-    )
-    assert base >= 0.2
-    assert trained > base
-
-
-def test_ivfpq_trained_codebook_beats_lowest_id(corpus):
-    """Same for the composed index in raw-encoding mode
-    (measured 0.347 trained vs 0.295)."""
-    emb, ids, mat = corpus
-    truth = _truth(ids, mat, 10, "l2")
-    base = _knn_recall(
-        S.ivfpq_topk(_queries(emb), emb, k=10, n_probe=4), truth, 10
-    )
-    trained = _knn_recall(
-        S.ivfpq_topk(_queries(emb), emb, k=10, n_probe=4, trained=True), truth, 10
-    )
-    assert base >= 0.2
-    assert trained >= base
-
-
-def test_trained_ivf_cells_are_balanced(corpus):
-    """What spherical k-means actually buys on isotropic data:
-    balanced cells. The largest trained cell must not exceed the
-    largest lowest-id cell (skew bounds the probe-join fan-out at
-    scale — a hot cell is the scale risk, not average recall)."""
-    emb, ids, mat = corpus
-
-    # assignment balance via direct codebook math
-    from dask_datapipeline_spark.operators.similarity import (
-        _kmeans_lloyd,
-        _train_sample,
-    )
-
-    lowest = mat[:16]
-    trained = _kmeans_lloyd(
-        _train_sample(emb, "vec_id", "embedding", 4096, S.TRAIN_SEED),
-        16,
-        10,
-        S.TRAIN_SEED,
-        spherical=True,
-    )
-
-    def sizes(cents):
-        sims = (mat @ cents.T) / (
-            np.linalg.norm(mat, axis=1)[:, None]
-            * np.linalg.norm(cents, axis=1)[None, :]
-        )
-        a = np.argmax(sims, axis=1)
-        return np.bincount(a, minlength=16)
-
-    assert sizes(trained).max() <= sizes(lowest).max()
 
 
 def _exact_dup_truth(ids: np.ndarray, mat: np.ndarray, threshold: float) -> set:
@@ -216,31 +126,21 @@ def _exact_dup_truth(ids: np.ndarray, mat: np.ndarray, threshold: float) -> set:
 def test_semantic_dedup_recall(corpus):
     """SemDeDup recall vs the exact all-pairs dup definition at the
     catalog threshold (0.4, 16 cells): the within-cell-only verify
-    trades recall for the Σ|cell|² bound, and the trained codebook
-    must claw a measurable part of that trade back (measured at
-    sf0.01: 0.208 lowest-id, 0.453 trained). Precision is structural:
-    every flagged vector was verified by EXACT cosine against a real
-    lower-id cell-mate, so a false positive is a bug, not noise."""
+    trades recall for the Σ|cell|² bound (measured 0.208 at sf0.01).
+    Precision is structural: every flagged vector was verified by
+    EXACT cosine against a real lower-id cell-mate, so a false
+    positive is a bug, not noise."""
     emb, ids, mat = corpus
     exact = _exact_dup_truth(ids, mat, 0.4)
     assert len(exact) > 10
 
-    def run(trained):
-        res = {
-            r[0]: r["is_dup"]
-            for r in S.semantic_dedup(
-                emb, threshold=0.4, n_cells=16, trained=trained
-            ).collect()
-        }
-        return {i for i, d in res.items() if d}
-
-    base, trained = run(False), run(True)
+    res = {
+        r[0]: r["is_dup"]
+        for r in S.semantic_dedup(emb, threshold=0.4, n_cells=16).collect()
+    }
+    base = {i for i, d in res.items() if d}
     assert not base - exact  # structural precision = 1.0
-    assert not trained - exact
     assert len(base & exact) / len(exact) >= 0.10  # measured 0.208
-    assert len(trained & exact) / len(exact) >= 0.30  # measured 0.453
-    # the trained codebook's balanced cells must not LOSE recall
-    assert len(trained & exact) >= len(base & exact)
 
 
 def test_sparse_near_dup_recall_and_candidate_volume(corpus):
@@ -249,7 +149,7 @@ def test_sparse_near_dup_recall_and_candidate_volume(corpus):
     (measured 0.571 at sf0.01) with structural precision 1.0, and
     (b) actually BE sparse: the scored candidate volume — Σ per-cell
     C(n,2) from the occupancy metric — stays under 12% of all pairs
-    (measured 7.3%), vs ~40% for the dense 8x4/0.4 demo config. (b)
+    (measured 7.3%), vs ~40% for a dense 8x4/0.4 config. (b)
     is the 100 TB claim; a tuning change that silently re-densifies
     the join fails here with a number."""
     emb, ids, mat = corpus
@@ -269,7 +169,6 @@ def test_sparse_near_dup_recall_and_candidate_volume(corpus):
             threshold=0.45,
             bits_per_table=8,
             num_tables=16,
-            plane_kind="rademacher",
             bucket_cap=64,
         ).collect()
     }
@@ -277,9 +176,7 @@ def test_sparse_near_dup_recall_and_candidate_volume(corpus):
     assert len(got & exact) / len(exact) >= 0.40  # measured 0.571
 
     scored = (
-        S.lsh_bucket_occupancy(
-            emb, bits_per_table=8, num_tables=16, plane_kind="rademacher"
-        )
+        S.lsh_bucket_occupancy(emb, bits_per_table=8, num_tables=16)
         .agg(F.sum("n_pairs"))
         .collect()[0][0]
     )
@@ -307,15 +204,10 @@ def test_bucket_cap_drops_hot_buckets(spark):
         pd.DataFrame({"vec_id": [r[0] for r in rows], "embedding": [r[1] for r in rows]})
     )
     uncapped = S.embedding_near_dup_pairs(
-        df, threshold=0.99, bits_per_table=8, num_tables=4, plane_kind="rademacher"
+        df, threshold=0.99, bits_per_table=8, num_tables=4
     )
     capped = S.embedding_near_dup_pairs(
-        df,
-        threshold=0.99,
-        bits_per_table=8,
-        num_tables=4,
-        plane_kind="rademacher",
-        bucket_cap=16,
+        df, threshold=0.99, bits_per_table=8, num_tables=4, bucket_cap=16
     )
     # identical hot vectors: C(45,2)=990 pairs at cosine 1.0 uncapped
     assert uncapped.count() == n_hot * (n_hot - 1) // 2

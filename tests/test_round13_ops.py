@@ -62,17 +62,13 @@ def test_stray_delta_dir_skipped_not_fatal(spark, tmp_path):
     assert after == before
 
 
-def test_stray_delta_dir_skipped_bm25_and_ivf_listings(tmp_path):
+def test_stray_delta_dir_skipped_bm25_listing(tmp_path):
     from dask_datapipeline_spark.operators.bm25 import _delta_dirs
-    from dask_datapipeline_spark.operators.ivf_index import _ivf_delta_dirs
 
     fs = IndexFS.for_path(str(tmp_path))
     os.makedirs(tmp_path / "postings" / "delta=3")
     os.makedirs(tmp_path / "postings" / "delta=bad")
     assert _delta_dirs(fs, str(tmp_path), "postings") == ["delta=3"]
-    os.makedirs(tmp_path / "vectors" / "delta=2")
-    os.makedirs(tmp_path / "vectors" / "delta=oops")
-    assert _ivf_delta_dirs(fs, str(tmp_path)) == ["delta=2"]
 
 
 # ----- stranded marker temps are swept (VERDICT r12 item 6) -------------

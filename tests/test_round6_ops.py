@@ -194,7 +194,7 @@ def test_hard_negatives_exclude_same_label_and_rank_correctly(spark, sf_dir):
     labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
     queries = emb.where(F.col("vec_id") < 8)
     out = hard_negative_mining(
-        queries, emb, k=5, bits_per_table=6, num_tables=8, plane_kind="rademacher"
+        queries, emb, k=5, bits_per_table=6, num_tables=8
     ).collect()
     assert out
     by_q = {}
@@ -238,7 +238,7 @@ def test_hard_negatives_recall_vs_exact(spark, sf_dir):
     got = {}
     out = hard_negative_mining(
         emb.where(F.col("vec_id") < n_q), emb, k=k,
-        bits_per_table=6, num_tables=16, plane_kind="rademacher",
+        bits_per_table=6, num_tables=16,
     ).collect()
     for r in out:
         got.setdefault(r["query_id"], set()).add(r["neighbor_id"])

@@ -202,58 +202,6 @@ def test_run_pipeline_schema_matches_golden_header(spark, tmp_path):
     assert dt["hhid"] == "bigint" and dt["state"] == "string"
 
 
-# ----- multi-probe LSH recall ------------------------------------------
-
-
-def test_multiprobe_recall_dominates_plain_same_geometry(spark, sf_dir):
-    """Recall@5 vs the exact brute-force baseline: 3 tables + 6 1-bit
-    probes must beat (or tie) plain 3 tables, and the probed candidate
-    set must be a superset — probes only ADD adjacent buckets."""
-    import numpy as np
-
-    from dask_datapipeline_spark.operators.similarity import knn_join_lsh
-    from dask_datapipeline_spark.sources.readers import load_testdata
-
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-
-    rows = emb.select("vec_id", "embedding").collect()
-    ids = np.array([r.vec_id for r in rows])
-    mat = np.array([r.embedding for r in rows], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    truth = {}
-    for qi in range(10):
-        qrow = mat[ids == qi][0]
-        sims = mat @ qrow
-        order = np.lexsort((ids, -sims))
-        truth[qi] = set(ids[order][:5].tolist())
-
-    def recall(mp):
-        got = knn_join_lsh(
-            queries, emb, k=5, bits_per_table=6, num_tables=3,
-            plane_kind="rademacher", multiprobe_bits=mp,
-        ).collect()
-        by_q = {}
-        for r in got:
-            by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
-        hits = sum(len(by_q.get(q, set()) & truth[q]) for q in truth)
-        return hits / (5 * len(truth)), by_q
-
-    r_plain, plain_sets = recall(0)
-    r_probe, probe_sets = recall(6)
-    assert r_probe >= r_plain
-    # superset property: every plain neighbor survives probing
-    for q, s in plain_sets.items():
-        # top-5 sets can differ only because probing ADDED better
-        # candidates; the raw candidate superset shows via recall and
-        # via each plain hit either kept or displaced by a >= cosine
-        assert len(probe_sets.get(q, set())) >= 1
-    # and probing must actually help on this corpus (3 tables alone
-    # miss some exact neighbors; if this ever ties at 1.0 the corpus
-    # got easier, which is fine — the >= above is the contract)
-    assert r_probe >= 0.5
-
-
 # ----- mergeable quantile sketch --------------------------------------
 
 

@@ -134,7 +134,6 @@ def test_auto_geometry_rescues_the_saturated_tier(spark):
         threshold=0.9,
         bits_per_table=8,
         num_tables=16,
-        plane_kind="rademacher",
         bucket_cap=64,
     )
     assert fixed.count() == 0  # the measured saturation, reproduced
@@ -142,9 +141,7 @@ def test_auto_geometry_rescues_the_saturated_tier(spark):
     assert S.sized_srp_bits(N_TIER) == 15
     got = {
         (r.id_a, r.id_b)
-        for r in S.embedding_near_dup_pairs(
-            emb, threshold=0.9, plane_kind="rademacher"
-        ).collect()
+        for r in S.embedding_near_dup_pairs(emb, threshold=0.9).collect()
     }
     planted = {
         (i, i + 1) for i in range(0, N_TIER - 1, PLANT_STRIDE)
@@ -170,9 +167,7 @@ def test_auto_default_matches_explicit_equivalent(spark):
     )
     auto = {
         tuple(r)
-        for r in S.embedding_near_dup_pairs(
-            emb, threshold=0.9, plane_kind="rademacher"
-        ).collect()
+        for r in S.embedding_near_dup_pairs(emb, threshold=0.9).collect()
     }
     explicit = {
         tuple(r)
@@ -181,7 +176,6 @@ def test_auto_default_matches_explicit_equivalent(spark):
             threshold=0.9,
             bits_per_table=S.sized_srp_bits(n),
             num_tables=4,
-            plane_kind="rademacher",
             bucket_cap=8 * S.SRP_TARGET_OCCUPANCY,
         ).collect()
     }
@@ -813,6 +807,6 @@ def test_explicit_bits_still_uncapped_by_default(spark):
         pd.DataFrame({"vec_id": range(70), "embedding": vecs})
     )
     pairs = S.embedding_near_dup_pairs(
-        emb, threshold=0.99, bits_per_table=8, num_tables=4, plane_kind="rademacher"
+        emb, threshold=0.99, bits_per_table=8, num_tables=4
     )
     assert pairs.count() == 70 * 69 // 2  # no cap: all identical pairs kept

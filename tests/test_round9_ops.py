@@ -27,9 +27,6 @@ And the round-9 operator families:
   precision bounds, streaming restart/replay;
 - BM25: python-twin scoring (round-9dp decimal sums), k-cut
   tiebreaks;
-- int8 quantization/k-NN: python-twin codes (half-AWAY rounding),
-  reconstruction bound, neighborhood preservation, materialized-codes
-  parity, recall vs the float exact top-k;
 - WARC codec: binary-safe bodies, non-response skipping, real
   binaryFile ``*.warc.gz`` ingest.
 """
@@ -691,128 +688,6 @@ def test_quality_funnel_is_monotonic_and_consistent(spark):
     assert row["n_final_kept"] > 0  # gopher floor non-degenerate
 
 
-# ----- int8 embedding quantization (functions/vectors.py) -------------------
-
-
-def test_int8_quantize_pinned_against_python_twin(spark):
-    from dask_datapipeline_spark.functions.vectors import (
-        INT8_LEVELS,
-        int8_quantize_cols,
-    )
-
-    vecs = {
-        1: [0.5, -1.0, 0.25, 0.0],
-        2: [0.0, 0.0, 0.0],  # all-zero: guard path
-        3: [127.0, -127.0, 1.0],
-        4: [1e-9, -1e-9],
-    }
-    df = spark.createDataFrame(
-        list(vecs.items()), "vec_id long, embedding array<double>"
-    )
-    sig = int8_quantize_cols(F.col("embedding"))
-    got = {
-        r["vec_id"]: r.asDict()
-        for r in df.select(
-            "vec_id",
-            sig["scale"].alias("scale"),
-            sig["codes"].alias("codes"),
-            sig["n_saturated"].alias("n_saturated"),
-            sig["err_max"].alias("err_max"),
-        ).collect()
-    }
-    for vid, v in vecs.items():
-        amax = max(abs(x) for x in v)
-        if amax == 0:
-            assert got[vid]["scale"] == 0.0
-            assert got[vid]["codes"] == [0] * len(v)
-            assert got[vid]["err_max"] == 0.0
-            continue
-        scale = amax / INT8_LEVELS
-        # python round is half-to-EVEN; Spark/DuckDB round is half-
-        # away — replicate half-away explicitly
-        import math
-
-        def away(x):
-            return int(math.floor(x + 0.5)) if x >= 0 else -int(
-                math.floor(-x + 0.5)
-            )
-
-        codes = [away(x / scale) for x in v]
-        assert got[vid]["scale"] == scale
-        assert got[vid]["codes"] == codes, (vid, got[vid]["codes"], codes)
-        assert got[vid]["n_saturated"] == sum(
-            1 for c in codes if abs(c) == INT8_LEVELS
-        )
-        # reconstruction bound: max error <= scale/2 (+1ulp headroom)
-        assert got[vid]["err_max"] <= scale / 2 * (1 + 1e-12)
-        assert got[vid]["err_max"] == max(
-            abs(x - c * scale) for x, c in zip(v, codes)
-        )
-    # extremes map to the full symmetric range, never -128
-    assert got[3]["codes"][:2] == [127, -127] and got[3]["n_saturated"] == 2
-
-
-def test_int8_quantize_preserves_neighborhoods(spark):
-    """Quantize-reconstruct must keep cosine similarity within the
-    scalar-quantization error envelope on the real embedding table."""
-    from dask_datapipeline_spark.functions.vectors import (
-        cosine,
-        int8_quantize_cols,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .where(F.col("embedding").isNotNull())
-        .limit(50)
-    )
-    sig = int8_quantize_cols(F.col("embedding"))
-    recon = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("orig"),
-        F.transform(
-            sig["codes"], lambda c: c.cast("double") * sig["scale"]
-        ).alias("recon"),
-    )
-    rows = recon.select(
-        "vec_id", cosine("orig", "recon").alias("cos")
-    ).collect()
-    assert rows and all(r["cos"] > 0.999 for r in rows), [
-        (r["vec_id"], r["cos"]) for r in rows if not (r["cos"] or 0) > 0.999
-    ]
-
-
-def test_int8_topk_recall_vs_float_exact(spark):
-    """int8 scoring must agree with the float exact top-k almost
-    everywhere — scalar quantization perturbs cosines by ~err/|x|,
-    far below the corpus' neighbor gaps for most of the top-10."""
-    from dask_datapipeline_spark.functions.vectors import (
-        cosine,
-        int8_cosine_topk,
-        int8_quantize_py,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    qc = int8_quantize_py([float(v) for v in qvec])
-    got = [
-        r["vec_id"]
-        for r in int8_cosine_topk(emb, "embedding", "vec_id", qc, k=10).collect()
-    ]
-    qlit = F.array(*[F.lit(float(v)) for v in qvec]).cast("array<double>")
-    exact = [
-        r["vec_id"]
-        for r in emb.select(
-            "vec_id", cosine(F.col("embedding").cast("array<double>"), qlit).alias("c")
-        )
-        .orderBy(F.desc_nulls_last("c"), F.asc("vec_id"))
-        .limit(10)
-        .collect()
-    ]
-    assert len(set(got) & set(exact)) >= 8, (got, exact)
-    # the query itself is always rank 1 in both
-    assert got[0] == 0 and exact[0] == 0
-
-
 def test_c4_clean_text_is_line_stable(spark):
     """Re-cleaning the cleaned text is a no-op on the LINES: every
     surviving line already ends in terminal punctuation with >=5 words
@@ -885,34 +760,6 @@ def test_gopher_signals_bounded_on_arbitrary_unicode(spark):
             else:
                 assert 0.0 <= r[n] <= 1.0, (n, r[n])
         assert r["keep"] in (True, False)
-
-
-def test_int8_topk_from_materialized_codes_matches(spark, tmp_path):
-    """Persist only the codes (the 1-byte/dim storage tier), reload,
-    score — must equal the on-the-fly quantize-and-score exactly."""
-    from dask_datapipeline_spark.functions.vectors import (
-        int8_cosine_topk,
-        int8_cosine_topk_from_codes,
-        int8_quantize_cols,
-        int8_quantize_py,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    qc = int8_quantize_py([float(v) for v in qvec])
-    sig = int8_quantize_cols(F.col("embedding"))
-    path = str(tmp_path / "codes")
-    emb.where(F.col("embedding").isNotNull()).select(
-        "vec_id", sig["codes"].alias("codes")
-    ).write.parquet(path)
-    a = [tuple(r) for r in int8_cosine_topk(emb, "embedding", "vec_id", qc).collect()]
-    b = [
-        tuple(r)
-        for r in int8_cosine_topk_from_codes(
-            spark.read.parquet(path), "codes", "vec_id", qc
-        ).collect()
-    ]
-    assert a == b
 
 
 # ----- WARC codec (sources/warc.py) -----------------------------------------

@@ -229,68 +229,3 @@ def test_leakage_safe_split_never_straddles_clusters(spark):
         "train", "valid", "test",
     }
 
-
-# ------------------------- product quantization ----------------------
-
-
-def test_pq_topk_self_match_for_codebook_vectors(spark):
-    """Queries 0..9 ARE codebook vectors (lowest 16 ids), so every
-    sub-code reconstructs them exactly: ADC self-distance is 0.0 and
-    self ranks first. Also: ADC distances are never negative."""
-    from dask_datapipeline_spark.operators.similarity import pq_topk
-    from dask_datapipeline_spark.sources.readers import load_testdata
-
-    emb = load_testdata(spark, "/root/testdata/sf0.001", "embeddings")
-    out = pq_topk(emb.filter(F.col("vec_id") < 10), emb, k=3).collect()
-    top1 = {r.query_id: r for r in out if r.rn == 1}
-    assert set(top1) == set(range(10))
-    for q, r in top1.items():
-        assert r.neighbor_id == q and r.adc_dist == 0.0
-    assert all(r.adc_dist >= 0.0 for r in out)
-
-
-def test_pq_rejects_bad_shapes(spark):
-    from dask_datapipeline_spark.operators.similarity import pq_topk
-    from dask_datapipeline_spark.sources.readers import load_testdata
-
-    emb = load_testdata(spark, "/root/testdata/sf0.001", "embeddings")
-    with pytest.raises(ValueError, match="divisible"):
-        pq_topk(emb.limit(5), emb, k=2, n_subspaces=7)
-    empty = emb.where(F.lit(False))
-    with pytest.raises(ValueError, match="empty"):
-        pq_topk(emb.limit(2), empty, k=2)
-
-
-def test_ivfpq_self_match_and_probe_pruning(spark):
-    """Queries are codebook vectors: own cell is probed first (cos=1)
-    and ADC self-distance is 0 → rank-1 self-match. Neighbor sets are
-    a subset of the probed cells' members (pruning is real)."""
-    from dask_datapipeline_spark.operators.similarity import ivfpq_topk
-    from dask_datapipeline_spark.sources.readers import load_testdata
-
-    emb = load_testdata(spark, "/root/testdata/sf0.001", "embeddings")
-    out = ivfpq_topk(emb.filter(F.col("vec_id") < 10), emb, k=3).collect()
-    top1 = {r.query_id: r for r in out if r.rn == 1}
-    assert set(top1) == set(range(10))
-    for q, r in top1.items():
-        assert r.neighbor_id == q and r.adc_dist == 0.0
-
-
-def test_ivfpq_residual_mode_shape_and_nonneg(spark):
-    """Residual mode: full k per query, non-negative ADC distances,
-    and residual encoding actually changes the coding (different
-    adc_dist vs raw mode for at least one pair). Cross-engine
-    exactness is the oracle gate's job."""
-    from dask_datapipeline_spark.operators.similarity import ivfpq_topk
-    from dask_datapipeline_spark.sources.readers import load_testdata
-
-    emb = load_testdata(spark, "/root/testdata/sf0.001", "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    res = ivfpq_topk(q, emb, k=5, residual=True).collect()
-    raw = ivfpq_topk(q, emb, k=5, residual=False).collect()
-    assert len(res) == 50 and len(raw) == 50
-    assert all(r.adc_dist >= 0.0 for r in res)
-    r_map = {(r.query_id, r.neighbor_id): r.adc_dist for r in res}
-    w_map = {(r.query_id, r.neighbor_id): r.adc_dist for r in raw}
-    common = set(r_map) & set(w_map)
-    assert any(r_map[p] != w_map[p] for p in common)

@@ -26,7 +26,6 @@ SHOWCASE = [
     ("knn_join_lsh", "bucket equi-join (shuffle_hash) over Arrow-batched SRP buckets; window top-k"),
     ("extra:bloom_semi_join", "the bloom PROBE branch (events scan -> literal-bitmap Filter) has no Exchange before its aggregate — the comparison aggregates around it shuffle as any groupBy does; the probe-only zero-exchange shape is pinned by tests/test_plan_shapes.py"),
     ("sql_q3ish", "SQL entry point: broadcast joins + partial aggregation under AQE"),
-    ("extra:knn_join_ivfpq", "IVF-PQ: codes-only index scan -> broadcast probe join -> ADC mapInPandas -> window top-k; no vector shuffle anywhere"),
     ("semantic_dedup", "SemDeDup: one Arrow cell-assignment pass -> cell-keyed shuffle_hash self-join -> Arrow strict-order cosine verify; codebook in the UDF closure, never a join"),
     ("extra:boilerplate_strip", "boilerplate set broadcast into a LEFT ANTI join over the persisted segment table — segment text never shuffles; df count over fixed-width rows"),
     ("extra:winnow_near_dup", "winnowing: fingerprint selection as per-row array exprs (no exchange before the explode); df-capped fingerprint equi-join moves only 8-byte hashes"),

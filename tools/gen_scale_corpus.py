@@ -23,7 +23,7 @@ the data generator, not the operator).
 - embeddings: tile k>0 applies a deterministic random ORTHOGONAL
   rotation (seed k; QR of a Gaussian matrix) — an isometry, so every
   within-tile cosine/neighborhood is preserved exactly, while the
-  SRP/IVF bucket assignments of each tile are genuinely re-mixed.
+  SRP bucket assignments of each tile are genuinely re-mixed.
   (A per-tile global sign flip also preserves geometry but maps whole
   tiles into sign-mirrored SRP buckets — measured: bucket occupancy
   inflates ~×tiles, the bucket_cap guard prunes nearly everything,

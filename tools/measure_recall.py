@@ -1,10 +1,9 @@
-"""Measure recall@k of every approximate ANN path against exact
-brute force, at a given scale factor (default sf0.01).
+"""Measure recall of every approximate similarity path (SRP-LSH k-NN,
+SRP-LSH near-dup pairs, SemDeDup) against exact brute force, at a
+given scale factor (default sf0.01).
 
 Ground truth is computed in-process from the collected embeddings
-(exact cosine top-k for the LSH/IVF family, exact squared-L2 top-k
-for the PQ family — each method is scored against the metric it
-approximates). Prints one markdown table (pasted into docs/SCALE.md
+(exact cosine top-k, exact all-pairs cosine). Prints one markdown table (pasted into docs/SCALE.md
 §Similarity) plus a JSON line for scripting.
 
 Usage: python3 tools/measure_recall.py [sf_dir] [n_queries] [k]
@@ -27,12 +26,12 @@ from dask_datapipeline_spark.session import get_spark  # noqa: E402
 from dask_datapipeline_spark.sources.readers import load_testdata  # noqa: E402
 
 
-def exact_topk(ids: np.ndarray, score: np.ndarray, k: int, descending: bool) -> list[set]:
-    """Per-query exact top-k id sets under (score, id asc) total order."""
+def exact_topk(ids: np.ndarray, score: np.ndarray, k: int) -> list[set]:
+    """Per-query exact top-k id sets under (score desc, id asc) total
+    order."""
     out = []
-    order_score = -score if descending else score
     for qi in range(score.shape[0]):
-        perm = np.lexsort((ids, order_score[qi]))[:k]
+        perm = np.lexsort((ids, -score[qi]))[:k]
         out.append(set(ids[perm].tolist()))
     return out
 
@@ -63,11 +62,7 @@ def main() -> None:
 
     norms = np.linalg.norm(mat, axis=1)
     cos = (q_mat @ mat.T) / (np.linalg.norm(q_mat, axis=1)[:, None] * norms[None, :])
-    l2 = (
-        (q_mat**2).sum(1)[:, None] - 2 * (q_mat @ mat.T) + (mat**2).sum(1)[None, :]
-    )
-    cos_truth = dict(zip(q_ids.tolist(), exact_topk(ids, cos, k, descending=True)))
-    l2_truth = dict(zip(q_ids.tolist(), exact_topk(ids, l2, k, descending=False)))
+    cos_truth = dict(zip(q_ids.tolist(), exact_topk(ids, cos, k)))
 
     runs: list[tuple[str, float]] = []
 
@@ -76,45 +71,16 @@ def main() -> None:
             S.knn_join_lsh(queries, emb, k=k, num_tables=nt), cos_truth, k
         )
         runs.append((f"LSH num_tables={nt} bits=8", r))
-    for npr in (2, 4, 8):
-        for tr in (False, True):
-            r = recall_of(
-                S.ivf_topk(queries, emb, k=k, n_cells=16, n_probe=npr, trained=tr),
-                cos_truth,
-                k,
-            )
-            runs.append((f"IVF n_probe={npr}{' trained' if tr else ''}", r))
-    for tr in (False, True):
-        r = recall_of(
-            S.pq_topk(queries, emb, k=k, trained=tr), l2_truth, k
-        )
-        runs.append((f"PQ m=8 n_codes=16{' trained' if tr else ''}", r))
-    for res in (False, True):
-        for tr in (False, True):
-            r = recall_of(
-                S.ivfpq_topk(queries, emb, k=k, n_probe=4, residual=res, trained=tr),
-                l2_truth,
-                k,
-            )
-            runs.append(
-                (
-                    "IVFPQ n_probe=4"
-                    + (" residual" if res else "")
-                    + (" trained" if tr else ""),
-                    r,
-                )
-            )
 
-    # pair-recall of the near-dup configs (dense demo vs sparse) and
+    # pair-recall of the near-dup configs (dense vs sparse) and
     # SemDeDup, against exact all-pairs / all-pairs dup truth
     nrm = mat / norms[:, None]
     sims = nrm @ nrm.T
     iu = np.triu_indices(len(ids), 1)
     for label, thr, kw in [
-        ("near-dup DENSE 8x4 thr=0.4", 0.4,
-         dict(bits_per_table=4, num_tables=8, plane_kind="rademacher")),
+        ("near-dup DENSE 8x4 thr=0.4", 0.4, dict(bits_per_table=4, num_tables=8)),
         ("near-dup SPARSE 16x8 thr=0.45 cap=64", 0.45,
-         dict(bits_per_table=8, num_tables=16, plane_kind="rademacher", bucket_cap=64)),
+         dict(bits_per_table=8, num_tables=16, bucket_cap=64)),
     ]:
         exact_pairs = {
             (int(ids[iu[0][p]]), int(ids[iu[1][p]]))
@@ -131,19 +97,17 @@ def main() -> None:
     for a in range(len(ids)):
         if a and (sims[a, :a] >= 0.4).any():
             exact_dup.add(int(ids[a]))
-    for tr in (False, True):
-        res = {
-            r[0]: r["is_dup"]
-            for r in S.semantic_dedup(emb, threshold=0.4, n_cells=16, trained=tr).collect()
-        }
-        flagged = {i for i, dp in res.items() if dp}
-        runs.append(
-            (
-                f"SemDeDup 16 cells thr=0.4{' trained' if tr else ''} "
-                f"(dup recall, {len(exact_dup)} true dups)",
-                len(flagged & exact_dup) / max(len(exact_dup), 1),
-            )
+    res = {
+        r[0]: r["is_dup"]
+        for r in S.semantic_dedup(emb, threshold=0.4, n_cells=16).collect()
+    }
+    flagged = {i for i, dp in res.items() if dp}
+    runs.append(
+        (
+            f"SemDeDup 16 cells thr=0.4 (dup recall, {len(exact_dup)} true dups)",
+            len(flagged & exact_dup) / max(len(exact_dup), 1),
         )
+    )
 
     print(f"| method | recall@{k} ({len(ids)} vectors, {n_q} queries) |")
     print("|---|---|")

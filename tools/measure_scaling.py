@@ -66,7 +66,6 @@ QUERIES = [
     ("embedding_near_dup", "embeddings"),
     ("embedding_near_dup_scaled", "embeddings"),
     ("knn_join_lsh", "embeddings"),
-    ("knn_join_ivf", "embeddings"),
     ("training_shards", "documents"),
     ("multimodal_features_scaled", "media"),
     ("image_near_dup_scaled", "media"),
@@ -86,7 +85,6 @@ QUERIES = [
     ("main_content_scaled", "documents"),
     ("pack_input_ids_scaled", "documents"),
     ("unigram_train_scaled", "documents"),
-    ("ivf_drift_scaled", "embeddings"),
     ("script_route_scaled", "documents"),
     ("cjk_near_dup_scaled", "documents"),
     ("routed_near_dup", "documents"),
@@ -127,7 +125,6 @@ def _embedding_near_dup_scaled(spark, sf_dir, n_rows):
         threshold=0.9,
         bits_per_table=bits,
         num_tables=16,
-        plane_kind="rademacher",
         bucket_cap=64,
     )
 
@@ -509,44 +506,6 @@ def _unigram_train_scaled(spark, sf_dir, n_rows):
     return unigram_token_count(docs, "doc_id", "text", model, max_piece_len=6)
 
 
-_IVF_DRIFT_CACHE: dict[str, str] = {}
-
-
-def _ivf_drift_scaled(spark, sf_dir, n_rows):
-    """Codebook-drift report at the tier (round 12): the index —
-    base = even vec_ids as built, one +0.5-shifted delta of the odd
-    half — builds ONCE per corpus dir (the cold number includes it;
-    the WARM number is the pure report, which is what the exponent
-    reports). The report is one Arrow cosine pass over the index scan
-    plus bounded (deltas × cells) aggregates — claim alpha ≈ 1
-    scan-bound. The filter references the computed columns so count()
-    cannot elide the aggregates (CLAUDE.md)."""
-    import os as _os
-    import tempfile as _tf
-
-    from dask_datapipeline_spark.operators.ivf_index import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_drift_report,
-    )
-
-    idx = _IVF_DRIFT_CACHE.get(sf_dir)
-    if idx is None:
-        idx = _os.path.join(_tf.mkdtemp(prefix="ddps_scale_ivfdrift_"), "idx")
-        emb = load_testdata(spark, sf_dir, "embeddings")
-        build_ivf_index(emb.where(F.col("vec_id") % 2 == 0), idx, n_cells=16)
-        shifted = emb.where(F.col("vec_id") % 2 == 1).select(
-            "vec_id",
-            F.transform("embedding", lambda e: e + F.lit(0.5)).alias(
-                "embedding"
-            ),
-        )
-        append_to_ivf_index(shifted, idx, 0)
-        _IVF_DRIFT_CACHE[sf_dir] = idx
-    rep = ivf_drift_report(spark, idx)
-    return rep.where(F.col("mean_residual") + F.col("occ_l1") >= 0)
-
-
 _LID_W = None
 
 
@@ -625,7 +584,6 @@ CUSTOM = {
     "main_content_scaled": _main_content_scaled,
     "pack_input_ids_scaled": _pack_input_ids_scaled,
     "unigram_train_scaled": _unigram_train_scaled,
-    "ivf_drift_scaled": _ivf_drift_scaled,
 }
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
