@@ -242,35 +242,6 @@ def q_join_inner(spark, sf_dir):
 
 
 @register_extra(
-    "join_stats_hinted",
-    """
-SELECT o.o_orderkey, o.o_custkey, c.c_name, c.c_mktsegment, o.o_totalprice
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-""",
-    "join_inner's stats-driven twin: equi_join(stats=, broadcast_rows=) prices "
-    "BOTH sides from table_stats rows and hints the smaller fitting side "
-    "itself instead of trusting AQE's byte threshold (which the scaling "
-    "battery measured flipping broadcast->SMJ mid-curve). Shares join_inner's "
-    "oracle verbatim — an exact match proves the physical pricing is free; "
-    "the plan flip at the pinned threshold is asserted in tests/"
-    "test_round11_ops.py",
-)
-def q_join_stats_hinted(spark, sf_dir):
-    from dask_datapipeline_spark.operators.stats import table_stats
-
-    o = load_testdata(spark, sf_dir, "orders")
-    c = load_testdata(spark, sf_dir, "customer").withColumnRenamed(
-        "c_custkey", "o_custkey"
-    )
-    st = (
-        table_stats(o, ["o_custkey"]).first().asDict(),
-        table_stats(c, ["o_custkey"]).first().asDict(),
-    )
-    j = equi_join(o, c, on="o_custkey", stats=st, broadcast_rows=1_000_000)
-    return j.select("o_orderkey", "o_custkey", "c_name", "c_mktsegment", "o_totalprice")
-
-
-@register_extra(
     "join_left",
     """
 SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice
@@ -537,150 +508,6 @@ def q_fold_join(spark, sf_dir):
     c = group_agg(li, "l_orderkey", AggSpec("l_extendedprice", "max", "max_price"))
     out = fold_join([o, a, b, c], on="l_orderkey", how="inner")
     return out.select("l_orderkey", "o_totalprice", "sum_qty", "n_lines", "max_price")
-
-
-@register_extra(
-    "join_order_planned",
-    f"""
-WITH a AS (SELECT l_orderkey, {_dsum('l_quantity', 'sum_qty')} FROM lineitem GROUP BY l_orderkey),
-     s AS (SELECT o_orderkey AS l_orderkey, o_totalprice FROM orders
-           WHERE o_totalprice > 150000)
-SELECT o.o_orderkey AS l_orderkey, o.o_orderpriority, a.sum_qty, s.o_totalprice
-FROM orders o
-JOIN a ON o.o_orderkey = a.l_orderkey
-JOIN s ON o.o_orderkey = s.l_orderkey
-""",
-    "Stats-driven n-ary fold: fold_join(order='stats') runs the ANALYZE pass "
-    "(operators/stats.py::table_stats) on each input's join key and reorders "
-    "the left-deep fold by ascending estimated join cardinality "
-    "(plan_join_order — System-R greedy over the containment estimate), so "
-    "the selective filtered input joins FIRST and every later intermediate "
-    "is pre-shrunk. Inner-join semantics are order-independent, so the "
-    "oracle replays the unordered joins and an exact match proves the "
-    "reorder is free",
-)
-def q_join_order_planned(spark, sf_dir):
-    li = load_testdata(spark, sf_dir, "lineitem")
-    orders = load_testdata(spark, sf_dir, "orders")
-    o = orders.select(F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority")
-    a = group_agg(li, "l_orderkey", AggSpec("l_quantity", "sum_exact", "sum_qty", round_scale=2))
-    s = orders.where(F.col("o_totalprice") > 150000).select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    out = fold_join([o, a, s], on="l_orderkey", how="inner", order="stats")
-    return out.select("l_orderkey", "o_orderpriority", "sum_qty", "o_totalprice")
-
-
-@register_extra(
-    "join_order_histogram",
-    f"""
-WITH a AS (SELECT l_orderkey, {_dsum('l_quantity', 'sum_qty')} FROM lineitem GROUP BY l_orderkey),
-     s AS (SELECT o_orderkey AS l_orderkey, o_totalprice FROM orders
-           WHERE o_totalprice > 150000)
-SELECT o.o_orderkey AS l_orderkey, o.o_orderpriority, a.sum_qty, s.o_totalprice
-FROM orders o
-JOIN a ON o.o_orderkey = a.l_orderkey
-JOIN s ON o.o_orderkey = s.l_orderkey
-""",
-    "Filter-aware stats-driven fold: the filtered input's stats are PRICED, "
-    "not re-ANALYZEd — equi_depth_bounds builds the o_totalprice equi-depth "
-    "histogram (the two-pass distributed ntile), estimate_range_rows prices "
-    "the >150000 predicate off it, apply_selectivity scales the unfiltered "
-    "ANALYZE row (Yao ndv survival), and plan_join_order folds on the priced "
-    "stats — the full CBO path (histogram -> selectivity -> cardinality -> "
-    "join order) in one query. Same oracle as join_order_planned: inner "
-    "reordering is result-free",
-)
-def q_join_order_histogram(spark, sf_dir):
-    from dask_datapipeline_spark.operators.stats import (
-        apply_selectivity,
-        equi_depth_bounds,
-        estimate_range_rows,
-        table_stats,
-    )
-
-    li = load_testdata(spark, sf_dir, "lineitem")
-    orders = load_testdata(spark, sf_dir, "orders")
-    o = orders.select(F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority")
-    a = group_agg(li, "l_orderkey", AggSpec("l_quantity", "sum_exact", "sum_qty", round_scale=2))
-    s = orders.where(F.col("o_totalprice") > 150000).select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    # ANALYZE the UNFILTERED inputs once (amortized in production);
-    # the filtered input is priced, never rescanned
-    st_orders = table_stats(orders, ["o_orderkey"]).first().asDict()
-    st_a = table_stats(a, ["l_orderkey"]).first().asDict()
-    hist = [
-        r.asDict()
-        for r in equi_depth_bounds(
-            orders, "o_totalprice", n_buckets=10, unique_key="o_orderkey"
-        ).collect()
-    ]
-    n_vals = sum(r["n_rows"] for r in hist)
-    sel = estimate_range_rows(hist, 150000.0, None) / n_vals if n_vals else 0.0
-    st_s = apply_selectivity(st_orders, sel)
-    # the priced small side also gets the PHYSICAL half of the CBO
-    # move: an explicit broadcast hint whenever its estimated
-    # surviving keys are dimension-sized (100k rows ~ a few MB of key
-    # pairs) — post-filter sizes are what Catalyst's static estimate
-    # can't see and the histogram pricing can
-    out = fold_join(
-        [o, a, s], on="l_orderkey", how="inner", order="stats",
-        stats=[st_orders, st_a, st_s], broadcast_rows=100_000,
-    )
-    return out.select("l_orderkey", "o_orderpriority", "sum_qty", "o_totalprice")
-
-
-@register_extra(
-    "join_order_auto_stats",
-    f"""
-WITH a AS (SELECT l_orderkey, {_dsum('l_quantity', 'sum_qty')} FROM lineitem GROUP BY l_orderkey),
-     s AS (SELECT o_orderkey AS l_orderkey, o_totalprice FROM orders
-           WHERE o_totalprice > 150000)
-SELECT o.o_orderkey AS l_orderkey, o.o_orderpriority, a.sum_qty, s.o_totalprice
-FROM orders o
-JOIN a ON o.o_orderkey = a.l_orderkey
-JOIN s ON o.o_orderkey = s.l_orderkey
-""",
-    "Auto-loaded stats catalog for the CBO path (round 14, VERDICT r13 "
-    "item 4): each fold input is ANALYZEd once to an on-disk snapshot "
-    "(operators/stats.py::write_table_stats_snapshot — the exact layout "
-    "the streaming ANALYZE sink maintains), stats_catalog() loads the "
-    "directory as {table: {column: stats}}, and "
-    "fold_join(stats='auto', catalog=..., tables=...) resolves each "
-    "input's stats row by its table tag with ZERO scans at plan time. "
-    "Same query, oracle and (pytest-pinned) plan order as "
-    "join_order_planned — the connection from materialized snapshots to "
-    "the planner is the new part. Snapshot staging is FIXTURE-ONLY "
-    "scratch I/O; production snapshots are maintained by the streaming "
-    "sink or a scheduled ANALYZE",
-)
-def q_join_order_auto_stats(spark, sf_dir):
-    from dask_datapipeline_spark.operators.stats import (
-        stats_catalog,
-        write_table_stats_snapshot,
-    )
-
-    li = load_testdata(spark, sf_dir, "lineitem")
-    orders = load_testdata(spark, sf_dir, "orders")
-    o = orders.select(F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority")
-    a = group_agg(li, "l_orderkey", AggSpec("l_quantity", "sum_exact", "sum_qty", round_scale=2))
-    s = orders.where(F.col("o_totalprice") > 150000).select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    # FIXTURE-ONLY staging: materialize the three snapshots the way a
-    # production deployment would have them already sitting on disk
-    # (gate_tmpdir, round-14 review: repeated gate runs must reuse ONE
-    # per-(query, sf, app) dir, never leak a fresh mkdtemp each time)
-    root = gate_tmpdir(spark, sf_dir, "stats_catalog")
-    for name, df in (("o", o), ("a", a), ("s", s)):
-        write_table_stats_snapshot(df, ["l_orderkey"], f"{root}/{name}")
-    cat = stats_catalog(spark, root)
-    out = fold_join(
-        [o, a, s], on="l_orderkey", how="inner", order="stats",
-        stats="auto", catalog=cat, tables=["o", "a", "s"],
-    )
-    return out.select("l_orderkey", "o_orderpriority", "sum_qty", "o_totalprice")
 
 
 # --------------------------------------------------------------------
@@ -997,61 +824,6 @@ def q_skew_join_salted(spark, sf_dir):
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
 
-
-@register_extra(
-    "skew_join_aqe",
-    """
-WITH amp AS (
-  SELECT user_id, value,
-         unnest(generate_series(1, CASE WHEN user_id = (SELECT min(user_id) FROM events)
-                                        THEN 4096 ELSE 1 END)) AS rep
-  FROM events
-)
-SELECT c_mktsegment, COUNT(*) AS n_events,
-       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
-FROM amp JOIN customer ON user_id = c_custkey
-GROUP BY c_mktsegment
-""",
-    "AQE skew-join splitting (OptimizeSkewedJoin) — the automatic half of "
-    "the skew story (skew_join_salted is the manual fallback): ONE planted "
-    "hot key (min user_id ×4096) makes a partition that dwarfs the median; "
-    "under operators/joins.py::aqe_skew_split the join materializes with "
-    "AQE's own partition split (plan-asserted SortMergeJoin(skew=true) on "
-    "the same recipe in tests/test_round11_ops.py), then the aggregate runs "
-    "on the checkpointed join outside the conf scope. An exact oracle match "
-    "proves the split is semantics-preserving — duplicated build rows and "
-    "split probe partitions change NO aggregate. Money via the gate-proven "
-    "cents recipe; replication exact integer on both engines",
-)
-def q_skew_join_aqe(spark, sf_dir):
-    from dask_datapipeline_spark.operators.joins import aqe_skew_split
-
-    ev = load_testdata(spark, sf_dir, "events").select("user_id", "value")
-    # 1-row bounded collect: the planted hot key (oracle replays min())
-    hot = ev.agg(F.min("user_id")).collect()[0][0]
-    amp = ev.withColumn(
-        "rep",
-        F.explode(
-            F.sequence(
-                F.lit(1),
-                F.when(F.col("user_id") == F.lit(hot), F.lit(4096)).otherwise(
-                    F.lit(1)
-                ),
-            )
-        ),
-    )
-    cust = load_testdata(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    with aqe_skew_split(spark):
-        # materialize INSIDE the scope — the skew split happens here;
-        # the downstream agg must not be part of this plan (a required
-        # hash distribution above the join vetoes OptimizeSkewedJoin)
-        joined = amp.join(cust, "user_id").localCheckpoint(eager=True)
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("total_cents"),
-    )
 
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]

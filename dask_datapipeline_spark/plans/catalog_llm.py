@@ -8719,90 +8719,6 @@ def q_robots_agent_group(spark, sf_dir):
     return robots_allowed(urls, rules, "host", "path", agent="goodbot")
 
 
-# ----- ANALYZE-style table statistics --------------------------------
-
-from dask_datapipeline_spark.operators.stats import (  # noqa: E402
-    table_stats,
-    table_stats_oracle_sql,
-)
-
-_STATS_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
-
-
-@register_extra(
-    "table_stats",
-    table_stats_oracle_sql("orders", _STATS_COLS),
-    "ANALYZE-style catalog statistics (operators/stats.py): per-column row/"
-    "null counts, lexicographic min/max (string-cast contract — portable for "
-    "int/decimal/string; doubles rejected) and HLL ndv — ONE wide reduced "
-    "aggregate + ONE unpivoted stack pass feeding k*2^p register rows; the "
-    "composition proof that the HLL sketch plugs into engine infrastructure "
-    "(CBO stats), not just analytics rows",
-)
-def q_table_stats(spark, sf_dir):
-    orders = load_testdata(spark, sf_dir, "orders")
-    return table_stats(orders, _STATS_COLS)
-
-
-@register_extra(
-    "streaming_table_stats",
-    table_stats_oracle_sql("orders", _STATS_COLS),
-    "Streaming ANALYZE (streaming/windows.py::stream_incremental_table_"
-    "stats): the CBO statistics maintained incrementally over a file "
-    "stream — per micro-batch scalar stats (counts/nulls/lexicographic "
-    "min-max) merge by sum/min/max and HLL registers max-merge, snapshot "
-    "swapped atomically; state is sketch-sized (k scalar rows + k*2^p "
-    "registers). Counts are SUMS, so unlike the max/distinct sketch sinks "
-    "replay is NOT idempotent by algebra — the snapshot records the last "
-    "applied batch id (committed atomically WITH the data by the swap) "
-    "and a replayed batch is skipped. Shares table_stats' oracle "
-    "VERBATIM: the exact match after a three-batch drain proves the "
-    "merge algebra and the replay guard lose nothing",
-)
-def q_streaming_table_stats(spark, sf_dir):
-    import os as _os
-    import tempfile as _tf
-    import uuid as _uuid
-
-    from dask_datapipeline_spark.operators.stats import (
-        table_stats_from_snapshot,
-    )
-    from dask_datapipeline_spark.schemas import TESTDATA_SCHEMAS
-    from dask_datapipeline_spark.streaming.windows import (
-        stream_incremental_table_stats,
-    )
-
-    orders = load_testdata(spark, sf_dir, "orders")
-    work = _os.path.join(
-        _tf.gettempdir(), f"ddps_stream_stats_{_uuid.uuid4().hex[:8]}"
-    )
-    staged = _os.path.join(work, "staged")
-    _os.makedirs(staged, exist_ok=True)
-    # any split works (the merge algebra is exact for every batching);
-    # approxQuantile keeps the harness free of corpus-sized collects
-    cuts = orders.approxQuantile("o_orderkey", [0.33, 0.66], 0.001)
-    _stage_micro_batches(
-        [
-            orders.where(F.col("o_orderkey") < cuts[0]),
-            orders.where(
-                (F.col("o_orderkey") >= cuts[0]) & (F.col("o_orderkey") < cuts[1])
-            ),
-            orders.where(F.col("o_orderkey") >= cuts[1]),
-        ],
-        staged,
-    )
-    stats_dir = _os.path.join(work, "stats")
-    stream_incremental_table_stats(
-        spark,
-        staged,
-        stats_dir,
-        TESTDATA_SCHEMAS["orders"],
-        _STATS_COLS,
-        checkpoint_dir=_os.path.join(work, "ckpt"),
-    )
-    return table_stats_from_snapshot(spark, stats_dir)
-
-
 @register_extra(
     "streaming_gopher_report",
     _gopher_report_sql(),

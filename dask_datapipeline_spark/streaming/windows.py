@@ -37,7 +37,7 @@ from dask_datapipeline_spark.indexfs import IndexFS, _scheme
 
 class _Snapshot:
     """Crash-safe snapshot-swap state directory for the sketch-sized
-    streaming sinks (quantile sample / KMV / HLL / table stats / CDC
+    streaming sinks (quantile sample / KMV / HLL / CDC
     parquet snapshot), over ANY Hadoop FS URI via ``indexfs.IndexFS``
     (round 13 — closes the asymmetry round 12 fixed for the
     base+delta indexes: the batch inputs and the index triad already
@@ -1131,187 +1131,6 @@ def stream_incremental_hll(
             "checkpointLocation",
             checkpoint_dir or sketch_dir.rstrip("/") + ".ckpt",
         )
-        .start()
-    )
-    _drain(q, timeout_sec)
-
-
-def stream_incremental_table_stats(
-    spark: SparkSession,
-    staged_dir: str,
-    stats_dir: str,
-    schema,
-    cols: list[str],
-    p: int | None = None,
-    checkpoint_dir: str | None = None,
-    timeout_sec: int = 240,
-    lease=None,
-) -> None:
-    """Maintain ANALYZE statistics (``operators/stats.py``)
-    incrementally over a file stream — the streaming leg of the CBO
-    stats family: per micro-batch, compute the batch's scalar stats
-    (counts/nulls/lexicographic min-max, long form) and HLL registers,
-    merge with the snapshot, atomically swap. After draining,
-    ``table_stats_from_snapshot`` is BIT-IDENTICAL to the batch
-    ``table_stats`` over the full input (counts sum exactly,
-    lexicographic min/max merge exactly, register max-merge is exact)
-    — the catalog row shares table_stats' oracle verbatim.
-
-    REPLAY GUARD (new in this family): unlike the max/distinct
-    sketches, the COUNT halves are sums — re-merging a replayed batch
-    would double-count it. The snapshot therefore records the last
-    applied batch id AND the checkpoint identity (``_APPLIED``,
-    written INTO the staging dir so the swap commits data and marker
-    atomically together), and a replayed batch id (a crash after the
-    swap but before the streaming commit) is SKIPPED — batch ids are
-    monotone PER CHECKPOINT, so the ``<=`` check is exact only within
-    one checkpoint lineage. A stream started on a FRESH checkpoint
-    against an existing stats_dir restarts batch ids at 0 — every
-    batch would silently skip and the snapshot go permanently stale
-    (ADVICE r12) — so an identity mismatch RAISES: delete the
-    stats_dir (rebuild) or reuse the original checkpoint. The identity
-    token is the STREAMING QUERY ID Spark writes to
-    ``<ckpt>/metadata`` when the checkpoint is created (stable across
-    restarts of one checkpoint lineage, fresh on recreation) — NOT the
-    checkpoint path (ADVICE r13: a path compares equal across the
-    delete-and-recreate misconfiguration, where batch ids restart at 0
-    and every batch would silently skip, and compares UNEQUAL across
-    harmless respellings of one checkpoint — relative vs absolute,
-    trailing slash — spuriously rejecting a legitimate restart).
-    Legacy r13 markers carry only the path; they are checked
-    normalized and upgraded to the query id at the next swap. A
-    corrupt ``_APPLIED`` also raises instead of being masked as -1.
-    Mid-swap crashes heal via the standard ``_Snapshot`` recover (old
-    snapshot restored, the batch replays and applies). State is
-    sketch-sized: k scalar rows + k·2^p register rows per snapshot.
-    Marker I/O goes through ``IndexFS`` — one write channel per file,
-    any Hadoop FS URI (round 13)."""
-    from dask_datapipeline_spark.operators.sketches import (
-        HLL_P,
-        HLL_SEED,
-        hll_merge_registers,
-        hll_registers,
-    )
-    from dask_datapipeline_spark.operators.stats import (
-        check_stats_types,
-        merge_scalar_stats,
-        scalar_stats_long,
-        stacked_values,
-    )
-
-    p = HLL_P if p is None else p
-    snap = _Snapshot(stats_dir, "stream_incremental_table_stats")
-    base = snap.base
-    fs = snap.fs
-    ckpt = checkpoint_dir or base + ".ckpt"
-
-    _qid_cache: list[str] = []
-
-    def _qid() -> str:
-        # the streaming query id Spark wrote to <ckpt>/metadata at
-        # checkpoint creation — read lazily (the file exists once the
-        # query has started, which is before the first foreachBatch)
-        # and cached (one read per run)
-        if not _qid_cache:
-            cfs = IndexFS.for_path(ckpt, "stream checkpoint metadata")
-            rec = cfs.read_json(IndexFS.join(ckpt.rstrip("/"), "metadata"))
-            _qid_cache.append(str(rec["id"]))
-        return _qid_cache[0]
-
-    def _applied() -> int:
-        marker = IndexFS.join(base, "_APPLIED")
-        if not fs.isfile(marker):
-            return -1
-        try:
-            rec = fs.read_json(marker)
-            applied = int(rec["batch_id"])
-        except Exception as e:
-            raise ValueError(
-                f"stream_incremental_table_stats: corrupt _APPLIED "
-                f"marker at {marker!r} — refusing to guess whether the "
-                f"snapshot already folded this batch (a wrong guess "
-                f"either double-counts or goes stale): {e}"
-            ) from e
-        rec_qid = rec.get("query_id")
-        if rec_qid is not None:
-            if rec_qid != _qid():
-                raise ValueError(
-                    f"stream_incremental_table_stats: snapshot {base!r} "
-                    f"was built under streaming query {rec_qid!r} but "
-                    f"this checkpoint's query id is {_qid()!r} — a "
-                    "different checkpoint lineage (fresh or "
-                    "deleted-and-recreated checkpoint) restarts batch "
-                    "ids at 0, so the replay guard would silently skip "
-                    "every batch and the snapshot would go permanently "
-                    "stale. Delete the stats dir to rebuild, or point "
-                    "the stream at the original checkpoint."
-                )
-            return applied
-        # legacy r13 marker: path identity, compared normalized (the
-        # next swap upgrades the marker to the query id). Round-14
-        # review: normalize plain paths through abspath too — a
-        # relative respelling of the same checkpoint dir must restart
-        # cleanly, not raise (URIs pass through untouched)
-        def _norm(p: str) -> str:
-            p = p.rstrip("/")
-            if "://" not in p:
-                p = os.path.abspath(p)
-            return p
-
-        rec_ckpt = rec.get("ckpt")
-        if rec_ckpt is not None and _norm(rec_ckpt) != _norm(ckpt):
-            raise ValueError(
-                f"stream_incremental_table_stats: snapshot {base!r} was "
-                f"built under checkpoint {rec_ckpt!r} but this stream "
-                f"uses {ckpt!r} — batch ids are only monotone within "
-                "one checkpoint lineage, so the replay guard would "
-                "silently skip every batch and the snapshot would go "
-                "permanently stale. Delete the stats dir to rebuild, "
-                "or point the stream at the original checkpoint."
-            )
-        return applied
-
-    if lease is not None:  # lease root outside the swapped dir
-        lease.acquire()
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if lease is not None:
-            lease.check_and_renew()
-        snap.recover()
-        if batch_id <= _applied():
-            return  # replay of an already-folded batch: sums must not re-apply
-        check_stats_types(batch_df, cols)
-        scal = scalar_stats_long(batch_df, cols)
-        regs = hll_registers(
-            stacked_values(batch_df, cols), ["col_name"], "value", p=p,
-            seed=HLL_SEED,
-        )
-        if snap.exists():
-            scal = merge_scalar_stats(
-                spark.read.parquet(IndexFS.join(base, "scalars")), scal
-            )
-            regs = regs.unionByName(
-                spark.read.parquet(IndexFS.join(base, "registers"))
-            )
-        regs = hll_merge_registers(regs, ["col_name"])
-        staging = snap.staging()
-        scal.write.mode("overwrite").parquet(IndexFS.join(staging, "scalars"))
-        regs.write.mode("overwrite").parquet(IndexFS.join(staging, "registers"))
-        fs.write_json_atomic(
-            IndexFS.join(staging, "_APPLIED"),
-            # query id is the identity token; the path rides along for
-            # operators debugging a mismatch (never compared)
-            {"batch_id": int(batch_id), "query_id": _qid(), "ckpt": ckpt},
-        )
-        snap.swap(staging)
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
-        .writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
         .start()
     )
     _drain(q, timeout_sec)

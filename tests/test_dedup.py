@@ -1,9 +1,9 @@
-"""Round-15 optimization pins.
+"""dup_clusters (operators/dedup.py).
 
-dup_clusters' fused double-relaxation (VERDICT r14 item 6): two
-relaxations ride one eager action with two CollectMetrics, so the
-common diameter-<=2 graph costs TWO eager actions total (edges
-checkpoint + one fused double-round) instead of three. These tests pin
+The fused double-relaxation (VERDICT r14 item 6): two relaxations
+ride one eager action with two CollectMetrics, so the common
+diameter-<=2 graph costs TWO eager actions total (edges checkpoint +
+one fused double-round) instead of three. These tests pin
 the action count, both convergence-detection branches (sum stable
 across actions / stable within an action), and the empty-graph path
 (AQE empty-relation propagation prunes the nested CollectMetrics —

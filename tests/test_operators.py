@@ -96,6 +96,29 @@ def test_join_invalid_how(df1, df2):
         equi_join(df1, df2, on="A", how="sideways")
 
 
+def test_join_invalid_broadcast_on_cross(df1, df2):
+    # a bad side is rejected for every how, cross joins included
+    with pytest.raises(ValueError, match="broadcast"):
+        equi_join(df1, df2, on="A", how="cross", broadcast="sideways")
+    assert equi_join(df1, df2, on="A", how="cross", broadcast="right").count() == 16
+
+
+def test_joins_reject_removed_planner_keywords(df1, df2):
+    # one plan per join: equi_join and fold_join take no planner options
+    for kw in ({"stats": None}, {"broadcast_rows": 10}):
+        with pytest.raises(TypeError):
+            equi_join(df1, df2, on="A", **kw)
+    for kw in (
+        {"order": "stats"},
+        {"stats": None},
+        {"broadcast_rows": 10},
+        {"catalog": {}},
+        {"tables": ["a", "b"]},
+    ):
+        with pytest.raises(TypeError):
+            fold_join([df1, df2], on="A", **kw)
+
+
 # ----- O5/O8: group-by aggregation ----------------------------------
 
 

@@ -2,16 +2,13 @@
 
 The round-9 ADVICE fixes:
 
-1. ``table_stats`` type guard — exact base-name match, so an
-   ``interval day to second`` dtype can no longer slip past on the
-   ``int`` prefix;
-2. ``stream_incremental_hll`` — a crash between the two snapshot-swap
+1. ``stream_incremental_hll`` — a crash between the two snapshot-swap
    renames is healed at next batch start (the ``.old-*`` snapshot is
    restored; orphans are swept);
-3. ``robots_allowed`` — RFC 9309 most-specific group: when a host has
+2. ``robots_allowed`` — RFC 9309 most-specific group: when a host has
    exact-agent rules, the ``*`` group is ignored for that agent;
-4. robots_allow oracle TRY_CAST (pinned via test_oracle_sql_parses);
-5. WARC responses without an HTTP Content-Length (chunked transfer)
+3. robots_allow oracle TRY_CAST (pinned via test_oracle_sql_parses);
+4. WARC responses without an HTTP Content-Length (chunked transfer)
    parse the remainder of the WARC block, not an empty body.
 
 And the round-10 operator work:
@@ -19,9 +16,7 @@ And the round-10 operator work:
 - mixed-record WARC streams (warcinfo/request/response/metadata)
   route by WARC-Type; WET conversion records round-trip;
 - scale-safe ntile / vocab caps (two-pass prefix-sum deciles,
-  TakeOrdered vocab caps) — pinned in test_plan_shapes;
-- stats-driven n-ary join ordering (plan_join_order / fold_join
-  order='stats').
+  TakeOrdered vocab caps) — pinned in test_plan_shapes.
 """
 
 from __future__ import annotations
@@ -37,33 +32,6 @@ _HYP = dict(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-
-
-# ----- table_stats type guard -----------------------------------------
-
-
-def test_table_stats_rejects_interval_and_double(spark):
-    from dask_datapipeline_spark.operators.stats import table_stats
-
-    df = spark.sql(
-        "SELECT 1 AS a, INTERVAL '1 02:03:04' DAY TO SECOND AS iv, "
-        "CAST(1.5 AS DOUBLE) AS d"
-    )
-    for bad in ("iv", "d"):
-        with pytest.raises(ValueError, match="not engine-portable"):
-            table_stats(df, [bad])
-
-
-def test_table_stats_accepts_decimal_and_int(spark):
-    from dask_datapipeline_spark.operators.stats import table_stats
-
-    df = spark.sql(
-        "SELECT CAST(x AS BIGINT) AS b, CAST(x AS DECIMAL(18,2)) AS m, "
-        "CAST(x AS STRING) AS s FROM VALUES (1),(2),(3) t(x)"
-    )
-    rows = {r["col_name"]: r for r in table_stats(df, ["b", "m", "s"]).collect()}
-    assert rows["b"]["n_rows"] == 3 and rows["b"]["min_val"] == "1"
-    assert rows["m"]["max_val"] == "3.00"
 
 
 # ----- robots.txt most-specific group ---------------------------------
@@ -264,90 +232,6 @@ def test_global_ntile_plan_has_no_single_partition_sort(spark):
             "HashAggregate" in following[:2000], plan
 
 
-# ----- stats-driven join ordering ---------------------------------------
-
-
-def test_plan_join_order_flips_on_skewed_stats():
-    """Skewed stats must provably flip the fold order and shrink the
-    first intermediate (the System-R point)."""
-    from dask_datapipeline_spark.operators.joins import plan_join_order
-    from dask_datapipeline_spark.operators.stats import estimate_equi_join_rows
-
-    big = {"n_rows": 1_000_000, "n_null": 0, "ndv_est": 1_000_000.0}
-    big2 = {"n_rows": 900_000, "n_null": 0, "ndv_est": 900_000.0}
-    tiny = {"n_rows": 100, "n_null": 0, "ndv_est": 100.0}
-    stats = [big, big2, tiny]
-    order = plan_join_order(stats)
-    assert order == [0, 2, 1]  # tiny joins first (tie on est -> index)
-    est_planned = estimate_equi_join_rows(stats[order[0]], stats[order[1]])
-    est_given = estimate_equi_join_rows(big, big2)
-    assert est_planned < est_given  # 100 vs 900k intermediate rows
-    # equal stats reproduce caller order — the reorder is stats-driven,
-    # never arbitrary
-    assert plan_join_order([big, dict(big), dict(big)]) == [0, 1, 2]
-    assert plan_join_order([big, tiny]) == [0, 1]
-
-
-def test_fold_join_stats_order_matches_given(spark):
-    from dask_datapipeline_spark.operators.joins import fold_join
-
-    base = spark.range(200).select(F.col("id").alias("k"), (F.col("id") * 2).alias("x"))
-    mid = spark.range(150).select(F.col("id").alias("k"), (F.col("id") + 7).alias("y"))
-    small = spark.range(10).select(F.col("id").alias("k"), (F.col("id") % 3).alias("z"))
-    given = fold_join([base, mid, small], on="k", how="inner")
-    planned = fold_join([base, mid, small], on="k", how="inner", order="stats")
-    assert sorted(planned.columns) == sorted(given.columns)
-    g = sorted(tuple(r) for r in given.select(*sorted(given.columns)).collect())
-    p = sorted(tuple(r) for r in planned.select(*sorted(given.columns)).collect())
-    assert p == g and len(p) == 10
-
-
-def test_fold_join_broadcast_rows_hints_small_side(spark):
-    """With broadcast disabled at BOTH thresholds, only the explicit
-    stats-driven hint can produce a BroadcastHashJoin — proving the
-    fold no longer depends on Catalyst seeing a size estimate."""
-    from dask_datapipeline_spark.operators.joins import fold_join
-
-    base = spark.range(500).select(F.col("id").alias("k"), (F.col("id") * 2).alias("x"))
-    mid = spark.range(400).select(F.col("id").alias("k"), (F.col("id") + 7).alias("y"))
-    small = spark.range(8).select(F.col("id").alias("k"), (F.col("id") % 3).alias("z"))
-    old_static = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        old_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    except Exception:  # unset — conf.get validates defaults, so probe
-        old_aqe = None
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        plain = fold_join([base, mid, small], on="k", order="stats")
-        hinted = fold_join(
-            [base, mid, small], on="k", order="stats", broadcast_rows=100
-        )
-        plan_plain = plain._jdf.queryExecution().executedPlan().toString()
-        plan_hinted = hinted._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan_plain, plan_plain
-        assert "BroadcastHashJoin" in plan_hinted, plan_hinted
-        g = sorted(tuple(r) for r in plain.select(*sorted(plain.columns)).collect())
-        h = sorted(tuple(r) for r in hinted.select(*sorted(plain.columns)).collect())
-        assert g == h and len(h) == 8
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_static)
-        if old_aqe:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
-        else:
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    with pytest.raises(ValueError, match="broadcast_rows requires"):
-        fold_join([base, small], on="k", broadcast_rows=100)
-
-
-def test_fold_join_stats_order_rejects_outer(spark):
-    from dask_datapipeline_spark.operators.joins import fold_join
-
-    df = spark.range(3).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError, match="order-sensitive"):
-        fold_join([df, df], on="k", how="left", order="stats")
-
-
 # ----- index-backed BM25 ------------------------------------------------
 
 
@@ -457,144 +341,6 @@ def test_stopword_hits_by_lang_property_engine_parity(spark, texts, langs):
         ).fetchall()
     )
     assert got == want
-
-
-# ----- histogram selectivity (the stats layer's range pricing) ----------
-
-
-def test_equi_depth_bounds_shape(spark):
-    from dask_datapipeline_spark.operators.stats import equi_depth_bounds
-
-    df = spark.range(1000).select((F.col("id") * 3 % 997).alias("v"), "id")
-    hist = (
-        equi_depth_bounds(df, "v", n_buckets=10, unique_key="id")
-        .orderBy("bucket")
-        .collect()
-    )
-    assert len(hist) == 10
-    assert sum(r["n_rows"] for r in hist) == 1000
-    assert all(r["n_rows"] == 100 for r in hist)  # exact equi-depth
-    for a, b in zip(hist, hist[1:]):
-        assert a["hi"] <= b["lo"]
-        assert a["lo"] <= a["hi"]
-
-
-def test_equi_depth_bounds_excludes_nan(spark):
-    """NaN floors to bucket 0 while sorting greatest — it must be
-    filtered like NULL or the histogram's lowest bucket is silently
-    wrong (review round 10, verified live pre-fix)."""
-    import math
-
-    from dask_datapipeline_spark.operators.stats import equi_depth_bounds
-
-    rows = [(float(v), i) for i, v in enumerate(range(1, 9))]
-    rows += [(float("nan"), 100), (None, 101)]
-    df = spark.createDataFrame(rows, "v double, id long")
-    hist = equi_depth_bounds(df, "v", n_buckets=4, unique_key="id").collect()
-    assert sum(r["n_rows"] for r in hist) == 8  # NaN and NULL excluded
-    assert all(
-        not math.isnan(r["lo"]) and not math.isnan(r["hi"]) for r in hist
-    )
-
-
-def test_estimate_range_rows_uniform(spark):
-    from dask_datapipeline_spark.operators.stats import (
-        equi_depth_bounds,
-        estimate_range_rows,
-    )
-
-    df = spark.range(10_000).select(F.col("id").cast("double").alias("v"), "id")
-    hist = [r.asDict() for r in equi_depth_bounds(df, "v", 10, "id").collect()]
-    n = sum(r["n_rows"] for r in hist)
-    assert estimate_range_rows(hist, None, None) == pytest.approx(n, rel=0.01)
-    assert estimate_range_rows(hist, 2_500, 7_499) == pytest.approx(5_000, rel=0.05)
-    assert estimate_range_rows(hist, 20_000, 30_000) == 0.0
-    assert estimate_range_rows(hist, 9_000, None) == pytest.approx(1_000, rel=0.1)
-
-
-@given(
-    vals=st.lists(st.integers(min_value=0, max_value=1000), min_size=10, max_size=120),
-    lo=st.integers(min_value=-100, max_value=1100),
-    width=st.integers(min_value=0, max_value=600),
-)
-@settings(max_examples=50, deadline=None)
-def test_estimate_range_rows_properties(vals, lo, width):
-    """Pure-arithmetic invariants of the equi-depth estimator on a
-    synthetic exact histogram: full-range recovers N, estimates stay
-    within [0, N], and widening the range never decreases them."""
-    from dask_datapipeline_spark.operators.stats import estimate_range_rows
-
-    vals = sorted(vals)
-    n, k = len(vals), 5
-    # exact equi-depth buckets by rank (ntile split)
-    q, r = divmod(n, k)
-    hist, i = [], 0
-    for b in range(k):
-        size = q + (1 if b < r else 0)
-        if size == 0:
-            continue
-        chunk = vals[i : i + size]
-        hist.append({"n_rows": size, "lo": chunk[0], "hi": chunk[-1]})
-        i += size
-    total = estimate_range_rows(hist, None, None)
-    assert total == pytest.approx(n)
-    est = estimate_range_rows(hist, lo, lo + width)
-    assert -1e-9 <= est <= n + 1e-9
-    wider = estimate_range_rows(hist, lo - 50, lo + width + 50)
-    assert wider >= est - 1e-9
-
-
-def test_apply_selectivity_bounds():
-    from dask_datapipeline_spark.operators.stats import apply_selectivity
-
-    st = {"n_rows": 1000, "n_null": 10, "ndv_est": 100.0}
-    full = apply_selectivity(st, 1.0)
-    assert full["n_rows"] == 1000 and full["ndv_est"] == pytest.approx(100.0)
-    none = apply_selectivity(st, 0.0)
-    assert none["n_rows"] == 0 and none["ndv_est"] == 0.0
-    half = apply_selectivity(st, 0.5)
-    assert 0 < half["ndv_est"] <= half["n_rows"] == 500
-    # unique-key column: ndv tracks rows (per_value=1 -> ndv*s)
-    uk = apply_selectivity({"n_rows": 1000, "n_null": 0, "ndv_est": 1000.0}, 0.3)
-    assert uk["ndv_est"] == pytest.approx(300.0)
-
-
-def test_histogram_priced_filter_flips_join_order():
-    """Filter-aware planning end-to-end at the arithmetic level: a big
-    input with a selective range predicate must be ordered FIRST once
-    its stats are scaled by the histogram-priced selectivity."""
-    from dask_datapipeline_spark.operators.joins import plan_join_order
-    from dask_datapipeline_spark.operators.stats import (
-        apply_selectivity,
-        estimate_range_rows,
-    )
-
-    # synthetic uniform histogram over [0, 1000) with 1M rows
-    hist = [
-        {"bucket": i + 1, "n_rows": 100_000, "lo": i * 100.0, "hi": (i + 1) * 100.0 - 1}
-        for i in range(10)
-    ]
-    from dask_datapipeline_spark.operators.stats import estimate_equi_join_rows
-
-    big = {"n_rows": 1_000_000, "n_null": 0, "ndv_est": 500_000.0}
-    other = {"n_rows": 800_000, "n_null": 0, "ndv_est": 400_000.0}
-    mid = {"n_rows": 600_000, "n_null": 0, "ndv_est": 300_000.0}
-    base_order = plan_join_order([big, other, mid])
-    base_first = estimate_equi_join_rows(
-        [big, other, mid][base_order[0]], [big, other, mid][base_order[1]]
-    )
-    assert base_first == pytest.approx(1_200_000.0)
-    # price `v >= 995` off the histogram: ~0.5% selectivity
-    sel = estimate_range_rows(hist, 995.0, None) / 1_000_000
-    assert sel < 0.01
-    filtered_big = apply_selectivity(big, sel)
-    order = plan_join_order([filtered_big, other, mid])
-    assert 0 in order[:2]  # the filtered big table joins first...
-    first = estimate_equi_join_rows(
-        [filtered_big, other, mid][order[0]], [filtered_big, other, mid][order[1]]
-    )
-    # ...and the first intermediate collapses by orders of magnitude
-    assert first < base_first / 50
 
 
 # ----- vocab_growth bucket width guard ---------------------------------

@@ -1,121 +1,10 @@
-"""Round-11 operator tests: stats-hinted single joins, auto-compaction
-triggers, bloom-filter pruning tier."""
+"""Round-11 operator tests: auto-compaction triggers, bloom-filter
+pruning tier."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def _no_broadcast(spark):
-    """Context values for disabling both broadcast thresholds."""
-    old_static = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        old_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    except Exception:  # unset — conf.get validates defaults, so probe
-        old_aqe = None
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    return old_static, old_aqe
-
-
-def _restore(spark, old_static, old_aqe):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_static)
-    if old_aqe:
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
-    else:
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-
-def test_equi_join_stats_hint_flips_plan_at_threshold(spark):
-    """With both broadcast thresholds disabled, only the stats hint
-    can produce a BroadcastHashJoin — and it does exactly when the
-    smaller side's surviving rows fit under broadcast_rows."""
-    from dask_datapipeline_spark.operators.joins import equi_join
-
-    fact = spark.range(500).select(F.col("id").alias("k"), (F.col("id") * 2).alias("x"))
-    dim = spark.range(20).select(F.col("id").alias("k"), (F.col("id") % 3).alias("z"))
-    st = (
-        {"n_rows": 500, "n_null": 0, "ndv_est": 500.0},
-        {"n_rows": 20, "n_null": 0, "ndv_est": 20.0},
-    )
-    old = _no_broadcast(spark)
-    try:
-        over = equi_join(fact, dim, on="k", stats=st, broadcast_rows=100)
-        under = equi_join(fact, dim, on="k", stats=st, broadcast_rows=10)
-        p_over = over._jdf.queryExecution().executedPlan().toString()
-        p_under = under._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in p_over, p_over
-        assert "BroadcastHashJoin" not in p_under, p_under
-        a = sorted(tuple(r) for r in over.collect())
-        b = sorted(tuple(r) for r in under.collect())
-        assert a == b and len(a) == 20
-    finally:
-        _restore(spark, *old)
-
-
-def test_equi_join_stats_hint_prefers_smaller_fitting_side(spark):
-    from dask_datapipeline_spark.operators.joins import equi_join
-
-    a = spark.range(30).select(F.col("id").alias("k"), F.col("id").alias("x"))
-    b = spark.range(8).select(F.col("id").alias("k"), F.col("id").alias("y"))
-    st = (
-        {"n_rows": 30, "n_null": 0, "ndv_est": 30.0},
-        {"n_rows": 8, "n_null": 0, "ndv_est": 8.0},
-    )
-    old = _no_broadcast(spark)
-    try:
-        j = equi_join(a, b, on="k", stats=st, broadcast_rows=100)
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        # the RIGHT (smaller) side must be the build side
-        assert "BroadcastHashJoin" in plan and "BuildRight" in plan, plan
-    finally:
-        _restore(spark, *old)
-
-
-def test_equi_join_stats_hint_respects_join_type(spark):
-    """A left join can only build on the right side: a tiny LEFT input
-    never gets the hint (Spark would silently ignore it and the plan
-    check would pass vacuously — the picker must not claim it)."""
-    from dask_datapipeline_spark.operators.joins import equi_join
-
-    tiny = spark.range(5).select(F.col("id").alias("k"), F.col("id").alias("x"))
-    big = spark.range(300).select(F.col("id").alias("k"), F.col("id").alias("y"))
-    st_tiny = {"n_rows": 5, "n_null": 0, "ndv_est": 5.0}
-    st_big = {"n_rows": 300, "n_null": 0, "ndv_est": 300.0}
-    old = _no_broadcast(spark)
-    try:
-        j = equi_join(tiny, big, on="k", how="left", stats=(st_tiny, st_big),
-                      broadcast_rows=50)
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan, plan
-        # full outer: neither side — hint never claimed
-        j2 = equi_join(tiny, big, on="k", how="full", stats=(st_tiny, st_big),
-                       broadcast_rows=1000)
-        plan2 = j2._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan2, plan2
-        # but a left join whose RIGHT side fits does flip
-        j3 = equi_join(big, tiny, on="k", how="left", stats=(st_big, st_tiny),
-                       broadcast_rows=50)
-        plan3 = j3._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan3, plan3
-    finally:
-        _restore(spark, *old)
-
-
-def test_equi_join_stats_validation(spark):
-    from dask_datapipeline_spark.operators.joins import equi_join
-
-    a = spark.range(3).select(F.col("id").alias("k"))
-    st = {"n_rows": 3, "n_null": 0, "ndv_est": 3.0}
-    with pytest.raises(ValueError, match="passed together"):
-        equi_join(a, a, on="k", stats=(st, st))
-    with pytest.raises(ValueError, match="passed together"):
-        equi_join(a, a, on="k", broadcast_rows=10)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        equi_join(a, a, on="k", broadcast="right", stats=(st, st), broadcast_rows=10)
-    with pytest.raises(ValueError, match="left, right"):
-        equi_join(a, a, on="k", stats=(st,), broadcast_rows=10)
 
 
 # ----- index maintenance policy: auto-compaction triggers --------------
@@ -381,82 +270,6 @@ def test_bloom_filter_composes_with_partition_by(spark, tmp_path):
 
 
 # ----- AQE skew-join splitting ----------------------------------------
-
-
-def test_aqe_skew_split_fires_on_planted_hot_key(spark):
-    """AQE's OptimizeSkewedJoin splits the hot partition under
-    aqe_skew_split: final plan shows SortMergeJoin(skew=true) +
-    AQEShuffleRead skewed, and results match the unsplit join."""
-    from dask_datapipeline_spark.operators.joins import aqe_skew_split
-
-    left = (
-        spark.range(150_000)
-        .select(F.lit(1).alias("k"), F.col("id").alias("v"))
-        .union(
-            spark.range(50_000).select(
-                (F.col("id") % 1000 + 2).alias("k"), F.col("id").alias("v")
-            )
-        )
-    )
-    right = spark.range(1002).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("w")
-    )
-
-    plain = left.join(right, "k").groupBy("k").count().collect()
-
-    with aqe_skew_split(spark):
-        j = left.join(right, "k").select("k", (F.col("v") + F.col("w")).alias("x"))
-        cp = j.localCheckpoint(eager=True)
-        # the executed (adaptive, final) plan lives on the PRE-checkpoint
-        # DataFrame — localCheckpoint returns a fresh RDD-scan plan
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "skew=true" in plan, plan[:2000]
-    assert "AQEShuffleRead skewed" in plan or "skewed" in plan
-
-    split = cp.groupBy("k").count().collect()
-    assert sorted((r.k, r["count"]) for r in split) == sorted(
-        (r.k, r["count"]) for r in plain
-    )
-
-
-def test_aqe_skew_split_restores_confs(spark):
-    from dask_datapipeline_spark.operators.joins import aqe_skew_split
-
-    keys = [
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.forceOptimizeSkewedJoin",
-    ]
-    before = {}
-    for k in keys:
-        try:
-            before[k] = spark.conf.get(k)
-        except Exception:
-            before[k] = None
-    with aqe_skew_split(spark):
-        assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
-        assert (
-            spark.conf.get("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-            == "64k"
-        )
-    after = {}
-    for k in keys:
-        try:
-            after[k] = spark.conf.get(k)
-        except Exception:
-            after[k] = None
-    assert after == before
-
-
-def test_aqe_skew_split_restores_on_error(spark):
-    from dask_datapipeline_spark.operators.joins import aqe_skew_split
-
-    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    with pytest.raises(RuntimeError, match="boom"):
-        with aqe_skew_split(spark):
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
 
 
 # ----- input_ids materialization + fixed-length packing ---------------

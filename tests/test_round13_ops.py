@@ -282,68 +282,6 @@ def test_cjk_near_dup_fixture_separates_partners(spark):
     assert all(b == a + 1 and a % 2 == 0 for a, b in pairs)
 
 
-# ----- explain_cost filtered-fold path (VERDICT r12 item 4) --------------
-
-
-def test_explain_cost_prices_predicates_inline(spark):
-    """Passing the histogram + range spec to explain_cost must produce
-    the SAME report as hand-applying apply_selectivity (the
-    join_order_histogram recipe) — plus the new selectivity column and
-    the pricing note in the reason; the leading side's reason states
-    its broadcast exemption explicitly."""
-    from dask_datapipeline_spark.operators.joins import explain_cost
-    from dask_datapipeline_spark.operators.stats import (
-        apply_selectivity,
-        estimate_range_rows,
-    )
-
-    hist = [
-        {"bucket": i + 1, "n_rows": 100_000, "lo": i * 100.0,
-         "hi": (i + 1) * 100.0 - 1}
-        for i in range(10)
-    ]
-    big = {"n_rows": 1_000_000, "n_null": 0, "ndv_est": 500_000.0}
-    other = {"n_rows": 800_000, "n_null": 0, "ndv_est": 400_000.0}
-    mid = {"n_rows": 600_000, "n_null": 0, "ndv_est": 300_000.0}
-    spec = {"hist": hist, "lo": 995.0, "hi": None}
-    got = [
-        r.asDict()
-        for r in explain_cost(
-            spark,
-            [big, other, mid],
-            broadcast_rows=10_000,
-            predicates=[spec, None, None],
-        )
-        .orderBy("step")
-        .collect()
-    ]
-    sel = estimate_range_rows(hist, 995.0, None) / 1_000_000
-    want = [
-        r.asDict()
-        for r in explain_cost(
-            spark,
-            [apply_selectivity(big, sel), other, mid],
-            broadcast_rows=10_000,
-        )
-        .orderBy("step")
-        .collect()
-    ]
-    for g, w in zip(got, want):
-        for k in ("step", "input_idx", "est_rows", "est_ndv",
-                  "est_out_rows", "broadcast"):
-            assert g[k] == w[k], (k, g, w)
-    by_idx = {r["input_idx"]: r for r in got}
-    assert by_idx[0]["selectivity"] == pytest.approx(sel)
-    assert by_idx[1]["selectivity"] == 1.0 and by_idx[2]["selectivity"] == 1.0
-    assert "predicate keeps" in by_idx[0]["reason"]
-    assert "exempt from the broadcast decision" in got[0]["reason"]
-    # the priced big side is now dimension-sized AND non-leading in
-    # this fixture or leading — either way the broadcast flags agree
-    # with the hand-priced report (checked above); validation errors:
-    with pytest.raises(ValueError, match="predicates"):
-        explain_cost(spark, [big, other], predicates=[None])
-
-
 # ----- script-routed quality tier (VERDICT r12 item 2b) ------------------
 
 
@@ -594,11 +532,11 @@ def _stage(spark, work, staged, name, df, mt):
     os.utime(dst, (mt, mt))
 
 
-def test_stream_hll_and_table_stats_roundtrip_via_file_uri(spark, tmp_path):
-    """The two stateful-merge snapshot sinks drain with their state dir
-    as a ``file://`` URI (the Hadoop FileSystem code path an s3a://
-    deployment takes) and land BIT-IDENTICAL to their batch twins —
-    before round 13 the first ``os.rename`` against a URI threw."""
+def test_stream_hll_roundtrip_via_file_uri(spark, tmp_path):
+    """The HLL snapshot sink drains with its state dir as a ``file://``
+    URI (the Hadoop FileSystem code path an s3a:// deployment takes)
+    and lands BIT-IDENTICAL to its batch twin — before round 13 the
+    first ``os.rename`` against a URI threw."""
     import time
 
     from pyspark.sql import functions as F
@@ -608,14 +546,7 @@ def test_stream_hll_and_table_stats_roundtrip_via_file_uri(spark, tmp_path):
         hll_merge_registers,
         hll_registers,
     )
-    from dask_datapipeline_spark.operators.stats import (
-        table_stats,
-        table_stats_from_snapshot,
-    )
-    from dask_datapipeline_spark.streaming.windows import (
-        stream_incremental_hll,
-        stream_incremental_table_stats,
-    )
+    from dask_datapipeline_spark.streaming.windows import stream_incremental_hll
 
     work = str(tmp_path)
     staged = os.path.join(work, "staged")
@@ -638,21 +569,6 @@ def test_stream_hll_and_table_stats_roundtrip_via_file_uri(spark, tmp_path):
         hll_registers(full, ["g"], "v", p=7, seed=HLL_SEED), ["g"]
     )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-    stats_dir = _uri(tmp_path / "stats")
-    stream_incremental_table_stats(
-        spark, staged, stats_dir, "g bigint, v string", ["g", "v"],
-        checkpoint_dir=os.path.join(work, "ck_ts"),
-    )
-    got_s = sorted(
-        map(tuple, table_stats_from_snapshot(spark, stats_dir).collect())
-    )
-    want_s = sorted(map(tuple, table_stats(full, ["g", "v"]).collect()))
-    assert got_s == want_s
-    # the _APPLIED marker went through the JVM channel and reads back
-    fs = IndexFS.for_path(stats_dir, "test")
-    marker = fs.read_json(IndexFS.join(stats_dir, "_APPLIED"))
-    assert marker["batch_id"] == 1 and marker["ckpt"] == os.path.join(work, "ck_ts")
 
 
 def test_stream_quantile_kmv_and_cdc_roundtrip_via_file_uri(spark, tmp_path):

@@ -439,71 +439,6 @@ def test_indexfs_create_exclusive_both_backends(spark, tmp_path):
         assert fs.read_text(p) == "first"
 
 
-# ----- auto-loaded stats catalog (VERDICT r13 item 4) ---------------------
-
-
-def test_stats_catalog_auto_equals_hand_fed(spark, tmp_path):
-    """The snapshot-loaded stats are the SAME dicts the hand-fed path
-    computes (same assembly function), so the auto fold plans the
-    identical join order; tag/key misconfiguration raises loudly."""
-    from dask_datapipeline_spark.operators.joins import (
-        fold_join,
-        plan_join_order,
-    )
-    from dask_datapipeline_spark.operators.stats import (
-        stats_catalog,
-        table_stats,
-        write_table_stats_snapshot,
-    )
-
-    big = spark.range(400).selectExpr("id AS k", "id % 7 AS v")
-    mid = spark.range(120).selectExpr("id AS k", "id % 5 AS w")
-    small = spark.range(25).selectExpr("id AS k", "id % 3 AS u")
-    frames = {"big": big, "mid": mid, "small": small}
-    root = str(tmp_path / "cat")
-    for name, df in frames.items():
-        write_table_stats_snapshot(df, ["k"], f"{root}/{name}")
-    # a non-snapshot child is skipped, never a crash
-    os.makedirs(f"{root}/notes")
-    cat = stats_catalog(spark, root)
-    assert set(cat) == set(frames)
-    hand = {
-        name: table_stats(df, ["k"]).first().asDict()
-        for name, df in frames.items()
-    }
-    for name in frames:
-        assert cat[name]["k"] == hand[name], name
-    # identical stats → identical planned order
-    tags = ["big", "mid", "small"]
-    assert plan_join_order([cat[t]["k"] for t in tags]) == plan_join_order(
-        [hand[t] for t in tags]
-    )
-    auto = fold_join(
-        [big, mid, small], on="k", order="stats",
-        stats="auto", catalog=cat, tables=tags,
-    )
-    fed = fold_join(
-        [big, mid, small], on="k", order="stats",
-        stats=[hand[t] for t in tags],
-    )
-    assert sorted(map(tuple, auto.collect())) == sorted(
-        map(tuple, fed.collect())
-    )
-    # loud misconfiguration, never a silent re-ANALYZE fallback
-    with pytest.raises(KeyError, match="ghost"):
-        fold_join(
-            [big, mid], on="k", order="stats",
-            stats="auto", catalog=cat, tables=["big", "ghost"],
-        )
-    with pytest.raises(ValueError, match="auto"):
-        fold_join([big, mid], on="k", order="stats", stats="auto")
-    with pytest.raises(ValueError, match="tags"):
-        fold_join(
-            [big, mid], on="k", order="stats",
-            stats="auto", catalog=cat, tables=["big"],
-        )
-
-
 # ----- code-corpus front door (round 14) ---------------------------------
 
 
@@ -797,51 +732,6 @@ def test_homoglyph_fold_three_way_and_spoof_roundtrip(spark):
     )
     assert spoofed != base
     assert fold_homoglyphs_py(spoofed) == base
-
-
-def test_explain_cost_auto_stats_matches_hand_fed(spark, tmp_path):
-    """explain_cost(stats='auto') prices and orders EXACTLY the rows
-    the hand-fed readout does (same catalog resolution as fold_join),
-    labels defaulting to the table tags; misconfiguration raises."""
-    from dask_datapipeline_spark.operators.joins import explain_cost
-    from dask_datapipeline_spark.operators.stats import (
-        stats_catalog,
-        table_stats,
-        write_table_stats_snapshot,
-    )
-
-    big = spark.range(400).selectExpr("id AS k", "id % 7 AS v")
-    mid = spark.range(120).selectExpr("id AS k", "id % 5 AS w")
-    small = spark.range(25).selectExpr("id AS k", "id % 3 AS u")
-    frames = {"big": big, "mid": mid, "small": small}
-    root = str(tmp_path / "cat")
-    for name, df in frames.items():
-        write_table_stats_snapshot(df, ["k"], f"{root}/{name}")
-    cat = stats_catalog(spark, root)
-    hand = {
-        name: table_stats(df, ["k"]).first().asDict()
-        for name, df in frames.items()
-    }
-    tags = ["big", "mid", "small"]
-    auto = explain_cost(
-        spark, "auto", broadcast_rows=100,
-        catalog=cat, tables=tags, key="k",
-    ).collect()
-    fed = explain_cost(
-        spark, [hand[t] for t in tags], broadcast_rows=100, labels=tags
-    ).collect()
-    assert [tuple(r) for r in auto] == [tuple(r) for r in fed]
-    # labels default to the table tags (order = the planner's choice)
-    assert sorted(r["label"] for r in auto) == sorted(tags)
-
-    with pytest.raises(ValueError, match="key="):
-        explain_cost(spark, "auto", catalog=cat, tables=tags)
-    with pytest.raises(KeyError, match="ghost"):
-        explain_cost(
-            spark, "auto", catalog=cat, tables=["ghost"], key="k"
-        )
-    with pytest.raises(ValueError, match="rows or 'auto'"):
-        explain_cost(spark, "automatic")
 
 
 def test_phrase_decontaminate_matches_per_phrase_scan(spark):

@@ -1129,63 +1129,6 @@ def test_robots_wildcard_and_anchor_matching(spark):
     assert got == {1: False, 2: True, 3: False, 4: True, 5: False, 6: True}
 
 
-# ----- table statistics (operators/stats.py) ---------------------------------
-
-
-def test_table_stats_values_and_type_guard(spark):
-    import pytest
-
-    from dask_datapipeline_spark.operators.stats import table_stats
-
-    df = spark.createDataFrame(
-        [(1, "a", None), (2, "b", 1.0), (2, None, 2.0), (5, "a", None)],
-        "k long, s string, d double",
-    )
-    got = {
-        r["col_name"]: r.asDict()
-        for r in table_stats(df, ["k", "s"], p=10).collect()
-    }
-    assert got["k"]["n_rows"] == 4 and got["k"]["n_null"] == 0
-    assert (got["k"]["min_val"], got["k"]["max_val"]) == ("1", "5")
-    assert got["s"]["n_null"] == 1
-    assert (got["s"]["min_val"], got["s"]["max_val"]) == ("a", "b")
-    # tiny cardinalities take the linear-counting branch: near-exact
-    assert abs(got["k"]["ndv_est"] - 3) < 0.1
-    assert abs(got["s"]["ndv_est"] - 2) < 0.1
-    with pytest.raises(ValueError, match="not engine-portable"):
-        table_stats(df, ["d"])
-
-
-def test_join_cardinality_estimate_tracks_actual(spark):
-    """The System-R estimate from table_stats rows must land within
-    HLL error of the ACTUAL equi-join output on the real tables —
-    the stats pass demonstrably feeds a planner decision."""
-    from dask_datapipeline_spark.operators.stats import (
-        estimate_equi_join_rows,
-        table_stats,
-    )
-    from dask_datapipeline_spark.sources.readers import load_testdata
-
-    sf = "/root/testdata/sf0.01"
-    orders = load_testdata(spark, sf, "orders")
-    customer = load_testdata(spark, sf, "customer")
-    so = {
-        r["col_name"]: r.asDict()
-        for r in table_stats(orders, ["o_custkey"]).collect()
-    }
-    sc = {
-        r["col_name"]: r.asDict()
-        for r in table_stats(customer, ["c_custkey"]).collect()
-    }
-    est = estimate_equi_join_rows(so["o_custkey"], sc["c_custkey"])
-    actual = orders.join(
-        customer, orders.o_custkey == customer.c_custkey
-    ).count()
-    # PK-FK join: estimate = n_orders * n_cust / ndv(custkey) — exact
-    # up to the HLL ndv error (~3.2% at p=10; allow 4 sigma)
-    assert abs(est - actual) / actual < 0.15, (est, actual)
-
-
 def test_gopher_triage_samples_are_min_ids(spark):
     from dask_datapipeline_spark.plans.catalog import EXTRA_CATALOG
 

@@ -569,128 +569,3 @@ def test_stream_incremental_dedup_with_compaction_is_flag_identical(
     assert len(plain_cur["inc"]) == len(DEDUP_BATCHES)
 
 
-def test_stream_table_stats_equals_batch_and_guards_replay(spark, tmp_path):
-    """stream_incremental_table_stats (round 12): after a three-batch
-    drain the snapshot equals the batch ANALYZE bit-for-bit, and the
-    _APPLIED replay guard keeps a re-delivered batch id from
-    double-counting the SUM halves (the failure mode the max/distinct
-    sketch sinks never had)."""
-    import json
-    import os
-
-    from dask_datapipeline_spark.operators.stats import (
-        table_stats,
-        table_stats_from_snapshot,
-    )
-    from dask_datapipeline_spark.plans.catalog_llm import _stage_micro_batches
-    from dask_datapipeline_spark.streaming.windows import (
-        stream_incremental_table_stats,
-    )
-
-    src = spark.range(300).selectExpr(
-        "id AS k",
-        "CASE WHEN id % 7 = 0 THEN NULL ELSE id % 40 END AS v",
-        "CAST(id % 11 AS STRING) AS s",
-    )
-    staged = str(tmp_path / "staged")
-    os.makedirs(staged)
-    _stage_micro_batches(
-        [src.where(F.col("k") % 3 == i) for i in range(3)], staged
-    )
-    stats_dir = str(tmp_path / "stats")
-    stream_incremental_table_stats(
-        spark,
-        staged,
-        stats_dir,
-        "k long, v long, s string",
-        ["k", "v", "s"],
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    got = sorted(
-        map(tuple, table_stats_from_snapshot(spark, stats_dir).collect())
-    )
-    want = sorted(map(tuple, table_stats(src, ["k", "v", "s"]).collect()))
-    assert got == want
-    with open(os.path.join(stats_dir, "_APPLIED")) as f:
-        marker = json.load(f)
-    assert marker["batch_id"] == 2
-    assert marker["ckpt"] == str(tmp_path / "ckpt")
-    # GENUINE at-least-once replay: drop the last commit marker from
-    # the SAME checkpoint — the engine re-executes batch 2 under its
-    # original id; without the guard the SUM halves would double-count,
-    # with it the snapshot is untouched
-    os.remove(tmp_path / "ckpt" / "commits" / "2")
-    crc = tmp_path / "ckpt" / "commits" / ".2.crc"
-    if crc.exists():  # stale checksum sidecar would fail the rewrite
-        os.remove(crc)
-    stream_incremental_table_stats(
-        spark,
-        staged,
-        stats_dir,
-        "k long, v long, s string",
-        ["k", "v", "s"],
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    again = sorted(
-        map(tuple, table_stats_from_snapshot(spark, stats_dir).collect())
-    )
-    assert again == want
-    # the identity token is the QUERY ID from <ckpt>/metadata, not the
-    # path (ADVICE r13): a respelled path (trailing slash) of the SAME
-    # checkpoint is a legitimate restart — replay a batch under it and
-    # the guard must skip quietly, not raise
-    os.remove(tmp_path / "ckpt" / "commits" / "2")
-    crc = tmp_path / "ckpt" / "commits" / ".2.crc"
-    if crc.exists():
-        os.remove(crc)
-    stream_incremental_table_stats(
-        spark,
-        staged,
-        stats_dir,
-        "k long, v long, s string",
-        ["k", "v", "s"],
-        checkpoint_dir=str(tmp_path / "ckpt") + "/",
-    )
-    assert sorted(
-        map(tuple, table_stats_from_snapshot(spark, stats_dir).collect())
-    ) == want
-    # a FRESH checkpoint against an existing snapshot restarts batch
-    # ids at 0 — the old <= guard silently skipped every batch forever
-    # (ADVICE r12); the recorded checkpoint identity now raises loudly
-    with pytest.raises(Exception, match="checkpoint"):
-        stream_incremental_table_stats(
-            spark,
-            staged,
-            stats_dir,
-            "k long, v long, s string",
-            ["k", "v", "s"],
-            checkpoint_dir=str(tmp_path / "ckpt2"),
-        )
-    # the checkpoint DELETED AND RECREATED AT THE SAME PATH (the common
-    # 'reset the stream' misconfiguration) is a fresh lineage too: the
-    # path compares equal but the metadata id is new — must raise, not
-    # silently skip every batch (ADVICE r13)
-    import shutil
-
-    shutil.rmtree(tmp_path / "ckpt")
-    with pytest.raises(Exception, match="checkpoint"):
-        stream_incremental_table_stats(
-            spark,
-            staged,
-            stats_dir,
-            "k long, v long, s string",
-            ["k", "v", "s"],
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        )
-    # and a corrupt _APPLIED marker is loud, never masked as -1
-    with open(os.path.join(stats_dir, "_APPLIED"), "w") as f:
-        f.write("not json{")
-    with pytest.raises(Exception, match="corrupt _APPLIED"):
-        stream_incremental_table_stats(
-            spark,
-            staged,
-            stats_dir,
-            "k long, v long, s string",
-            ["k", "v", "s"],
-            checkpoint_dir=str(tmp_path / "ckpt3"),
-        )

@@ -53,7 +53,6 @@ SHOWCASE = [
     ("extra:phrase_search", "positional phrase search (round 14): ONE tokenize pass filtered to phrase terms at the scan (isin), anchor voting via a literal index map (zero joins), one (doc, anchor)-keyed aggregation carrying only phrase-term postings"),
     ("extra:phrase_decontaminate", "batch decontamination probe (round 14): the benchmark (phrase_id,i,term) table BROADCAST against corpus tokens — a map-side filter, so the only exchange is the (doc,phrase,anchor) aggregation over tokens matching the benchmark vocabulary"),
     ("extra:equi_depth_histogram", "distributed equi-depth ntile (ranks.py::global_ntile): bucket-count groupBy + bounded offset window, then a window PARTITIONED by price-range bucket + broadcast offset join — the global ntile's Exchange SinglePartition is gone (round-10 rewrite)"),
-    ("extra:join_order_planned", "stats-driven fold order: the ANALYZE pass ran at plan time (plan_join_order over table_stats rows), so the filtered small input joins first — the physical tree is the System-R left-deep order, not caller order"),
     ("extra:partition_pruning", "partitionBy write + equality read-back: the partition filter prunes DIRECTORIES (PartitionFilters carries the event_type equality; ReadSchema omits the partition column entirely) — with bucketed_join and zorder_layout this completes the three-granularity pruning ladder"),
     ("extra:wds_export_pipeline", "training export end-to-end: the two-pass shard assignment's partitioned windows + ONE applyInPandas tar pack on the same shard key + the flatMap parse — no corpus-sized single-partition operator anywhere in the chain"),
     ("streaming_corpus_clean", "streaming web curation (driver row since round 12): the returned plan is the corpus-global tail over the accumulated extraction deltas — the scan reads the delta=<batch_id> parquet the foreachBatch stage landed (row-local HTML/normalize/canonicalize work happened at O(batch)/trigger, OUTSIDE this plan), then the URL-dedup window + quality gate + banded MinHash clustering shapes already pinned for the batch twin; no corpus-sized single-partition operator"),
