@@ -1,24 +1,30 @@
-"""Materialized MinHash signature index for incremental dedup.
+"""Materialized MinHash index for incremental dedup.
 
 The production daily-ingest workflow (docs/SCALE.md §Dedup): the
-existing corpus's shingle hashes and MinHash signatures are written
-to parquet ONCE at index-build time; every incoming batch then
-flags its near-dups by reading the INDEX — the corpus text is never
-re-shingled, re-hashed, or re-signed per batch. At 100 TB this is
-the difference between a daily O(corpus) recompute and O(batch)
-work plus index scans. A streaming ingest signs each batch ONCE, into
-its increment, and flags it from there with a plan that caches nothing.
+existing corpus is shingled, hashed and signed ONCE, at index-build
+time, into exactly the rows a batch's probe reads; every incoming
+batch then flags its near-dups by SCANNING the index — the corpus text
+is never re-shingled, re-hashed or re-signed, and no band key or hash
+array of an indexed doc is recomputed, per batch. At 100 TB this is
+the difference between a daily O(corpus) recompute and O(batch) work
+plus index scans. A streaming ingest signs each batch ONCE, into its
+increment, and flags it from there with a plan that caches nothing.
 
-Index layout under ``<path>/``:
+Index layout under ``<path>/`` (layout version ``LAYOUT``):
 
-- ``shingles/``    — capped DISTINCT ``(id, __h)`` rows (the Jaccard
-  verify universe; 8-byte hashes, never shingle strings)
-- ``signatures/``  — ``(id, mh_0..mh_{n-1})`` MinHash signatures
+- ``bands/``       — ``(id, __t, __band)`` LSH band rows: the exact
+  ``band_keys`` slot strings of each doc's MinHash signature, the
+  probe's band equi-join keys
+- ``arrays/``      — ``(id, __arr, __n)``: each doc's capped DISTINCT
+  shingle hashes as a sorted array and its size, the rows the exact
+  Jaccard verify (``dedup._verify_pairs``) reads (8-byte hashes,
+  never shingle strings)
 - ``hot_hashes/``  — hashes whose CORPUS document frequency exceeds
   ``max_df`` (empty when ``max_df`` is None)
-- ``_META``        — json of the build parameters; read back at query
-  time so a batch can never be scored against an index built with
-  different hashing parameters
+- ``_META``        — json of the build parameters and the layout
+  version; read back at query time so a batch can never be scored
+  against an index built with different hashing parameters. An index
+  of another layout raises ``ValueError``: a rebuild is the migration
 - ``_CURRENT``     — json MANIFEST of the live state: the active base
   dir pair and the committed increment tags. Every mutation commits by
   atomically rewriting this one file (temp + rename), so readers see
@@ -46,11 +52,17 @@ from pyspark.sql import functions as F
 
 from dask_datapipeline_spark.indexfs import IndexFS
 from dask_datapipeline_spark.operators.dedup import (
-    _jaccard_from_distinct,
+    _hash_arrays,
     _signatures_from_hashed,
+    _verify_pairs,
     band_keys,
     hashed_shingles,
 )
+
+#: version of the on-disk layout above, recorded in ``_META``
+LAYOUT = 2
+#: the probe's tables, one parquet dir each per base and increment
+_TABLES = ("bands", "arrays")
 
 
 def build_minhash_index(
@@ -74,9 +86,9 @@ def build_minhash_index(
     score zero overlaps).
 
     Shuffle budget: the shingle explode+hash is map-side; the hot-hash
-    groupBy, the anti-join, and the signature groupBy are the three
-    keyed exchanges — all moving 8-byte hashes. Returns the metadata
-    dict (also persisted as ``<path>/_META``)."""
+    groupBy, the anti-join, the signature groupBy and the hash-array
+    groupBy are the keyed exchanges — all moving 8-byte hashes.
+    Returns the metadata dict (also persisted as ``<path>/_META``)."""
     from pyspark.storagelevel import StorageLevel
 
     sh_raw = (
@@ -94,16 +106,9 @@ def build_minhash_index(
     else:
         hot = sh_raw.select("__h").limit(0)
     hot.write.mode("overwrite").parquet(IndexFS.join(path, "hot_hashes"))
-    spark = df.sparkSession
-    hot_back = spark.read.parquet(IndexFS.join(path, "hot_hashes"))
-    sh = sh_raw.join(hot_back, on="__h", how="left_anti")
-    sh.write.mode("overwrite").parquet(IndexFS.join(path, "shingles"))
-    sh_back = spark.read.parquet(IndexFS.join(path, "shingles"))
-    _signatures_from_hashed(sh_back, id_col, num_hashes).write.mode(
-        "overwrite"
-    ).parquet(IndexFS.join(path, "signatures"))
-    sh_raw.unpersist()
+    hot_back = df.sparkSession.read.parquet(IndexFS.join(path, "hot_hashes"))
     meta = {
+        "layout": LAYOUT,
         "id_col": id_col,
         "num_hashes": num_hashes,
         "bands": bands,
@@ -111,16 +116,22 @@ def build_minhash_index(
         "max_df": max_df,
         "shingle_mode": shingle_mode,
     }
+    sh = sh_raw.join(hot_back, on="__h", how="left_anti")
+    for name, table in zip(_TABLES, _probe_tables(sh, meta)):
+        table.write.mode("overwrite").parquet(IndexFS.join(path, name))
+    sh_raw.unpersist()
     fs = IndexFS.for_path(path, "build_minhash_index")
     fs.write_json_atomic(IndexFS.join(path, "_META"), meta)
-    _write_manifest(
-        path, {"shingles": "shingles", "signatures": "signatures", "inc": []}
-    )
+    _write_manifest(path, {"bands": "bands", "arrays": "arrays", "inc": []})
     return meta
 
 
-def _manifest_path(index_path: str) -> str:
-    return IndexFS.join(index_path, "_CURRENT")
+def _probe_tables(sh: DataFrame, meta: dict) -> tuple[DataFrame, DataFrame]:
+    """(bands, arrays) rows of the capped DISTINCT ``(id, __h)`` rows
+    ``sh`` — what the index stores per doc and the probe joins on."""
+    id_col, num_hashes = meta["id_col"], meta["num_hashes"]
+    sig = _signatures_from_hashed(sh, id_col, num_hashes)
+    return band_keys(sig, id_col, num_hashes, meta["bands"]), _hash_arrays(sh, id_col)
 
 
 def _write_manifest(index_path: str, manifest: dict) -> None:
@@ -129,66 +140,55 @@ def _write_manifest(index_path: str, manifest: dict) -> None:
     and through HDFS FileContext; see indexfs module docstring for the
     object-store caveat)."""
     fs = IndexFS.for_path(index_path, "_write_manifest")
-    fs.write_json_atomic(_manifest_path(index_path), manifest)
+    fs.write_json_atomic(IndexFS.join(index_path, "_CURRENT"), manifest)
 
 
-def _read_manifest(index_path: str) -> dict:
-    """Live-state manifest; falls back to directory listing for an
-    index written before ``_CURRENT`` existed — skipping dot-prefixed
-    temp dirs and any increment missing either parquet dir (a partial
-    left by a pre-manifest crash; its replay overwrites it whole)."""
-    fs = IndexFS.for_path(index_path, "_read_manifest")
-    mp = _manifest_path(index_path)
-    if fs.isfile(mp):
-        return fs.read_json(mp)
-    inc_root = IndexFS.join(index_path, "inc")
-    tags = []
-    for tag in fs.listdir(inc_root):
-        if tag.startswith("."):
-            continue
-        if fs.isdir(IndexFS.join(inc_root, tag, "shingles")) and fs.isdir(
-            IndexFS.join(inc_root, tag, "signatures")
-        ):
-            tags.append(tag)
-    return {"shingles": "shingles", "signatures": "signatures", "inc": tags}
+def _read_state(index_path: str) -> tuple[dict, dict]:
+    """(meta, manifest) of a built index. Raises ``ValueError`` naming
+    the path when ``_META`` records another layout than ``LAYOUT``:
+    there is no dual read, a rebuild is the migration."""
+    fs = IndexFS.for_path(index_path, "read_minhash_index")
+    meta = fs.read_json(IndexFS.join(index_path, "_META"))
+    if meta.get("layout") != LAYOUT:
+        raise ValueError(
+            f"MinHash index {index_path} has layout {meta.get('layout')!r}, "
+            f"this code reads layout {LAYOUT} (bands/ + arrays/); rebuild it "
+            "with build_minhash_index"
+        )
+    return meta, fs.read_json(IndexFS.join(index_path, "_CURRENT"))
+
+
+def _scan(
+    spark: SparkSession, index_path: str, cur: dict, table: str, tags: list[str]
+) -> DataFrame:
+    """ONE parquet scan of ``table`` over the live base and the
+    increments ``tags`` (a multi-path read, not a union chain)."""
+    return spark.read.parquet(
+        IndexFS.join(index_path, cur[table]),
+        *(IndexFS.join(index_path, "inc", t, table) for t in tags),
+    )
 
 
 def read_minhash_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
-    """(shingles, signatures, hot_hashes, meta) from a built index —
-    the live base UNIONed with every COMMITTED increment (manifest
-    order; each increment is one parquet dir pair, so the union is
-    scan-only). Only dirs the ``_CURRENT`` manifest references are
+    """(bands, arrays, hot_hashes, meta) from a built index — the live
+    base and every COMMITTED increment (manifest order) read as one
+    scan per table. Only dirs the ``_CURRENT`` manifest references are
     read: a half-written increment or an in-progress compaction stage
     is invisible. ``compact_minhash_index`` folds the increment list
     back into one base pair when it grows long (the standard
     base+delta compaction cycle)."""
-    fs = IndexFS.for_path(path, "read_minhash_index")
-    meta = fs.read_json(IndexFS.join(path, "_META"))
-    cur = _read_manifest(path)
-    sh = spark.read.parquet(IndexFS.join(path, cur["shingles"]))
-    sig = spark.read.parquet(IndexFS.join(path, cur["signatures"]))
-    for tag in cur["inc"]:
-        inc_sh, inc_sig = _read_increment(spark, path, tag)
-        sh, sig = sh.unionByName(inc_sh), sig.unionByName(inc_sig)
-    return (
-        sh,
-        sig,
-        spark.read.parquet(IndexFS.join(path, "hot_hashes")),
-        meta,
-    )
+    meta, cur = _read_state(path)
+    bands, arrays = (_scan(spark, path, cur, t, cur["inc"]) for t in _TABLES)
+    return bands, arrays, spark.read.parquet(IndexFS.join(path, "hot_hashes")), meta
 
 
 def _read_increment(
     spark: SparkSession, index_path: str, tag: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(shingles, signatures) of increment ``inc/<tag>`` as parquet scans."""
-    inc = IndexFS.join(index_path, "inc", tag)
-    return (
-        spark.read.parquet(IndexFS.join(inc, "shingles")),
-        spark.read.parquet(IndexFS.join(inc, "signatures")),
-    )
+    """(bands, arrays) of increment ``inc/<tag>`` as parquet scans."""
+    return tuple(spark.read.parquet(IndexFS.join(index_path, "inc", tag, t)) for t in _TABLES)
 
 
 def _batch_shingles(
@@ -198,8 +198,7 @@ def _batch_shingles(
     caller releases it), hashed as the index was built, and its
     distinct rows minus the frozen hot-hash set."""
     hashed = hashed_shingles(
-        batch, meta["id_col"], text_col, meta["shingle_n"],
-        meta.get("shingle_mode", "word"),  # pre-r13 indexes: word
+        batch, meta["id_col"], text_col, meta["shingle_n"], meta["shingle_mode"]
     )
     hot = batch.sparkSession.read.parquet(IndexFS.join(index_path, "hot_hashes"))
     return hashed, hashed.distinct().join(hot, on="__h", how="left_anti")
@@ -208,12 +207,12 @@ def _batch_shingles(
 def append_to_minhash_index(
     batch: DataFrame, index_path: str, batch_tag: str, text_col: str = "text"
 ) -> None:
-    """Append one ingested batch's capped shingle hashes + MinHash
-    signatures to the index as increment ``inc/<batch_tag>/`` — the
-    growth step of the daily-ingest loop: later batches dedup against
-    it, with the corpus still never re-shingled. The batch is shingled,
-    capped and signed ONCE, here; ``stream_incremental_dedup`` flags it
-    from the committed increment.
+    """Append one ingested batch's band rows and hash arrays to the
+    index as increment ``inc/<batch_tag>/`` — the growth step of the
+    daily-ingest loop: later batches dedup against it, with the corpus
+    still never re-shingled. The batch is shingled, capped and signed
+    ONCE, here; ``stream_incremental_dedup`` flags it from the
+    committed increment.
 
     ATOMIC and IDEMPOTENT per tag: both parquet dirs are written into
     a temp dir ``inc/.tmp-<tag>-<8hex>``, renamed whole onto
@@ -230,12 +229,10 @@ def append_to_minhash_index(
     would grow the session's cache without bound."""
     import uuid
 
-    spark = batch.sparkSession
     fs = IndexFS.for_path(index_path, "append_to_minhash_index")
-    meta = fs.read_json(IndexFS.join(index_path, "_META"))
+    meta, cur = _read_state(index_path)
     inc_root = IndexFS.join(index_path, "inc")
     final = IndexFS.join(inc_root, batch_tag)
-    cur = _read_manifest(index_path)
     if batch_tag in cur["inc"] and fs.isdir(final):
         # already committed: a foreachBatch replay carries the SAME
         # rows for the same batch_id, and the frozen hot-hash cap makes
@@ -246,13 +243,10 @@ def append_to_minhash_index(
     fs.makedirs(inc_root)
     tmp = IndexFS.join(inc_root, f".tmp-{batch_tag}-{uuid.uuid4().hex[:8]}")
     try:
-        b_sh.write.mode("overwrite").parquet(IndexFS.join(tmp, "shingles"))
+        for name, table in zip(_TABLES, _probe_tables(b_sh, meta)):
+            table.write.mode("overwrite").parquet(IndexFS.join(tmp, name))
     finally:
         hashed.unpersist()
-    sh_back = spark.read.parquet(IndexFS.join(tmp, "shingles"))
-    _signatures_from_hashed(sh_back, meta["id_col"], meta["num_hashes"]).write.mode(
-        "overwrite"
-    ).parquet(IndexFS.join(tmp, "signatures"))
     if fs.isdir(final):  # staged by a crashed run but never committed
         fs.rmtree(final)
     fs.move(tmp, final)
@@ -292,25 +286,25 @@ def compact_minhash_index(
     listing memory).
 
     The merged tables are the VERBATIM union of base + increments —
-    the exact frames ``read_minhash_index`` was already returning — so
+    the exact rows ``read_minhash_index`` was already returning — so
     ``incremental_near_dup_flags`` output is identical before and
     after (pinned by ``tests/test_streaming.py``); no dedup, no
     re-signing, no cap recompute (the df cap stays frozen until a full
     ``build_minhash_index`` reindex).
 
     Crash safety (same manifest-flip discipline as append): the union
-    is written to NEW versioned dirs ``shingles-v<k>``/
-    ``signatures-v<k>``, then ONE atomic ``_CURRENT`` rewrite makes
-    them live with an empty increment list; only then are the old base
-    and consumed increment dirs deleted. A crash before the flip
-    leaves the old state fully live (stage dirs are unreferenced
-    garbage, removed by the next compaction); a crash after the flip
-    leaves the new state fully live (old dirs are garbage likewise).
-    At no point can a reader see increment rows twice or not at all.
-    SINGLE-WRITER contract (same as append): compaction runs between
-    micro-batches, never concurrently with an append — a tag committed
-    after the manifest snapshot here would be erased by the flip.
-    Returns the new manifest.
+    is written to NEW versioned dirs ``bands-v<k>``/``arrays-v<k>``,
+    then ONE atomic ``_CURRENT`` rewrite makes them live with an empty
+    increment list; only then are the old base and consumed increment
+    dirs deleted. A crash before the flip leaves the old state fully
+    live (stage dirs are unreferenced garbage, removed by the next
+    compaction); a crash after the flip leaves the new state fully
+    live (old dirs are garbage likewise). At no point can a reader see
+    increment rows twice or not at all. SINGLE-WRITER contract (same
+    as append): compaction runs between micro-batches, never
+    concurrently with an append — a tag committed after the manifest
+    snapshot here would be erased by the flip. Returns the new
+    manifest.
 
     ``keep_from`` is the REPLAY WATERMARK for in-sink calls: increment
     tags >= ``keep_from`` (zero-padded batch tags sort by batch id)
@@ -322,7 +316,7 @@ def compact_minhash_index(
     twice (once in the folded base, once in the re-appended inc)."""
     fs = IndexFS.for_path(index_path, "compact_minhash_index")
     fs.sweep_tmp(index_path.rstrip("/"))  # stranded manifest temps
-    cur = _read_manifest(index_path)
+    _, cur = _read_state(index_path)
     fold = [
         t
         for t in cur["inc"]
@@ -333,11 +327,9 @@ def compact_minhash_index(
     # BEFORE the no-fold early return, or garbage stranded by a crash
     # persists until a fold-eligible compaction happens to run (no
     # append is in flight: single-writer contract)
+    live = {cur[t] for t in _TABLES}
     for d in fs.listdir(index_path):
-        if (
-            (d.startswith("shingles-v") or d.startswith("signatures-v"))
-            and d not in (cur["shingles"], cur["signatures"])
-        ):
+        if d.startswith(tuple(f"{t}-v" for t in _TABLES)) and d not in live:
             fs.rmtree(IndexFS.join(index_path, d))
     inc_root = IndexFS.join(index_path, "inc")
     for d in fs.listdir(inc_root):
@@ -348,19 +340,13 @@ def compact_minhash_index(
         # the in-flight tag committed): folding would rewrite the
         # ENTIRE base for zero file-count reduction — skip
         return cur
-    base_sh = cur["shingles"]
-    ver = int(base_sh.rsplit("-v", 1)[1]) if "-v" in base_sh else 0
-    new_sh, new_sig = f"shingles-v{ver + 1}", f"signatures-v{ver + 1}"
-
-    sh = spark.read.parquet(IndexFS.join(index_path, cur["shingles"]))
-    sig = spark.read.parquet(IndexFS.join(index_path, cur["signatures"]))
-    for tag in fold:
-        inc_sh, inc_sig = _read_increment(spark, index_path, tag)
-        sh, sig = sh.unionByName(inc_sh), sig.unionByName(inc_sig)
-    sh.write.parquet(IndexFS.join(index_path, new_sh))
-    sig.write.parquet(IndexFS.join(index_path, new_sig))
-
-    new_cur = {"shingles": new_sh, "signatures": new_sig, "inc": kept}
+    ver = int(cur["bands"].rsplit("-v", 1)[1]) if "-v" in cur["bands"] else 0
+    new_cur = {t: f"{t}-v{ver + 1}" for t in _TABLES}
+    for t in _TABLES:
+        _scan(spark, index_path, cur, t, fold).write.parquet(
+            IndexFS.join(index_path, new_cur[t])
+        )
+    new_cur["inc"] = kept
     if lease is not None:
         # re-check the writer fence AT the flip boundary, not only at
         # batch start — one batch performs several state-touching flips
@@ -371,8 +357,8 @@ def compact_minhash_index(
 
     # post-flip garbage collection (best-effort; next compaction sweeps
     # anything a crash strands here)
-    fs.rmtree(IndexFS.join(index_path, cur["shingles"]))
-    fs.rmtree(IndexFS.join(index_path, cur["signatures"]))
+    for d in live:
+        fs.rmtree(IndexFS.join(index_path, d))
     for tag in fold:
         fs.rmtree(IndexFS.join(inc_root, tag))
     return new_cur
@@ -385,8 +371,9 @@ def incremental_near_dup_flags(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Flag each batch document as a near-dup of the indexed corpus or
-    of an earlier batch document — reading corpus signatures/shingles
-    from the materialized index, never from corpus text.
+    of an earlier batch document — reading the corpus side from the
+    materialized index's band rows and hash arrays, never from corpus
+    text.
 
     Output: ``(id, dup_of, is_new)`` — one row per batch doc;
     ``dup_of`` is the minimum qualifying partner (any earlier doc, or
@@ -394,47 +381,50 @@ def incremental_near_dup_flags(
 
     Plan shape: batch shingle+hash (map-side over the batch scan
     only; the one cached level), frozen-cap anti-join against the KiB
-    hot-hash table, batch signatures (one groupBy), then ``_flags``:
-    ONE band equi-join of batch signatures against index ∪ batch
-    signatures and the candidates-only Jaccard verify over index ∪
-    batch shingles — every wide exchange keys on 8-byte hashes, band
-    keys or doc ids; corpus cost is index SCANS (at 100 TB:
-    partition-pruned parquet), not recompute."""
-    spark = batch.sparkSession
-    idx_sh, idx_sig, _, meta = read_minhash_index(spark, index_path)
+    hot-hash table, the batch's band rows and hash arrays (one groupBy
+    each), then ``_flags``: ONE band equi-join of the batch's band rows
+    against the index's and the batch's, and the exact verify of the
+    candidates against their stored hash arrays — every wide exchange
+    keys on band keys or doc ids; corpus cost is index SCANS, not
+    recompute."""
+    idx_bands, idx_arrs, _, meta = read_minhash_index(batch.sparkSession, index_path)
     _, b_sh = _batch_shingles(batch, index_path, meta, text_col)
-    b_sig = _signatures_from_hashed(b_sh, meta["id_col"], meta["num_hashes"])
-    return _flags(batch, idx_sh, idx_sig, b_sh, b_sig, meta, threshold)
+    b_bands, b_arrs = _probe_tables(b_sh, meta)
+    return _flags(batch, idx_bands, idx_arrs, b_bands, b_arrs, meta, threshold)
 
 
 def _flags(
-    batch: DataFrame, idx_sh: DataFrame, idx_sig: DataFrame, b_sh: DataFrame,
-    b_sig: DataFrame, meta: dict, threshold: float,
+    batch: DataFrame, idx_bands: DataFrame, idx_arrs: DataFrame,
+    b_bands: DataFrame, b_arrs: DataFrame, meta: dict, threshold: float,
 ) -> DataFrame:
-    """The flags plan given the batch's capped shingles and signatures —
+    """The flags plan given the batch's band rows and hash arrays —
     computed by ``incremental_near_dup_flags``, or scanned from the
-    committed increment by ``stream_incremental_dedup``. Caches nothing."""
+    committed increment by ``stream_incremental_dedup``. Caches nothing.
+
+    A doc id that several index tables hold (an id re-ingested by a
+    later append, before or after compaction) has one band-row set and
+    one hash array per table; each stored version is verified on its
+    own, and the pair qualifies when any version passes."""
     id_col = meta["id_col"]
-    num_hashes, bands = meta["num_hashes"], meta["bands"]
 
     # REPLAY SAFETY: drop the batch's own ids from the index side
     # before unioning. The batch may already be in the index (the
     # stream appends before it flags; a replay may follow a partial
-    # append), and the union would then hold each (id, shingle) row
-    # twice — so flags before and after the batch's own append are
-    # identical. Side effect by design: a re-ingested id is treated as
-    # an UPDATE of that document, never as its own dup partner. One
-    # anti-join keyed on the bounded batch id set (broadcast).
+    # append), and the union would then hold each of its rows twice —
+    # so flags before and after the batch's own append are identical.
+    # Side effect by design: a re-ingested id is treated as an UPDATE
+    # of that document, never as its own dup partner. One anti-join
+    # per table keyed on the bounded batch id set (broadcast).
     b_ids = batch.select(id_col).distinct()
-    idx_sh = idx_sh.join(F.broadcast(b_ids), on=id_col, how="left_anti")
-    idx_sig = idx_sig.join(F.broadcast(b_ids), on=id_col, how="left_anti")
+    idx_bands = idx_bands.join(F.broadcast(b_ids), on=id_col, how="left_anti")
+    idx_arrs = idx_arrs.join(F.broadcast(b_ids), on=id_col, how="left_anti")
 
-    side_b = band_keys(b_sig, id_col, num_hashes, bands)
-    side_all = band_keys(idx_sig.unionByName(b_sig), id_col, num_hashes, bands)
     cand = (
-        side_b.select(F.col(id_col).alias("__ba"), "__t", "__band")
+        b_bands.select(F.col(id_col).alias("__ba"), "__t", "__band")
         .join(
-            side_all.select(F.col(id_col).alias("__bb"), "__t", "__band"),
+            idx_bands.unionByName(b_bands).select(
+                F.col(id_col).alias("__bb"), "__t", "__band"
+            ),
             on=["__t", "__band"],
         )
         .filter(F.col("__ba") != F.col("__bb"))
@@ -444,7 +434,7 @@ def _flags(
         )
         .distinct()
     )
-    pairs = _jaccard_from_distinct(idx_sh.unionByName(b_sh), cand, id_col, threshold)
+    pairs = _verify_pairs(cand, idx_arrs.unionByName(b_arrs), id_col, threshold)
 
     # one pass over the verified pairs, each in both orientations: a
     # partner counts when it has the smaller id or is not in the batch
@@ -484,7 +474,7 @@ def maybe_compact_minhash_index(
     the fold and from the threshold count."""
     if max_increments < 1:
         raise ValueError(f"max_increments={max_increments} must be >= 1")
-    inc = _read_manifest(index_path)["inc"]
+    inc = _read_state(index_path)[1]["inc"]
     eligible = [
         t for t in inc if keep_from is None or _tag_order(t) < _tag_order(keep_from)
     ]

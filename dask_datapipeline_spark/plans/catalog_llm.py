@@ -4206,19 +4206,22 @@ WHERE d.doc_id % 2 = 1
     "Incremental dedup — the production daily-ingest workflow: flag each doc of "
     "the incoming batch (odd ids) as new or a near-dup of the existing corpus "
     "(even ids) / an earlier incoming doc. The corpus side is a MATERIALIZED "
-    "index (operators/minhash_index.py): shingle hashes + signatures + the "
-    "frozen df-cap hot-hash set written to parquet once (keyed by source mtime "
-    "+ parameters) and only SCANNED per batch — corpus text is never "
-    "re-shingled. The oracle replays the frozen-cap semantics (cap from corpus "
+    "index (operators/minhash_index.py): LSH band keys + sorted shingle-hash "
+    "arrays + the frozen df-cap hot-hash set written to parquet once (keyed by "
+    "source mtime, parameters and layout) and only SCANNED per batch — corpus "
+    "text is never re-shingled. The oracle replays the frozen-cap semantics (cap from corpus "
     "df only, not corpus+batch; identical results at test scales where "
     "nothing reaches the cap)",
 )
 def q_incremental_dedup(spark, sf_dir):
     import hashlib as _hl
     import os as _os
+    import shutil as _sh
     import tempfile as _tf
+    import uuid as _uuid
 
     from dask_datapipeline_spark.operators.minhash_index import (
+        LAYOUT,
         build_minhash_index,
         incremental_near_dup_flags,
     )
@@ -4228,20 +4231,25 @@ def q_incremental_dedup(spark, sf_dir):
     batch = docs.where(F.col("doc_id") % 2 == 1)
     src = _os.path.join(sf_dir, "documents.parquet")
     key = _hl.md5(
-        f"{src}:{_os.path.getmtime(src)}:{_NUM_HASHES}:{_BANDS}:3:{_MAX_DF}:v1".encode()
+        f"{src}:{_os.path.getmtime(src)}:{_NUM_HASHES}:{_BANDS}:3:{_MAX_DF}:"
+        f"layout{LAYOUT}".encode()
     ).hexdigest()[:16]
     index_path = _os.path.join(_tf.gettempdir(), "ddps_minhash_index", key)
-    if not _os.path.exists(_os.path.join(index_path, "_META")):
-        # write-once: keyed by source mtime + parameters, so a driver
-        # testdata regeneration or a parameter change rebuilds
+    if not _os.path.exists(index_path):
+        # write-once, keyed by source mtime, parameters and index
+        # layout; built aside and renamed into place, so a concurrent
+        # run never reads a half-built index
+        tmp = f"{index_path}.tmp-{_uuid.uuid4().hex[:8]}"
         build_minhash_index(
-            corpus,
-            index_path,
-            num_hashes=_NUM_HASHES,
-            bands=_BANDS,
-            shingle_n=3,
+            corpus, tmp, num_hashes=_NUM_HASHES, bands=_BANDS, shingle_n=3,
             max_df=_MAX_DF,
         )
+        try:
+            _os.replace(tmp, index_path)
+        except OSError:
+            if not _os.path.isdir(index_path):
+                raise
+            _sh.rmtree(tmp)  # another run renamed its build in first
     return incremental_near_dup_flags(batch, index_path, threshold=0.5)
 
 

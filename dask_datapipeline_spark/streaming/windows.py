@@ -769,18 +769,19 @@ def stream_incremental_dedup(
 ) -> None:
     """Streaming incremental near-dup: drain a document file stream
     (one staged parquet file per micro-batch) through ``foreachBatch``,
-    appending each micro-batch's own signatures to the PERSISTED
-    MinHash corpus index (``operators/minhash_index.py``) as an
-    increment and flagging it against that index — so later
+    appending each micro-batch's own band rows and hash arrays to the
+    PERSISTED MinHash corpus index (``operators/minhash_index.py``) as
+    an increment and flagging it against that index — so later
     micro-batches dedup against everything ingested before them, and
     the corpus text is never re-shingled.
 
     Per micro-batch: ``append_to_minhash_index`` tagged by batch_id
     shingles and signs the batch ONCE into increment ``inc/<tag>``
-    (idempotent) → the flags plan reads them back from the increment,
-    caching nothing → flags written to ``out_dir/batch-<id>``
-    (mode=overwrite ⇒ idempotent under at-least-once replay). Flags
-    computed after the commit equal flags computed before it, because
+    (idempotent) → the flags plan reads its band rows and hash arrays
+    back from the increment, caching nothing → flags written to
+    ``out_dir/batch-<id>`` (mode=overwrite ⇒ idempotent under
+    at-least-once replay). Flags computed after the commit equal flags
+    computed before it, because
     the batch's own ids are anti-joined out of the index side; so a
     crash between commit and flags write replays to identical flags.
     A STABLE ``checkpoint_dir`` stores source offsets: a restarted run
@@ -823,9 +824,9 @@ def stream_incremental_dedup(
             lease.check_and_renew()
         tag = f"b{batch_id:05d}"
         append_to_minhash_index(batch_df, index_path, tag)
-        idx_sh, idx_sig, _, meta = read_minhash_index(spark, index_path)
-        b_sh, b_sig = _read_increment(spark, index_path, tag)
-        flags = _flags(batch_df, idx_sh, idx_sig, b_sh, b_sig, meta, threshold)
+        idx_bands, idx_arrs, _, meta = read_minhash_index(spark, index_path)
+        b_bands, b_arrs = _read_increment(spark, index_path, tag)
+        flags = _flags(batch_df, idx_bands, idx_arrs, b_bands, b_arrs, meta, threshold)
         flags.write.mode("overwrite").parquet(
             IndexFS.join(out_dir, f"batch-{batch_id:05d}")
         )

@@ -4,11 +4,13 @@ index — the corpus text must never be re-shingled at query time."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from dask_datapipeline_spark.operators.minhash_index import (
+    LAYOUT,
     build_minhash_index,
     incremental_near_dup_flags,
     read_minhash_index,
@@ -79,12 +81,32 @@ def test_flags_match_python_model(spark, index_dir):
 
 
 def test_index_layout_and_meta(spark, index_dir):
-    sh, sig, hot, meta = read_minhash_index(spark, index_dir)
+    from dask_datapipeline_spark.operators.dedup import (
+        band_keys,
+        hashed_shingles,
+        minhash_signatures,
+    )
+
+    bands, arrays, hot, meta = read_minhash_index(spark, index_dir)
     assert meta["num_hashes"] == 16 and meta["bands"] == 4
-    assert set(sh.columns) == {"doc_id", "__h"}
-    assert sig.columns[0] == "doc_id" and len(sig.columns) == 17
-    assert sig.count() == len(CORPUS)
+    assert meta["layout"] == LAYOUT
+    assert set(bands.columns) == {"doc_id", "__t", "__band"}
+    assert set(arrays.columns) == {"doc_id", "__arr", "__n"}
+    assert arrays.count() == len(CORPUS)
     assert hot.count() == 0  # nothing reaches df>256 here
+    # the stored rows are exactly what the probe would compute: the
+    # band_keys slot strings, and each doc's sorted distinct hashes
+    corpus = spark.createDataFrame(CORPUS, "doc_id long, text string")
+    want_bands = band_keys(minhash_signatures(corpus), "doc_id", 16, 4)
+    assert sorted(map(tuple, bands.collect())) == sorted(
+        map(tuple, want_bands.select(*bands.columns).collect())
+    )
+    want_arrs = {}
+    for r in hashed_shingles(corpus, "doc_id", "text", 3).collect():
+        want_arrs.setdefault(r["doc_id"], set()).add(r["__h"])
+    assert {r["doc_id"]: (r["__arr"], r["__n"]) for r in arrays.collect()} == {
+        i: (sorted(h), len(h)) for i, h in want_arrs.items()
+    }
 
 
 def test_query_plan_scans_index_not_corpus_text(spark, index_dir):
@@ -97,8 +119,8 @@ def test_query_plan_scans_index_not_corpus_text(spark, index_dir):
         .executedPlan()
         .toString()
     )
-    assert "signatures" in plan and "shingles" in plan
-    assert os.path.basename(index_dir) in plan
+    name = os.path.basename(index_dir)
+    assert f"{name}/bands" in plan and f"{name}/arrays" in plan
 
 
 def test_frozen_cap_drops_hot_hashes_for_batch_too(spark, tmp_path):
@@ -220,18 +242,20 @@ def test_compaction_flags_byte_identical(spark, grown_index):
     before = _flags_rows(spark, grown_index, probe)
     assert _manifest(grown_index)["inc"] == ["b00000", "b00001"]
     new_cur = compact_minhash_index(spark, grown_index)
-    assert new_cur["inc"] == [] and new_cur["shingles"] == "shingles-v1"
+    assert new_cur["inc"] == [] and new_cur["bands"] == "bands-v1"
+    assert new_cur["arrays"] == "arrays-v1"
     assert _flags_rows(spark, grown_index, probe) == before
     # consumed dirs are gone; the new base pair is live
-    assert not os.path.isdir(os.path.join(grown_index, "shingles"))
+    assert not os.path.isdir(os.path.join(grown_index, "bands"))
+    assert not os.path.isdir(os.path.join(grown_index, "arrays"))
     assert not os.path.isdir(os.path.join(grown_index, "inc", "b00000"))
-    sh, sig, _, _ = read_minhash_index(spark, grown_index)
-    assert sig.count() == len(CORPUS) + 2
+    _, arrays, _, _ = read_minhash_index(spark, grown_index)
+    assert arrays.count() == len(CORPUS) + 2
     # a second compaction of an increment-free index is a NO-OP (the
     # round-11 early return: folding nothing would rewrite the whole
     # base for zero file-count reduction) — same manifest back, no
     # version bump, flags untouched
-    assert compact_minhash_index(spark, grown_index)["shingles"] == "shingles-v1"
+    assert compact_minhash_index(spark, grown_index)["bands"] == "bands-v1"
     assert _flags_rows(spark, grown_index, probe) == before
 
 
@@ -245,14 +269,14 @@ def test_compaction_restart_sweeps_crashed_stage(spark, grown_index):
     probe = [BATCH[2]]
     before = _flags_rows(spark, grown_index, probe)
     # fake the stranded stage of a compaction that died pre-flip
-    os.makedirs(os.path.join(grown_index, "shingles-v1"))
-    with open(os.path.join(grown_index, "shingles-v1", "junk"), "w") as f:
+    os.makedirs(os.path.join(grown_index, "bands-v1"))
+    with open(os.path.join(grown_index, "bands-v1", "junk"), "w") as f:
         f.write("not parquet")
     assert _flags_rows(spark, grown_index, probe) == before  # invisible
     new_cur = compact_minhash_index(spark, grown_index)
-    assert new_cur["shingles"] == "shingles-v1"
+    assert new_cur["bands"] == "bands-v1"
     assert _flags_rows(spark, grown_index, probe) == before
-    assert not os.path.exists(os.path.join(grown_index, "shingles-v1", "junk"))
+    assert not os.path.exists(os.path.join(grown_index, "bands-v1", "junk"))
 
 
 def test_compaction_sweeps_append_stage_stranded_by_a_crash(
@@ -300,10 +324,10 @@ def test_no_fold_compaction_still_sweeps_stranded_stage(spark, grown_index):
         compact_minhash_index,
     )
 
-    os.makedirs(os.path.join(grown_index, "signatures-v7"))
+    os.makedirs(os.path.join(grown_index, "arrays-v7"))
     cur = compact_minhash_index(spark, grown_index, keep_from="b00000")
     assert cur["inc"] == ["b00000", "b00001"]  # nothing folded
-    assert not os.path.exists(os.path.join(grown_index, "signatures-v7"))
+    assert not os.path.exists(os.path.join(grown_index, "arrays-v7"))
 
 
 def test_digitless_tags_fold_before_any_watermark(spark, grown_index):
@@ -330,8 +354,8 @@ def test_digitless_tags_fold_before_any_watermark(spark, grown_index):
     assert cur["inc"] == ["b00001"]
     assert not os.path.isdir(os.path.join(grown_index, "inc", "manual"))
     assert _flags_rows(spark, grown_index, probe) == before
-    _, sig, _, _ = read_minhash_index(spark, grown_index)
-    assert sig.count() == len(CORPUS) + 3
+    _, arrays, _, _ = read_minhash_index(spark, grown_index)
+    assert arrays.count() == len(CORPUS) + 3
 
 
 def test_uncommitted_increment_invisible_and_replay_heals(spark, grown_index):
@@ -351,12 +375,12 @@ def test_uncommitted_increment_invisible_and_replay_heals(spark, grown_index):
     cur["inc"].remove("b00002")
     with open(os.path.join(grown_index, "_CURRENT"), "w") as f:
         json.dump(cur, f)
-    sh, sig, _, _ = read_minhash_index(spark, grown_index)
-    assert sig.count() == len(CORPUS) + 2  # b00002 invisible
+    _, arrays, _, _ = read_minhash_index(spark, grown_index)
+    assert arrays.count() == len(CORPUS) + 2  # b00002 invisible
     append_to_minhash_index(batch, grown_index, "b00002")  # the replay
     assert "b00002" in _manifest(grown_index)["inc"]
-    _, sig2, _, _ = read_minhash_index(spark, grown_index)
-    assert sig2.count() == len(CORPUS) + 3
+    _, arrays2, _, _ = read_minhash_index(spark, grown_index)
+    assert arrays2.count() == len(CORPUS) + 3
 
 
 def test_committed_replay_is_noop(spark, grown_index):
@@ -368,18 +392,132 @@ def test_committed_replay_is_noop(spark, grown_index):
     )
 
     inc = os.path.join(grown_index, "inc", "b00000")
-    files_before = sorted(os.listdir(os.path.join(inc, "shingles")))
+    files_before = sorted(os.listdir(os.path.join(inc, "bands")))
     mtime = os.path.getmtime(inc)
     append_to_minhash_index(
         spark.createDataFrame([BATCH[0]], "doc_id long, text string"),
         grown_index,
         "b00000",
     )
-    assert sorted(os.listdir(os.path.join(inc, "shingles"))) == files_before
+    assert sorted(os.listdir(os.path.join(inc, "bands"))) == files_before
     assert os.path.getmtime(inc) == mtime
     # a partial temp dir (crash between the two parquet writes) is
     # likewise invisible to the reader
     tmp = os.path.join(grown_index, "inc", ".tmp-bXXXXX-dead")
-    os.makedirs(os.path.join(tmp, "shingles"))
-    _, sig, _, _ = read_minhash_index(spark, grown_index)
-    assert sig.count() == len(CORPUS) + 2
+    os.makedirs(os.path.join(tmp, "bands"))
+    _, arrays, _, _ = read_minhash_index(spark, grown_index)
+    assert arrays.count() == len(CORPUS) + 2
+
+
+def test_index_without_layout_version_is_rejected(spark, tmp_path):
+    """An index whose _META records no layout version (written before
+    the bands/ + arrays/ layout) fails loudly, naming its path, on
+    every entry point: there is no dual read, a rebuild migrates."""
+    import json
+
+    from dask_datapipeline_spark.operators.minhash_index import (
+        append_to_minhash_index,
+        compact_minhash_index,
+    )
+
+    path = str(tmp_path / "old_idx")
+    build_minhash_index(spark.createDataFrame(CORPUS, "doc_id long, text string"), path)
+    with open(os.path.join(path, "_META")) as f:
+        meta = json.load(f)
+    del meta["layout"]
+    with open(os.path.join(path, "_META"), "w") as f:
+        json.dump(meta, f)
+    batch = spark.createDataFrame([BATCH[0]], "doc_id long, text string")
+    for call in (
+        lambda: read_minhash_index(spark, path),
+        lambda: incremental_near_dup_flags(batch, path),
+        lambda: append_to_minhash_index(batch, path, "b00000"),
+        lambda: compact_minhash_index(spark, path),
+    ):
+        with pytest.raises(ValueError, match=f"{re.escape(path)}.*rebuild"):
+            call()
+
+
+# doc 0 of REINGEST_CORPUS is re-ingested by a later append, so two
+# index tables hold an id 0: the base with T1 and the increment with
+# the new text
+T1 = "the quick brown fox jumps over the lazy dog"
+REINGEST_CORPUS = [(0, T1), (2, "sphinx of black quartz judge my vow now ok")]
+
+
+@pytest.mark.parametrize(
+    "new_text, want",
+    [
+        # an update that keeps 6 of T1's 7 shingles
+        (
+            "the quick brown fox jumps over the lazy cat",
+            {11: (0, False), 13: (0, False), 15: (None, True)},
+        ),
+        # a replacement sharing no shingle with T1, and longer
+        (
+            "pack my box with five dozen liquor jugs today and then some more",
+            {11: (0, False), 13: (0, False), 15: (None, True)},
+        ),
+    ],
+    ids=["update", "replace"],
+)
+def test_reingested_id_is_verified_per_stored_version(spark, tmp_path, new_text, want):
+    """A batch is flagged after an append re-ingested a corpus id. Each
+    table's version of the id is verified on its own; a pair qualifies
+    when either version passes. So a copy of the old text (11) and a
+    copy of the new one (13) both flag against doc 0, before and after
+    the increment is compacted into the base. (The layout that stored
+    shingles regrouped both versions into one hash array with their
+    sizes summed: 'replace' then left 11 new, at Jaccard 7/17.)"""
+    from dask_datapipeline_spark.operators.minhash_index import (
+        append_to_minhash_index,
+        compact_minhash_index,
+    )
+
+    path = str(tmp_path / "idx")
+    schema = "doc_id long, text string"
+    build_minhash_index(spark.createDataFrame(REINGEST_CORPUS, schema), path, max_df=256)
+    append_to_minhash_index(spark.createDataFrame([(0, new_text)], schema), path, "b00000")
+    probe = [(11, T1), (13, new_text), (15, "entirely new content that matches nothing")]
+    want_rows = sorted((i, dup, new) for i, (dup, new) in want.items())
+    assert _flags_rows(spark, path, probe) == want_rows
+    compact_minhash_index(spark, path)
+    assert _flags_rows(spark, path, probe) == want_rows
+
+
+def test_catalog_index_cache_is_built_aside_and_keyed_by_layout(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """extra:incremental_dedup caches its corpus index under the temp
+    dir. Two runs that find the cache cold at once each build into a
+    private sibling and rename it into place: both return the same
+    flags and exactly one index is left, with no temp sibling. The
+    cache key names the layout, so a layout change builds a new index
+    instead of reading an old one."""
+    import tempfile
+    import threading
+
+    from dask_datapipeline_spark.operators import minhash_index
+    from dask_datapipeline_spark.plans.catalog_llm import q_incremental_dedup
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cache = tmp_path / "ddps_minhash_index"
+    out, errors = [], []
+
+    def run():
+        try:
+            out.append(sorted(map(tuple, q_incremental_dedup(spark, sf_dir).collect())))
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    assert len(out) == 2 and out[0] == out[1] and out[0]
+    assert len(os.listdir(cache)) == 1
+    monkeypatch.setattr(minhash_index, "LAYOUT", LAYOUT + 1)
+    assert sorted(map(tuple, q_incremental_dedup(spark, sf_dir).collect())) == out[0]
+    assert len(os.listdir(cache)) == 2

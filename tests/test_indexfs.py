@@ -152,7 +152,7 @@ def test_minhash_index_roundtrip_via_file_uri(spark, tmp_path):
     # flags bit-identical, watermark respected
     before = _mh_flags(spark, uri, probe)
     cur = compact_minhash_index(spark, uri, keep_from="b00001")
-    assert cur["inc"] == ["b00001"] and cur["shingles"] == "shingles-v1"
+    assert cur["inc"] == ["b00001"] and cur["bands"] == "bands-v1"
     assert _mh_flags(spark, uri, probe) == before
     assert not os.path.isdir(str(tmp_path / "mh_uri" / "inc" / "b00000"))
     # manifest on disk is the flipped one (written through Hadoop)

@@ -124,12 +124,18 @@ def test_streaming_bm25_sink_auto_compacts(spark, tmp_path):
     assert got == want
 
 
+def _minhash_index_rows(spark, idx):
+    """Every live (bands, arrays) row of the index, sorted."""
+    from dask_datapipeline_spark.operators.minhash_index import read_minhash_index
+
+    return [sorted(tuple(r) for r in t.collect()) for t in read_minhash_index(spark, idx)[:2]]
+
+
 def test_minhash_maybe_compact_threshold(spark, tmp_path):
     from dask_datapipeline_spark.operators.minhash_index import (
         append_to_minhash_index,
         build_minhash_index,
         maybe_compact_minhash_index,
-        read_minhash_index,
     )
 
     docs = spark.createDataFrame(
@@ -141,12 +147,12 @@ def test_minhash_maybe_compact_threshold(spark, tmp_path):
     for b in range(3):
         batch = docs.where((F.col("doc_id") >= 10 + b * 5) & (F.col("doc_id") < 15 + b * 5))
         append_to_minhash_index(batch, idx, f"t{b}")
-    sh_before = sorted(tuple(r) for r in read_minhash_index(spark, idx)[0].collect())
+    rows_before = _minhash_index_rows(spark, idx)
     assert maybe_compact_minhash_index(spark, idx, max_increments=5) is False
     assert maybe_compact_minhash_index(spark, idx, max_increments=2) is True
     assert maybe_compact_minhash_index(spark, idx, max_increments=2) is False
-    sh_after = sorted(tuple(r) for r in read_minhash_index(spark, idx)[0].collect())
-    assert sh_after == sh_before
+    rows_after = _minhash_index_rows(spark, idx)
+    assert rows_after == rows_before
 
 
 # ----- parquet bloom-filter pruning (tier 4) --------------------------
@@ -461,11 +467,10 @@ def test_minhash_compaction_keep_from_replay_safe(spark, tmp_path):
     the in-flight tag in the manifest, so the replayed append still
     no-ops on the tag-in-manifest check."""
     from dask_datapipeline_spark.operators.minhash_index import (
-        _read_manifest,
+        _read_state,
         append_to_minhash_index,
         build_minhash_index,
         maybe_compact_minhash_index,
-        read_minhash_index,
     )
 
     docs = spark.createDataFrame(
@@ -482,17 +487,17 @@ def test_minhash_compaction_keep_from_replay_safe(spark, tmp_path):
     }
     for tag, batch in batches.items():
         append_to_minhash_index(batch, idx, tag)
-    sh_before = sorted(tuple(r) for r in read_minhash_index(spark, idx)[0].collect())
+    rows_before = _minhash_index_rows(spark, idx)
 
     # in-sink call during t2: folds t0/t1 only, t2 stays live
     assert maybe_compact_minhash_index(spark, idx, 1, keep_from="t2") is True
-    assert _read_manifest(idx)["inc"] == ["t2"]
+    assert _read_state(idx)[1]["inc"] == ["t2"]
 
     # crash before the streaming commit -> t2 replays; the append must
     # no-op (tag still in the manifest), keeping rows single-counted
     append_to_minhash_index(batches["t2"], idx, "t2")
-    sh_after = sorted(tuple(r) for r in read_minhash_index(spark, idx)[0].collect())
-    assert sh_after == sh_before
+    rows_after = _minhash_index_rows(spark, idx)
+    assert rows_after == rows_before
     # threshold respects the watermark too
     assert maybe_compact_minhash_index(spark, idx, 1, keep_from="t2") is False
 

@@ -255,8 +255,8 @@ def test_minhash_index_char_mode_flags_cjk_batch(spark, tmp_path):
     ]
     # append honors the recorded mode: a later batch dups against it
     append_to_minhash_index(batch, char_idx, "b00000")
-    sh, _sig, _hot, meta2 = read_minhash_index(spark, char_idx)
-    assert meta2.get("shingle_mode") == "char" and sh.count() > 0
+    _bands, arrays, _hot, meta2 = read_minhash_index(spark, char_idx)
+    assert meta2.get("shingle_mode") == "char" and arrays.count() > 0
     batch2 = spark.createDataFrame(
         [(20, "吾輩は猫である。名前はまだ無い。どこで生れたかとんと見当がつかぬ。了了")],
         "doc_id long, text string",

@@ -103,7 +103,7 @@ def test_lease_fence_stops_minhash_compaction_flip(spark, tmp_path):
         append_to_minhash_index,
         build_minhash_index,
         compact_minhash_index,
-        _read_manifest,
+        _read_state,
     )
 
     docs = spark.createDataFrame(
@@ -117,7 +117,7 @@ def test_lease_fence_stops_minhash_compaction_flip(spark, tmp_path):
         "doc_id long, text string",
     )
     append_to_minhash_index(batch, idx, batch_tag="b00000")
-    before = _read_manifest(idx)
+    before = _read_state(idx)[1]
     assert before["inc"] == ["b00000"]
     now = [1000.0]
     clock = lambda: now[0]  # noqa: E731
@@ -128,10 +128,10 @@ def test_lease_fence_stops_minhash_compaction_flip(spark, tmp_path):
     b.acquire()
     with pytest.raises(LeaseFencedError):
         compact_minhash_index(spark, idx, lease=a)
-    after = _read_manifest(idx)
+    after = _read_state(idx)[1]
     assert after == before  # flip never happened
     # every manifest-referenced dir still present and readable
-    for key in ("shingles", "signatures"):
+    for key in ("bands", "arrays"):
         assert spark.read.parquet(os.path.join(idx, after[key])).count() > 0
 
 

@@ -12,6 +12,20 @@ Usage:
 Prints a markdown table (warm secs per corpus, growth exponents) for
 pasting into docs/SCALE.md.
 
+Streaming-dedup probe (ROADMAP item 6):
+    python3 tools/measure_scaling.py --stream [base_docs...]
+        (default: 1000 10000)
+For each base size, ``perfbench.gen.gen_stream`` (seed 7) writes a
+corpus, an earlier ingest and three 200-doc micro-batches. The corpus
+is indexed and the earlier ingest appended; then each micro-batch runs
+what ``stream_incremental_dedup`` runs per batch with no compaction:
+the append, and the flags write from its increment. One table row per
+batch: stage ``inputRecords`` summed from the status store and Spark
+jobs, for the whole batch and for its flags write alone (the reads of
+the index, whose parquet schema inference runs a job each, are billed
+to the batch only), and wall seconds. Input rows that grow with the
+base size are work in proportion to the index, not to the batch.
+
 Fixed Spark overhead dominates the small sfs, so two exponents are
 reported, both from warm runs:
     alpha_top  = log(t_top/t_prev) / log(rows_top/rows_prev)
@@ -590,7 +604,68 @@ SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf
 DEFAULT_SCALE_DIR = "/root/repo/.scale_corpus/x10"
 
 
+def stream_probe(sizes: list[int], seed: int = 7) -> None:
+    """The streaming-dedup probe of the module docstring."""
+    import glob
+    import shutil
+    import tempfile
+
+    from dask_datapipeline_spark.operators.minhash_index import (
+        _flags,
+        _read_increment,
+        append_to_minhash_index,
+        build_minhash_index,
+        read_minhash_index,
+    )
+    from perfbench.gen import gen_stream
+    from perfbench.trace import SparkStatus
+
+    spark = get_spark("stream-probe")
+    spark.sparkContext.setLogLevel("ERROR")
+    status = SparkStatus(spark)
+    print("| base docs | batch | input rows | jobs | flags-write input rows "
+          "| flags-write jobs | wall s |")
+    print("|---|---|---|---|---|---|---|")
+    for n_base in sizes:
+        work = tempfile.mkdtemp(prefix=f"stream_probe_{n_base}_")
+        try:
+            gen_stream(seed, work, n_base, 3, 200)
+            idx = os.path.join(work, "index")
+            build_minhash_index(spark.read.parquet(os.path.join(work, "base.parquet")), idx)
+            append_to_minhash_index(
+                spark.read.parquet(os.path.join(work, "prior.parquet")), idx, "prior"
+            )
+            staged = sorted(glob.glob(os.path.join(work, "staged", "*.parquet")))
+            for k, path in enumerate(staged):
+                groups, tag = [f"probe-{n_base}-{k}-{s}" for s in "af"], f"b{k:05d}"
+                spark.sparkContext.setJobGroup(groups[0], groups[0])
+                t0 = time.perf_counter()
+                batch = spark.read.parquet(path)
+                append_to_minhash_index(batch, idx, tag)
+                # positional: the same calls measure the earlier
+                # shingles/signatures layout too, for before/after figures
+                idx_a, idx_b, _, meta = read_minhash_index(spark, idx)
+                b_a, b_b = _read_increment(spark, idx, tag)
+                flags = _flags(batch, idx_a, idx_b, b_a, b_b, meta, 0.5)
+                spark.sparkContext.setJobGroup(groups[1], groups[1])
+                flags.write.parquet(os.path.join(work, "flags", tag))
+                wall = time.perf_counter() - t0
+                status.drain()
+                sums = status.stage_sums(groups)
+                app, fl = sums[groups[0]], sums[groups[1]]
+                print(f"| {n_base} | {k} "
+                      f"| {int(app['inputRecords'] + fl['inputRecords'])} "
+                      f"| {int(app['jobs'] + fl['jobs'])} | {int(fl['inputRecords'])} "
+                      f"| {int(fl['jobs'])} | {wall:.2f} |", flush=True)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+    spark.stop()
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--stream"]:
+        stream_probe([int(n) for n in sys.argv[2:]] or [1000, 10000])
+        return
     # SPARK_GRAFT_ONLY_ARGS=1: measure ONLY the dirs given on argv
     # (skip the sf floor tiers — used by the pinned asymptotic run,
     # where the small tiers carry no exponent information)
