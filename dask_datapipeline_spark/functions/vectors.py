@@ -16,7 +16,7 @@ Throughput caveat (measured, sf0.1, local[32]): higher-order
 functions evaluate per element OUTSIDE whole-stage codegen's tight
 loop, so for high-volume pair scoring (~10⁶ candidate pairs) the
 Arrow-batched strict-order scorer in operators/similarity.py
-(``_cosine_batch_seq``) is ~3-5× faster than this fold at bit-
+(``similarity._cosine_seq``) is ~3-5× faster than this fold at bit-
 identical results. Use these Column forms for scan-side scoring
 against a literal (``cosine_topk``) and one-off expressions; use the
 Arrow scorer inside candidate-verify joins.

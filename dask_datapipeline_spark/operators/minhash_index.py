@@ -21,10 +21,12 @@ Index layout under ``<path>/`` (layout version ``LAYOUT``):
   never shingle strings)
 - ``hot_hashes/``  — hashes whose CORPUS document frequency exceeds
   ``max_df`` (empty when ``max_df`` is None)
-- ``_META``        — json of the build parameters and the layout
-  version; read back at query time so a batch can never be scored
-  against an index built with different hashing parameters. An index
-  of another layout raises ``ValueError``: a rebuild is the migration
+- ``_META``        — json of the build parameters, the layout
+  version and each table's schema; read back at query time so a batch
+  can never be scored against an index built with different hashing
+  parameters, and every table scan is given its schema (no parquet
+  schema-inference job per read). An index of another layout raises
+  ``ValueError``: a rebuild is the migration
 - ``_CURRENT``     — json MANIFEST of the live state: the active base
   dir pair and the committed increment tags. Every mutation commits by
   atomically rewriting this one file (temp + rename), so readers see
@@ -49,6 +51,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dask_datapipeline_spark.indexfs import IndexFS
 from dask_datapipeline_spark.operators.dedup import (
@@ -60,7 +63,7 @@ from dask_datapipeline_spark.operators.dedup import (
 )
 
 #: version of the on-disk layout above, recorded in ``_META``
-LAYOUT = 2
+LAYOUT = 3
 #: the probe's tables, one parquet dir each per base and increment
 _TABLES = ("bands", "arrays")
 
@@ -106,7 +109,6 @@ def build_minhash_index(
     else:
         hot = sh_raw.select("__h").limit(0)
     hot.write.mode("overwrite").parquet(IndexFS.join(path, "hot_hashes"))
-    hot_back = df.sparkSession.read.parquet(IndexFS.join(path, "hot_hashes"))
     meta = {
         "layout": LAYOUT,
         "id_col": id_col,
@@ -115,9 +117,12 @@ def build_minhash_index(
         "shingle_n": shingle_n,
         "max_df": max_df,
         "shingle_mode": shingle_mode,
+        "schemas": {"hot_hashes": hot.schema.jsonValue()},
     }
+    hot_back = _read(df.sparkSession, meta, "hot_hashes", IndexFS.join(path, "hot_hashes"))
     sh = sh_raw.join(hot_back, on="__h", how="left_anti")
     for name, table in zip(_TABLES, _probe_tables(sh, meta)):
+        meta["schemas"][name] = table.schema.jsonValue()
         table.write.mode("overwrite").parquet(IndexFS.join(path, name))
     sh_raw.unpersist()
     fs = IndexFS.for_path(path, "build_minhash_index")
@@ -152,18 +157,28 @@ def _read_state(index_path: str) -> tuple[dict, dict]:
     if meta.get("layout") != LAYOUT:
         raise ValueError(
             f"MinHash index {index_path} has layout {meta.get('layout')!r}, "
-            f"this code reads layout {LAYOUT} (bands/ + arrays/); rebuild it "
+            f"this code reads layout {LAYOUT} (bands/ + arrays/, schemas in "
+            "_META); rebuild it "
             "with build_minhash_index"
         )
     return meta, fs.read_json(IndexFS.join(index_path, "_CURRENT"))
 
 
+def _read(spark: SparkSession, meta: dict, table: str, *paths: str) -> DataFrame:
+    """Parquet scan of index table ``table`` over ``paths`` with the
+    schema ``_META`` recorded at build: Spark runs no schema-inference
+    job for it."""
+    return spark.read.schema(T.StructType.fromJson(meta["schemas"][table])).parquet(*paths)
+
+
 def _scan(
-    spark: SparkSession, index_path: str, cur: dict, table: str, tags: list[str]
+    spark: SparkSession, index_path: str, meta: dict, cur: dict, table: str,
+    tags: list[str],
 ) -> DataFrame:
     """ONE parquet scan of ``table`` over the live base and the
     increments ``tags`` (a multi-path read, not a union chain)."""
-    return spark.read.parquet(
+    return _read(
+        spark, meta, table,
         IndexFS.join(index_path, cur[table]),
         *(IndexFS.join(index_path, "inc", t, table) for t in tags),
     )
@@ -180,15 +195,18 @@ def read_minhash_index(
     back into one base pair when it grows long (the standard
     base+delta compaction cycle)."""
     meta, cur = _read_state(path)
-    bands, arrays = (_scan(spark, path, cur, t, cur["inc"]) for t in _TABLES)
-    return bands, arrays, spark.read.parquet(IndexFS.join(path, "hot_hashes")), meta
+    bands, arrays = (_scan(spark, path, meta, cur, t, cur["inc"]) for t in _TABLES)
+    hot = _read(spark, meta, "hot_hashes", IndexFS.join(path, "hot_hashes"))
+    return bands, arrays, hot, meta
 
 
 def _read_increment(
-    spark: SparkSession, index_path: str, tag: str
+    spark: SparkSession, index_path: str, tag: str, meta: dict
 ) -> tuple[DataFrame, DataFrame]:
     """(bands, arrays) of increment ``inc/<tag>`` as parquet scans."""
-    return tuple(spark.read.parquet(IndexFS.join(index_path, "inc", tag, t)) for t in _TABLES)
+    return tuple(
+        _read(spark, meta, t, IndexFS.join(index_path, "inc", tag, t)) for t in _TABLES
+    )
 
 
 def _batch_shingles(
@@ -200,7 +218,9 @@ def _batch_shingles(
     hashed = hashed_shingles(
         batch, meta["id_col"], text_col, meta["shingle_n"], meta["shingle_mode"]
     )
-    hot = batch.sparkSession.read.parquet(IndexFS.join(index_path, "hot_hashes"))
+    hot = _read(
+        batch.sparkSession, meta, "hot_hashes", IndexFS.join(index_path, "hot_hashes")
+    )
     return hashed, hashed.distinct().join(hot, on="__h", how="left_anti")
 
 
@@ -316,7 +336,7 @@ def compact_minhash_index(
     twice (once in the folded base, once in the re-appended inc)."""
     fs = IndexFS.for_path(index_path, "compact_minhash_index")
     fs.sweep_tmp(index_path.rstrip("/"))  # stranded manifest temps
-    _, cur = _read_state(index_path)
+    meta, cur = _read_state(index_path)
     fold = [
         t
         for t in cur["inc"]
@@ -343,7 +363,7 @@ def compact_minhash_index(
     ver = int(cur["bands"].rsplit("-v", 1)[1]) if "-v" in cur["bands"] else 0
     new_cur = {t: f"{t}-v{ver + 1}" for t in _TABLES}
     for t in _TABLES:
-        _scan(spark, index_path, cur, t, fold).write.parquet(
+        _scan(spark, index_path, meta, cur, t, fold).write.parquet(
             IndexFS.join(index_path, new_cur[t])
         )
     new_cur["inc"] = kept

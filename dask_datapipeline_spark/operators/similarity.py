@@ -26,10 +26,14 @@ Odyssey) for the distributed design space.
 
 from __future__ import annotations
 
+import math
+from fractions import Fraction
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,10 +48,26 @@ def _vec_lit(vec) -> Column:
 
 
 def _stack(series: pd.Series) -> np.ndarray:
-    """Arrow list<float> batch → (n, dim) float64 matrix. The per-
+    """Pandas batch of vectors → (n, dim) float64 matrix. The per-
     element float32→float64 promotion is exact, matching
     ``as_double_array`` semantics."""
     return np.stack([np.asarray(v, dtype=np.float64) for v in series])
+
+
+def _matrix(vecs: pa.Array) -> np.ndarray:
+    """Arrow ``list<float|double>`` batch → (n, dim) float64 matrix,
+    read as the flattened child values reshaped — no per-row array.
+    The float32→float64 promotion is exact (``_stack`` semantics). A
+    NULL or ragged vector raises: there is no dot product to take."""
+    if vecs.null_count:
+        raise ValueError(f"embedding batch holds {vecs.null_count} NULL vector(s)")
+    if len(vecs) == 0:
+        return np.zeros((0, 0))
+    lo, hi = pc.min_max(pc.list_value_length(vecs)).values()
+    if lo != hi:
+        raise ValueError(f"ragged embedding batch: vector lengths {lo.as_py()}..{hi.as_py()}")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(len(vecs), hi.as_py())
 
 
 def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -150,12 +170,58 @@ def sized_srp_bits(
     return max(min_bits, (target_cells - 1).bit_length())
 
 
-def _bucket_udf(planes: np.ndarray):
-    """Vectorized pandas UDF: embedding → array of ``num_tables``
+#: width of the SRP sign sketch that prunes the candidate pairs of a
+#: thresholded near-dup join before their exact cosine; it rides the
+#: bucket rows as two signed 64-bit words
+SKETCH_BITS = 128
+#: the prune's per-pair false-negative bound at the threshold angle,
+#: under the binomial model of SRP sign disagreement (Charikar 2002);
+#: pairs at smaller angles are dropped less often
+SKETCH_MISS_RATE = Fraction(1, 10**6)
+
+
+def sketch_hamming_bound(threshold: float) -> int | None:
+    """Largest sketch Hamming distance a pair at cosine ≥ ``threshold``
+    keeps: the smallest ``H`` with ``P[Binomial(SKETCH_BITS, θ/π) > H]
+    ≤ SKETCH_MISS_RATE``, ``θ = arccos(threshold)``. Each of the
+    ``SKETCH_BITS`` sign bits of a pair at angle θ disagrees with
+    probability θ/π, so a true near-dup exceeds ``H`` at most at that
+    rate (H = 32 at 0.95).
+
+    The tail is summed in exact rationals from the double θ/π, so the
+    bound is a pure function of the threshold that the SQL oracles
+    replay as a literal. ``None`` when no ``H < SKETCH_BITS`` meets the
+    rate (low thresholds): the prune would drop nothing."""
+    t = min(max(float(threshold), -1.0), 1.0)
+    if math.isnan(t):
+        return None
+    p = Fraction(math.acos(t) / math.pi)
+    n, tail = SKETCH_BITS, Fraction(0)  # tail = P[X > h]
+    for h in range(n, 0, -1):
+        wider = tail + math.comb(n, h) * p**h * (1 - p) ** (n - h)
+        if wider > SKETCH_MISS_RATE:
+            return h if h < n else None
+        tail = wider
+    return 0
+
+
+def _sketch_planes(num_tables: int, dim: int) -> np.ndarray:
+    """(SKETCH_BITS, dim) sketch planes: table ``num_tables`` of
+    ``rademacher_planes``, the first one past the bucket tables."""
+    return rademacher_planes(num_tables + 1, SKETCH_BITS, dim)[num_tables]
+
+
+def _bucket_udf(planes: np.ndarray, sketch_planes: np.ndarray | None = None):
+    """Vectorized Arrow UDF: embedding → array of ``num_tables``
     bucket ids, ONE vectorized pass per Arrow batch instead of
     ``num_tables × bits`` interpreted dot-product expressions per row.
     ``planes`` has shape (num_tables, bits, dim) and travels to the
     executors inside the UDF closure (a few KiB).
+
+    With ``sketch_planes`` (SKETCH_BITS, dim) the UDF returns
+    ``struct<b: bucket ids, hi, lo>``: the sketch's sign bits packed
+    little-endian into two signed 64-bit words, plane k in bit k of
+    ``lo`` and plane 64 + k in bit k of ``hi``.
 
     Dot products accumulate in strict element order (``_seq_dot``),
     not BLAS matmul: the bucket bit is the SIGN of the dot, and a
@@ -164,16 +230,35 @@ def _bucket_udf(planes: np.ndarray):
     ``list_dot_product`` fold."""
     nt, bits, dim = planes.shape
     flat = planes.reshape(nt * bits, dim)
+    if sketch_planes is not None:
+        flat = np.concatenate([flat, sketch_planes])
     weights = (1 << np.arange(bits)).astype(np.int64)
+    buckets_t = T.ArrayType(T.LongType())
+    out_t = buckets_t if sketch_planes is None else T.StructType([
+        T.StructField("b", buckets_t),
+        T.StructField("hi", T.LongType()),
+        T.StructField("lo", T.LongType()),
+    ])
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        v = _stack(vecs)
+    @F.arrow_udf(out_t)
+    def srp_buckets(vecs: pa.Array) -> pa.Array:
+        v = _matrix(vecs)
+        n = len(v)
+        if n and v.shape[1] != dim:
+            raise ValueError(f"embedding length {v.shape[1]} != dim={dim}")
         signs = _seq_dot(v, flat) >= 0
-        b = signs.reshape(len(v), nt, bits).astype(np.int64) @ weights
-        return pd.Series(list(b))
+        b = signs[:, : nt * bits].reshape(n, nt, bits).astype(np.int64) @ weights
+        ids = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * nt + 1, nt, dtype=np.int32)), pa.array(b.ravel())
+        )
+        if sketch_planes is None:
+            return ids
+        words = np.packbits(signs[:, nt * bits :], axis=1, bitorder="little").view("<i8")
+        return pa.StructArray.from_arrays(
+            [ids, pa.array(words[:, 1]), pa.array(words[:, 0])], names=["b", "hi", "lo"]
+        )
 
-    return buckets
+    return srp_buckets
 
 
 def _lsh_candidate_pairs(
@@ -186,6 +271,7 @@ def _lsh_candidate_pairs(
     num_tables: int,
     lt_only: bool = False,
     bucket_cap: int | None = None,
+    max_hamming: int | None = None,
 ) -> DataFrame:
     """Scored candidate pairs (query_id, neighbor_id, cosine_sim) from a
     bucket equi-join on (table, bucket), hashed with the md5
@@ -198,93 +284,83 @@ def _lsh_candidate_pairs(
     quadratic at 100 TB regardless of how sparse every other bucket
     is; the cap bounds per-cell work at cap² deterministically (the
     count per cell is partitioning-independent), at the cost of
-    recall for anything hiding inside a dropped cell. The bucket-id
-    space is bounded (num_tables × 2^bits), so the count table is
-    bounded and the guard is a broadcast semi-join — the corpus-sized
-    side is never re-shuffled for it.
+    recall for anything hiding inside a dropped cell. The count is a
+    ``count(*) over (partition by table, bucket)`` window on the
+    corpus side: it rides the (table, bucket) exchange the bucket join
+    needs anyway, so the guard adds no exchange and no action. Only
+    the corpus side is filtered; a query row in a dropped cell has no
+    partner left to join.
 
-    ``lt_only`` (self-join near-dup path): push ``query_id <
-    neighbor_id`` into the join output BEFORE scoring — self-pairs and
-    mirrored orderings are more than half the collisions, and
-    filtering them after the cosine UDF would pay for them all.
+    ``lt_only`` (self-join near-dup path): ``query_id < neighbor_id``
+    is a join condition, so self-pairs and mirrored orderings — more
+    than half the collisions — never reach the pair dedup or the
+    cosine UDF.
 
-    Shuffle budget (pair-first, round 15 — guide §8): ONE join keyed
-    on (table, bucket) over (id, t, bucket) proxy rows — the
-    posexplode replaces ``num_tables`` separate join+union branches
-    and carries NO vector bytes — then one narrow pair-dedup shuffle,
-    then vectors attach once per side by id-keyed join for the final
-    cosine. The embedding payload never rides the banding exchanges
-    (before: ``2 × num_tables`` vector replicas per corpus row crossed
-    the bucket exchange), and the cosine UDF scores each unique pair
-    once instead of once per collision."""
-    bud = _bucket_udf(rademacher_planes(num_tables, bits_per_table, dim))
+    ``max_hamming`` (thresholded near-dup path only): the bucket UDF
+    also emits a ``SKETCH_BITS``-bit sign sketch from
+    ``_sketch_planes``, and the join drops colliding pairs whose
+    sketch Hamming distance (``bit_count`` of the xor'ed words, in
+    codegen) exceeds it — the bound-then-verify prune of
+    ``sketch_hamming_bound``. The exact cosine still decides every
+    reported pair; the prune only keeps far pairs from being scored.
+    The k-NN callers pass no bound and rank every collision.
 
-    # PAIR-FIRST (round 15, guide §8): every decision up to scoring —
-    # banding, the cap, the lt filter, pair dedup —
-    # depends only on (id, table, bucket), ~20 bytes/row; the
-    # embedding payload is needed ONLY by the final cosine. So the
-    # bucket self-join moves id proxies, and vectors attach ONCE per
-    # side by an id-keyed join AFTER banding+dedup. Before, the
-    # posexplode carried the vector through the bucket exchange
-    # num_tables times PER SIDE (the driver geometry: 16 tables ⇒ 32
-    # corpus-vector replicas crossing the wire); now zero vector bytes
-    # cross it. Dedup also moved AHEAD of scoring, so the cosine UDF
-    # runs once per unique pair instead of once per collision.
-    # Geometry note (the r14 deferral, resolved): per-vector vector
-    # crossings are now 1 (query-keyed attach) + pairs-per-vector/2
-    # (the neighbor-keyed attach carries __qv per pair) versus a flat
-    # 2×num_tables before — strictly fewer at production thresholds
-    # (0.9+: near-dups are rare, multiplicity ≪ 2×tables) and bounded
-    # by tables×(bucket_cap−1) in the adversarial case, while the
-    # bucket join itself is always vector-free.
-    q_ids = fan_out(queries.select(id_col, vec_col)).select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(bud(F.col(vec_col))).alias("__t", "__bucket"),
-    )
-    if corpus is queries:
-        # Self-join (near-dup) path: the two sides are the SAME
-        # bucketed projection, but Spark does not give ReusedExchange
-        # across separately-built ArrowEvalPython stages — persist the
-        # side so the bucket UDF runs over the corpus ONCE and both
-        # join inputs read the cache (CacheManager dedupes identical
-        # plans; see the dedup module's cache contract). The persisted
-        # frame is now id+bucket only — ~20 bytes/row instead of the
-        # full embedding payload (§5 persist discipline).
-        from pyspark.storagelevel import StorageLevel
+    Shuffle budget (pair-first): ONE join keyed on (table, bucket) over
+    (id, t, bucket[, sketch]) proxy rows — the posexplode replaces
+    ``num_tables`` separate join+union branches and carries NO vector
+    bytes — then one narrow pair-dedup shuffle, then vectors attach
+    once per side by id-keyed join for the final cosine. In the
+    self-join both join inputs are the same plan, so the second side
+    is a ``ReusedExchange`` of the first and the bucket UDF runs once
+    per vector, with nothing cached."""
+    sketch = None if max_hamming is None else _sketch_planes(num_tables, dim)
+    bud = _bucket_udf(rademacher_planes(num_tables, bits_per_table, dim), sketch)
 
-        q_ids = q_ids.persist(StorageLevel.MEMORY_AND_DISK)
-        c_ids = q_ids.select(
-            F.col("query_id").alias("neighbor_id"), "__t", "__bucket"
+    def bucketed(df: DataFrame) -> DataFrame:
+        """(__id, __t, __bucket[, __hi, __lo]): one row per table."""
+        h = fan_out(df.select(id_col, vec_col)).select(
+            F.col(id_col).alias("__id"), bud(F.col(vec_col)).alias("__h")
         )
-    else:
-        c_ids = fan_out(corpus.select(id_col, vec_col)).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.posexplode(bud(F.col(vec_col))).alias("__t", "__bucket"),
+        if sketch is None:
+            return h.select("__id", F.posexplode("__h").alias("__t", "__bucket"))
+        return h.select(
+            "__id",
+            F.posexplode("__h.b").alias("__t", "__bucket"),
+            F.col("__h.hi").alias("__hi"),
+            F.col("__h.lo").alias("__lo"),
         )
+
+    q_ids = bucketed(queries)
+    c_ids = q_ids if corpus is queries else bucketed(corpus)
     if bucket_cap is not None:
-        # allowed-buckets list is bounded by the bucket-id space
-        # (num_tables × 2^bits rows), so it broadcasts; the groupBy
-        # shuffles only (t, bucket, partial count) after map-side
-        # combine — the corpus rows themselves don't move for this.
-        allowed = (
-            c_ids.groupBy("__t", "__bucket")
-            .agg(F.count(F.lit(1)).alias("__bn"))
+        from pyspark.sql.window import Window
+
+        cell = Window.partitionBy("__t", "__bucket")
+        c_ids = (
+            c_ids.withColumn("__bn", F.count(F.lit(1)).over(cell))
             .filter(F.col("__bn") <= bucket_cap)
-            .select("__t", "__bucket")
+            .drop("__bn")
         )
-        q_ids = q_ids.join(
-            F.broadcast(allowed), on=["__t", "__bucket"], how="leftsemi"
-        )
-        c_ids = c_ids.join(
-            F.broadcast(allowed), on=["__t", "__bucket"], how="leftsemi"
+        if corpus is queries:
+            q_ids = c_ids
+    a, b = q_ids.alias("a"), c_ids.alias("b")
+    cond = [
+        F.col("a.__t") == F.col("b.__t"),
+        F.col("a.__bucket") == F.col("b.__bucket"),
+    ]
+    if lt_only:
+        cond.append(F.col("a.__id") < F.col("b.__id"))
+    if max_hamming is not None:
+        cond.append(
+            F.bit_count(F.col("a.__hi").bitwiseXOR(F.col("b.__hi")))
+            + F.bit_count(F.col("a.__lo").bitwiseXOR(F.col("b.__lo")))
+            <= max_hamming
         )
     # shuffle_hash, not broadcast: at scale the corpus-side bucket
     # table never fits a broadcast, and locally a BroadcastExchange
     # built from an ArrowEvalPython stage serializes the whole UDF
     # stage into the broadcast-build thread (measured ~3x slower).
-    joined = q_ids.join(c_ids.hint("shuffle_hash"), on=["__t", "__bucket"])
-    if lt_only:
-        joined = joined.filter(F.col("query_id") < F.col("neighbor_id"))
+    joined = a.join(b.hint("shuffle_hash"), on=cond)
     # duplicate collisions (same pair in several tables) carry
     # no information — dedup the id pairs BEFORE the vectors attach,
     # so neither the attach joins nor the cosine UDF pay for them.
@@ -300,7 +376,9 @@ def _lsh_candidate_pairs(
     # defaultParallelism — the fan_out rationale without its .rdd
     # probe (this frame has shuffles upstream).
     pairs = (
-        joined.select("query_id", "neighbor_id")
+        joined.select(
+            F.col("a.__id").alias("query_id"), F.col("b.__id").alias("neighbor_id")
+        )
         .repartition(
             queries.sparkSession.sparkContext.defaultParallelism,
             "query_id",
@@ -314,20 +392,17 @@ def _lsh_candidate_pairs(
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
     )
-    # the ND-marked cosine twin (not the plain UDF): callers filter on
+    # the ND-marked scorer (not the plain UDF): callers filter on
     # cosine_sim (embedding_near_dup_pairs' threshold), and the
     # optimizer would otherwise duplicate the Arrow stage below the
-    # pushed filter — every pair scored TWICE (guide §4.4; confirmed
-    # in this plan: two ArrowEvalPython nodes before the mark)
+    # pushed filter — every pair scored TWICE (guide §4.4)
     return (
         pairs.join(qv, on="query_id")
         .join(cv, on="neighbor_id")
         .select(
             "query_id",
             "neighbor_id",
-            _cosine_batch_seq_nd(F.col("__qv"), F.col("__cv")).alias(
-                "cosine_sim"
-            ),
+            _cosine_seq_nd(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
         )
     )
 
@@ -358,12 +433,16 @@ def knn_join_lsh(
     return cand.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
-@F.pandas_udf(T.DoubleType())
-def _cosine_batch_seq(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Row-wise cosine with strictly element-ordered accumulation —
-    bit-identical to DuckDB's ``list_dot_product`` fold (``np.sum``
-    may use pairwise summation; this must not)."""
-    va, vb = _stack(a), _stack(b)
+@F.arrow_udf(T.DoubleType())
+def _cosine_seq(a: pa.Array, b: pa.Array) -> pa.Array:
+    """Row-wise cosine over an Arrow batch with strictly element-ordered
+    accumulation — bit-identical to DuckDB's ``list_dot_product`` fold
+    (``np.sum`` may use pairwise summation; this must not). A zero
+    vector's 0/0 is NULL, never NaN: Spark evaluates ``NaN >= t`` as
+    TRUE, so a NaN would pass every threshold filter."""
+    va, vb = _matrix(a), _matrix(b)
+    if va.shape != vb.shape:
+        raise ValueError(f"cosine of vectors of shapes {va.shape} and {vb.shape}")
     num = np.zeros(len(va))
     na = np.zeros(len(va))
     nb = np.zeros(len(va))
@@ -371,7 +450,9 @@ def _cosine_batch_seq(a: pd.Series, b: pd.Series) -> pd.Series:
         num += va[:, k] * vb[:, k]
         na += va[:, k] * va[:, k]
         nb += vb[:, k] * vb[:, k]
-    return pd.Series(num / (np.sqrt(na) * np.sqrt(nb)))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sim = num / (np.sqrt(na) * np.sqrt(nb))
+    return pa.array(sim, from_pandas=True)  # NaN → NULL
 
 
 #: non-deterministic-MARKED twin of the scorer (the function itself is
@@ -379,7 +460,7 @@ def _cosine_batch_seq(a: pd.Series, b: pd.Series) -> pd.Series:
 #: re-order the expression, guide §4.4): used where a filter rides
 #: directly on the scored column, which otherwise plans the Arrow
 #: stage twice (once below the pushed filter, once for the projection)
-_cosine_batch_seq_nd = _cosine_batch_seq.asNondeterministic()
+_cosine_seq_nd = _cosine_seq.asNondeterministic()
 
 
 def _coarse_codebook(
@@ -407,11 +488,14 @@ def _cell_of_udf(c_ids: np.ndarray, c_mat: np.ndarray):
     ``ORDER BY sim DESC, cid`` row_number."""
     c_norms = np.sqrt(_seq_sq_norm(c_mat))
 
-    @F.pandas_udf(T.LongType())
-    def cell_of(vecs: pd.Series) -> pd.Series:
-        v = _stack(vecs)
-        sims = _seq_dot(v, c_mat) / (np.sqrt(_seq_sq_norm(v))[:, None] * c_norms[None, :])
-        return pd.Series(c_ids[np.argmax(sims, axis=1)])
+    @F.arrow_udf(T.LongType())
+    def cell_of(vecs: pa.Array) -> pa.Array:
+        v = _matrix(vecs)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = _seq_dot(v, c_mat) / (
+                np.sqrt(_seq_sq_norm(v))[:, None] * c_norms[None, :]
+            )
+        return pa.array(c_ids[np.argmax(sims, axis=1)])
 
     return cell_of
 
@@ -443,7 +527,7 @@ def semantic_dedup(
     a join); assignment is one vectorized Arrow pass over the scan;
     the ONLY wide shuffle is the cell-keyed self-join. The exact
     cosine verify is the Arrow-batched strict-order scorer
-    (``_cosine_batch_seq``) — measured ~4× faster than the JVM
+    (``_cosine_seq``) — measured ~4× faster than the JVM
     ``F.aggregate`` fold at this pair volume (higher-order functions
     evaluate per element outside codegen's tight loop) and bit-
     identical to it. Pairs split across a cell boundary are not
@@ -475,7 +559,7 @@ def semantic_dedup(
                 F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
             ],
         )
-        .where(_cosine_batch_seq(F.col("a.__v"), F.col("b.__v")) >= threshold)
+        .where(_cosine_seq(F.col("a.__v"), F.col("b.__v")) >= threshold)
         .select(F.col(f"b.{id_col}").alias(id_col))
         .distinct()
         .withColumn("__dup", F.lit(True))
@@ -543,8 +627,16 @@ def embedding_near_dup_pairs(
     """Near-duplicate pairs by embedding cosine ≥ threshold (id_a < id_b).
 
     Scale path: LSH-bucketed self-join (near-dups collide with high
-    probability at high thresholds), exact cosine verification. No
-    window/rank pass — the threshold filter alone bounds the output.
+    probability at high thresholds), pruned by a ``SKETCH_BITS``-bit
+    SRP sign sketch, then exact cosine verification. The prune drops a
+    colliding pair whose sketch Hamming distance exceeds
+    ``sketch_hamming_bound(threshold)`` — a pair at exactly the
+    threshold angle is lost with probability ≤ ``SKETCH_MISS_RATE``
+    (1e-6) — inside the bucket join, so it never reaches the pair
+    dedup or the Python scorer; the exact cosine decides every pair
+    reported. No window/rank pass — the threshold filter alone bounds
+    the output. A zero vector's cosine is NULL and pairs with nothing;
+    a NULL or ragged embedding fails the job.
     Explicit keyword parameters (no **kwargs): a silently-dropped
     or misspelled option would change results without an error.
 
@@ -569,6 +661,7 @@ def embedding_near_dup_pairs(
     cand = _lsh_candidate_pairs(
         df, df, id_col, vec_col, dim, bits_per_table, num_tables,
         lt_only=True, bucket_cap=bucket_cap,
+        max_hamming=sketch_hamming_bound(threshold),
     )
     return cand.filter(F.col("cosine_sim") >= threshold).select(
         F.col("query_id").alias("id_a"),

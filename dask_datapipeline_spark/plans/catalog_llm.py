@@ -49,6 +49,22 @@ def _stage_micro_batches(parts, staged: str) -> None:
     _sh.rmtree(work, ignore_errors=True)
 
 
+def _in_work_dir(prefix: str, build, spark, sf_dir):
+    """Run a streaming extra's ``build(spark, sf_dir, work)`` in a fresh
+    work dir under the temp dir (staged batches, checkpoints, sink
+    output) and remove the dir when it returns or fails. The result is
+    materialized first: it reads files from that dir."""
+    import shutil as _sh
+    import tempfile as _tf
+
+    work = _tf.mkdtemp(prefix=prefix)
+    try:
+        out = build(spark, sf_dir, work)
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        _sh.rmtree(work, ignore_errors=True)
+
+
 # ----- shared SQL fragments (mirror operators/dedup.py primitives) ---
 
 _SQL_HASH = "CAST(CONCAT('0x', SUBSTRING(md5('{seed}:' || {col}), 1, 15)) AS BIGINT)"
@@ -383,14 +399,14 @@ def q_knn_brute_topk(spark, sf_dir):
     return cosine_topk(emb, qvec, k=10)
 
 
-def _plane_lit(planes, t: int, b: int) -> str:
-    return "[" + ", ".join(f"{v:.1f}" for v in planes[t, b]) + "]"
+def _plane_lit(plane) -> str:
+    return "[" + ", ".join(f"{v:.1f}" for v in plane) + "]"
 
 
 def _bucket_expr(planes, vec: str, t: int) -> str:
     bits = planes.shape[1]
     return " + ".join(
-        f"(CASE WHEN list_dot_product(CAST({vec} AS DOUBLE[]), {_plane_lit(planes, t, b)}) >= 0"
+        f"(CASE WHEN list_dot_product(CAST({vec} AS DOUBLE[]), {_plane_lit(planes[t, b])}) >= 0"
         f" THEN {1 << b} ELSE 0 END)"
         for b in range(bits)
     )
@@ -420,17 +436,53 @@ FROM cb GROUP BY t, bucket
 """
 
 
+def _sketch_prune_sql(num_tables: int, dim: int, threshold: float) -> tuple[str, str, str]:
+    """(CTE, join, predicate) replaying the near-dup path's sign-sketch
+    prune: the SAME md5 sketch planes (``similarity._sketch_planes``)
+    packed here into four 32-bit words — the Hamming distance does not
+    depend on the packing — and the SAME bound,
+    ``similarity.sketch_hamming_bound(threshold)``, as a literal. All
+    three are empty when the bound prunes nothing."""
+    from dask_datapipeline_spark.operators.similarity import (
+        SKETCH_BITS,
+        _sketch_planes,
+        sketch_hamming_bound,
+    )
+
+    h = sketch_hamming_bound(threshold)
+    if h is None:
+        return "", "", ""
+    planes = _sketch_planes(num_tables, dim)
+    n_words = SKETCH_BITS // 32
+    words = ",\n       ".join(
+        " + ".join(
+            f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
+            f"{_plane_lit(planes[32 * w + k])}) >= 0 THEN {1 << k} ELSE 0 END)"
+            for k in range(32)
+        )
+        + f" AS w{w}"
+        for w in range(n_words)
+    )
+    hamming = " + ".join(f"bit_count(xor(sa.w{w}, sb.w{w}))" for w in range(n_words))
+    return (
+        f",\nsk AS (SELECT vec_id,\n       {words}\n  FROM embeddings)",
+        "\n  JOIN sk sa ON sa.vec_id = a.vec_id JOIN sk sb ON sb.vec_id = b.vec_id",
+        f"\n  WHERE {hamming} <= {h}",
+    )
+
+
 def _lsh_near_dup_oracle_sql(
     num_tables: int, bits: int, dim: int, threshold: float, bucket_cap: int | None = None
 ) -> str:
     """Replay the Spark SRP-LSH self-join near-dup in SQL: md5-derived
-    ±1 planes as list literals → identical buckets, identical strict-
-    order cosine, so the candidate set and scores are bit-exact.
-    ``bucket_cap`` replays the skew guard: cells with more than cap
-    rows are excluded from the join (the per-cell count is exact and
-    partitioning-independent on both engines)."""
+    ±1 planes as list literals → identical buckets, identical sketch
+    prune, identical strict-order cosine, so the candidate set and
+    scores are bit-exact. ``bucket_cap`` replays the skew guard: cells
+    with more than cap rows are excluded from the join (the per-cell
+    count is exact and partitioning-independent on both engines)."""
     cb = _lsh_bucket_cte(num_tables, bits, dim)
     cos = _COS_SQL.format(a="a.v", b="b.v")
+    sk_cte, sk_join, sk_where = _sketch_prune_sql(num_tables, dim, threshold)
     src = "cb"
     cap_cte = ""
     if bucket_cap is not None:
@@ -442,10 +494,10 @@ capped AS (
 )"""
         src = "capped"
     return f"""
-WITH cb AS ({cb}){cap_cte},
+WITH cb AS ({cb}){cap_cte}{sk_cte},
 pairs AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine_sim
-  FROM {src} a JOIN {src} b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id
+  FROM {src} a JOIN {src} b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id{sk_join}{sk_where}
 )
 SELECT id_a, id_b, cosine_sim FROM pairs WHERE cosine_sim >= {threshold!r}
 """
@@ -463,7 +515,8 @@ def _lsh_auto_near_dup_oracle_sql(
     ``b < bits`` — md5-derived planes depend only on (t, b), never on
     the total bit count, so the prefix the Spark UDF uses is exactly
     the prefix the guard keeps live. ``bucket_cap`` replays the auto
-    default (8× target occupancy)."""
+    default (8× target occupancy), and the sign-sketch prune is
+    replayed as in ``_lsh_near_dup_oracle_sql``."""
     from dask_datapipeline_spark.operators.similarity import (
         SRP_MIN_BITS,
         SRP_ORACLE_MAX_BITS,
@@ -478,7 +531,7 @@ def _lsh_auto_near_dup_oracle_sql(
     def branch(t: int) -> str:
         terms = " + ".join(
             f"(CASE WHEN {b} < geo.bits AND list_dot_product("
-            f"CAST(embedding AS DOUBLE[]), {_plane_lit(planes, t, b)}) >= 0"
+            f"CAST(embedding AS DOUBLE[]), {_plane_lit(planes[t, b])}) >= 0"
             f" THEN {1 << b} ELSE 0 END)"
             for b in range(SRP_ORACLE_MAX_BITS)
         )
@@ -489,6 +542,7 @@ def _lsh_auto_near_dup_oracle_sql(
 
     cb = "\nUNION ALL\n".join(branch(t) for t in range(num_tables))
     cos = _COS_SQL.format(a="a.v", b="b.v")
+    sk_cte, sk_join, sk_where = _sketch_prune_sql(num_tables, dim, threshold)
     return f"""
 WITH geo AS (
   SELECT GREATEST({SRP_MIN_BITS},
@@ -500,11 +554,11 @@ capped AS (
   SELECT * FROM (
     SELECT cb.*, COUNT(*) OVER (PARTITION BY t, bucket) AS __bn FROM cb
   ) WHERE __bn <= {cap}
-),
+){sk_cte},
 pairs AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine_sim
   FROM capped a JOIN capped b
-    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id
+    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id{sk_join}{sk_where}
 )
 SELECT id_a, id_b, cosine_sim FROM pairs WHERE cosine_sim >= {threshold!r}
 """
@@ -2837,9 +2891,11 @@ def q_web_corpus_clean(spark, sf_dir):
     "loses nothing end to end",
 )
 def q_streaming_corpus_clean(spark, sf_dir):
+    return _in_work_dir("ddps_stream_clean_", _streaming_corpus_clean_in, spark, sf_dir)
+
+
+def _streaming_corpus_clean_in(spark, sf_dir, work):
     import os as _os
-    import tempfile as _tf
-    import uuid as _uuid
 
     from pyspark.sql.window import Window
 
@@ -2850,11 +2906,8 @@ def q_streaming_corpus_clean(spark, sf_dir):
 
     docs = load_testdata(spark, sf_dir, "documents")
     raw = docs.select("doc_id", "lang", _raw_url_col(), _raw_html_col())
-    # fresh working area per invocation (the streaming_incremental_dedup
-    # harness): the sink appends deltas, a cached dir would contaminate
-    work = _os.path.join(
-        _tf.gettempdir(), f"ddps_stream_clean_{_uuid.uuid4().hex[:8]}"
-    )
+    # ``work`` is fresh per invocation (``_in_work_dir``): the sink
+    # appends deltas, a reused dir would contaminate
     staged = _os.path.join(work, "staged")
     _os.makedirs(staged, exist_ok=True)
     # FIXTURE-ONLY collect (bounded: one id column) for the id cuts —
@@ -3371,8 +3424,11 @@ def q_quantile_sketch(spark, sf_dir):
     "batch sketch, so this row shares kmv_distinct's oracle verbatim",
 )
 def q_streaming_kmv(spark, sf_dir):
+    return _in_work_dir("ddps_stream_kmv_", _streaming_kmv_in, spark, sf_dir)
+
+
+def _streaming_kmv_in(spark, sf_dir, work):
     import os as _os
-    import tempfile as _tf
 
     from dask_datapipeline_spark.operators.sketches import (
         kmv_estimate_from_sketch,
@@ -3382,7 +3438,6 @@ def q_streaming_kmv(spark, sf_dir):
     ev = load_testdata(spark, sf_dir, "events").select(
         "event_type", "user_id", "event_id"
     )
-    work = _tf.mkdtemp(prefix="ddps_stream_kmv_")
     staged = _os.path.join(work, "staged")
     _os.makedirs(staged, exist_ok=True)
     hi = ev.agg(F.max("event_id")).collect()[0][0] or 0
@@ -3425,8 +3480,11 @@ def q_streaming_kmv(spark, sf_dir):
     "dedup-on-id, snapshot swap) loses nothing",
 )
 def q_streaming_quantile(spark, sf_dir):
+    return _in_work_dir("ddps_stream_qsk_", _streaming_quantile_in, spark, sf_dir)
+
+
+def _streaming_quantile_in(spark, sf_dir, work):
     import os as _os
-    import tempfile as _tf
 
     from dask_datapipeline_spark.operators.sketches import quantiles_from_sample
     from dask_datapipeline_spark.streaming.windows import (
@@ -3434,7 +3492,6 @@ def q_streaming_quantile(spark, sf_dir):
     )
 
     ev = load_testdata(spark, sf_dir, "events").select("event_id", "value")
-    work = _tf.mkdtemp(prefix="ddps_stream_qsk_")
     staged = _os.path.join(work, "staged")
     _os.makedirs(staged, exist_ok=True)
     # three id-range micro-batch files, mtime-ordered (any batching
@@ -4270,9 +4327,11 @@ def q_incremental_dedup(spark, sf_dir):
     "wiring (offsets, increments, replay idempotence) loses nothing",
 )
 def q_streaming_incremental_dedup(spark, sf_dir):
+    return _in_work_dir("ddps_stream_inc_", _streaming_incremental_dedup_in, spark, sf_dir)
+
+
+def _streaming_incremental_dedup_in(spark, sf_dir, work):
     import os as _os
-    import tempfile as _tf
-    import uuid as _uuid
 
     from dask_datapipeline_spark.operators.minhash_index import build_minhash_index
     from dask_datapipeline_spark.streaming.windows import stream_incremental_dedup
@@ -4281,11 +4340,9 @@ def q_streaming_incremental_dedup(spark, sf_dir):
     corpus = docs.where(F.col("doc_id") % 2 == 0)
     batch = docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "text")
 
-    # fresh working area per invocation: the stream APPENDS increments
-    # to the index, so reusing a cached one would contaminate reruns
-    work = _os.path.join(
-        _tf.gettempdir(), f"ddps_stream_inc_{_uuid.uuid4().hex[:8]}"
-    )
+    # ``work`` is fresh per invocation (``_in_work_dir``): the stream
+    # APPENDS increments to the index, so a reused one would contaminate
+    # reruns
     index_path = _os.path.join(work, "index")
     build_minhash_index(
         corpus,
@@ -7725,8 +7782,11 @@ def q_hll_distinct(spark, sf_dir):
     "to the batch sketch, so this row shares hll_distinct's oracle verbatim",
 )
 def q_streaming_hll(spark, sf_dir):
+    return _in_work_dir("ddps_stream_hll_", _streaming_hll_in, spark, sf_dir)
+
+
+def _streaming_hll_in(spark, sf_dir, work):
     import os as _os
-    import tempfile as _tf
 
     from dask_datapipeline_spark.operators.sketches import (
         hll_estimate_from_registers,
@@ -7736,7 +7796,6 @@ def q_streaming_hll(spark, sf_dir):
     ev = load_testdata(spark, sf_dir, "events").select(
         "event_type", "user_id", "event_id"
     )
-    work = _tf.mkdtemp(prefix="ddps_stream_hll_")
     staged = _os.path.join(work, "staged")
     _os.makedirs(staged, exist_ok=True)
     hi = ev.agg(F.max("event_id")).collect()[0][0] or 0
@@ -7835,8 +7894,11 @@ def q_bm25_from_index(spark, sf_dir):
     "nothing vs the one-shot batch build",
 )
 def q_streaming_bm25_index(spark, sf_dir):
+    return _in_work_dir("ddps_stream_bm25_", _streaming_bm25_index_in, spark, sf_dir)
+
+
+def _streaming_bm25_index_in(spark, sf_dir, work):
     import os as _os
-    import tempfile as _tf
 
     from dask_datapipeline_spark.operators.bm25 import bm25_topk_from_index
     from dask_datapipeline_spark.streaming.windows import (
@@ -7844,7 +7906,6 @@ def q_streaming_bm25_index(spark, sf_dir):
     )
 
     docs = load_testdata(spark, sf_dir, "documents").select("doc_id", "text")
-    work = _tf.mkdtemp(prefix="ddps_stream_bm25_")
     staged = _os.path.join(work, "staged")
     _os.makedirs(staged, exist_ok=True)
     hi = docs.agg(F.max("doc_id")).collect()[0][0] or 0

@@ -825,7 +825,7 @@ def stream_incremental_dedup(
         tag = f"b{batch_id:05d}"
         append_to_minhash_index(batch_df, index_path, tag)
         idx_bands, idx_arrs, _, meta = read_minhash_index(spark, index_path)
-        b_bands, b_arrs = _read_increment(spark, index_path, tag)
+        b_bands, b_arrs = _read_increment(spark, index_path, tag, meta)
         flags = _flags(batch_df, idx_bands, idx_arrs, b_bands, b_arrs, meta, threshold)
         flags.write.mode("overwrite").parquet(
             IndexFS.join(out_dir, f"batch-{batch_id:05d}")

@@ -123,6 +123,30 @@ def test_query_plan_scans_index_not_corpus_text(spark, index_dir):
     assert f"{name}/bands" in plan and f"{name}/arrays" in plan
 
 
+def test_index_reads_carry_their_schema(spark, grown_index):
+    """_META records each table's schema at build, and every read of
+    the index passes it: reading base, increments and hot hashes runs
+    no Spark job (each parquet schema inference ran one)."""
+    from dask_datapipeline_spark.operators.minhash_index import _read_increment
+
+    sc = spark.sparkContext
+    group = "index-reads-carry-their-schema"
+    sc.setJobGroup(group, group)
+    try:
+        bands, arrays, hot, meta = read_minhash_index(spark, grown_index)
+        inc = _read_increment(spark, grown_index, "b00001", meta)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert set(meta["schemas"]) == {"bands", "arrays", "hot_hashes"}
+    for df, table in zip((bands, arrays, hot, *inc),
+                         ("bands", "arrays", "hot_hashes", "bands", "arrays")):
+        assert [f.name for f in df.schema] == [
+            f["name"] for f in meta["schemas"][table]["fields"]
+        ]
+    assert arrays.count() == len(CORPUS) + 2 and inc[1].count() == 1
+
+
 def test_frozen_cap_drops_hot_hashes_for_batch_too(spark, tmp_path):
     """A shingle hot in the CORPUS is excluded from batch sets as
     well (the frozen-cap contract), so it cannot create pairs."""

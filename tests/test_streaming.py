@@ -569,3 +569,20 @@ def test_stream_incremental_dedup_with_compaction_is_flag_identical(
     assert len(plain_cur["inc"]) == len(DEDUP_BATCHES)
 
 
+def test_streaming_extra_removes_its_work_dir(spark, sf_dir):
+    """A streaming extra stages batches, checkpoints and sink output
+    in a work dir under the temp dir; it returns its rows materialized
+    and leaves no dir behind."""
+    import os
+    import tempfile
+
+    from dask_datapipeline_spark.plans.catalog import EXTRA_CATALOG
+
+    def work_dirs():
+        tmp = os.listdir(tempfile.gettempdir())
+        return {d for d in tmp if d.startswith("ddps_stream_kmv_")}
+
+    before = work_dirs()
+    rows = EXTRA_CATALOG["streaming_kmv"].fn(spark, sf_dir).collect()
+    assert rows
+    assert work_dirs() <= before

@@ -31,7 +31,7 @@ SHOWCASE = [
     ("extra:winnow_near_dup", "winnowing: fingerprint selection as per-row array exprs (no exchange before the explode); df-capped fingerprint equi-join moves only 8-byte hashes"),
     ("extra:quality_classifier", "hashed linear classifier: ONE scan, transform+aggregate fold in the projection — zero Exchange operators in the whole plan"),
     ("training_shards", "two-pass distributed prefix sum: bucket-totals groupBy + bounded bucket-offset window, then a window PARTITIONED by bucket — no corpus-sized single-partition Window/Sort"),
-    ("embedding_near_dup", "sparse-regime SRP-LSH self-join (driver row since round 6): bucket_cap guard as a BROADCAST semi-join on the bounded (table,bucket) keyspace, then the shuffle_hash bucket join — corpus never re-shuffled for the guard"),
+    ("embedding_near_dup", "sparse-regime SRP-LSH self-join (driver row since round 6): the bucket_cap guard is a count window on the (table,bucket) exchange the shuffle_hash bucket join needs anyway, and the other join side is a ReusedExchange of it (AQE marks the reuse at run time), so the Arrow bucket+sketch UDF runs once per vector with nothing cached; the 128-bit sketch Hamming bound is a join condition, so pruned pairs never reach the pair dedup or the Arrow cosine"),
     ("bucketed_join", "storage-partitioned join: both scans Bucketed: true, SortMergeJoin AND the downstream per-key HashAggregate with ZERO Exchange operators — the write-time shuffle amortized over every later query"),
     ("image_near_dup", "perceptual image dedup: one shuffle-free Arrow decode+aHash pass; only 24-byte hash rows enter the 4x16-bit pigeonhole banding join"),
     ("extra:embedding_moments", "moments pass: ONE keyed exchange above a partial (i,j) HashAggregate — shuffled bytes bounded by d(d+1)/2 rows per partition, corpus size absent from the exchange"),
@@ -55,7 +55,7 @@ SHOWCASE = [
     ("extra:equi_depth_histogram", "distributed equi-depth ntile (ranks.py::global_ntile): bucket-count groupBy + bounded offset window, then a window PARTITIONED by price-range bucket + broadcast offset join — the global ntile's Exchange SinglePartition is gone (round-10 rewrite)"),
     ("extra:partition_pruning", "partitionBy write + equality read-back: the partition filter prunes DIRECTORIES (PartitionFilters carries the event_type equality; ReadSchema omits the partition column entirely) — with bucketed_join and zorder_layout this completes the three-granularity pruning ladder"),
     ("extra:wds_export_pipeline", "training export end-to-end: the two-pass shard assignment's partitioned windows + ONE applyInPandas tar pack on the same shard key + the flatMap parse — no corpus-sized single-partition operator anywhere in the chain"),
-    ("streaming_corpus_clean", "streaming web curation (driver row since round 12): the returned plan is the corpus-global tail over the accumulated extraction deltas — the scan reads the delta=<batch_id> parquet the foreachBatch stage landed (row-local HTML/normalize/canonicalize work happened at O(batch)/trigger, OUTSIDE this plan), then the URL-dedup window + quality gate + banded MinHash clustering shapes already pinned for the batch twin; no corpus-sized single-partition operator"),
+    ("extra:web_corpus_clean", "web curation, the batch twin of the streaming_corpus_clean driver row (which runs the same corpus-global tail over its extraction deltas, then returns its rows materialized so its work dir can be removed): URL-dedup window + quality gate + banded MinHash clustering shapes; no corpus-sized single-partition operator"),
 ]
 
 

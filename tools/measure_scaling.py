@@ -21,10 +21,10 @@ is indexed and the earlier ingest appended; then each micro-batch runs
 what ``stream_incremental_dedup`` runs per batch with no compaction:
 the append, and the flags write from its increment. One table row per
 batch: stage ``inputRecords`` summed from the status store and Spark
-jobs, for the whole batch and for its flags write alone (the reads of
-the index, whose parquet schema inference runs a job each, are billed
-to the batch only), and wall seconds. Input rows that grow with the
-base size are work in proportion to the index, not to the batch.
+jobs, for the whole batch and for its flags write alone (any job the
+reads of the index run is billed to the batch only), and wall seconds.
+Input rows that grow with the base size are work in proportion to the
+index, not to the batch.
 
 Fixed Spark overhead dominates the small sfs, so two exponents are
 reported, both from warm runs:
@@ -642,10 +642,9 @@ def stream_probe(sizes: list[int], seed: int = 7) -> None:
                 t0 = time.perf_counter()
                 batch = spark.read.parquet(path)
                 append_to_minhash_index(batch, idx, tag)
-                # positional: the same calls measure the earlier
-                # shingles/signatures layout too, for before/after figures
+                # positional: the probe does not name the index tables
                 idx_a, idx_b, _, meta = read_minhash_index(spark, idx)
-                b_a, b_b = _read_increment(spark, idx, tag)
+                b_a, b_b = _read_increment(spark, idx, tag, meta)
                 flags = _flags(batch, idx_a, idx_b, b_a, b_b, meta, 0.5)
                 spark.sparkContext.setJobGroup(groups[1], groups[1])
                 flags.write.parquet(os.path.join(work, "flags", tag))
